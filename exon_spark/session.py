@@ -344,8 +344,8 @@ class ExonSession:
         ):
             return self.spark.sql(query)
         region_opt = ",".join(regions)
-        rebound: list[tuple[str, str, str, dict]] = []
-        for name, (fmt, path, options) in registry.items():
+        rebound: list[tuple[str, DataFrame]] = []
+        for name, (fmt, path, options, frame) in registry.items():
             if "regions" in options or "region" in options:
                 continue
             if only_table is not None and name != only_table:
@@ -356,16 +356,14 @@ class ExonSession:
                 read_format(
                     self.spark, fmt, path, regions=region_opt, **options
                 ).createOrReplaceTempView(name)
-                rebound.append((name, fmt, path, options))
+                rebound.append((name, frame))
             except Exception:
                 continue  # leave the original view in place
         try:
             return self.spark.sql(query)  # analysis resolves views eagerly
         finally:
-            for name, fmt, path, options in rebound:
-                read_format(self.spark, fmt, path, **options).createOrReplaceTempView(
-                    name
-                )
+            for name, frame in rebound:
+                frame.createOrReplaceTempView(name)
 
     def register_exon_table(self, name: str, path: str, fmt: str, **options) -> None:
         """CREATE EXTERNAL TABLE analogue (exon_context_ext.rs:683-697)."""

@@ -85,10 +85,26 @@ def ship_package(spark: SparkSession) -> None:
 
 def register_sources(spark: SparkSession) -> None:
     """Register every record-format DataSource (mirrors the reference's
-    factory registration for its format keywords, exon_context_ext.rs:131-179)."""
+    factory registration for its format keywords, exon_context_ext.rs:131-179).
+    Runs once per SparkSession object: ``read_format`` calls it on every
+    read, and re-registering costs tens of ms and a WARN per source."""
+    if getattr(spark, "_exon_sources_registered", False):
+        return
     ship_package(spark)
-    for cls in _datasource_classes():
-        spark.dataSource.register(cls)
+    # Spark checks a new source's name against the *active* session's
+    # registry, so a spark.newSession() must be active while it registers
+    jvm_session = spark._jvm.SparkSession
+    active = jvm_session.getActiveSession()
+    jvm_session.setActiveSession(spark._jsparkSession)
+    try:
+        for cls in _datasource_classes():
+            spark.dataSource.register(cls)
+    finally:
+        if active.isDefined():
+            jvm_session.setActiveSession(active.get())
+        else:
+            jvm_session.clearActiveSession()
+    spark._exon_sources_registered = True  # type: ignore[attr-defined]
 
 
 def read_format(spark: SparkSession, fmt: str, path: str, **options) -> DataFrame:

@@ -147,12 +147,13 @@ def maybe_handle_create_table(spark: SparkSession, sql: str) -> DataFrame | None
     df = read_format(spark, fmt, path, **options)
     df.createOrReplaceTempView(name)
     # remember the binding so ExonSession.sql can push literal
-    # x_region_filter(...) predicates back into reader options (§4.1)
+    # x_region_filter(...) predicates back into reader options (§4.1),
+    # and the frame itself so the view is restored without a re-read
     registry = getattr(spark, "_exon_tables", None)
     if registry is None:
         registry = {}
         spark._exon_tables = registry  # type: ignore[attr-defined]
-    registry[name] = (fmt, path, dict(options))
+    registry[name] = (fmt, path, dict(options), df)
     # like the reference (and SQL), CREATE returns an empty result — the
     # data is read via the view; collecting the CREATE must not scan
     return spark.range(0).select()

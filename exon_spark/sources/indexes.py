@@ -7,15 +7,43 @@ time — mirrors the reference's indexed_file/ module).
 * ``.tbi`` tabix index — bgzf-compressed binary; region query returns BGZF
   virtual-offset chunks (indexed_bgzf_file.rs:52-112 semantics), implemented
   in pure Python over exon_spark.sources.bgzf.
+
+``read_tabix``/``read_bai``/``read_csi`` memoize local files in a small
+LRU keyed on ``(path, st_mtime_ns, st_size)``, so a rewritten index is
+parsed afresh; remote schemes parse on every call. Parsed indexes are
+shared between callers and must not be mutated.
 """
 
 from __future__ import annotations
 
+import functools
 import gzip
+import os
 import struct
 from dataclasses import dataclass
 
 from exon_spark.functions.region import parse_region
+
+
+def _memo_local(parse):
+    cached = functools.lru_cache(maxsize=8)(
+        lambda path, _mtime_ns, _size: parse(path)
+    )
+
+    @functools.wraps(parse)
+    def read(path: str):
+        from exon_spark.sources.fs import scheme_of
+
+        if scheme_of(path) is None:
+            try:
+                st = os.stat(path)
+            except OSError:
+                pass  # let the parser raise its own error
+            else:
+                return cached(path, st.st_mtime_ns, st.st_size)
+        return parse(path)
+
+    return read
 
 
 @dataclass(frozen=True)
@@ -94,6 +122,7 @@ class TabixIndex:
     meta_char: str
 
 
+@_memo_local
 def read_tabix(path: str) -> TabixIndex:
     """Parse a .tbi file (SAMtools tabix spec §'The Tabix index file
     format'). The file is BGZF (valid gzip)."""
@@ -477,6 +506,7 @@ class BaiIndex:
 _BAI_PSEUDO_BIN = 37450
 
 
+@_memo_local
 def read_bai(path: str) -> BaiIndex:
     """Parse a .bai index (plain binary, SAM spec §5.2)."""
     from exon_spark.sources.fs import fs_open
@@ -682,6 +712,7 @@ class CsiIndex:
     names: tuple[str, ...] = ()
 
 
+@_memo_local
 def read_csi(path: str) -> CsiIndex:
     """Parse a .csi file (BGZF-compressed, magic CSI\\x01)."""
     from exon_spark.sources.fs import fs_open

@@ -295,9 +295,10 @@ def read_vcf_region_jvm(
     floors"), which is the entire gap to the reference on whole-chromosome
     scans (BASELINE vcf_region_chr1).
 
-    Used when index pruning would keep a large fraction of the file anyway
-    (routing in jvm_fast_reader); small regions stay on the tabix-pruned
-    Python path where pruning, not parse speed, dominates.
+    jvm_fast_reader routes every local, indexed region scan here, small
+    regions included (see _vcf_region_jvm_route): the DSv2 byte parser and
+    the exoncat pruned views both decompress only the region's share, so
+    this path wins at every span.
 
     Row semantics match the Python DataSource exactly: same dot-null
     handling, same region_match filter (1-based inclusive,
@@ -468,10 +469,10 @@ def _vcf_codec_text_scan(
 
 def _vcf_region_jvm_route(path: str, options: dict, spark=None):
     """Route a VCF region scan to the JVM codec path when (a) the file is a
-    local bgzf (.bgz, or .gz proven bgzf by its .tbi) with a tabix index,
-    (b) no Python-only parse option is set, and (c) the region's index
-    chunks cover a large fraction of the file — where chunk pruning saves
-    little and JVM parse throughput dominates."""
+    local bgzf (.bgz, or .gz proven bgzf by its .tbi) with a tabix or
+    tabix-style .csi index, (b) no Python-only parse option is set, and
+    (c) the index yields at least one chunk for the regions. Region size
+    does not matter: small regions route here too."""
     regions = options.get("regions") or options.get("region")
     if not regions or not str(path).lower().endswith((".bgz", ".gz")):
         return None

@@ -200,3 +200,161 @@ def test_raw_predicate_prunes_and_matches(spark, indexed_vcf_table, monkeypatch)
         sess.sql("DROP TABLE raw_vcf_plain")
     finally:
         sess.sql("DROP TABLE raw_vcf")
+
+
+# --------------------------------------------------------- planning cost
+# A region statement builds its region-bound reader once and restores the
+# CREATE-time view from the frame CREATE registered — no second read.
+
+
+@pytest.fixture
+def read_format_calls(monkeypatch):
+    import exon_spark.sources as sources
+
+    calls: list[tuple[str, dict]] = []
+    real_read_format = sources.read_format
+
+    def spy(spark_, fmt, path, **options):
+        calls.append((fmt, dict(options)))
+        return real_read_format(spark_, fmt, path, **options)
+
+    monkeypatch.setattr(sources, "read_format", spy)
+    return calls
+
+
+@pytest.fixture(scope="module")
+def indexed_bam(tmp_path_factory):
+    from exon_spark.sources.bam import sam_to_bam
+    from exon_spark.sources.indexes import build_bai
+
+    root = tmp_path_factory.mktemp("rewrite_bam")
+    rng = random.Random(11)
+    positions = sorted(rng.sample(range(1, 2_000_000), 600))
+    lines = ["@HD\tVN:1.6", "@SQ\tSN:chr2\tLN:2000000"]
+    for i, pos in enumerate(positions):
+        lines.append(f"r{i}\t0\tchr2\t{pos}\t60\t10M\t*\t0\t0\tACGTACGTAC\tIIIIIIIIII")
+    (root / "rw.sam").write_text("\n".join(lines) + "\n")
+    bam = root / "rw.bam"
+    sam_to_bam(str(root / "rw.sam"), str(bam))
+    build_bai(str(bam))
+    return bam, positions
+
+
+def test_region_statement_reads_once(
+    spark, indexed_vcf_table, indexed_bam, read_format_calls
+):
+    gz, expected = indexed_vcf_table
+    bam, positions = indexed_bam
+    sess = ExonSession(spark)
+    sess.sql(f"CREATE EXTERNAL TABLE once_vcf STORED AS INDEXED_VCF LOCATION '{gz}'")
+    sess.sql(f"CREATE EXTERNAL TABLE once_bam STORED AS INDEXED_BAM LOCATION '{bam}'")
+    try:
+        lo, hi = 100_000, 900_000
+        read_format_calls.clear()
+        n = sess.sql(
+            "SELECT count(*) AS n FROM once_vcf "
+            f"WHERE vcf_region_filter('1:{lo}-{hi}', chrom, pos)"
+        ).collect()[0].n
+        assert [(f, o["regions"]) for f, o in read_format_calls] == [
+            ("vcf", f"1:{lo}-{hi}")
+        ]
+        assert n == sum(1 for p in expected["1"] if lo <= p <= hi)
+
+        read_format_calls.clear()
+        starts = [
+            r.start
+            for r in sess.sql(
+                "SELECT start FROM once_bam "
+                f"WHERE bam_region_filter('chr2:{lo}-{hi}', reference, start, end)"
+            ).collect()
+        ]
+        assert [(f, o["regions"]) for f, o in read_format_calls] == [
+            ("bam", f"chr2:{lo}-{hi}")
+        ]
+        assert sorted(starts) == [p for p in positions if p + 9 >= lo and p <= hi]
+    finally:
+        sess.sql("DROP TABLE once_vcf")
+        sess.sql("DROP TABLE once_bam")
+
+
+def test_plain_view_restored_after_region_statement(
+    spark, indexed_vcf_table, read_format_calls
+):
+    gz, expected = indexed_vcf_table
+    sess = ExonSession(spark)
+    sess.sql(f"CREATE EXTERNAL TABLE restore_vcf STORED AS VCF LOCATION '{gz}'")
+    try:
+        schema = spark.table("restore_vcf").schema
+        total = sum(len(v) for v in expected.values())
+        n = sess.sql(
+            "SELECT count(*) AS n FROM restore_vcf "
+            "WHERE vcf_region_filter('9:1-500000', chrom, pos)"
+        ).collect()[0].n
+        assert n == sum(1 for p in expected["9"] if p <= 500_000)
+        assert len(read_format_calls) == 2  # CREATE + the region-bound reader
+        assert sess.sql("SELECT count(*) AS n FROM restore_vcf").collect()[0].n == total
+        assert spark.table("restore_vcf").schema == schema
+        assert len(read_format_calls) == 2
+    finally:
+        sess.sql("DROP TABLE restore_vcf")
+
+
+def test_drop_and_recreate_rebinds_to_new_file(spark, indexed_vcf_table, tmp_path):
+    from exon_spark.sources.bgzf import bgzip_file
+    from exon_spark.sources.indexes import build_tabix_vcf
+
+    gz, expected = indexed_vcf_table
+    plain = tmp_path / "other.vcf"
+    other_pos = list(range(1000, 401_000, 1000))
+    plain.write_text(
+        "##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
+        + "".join(f"9\t{p}\t.\tG\tC\t10\tPASS\tDP=1\n" for p in other_pos)
+    )
+    other = tmp_path / "other.vcf.gz"
+    bgzip_file(str(plain), str(other))
+    build_tabix_vcf(str(other))
+
+    sess = ExonSession(spark)
+    region = "WHERE vcf_region_filter('9:1-200000', chrom, pos)"
+    sess.sql(f"CREATE EXTERNAL TABLE swap_vcf STORED AS VCF LOCATION '{gz}'")
+    first = sess.sql(f"SELECT count(*) AS n FROM swap_vcf {region}").collect()[0].n
+    assert first == sum(1 for p in expected["9"] if p <= 200_000)
+    sess.sql("DROP TABLE swap_vcf")
+    sess.sql(f"CREATE EXTERNAL TABLE swap_vcf STORED AS VCF LOCATION '{other}'")
+    try:
+        rows = sess.sql(f"SELECT pos, ref FROM swap_vcf {region}").collect()
+        assert sorted(r.pos for r in rows) == [p for p in other_pos if p <= 200_000]
+        assert {r.ref for r in rows} == {"G"}
+        # the restored view is the new file's, not a stale frame of the old
+        assert sess.sql("SELECT count(*) AS n FROM swap_vcf").collect()[0].n == len(
+            other_pos
+        )
+    finally:
+        sess.sql("DROP TABLE swap_vcf")
+
+
+def test_register_sources_once_per_session(spark, tmp_path, monkeypatch):
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    import exon_spark.sources as sources
+
+    fa = tmp_path / "once.fasta"
+    fa.write_text(">a desc\nACGT\n>b\nGG\n")
+    registered: list[str] = []
+    real_register = DataSourceRegistration.register
+
+    def spy(self, cls):
+        registered.append(cls.name())
+        return real_register(self, cls)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", spy)
+    fresh = spark.newSession()
+    sources.register_sources(fresh)
+    # file_extension keeps the read on the Python DataSource (no JVM route)
+    frames = [
+        sources.read_format(fresh, "fasta", str(fa), file_extension="fasta")
+        for _ in range(3)
+    ]
+    assert len(registered) == len(sources._datasource_classes()) == 13
+    assert frames[-1].count() == 2
+    assert fresh.read.format("fasta").load(str(fa)).count() == 2
