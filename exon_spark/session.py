@@ -195,6 +195,14 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "-1")
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # Tungsten page size. Derived from an 8g heap it is 64 MB, and
+        # every hash-aggregate or sort task zero-fills one such page on
+        # its first row — a G1 humongous object (regions are 4 MB) even
+        # when the task holds a few KB. The q51 line dedup allocated
+        # ~700 MB of them per run and the driver heap grew with every
+        # repeat. 1 MB pages stay below the humongous threshold; a record
+        # larger than a page still gets a page of its own size.
+        .config("spark.buffer.pageSize", "1m")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -6,10 +6,13 @@ Parity: the reference's sole SQL extension is
 SimpleRecordSink with FASTA/FASTQSerializer, sinks/simple_record_sink.rs:81-119).
 
 Spark-first: serialization is a Column expression (concat of record fields)
-written through the JVM text writer — gzip/zstd via Spark's codec, all
-distributed; ``single_file=True`` coalesces to one output file like the
-reference's sink. The SQL surface is a tiny preprocessor on the COPY
-statement (Catalyst has no parser hooks from Python).
+written through the JVM text writer (gzip via Spark's codec, zstd through
+pyarrow's on the executors), one part per partition, in parallel.
+``single_file=True`` stitches the parts in partition order into one output
+file like the reference's sink. A COPY is one scan of its source: the row
+count is an Observation on the write. The SQL surface is a tiny
+preprocessor on the COPY statement (Catalyst has no parser hooks from
+Python).
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ from __future__ import annotations
 import re
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 _COPY_RE = re.compile(
     r"^\s*COPY\s+(?P<src>\(.*\)|[A-Za-z_][\w.]*)\s+TO\s+'(?P<path>[^']+)'\s*"
@@ -25,6 +28,7 @@ _COPY_RE = re.compile(
     r"(?:OPTIONS\s*\(\s*compression\s+'(?P<comp>\w+)'\s*\))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+_PART_RE = re.compile(r"^part-(\d+)")
 
 
 def fasta_lines(df: DataFrame) -> DataFrame:
@@ -58,25 +62,43 @@ def fastq_lines(df: DataFrame) -> DataFrame:
     )
 
 
+def _count_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with an Observation that counts its rows as the action runs
+    them: the count comes from the write itself, not a second scan. Read
+    it as ``obs.get["count"]`` after the action."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("count")), obs
+
+
 def _write_lines(
-    out: DataFrame, path: str, compression: str | None, single_file: bool
-) -> None:
-    if single_file:
-        out = out.coalesce(1)
+    out: DataFrame, path: str, compression: str | None, single_file: bool, ext: str
+) -> int:
+    """Write one text part per partition of ``out``; return the number of
+    lines written. With ``single_file`` the parts land in a scratch
+    directory and are stitched into the one file ``path``."""
+    target = path + ".__tmp__" if single_file else path
     if compression and compression.lower() == "zstd":
         # the JVM text writer has no zstd codec without native hadoop;
         # write executor-side through pyarrow's bundled codec instead —
         # still one file per partition, fully distributed (assumes a
         # shared/posix target path, same as any local-fs write)
-        _write_text_zstd(out, path)
-        return
-    w = out.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.text(path)
+        n = _write_text_zstd(out, target, ext)
+    else:
+        out, obs = _count_rows(out)
+        w = out.write.mode("overwrite")
+        if compression:
+            w = w.option("compression", compression)
+        w.text(target)
+        n = obs.get["count"]
+    if single_file:
+        _promote_single_file(target, path)
+    return n
 
 
-def _write_text_zstd(lines_df: DataFrame, path: str) -> None:
+def _write_text_zstd(lines_df: DataFrame, path: str, ext: str) -> int:
+    """Write ``part-NNNNN.<ext>.zst`` per partition; return the number of
+    lines written. This is an RDD action, on which an Observation never
+    completes, so each partition counts its own lines."""
     import os
     import shutil
 
@@ -88,14 +110,16 @@ def _write_text_zstd(lines_df: DataFrame, path: str) -> None:
 
         import pyarrow as pa
 
-        fn = _os.path.join(path, f"part-{idx:05d}.fasta.zst")
+        fn = _os.path.join(path, f"part-{idx:05d}.{ext}.zst")
+        n = 0
         raw = pa.OSFile(fn, "wb")
         with pa.CompressedOutputStream(raw, "zstd") as out:
             for row in it:
                 out.write((row.value + "\n").encode("utf-8"))
-        yield fn
+                n += 1
+        yield n
 
-    lines_df.rdd.mapPartitionsWithIndex(write_part).collect()
+    return sum(lines_df.rdd.mapPartitionsWithIndex(write_part).collect())
 
 
 def write_fasta(
@@ -103,8 +127,10 @@ def write_fasta(
     path: str,
     compression: str | None = None,
     single_file: bool = False,
-) -> None:
-    _write_lines(fasta_lines(df), path, compression, single_file)
+) -> int:
+    """Write ``df`` as FASTA: a directory of parts at ``path``, or with
+    ``single_file`` one file at ``path``. Returns the records written."""
+    return _write_lines(fasta_lines(df), path, compression, single_file, "fasta")
 
 
 def write_fastq(
@@ -112,8 +138,10 @@ def write_fastq(
     path: str,
     compression: str | None = None,
     single_file: bool = False,
-) -> None:
-    _write_lines(fastq_lines(df), path, compression, single_file)
+) -> int:
+    """Write ``df`` as FASTQ: a directory of parts at ``path``, or with
+    ``single_file`` one file at ``path``. Returns the records written."""
+    return _write_lines(fastq_lines(df), path, compression, single_file, "fastq")
 
 
 def maybe_handle_copy(spark: SparkSession, sql: str) -> DataFrame | None:
@@ -136,46 +164,48 @@ def maybe_handle_copy(spark: SparkSession, sql: str) -> DataFrame | None:
         if fmt is None:
             return None
     comp = (m.group("comp") or "").lower() or None
-    n = df.count()
     if fmt == "FASTA":
-        write_fasta(df, path + ".__tmp__", compression=comp, single_file=True)
-        _promote_single_file(path + ".__tmp__", path)
+        n = write_fasta(df, path, compression=comp, single_file=True)
     elif fmt == "FASTQ":
-        write_fastq(df, path + ".__tmp__", compression=comp, single_file=True)
-        _promote_single_file(path + ".__tmp__", path)
-    elif fmt == "PARQUET":
-        df.write.mode("overwrite").parquet(path)
-    elif fmt == "JSONL":
-        # Spark's json writer is line-delimited JSON — the LLM-corpus
-        # interchange format (beyond-reference extension; gzip/zstd via
-        # the writer codec, distributed)
-        w = df.write.mode("overwrite")
-        if comp:
-            w = w.option("compression", comp)
-        w.json(path)
+        n = write_fastq(df, path, compression=comp, single_file=True)
     else:
-        df.write.mode("overwrite").option("header", "true").csv(path)
-    return spark.createDataFrame([(n,)], ["count"])
+        df, obs = _count_rows(df)
+        w = df.write.mode("overwrite")
+        if fmt == "PARQUET":
+            w.parquet(path)
+        elif fmt == "JSONL":
+            # Spark's json writer is line-delimited JSON — the LLM-corpus
+            # interchange format (beyond-reference extension; gzip/zstd via
+            # the writer codec, distributed)
+            if comp:
+                w = w.option("compression", comp)
+            w.json(path)
+        else:
+            w.option("header", "true").csv(path)
+        n = obs.get["count"]
+    # the one-row result is planned on the JVM: no Python worker, no RDD
+    return spark.sql(f"SELECT CAST({n} AS BIGINT) AS count")
 
 
 def _promote_single_file(tmp_dir: str, path: str) -> None:
-    """Move the single part file out of a Spark output directory to ``path``
-    — the reference's COPY writes ONE file at the given path
-    (sinks/simple_record_sink.rs:81-119), so the DataFrame is coalesced to
-    one partition and the part file promoted. (COPY-to-single-file is an
-    inherently single-stream sink; for scale-out writes use
-    df.write.format(...) with a directory target instead.)"""
+    """Stitch the part files of the Spark output directory ``tmp_dir`` into
+    the one file ``path``, in partition-index order (the NNNNN of
+    ``part-NNNNN``), then remove ``tmp_dir``. The reference's COPY writes
+    ONE file at the given path (sinks/simple_record_sink.rs:81-119); here
+    the parts are written in parallel and concatenated: gzip members and
+    zstd frames concatenate into one valid stream, plain text trivially.
+    Partition order is row order, so ORDER BY output stays ordered.
+    ``path`` must be driver-local."""
     import os
     import shutil
 
-    parts = [
-        f
+    parts = sorted(
+        (int(m.group(1)), f)
         for f in os.listdir(tmp_dir)
-        if f.startswith("part-") and not f.endswith(".crc")
-    ]
-    if len(parts) != 1:
-        raise IOError(f"expected one part file in {tmp_dir}, found {parts}")
-    if os.path.exists(path):
-        os.remove(path)
-    shutil.move(os.path.join(tmp_dir, parts[0]), path)
+        if (m := _PART_RE.match(f))
+    )
+    with open(path, "wb") as dst:
+        for _, f in parts:
+            with open(os.path.join(tmp_dir, f), "rb") as src:
+                shutil.copyfileobj(src, dst)
     shutil.rmtree(tmp_dir, ignore_errors=True)

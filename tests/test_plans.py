@@ -456,3 +456,27 @@ def test_q32_split_fusion_stays_expression_only(registered):
     workers in the mix/shuffle/split pipeline."""
     plan = _plan(_queries()["q32_corpus_mix"].spark_fn(registered, SF))
     assert "EvalPython" not in plan
+
+
+def test_records_larger_than_a_tungsten_page(registered):
+    """The session uses 1 MB Tungsten pages (below G1's humongous
+    threshold). A row wider than a page must still pass through a hash
+    aggregate and a sort, which give such a record a page of its own."""
+    import pyspark.sql.functions as F
+
+    assert registered.conf.get("spark.buffer.pageSize") == "1m"
+    big = 3 * 1024 * 1024
+    df = registered.range(0, 6, 1, 2).select(
+        (F.col("id") % 2).alias("k"),
+        F.expr(f"repeat(cast(id AS string), {big})").alias("s"),
+    )
+    rows = (
+        df.groupBy("k")
+        .agg(F.max("s").alias("s"), F.sum(F.length("s")).alias("n"))
+        .orderBy(F.col("s").desc())
+        .collect()
+    )
+    assert [(r.k, r.s[:1], len(r.s), r.n) for r in rows] == [
+        (1, "5", big, 3 * big),
+        (0, "4", big, 3 * big),
+    ]
