@@ -150,7 +150,7 @@ def bpe_train(
     appear in a large fraction of the table, so each merge's delta
     update touches ~half the words — measured 266 s for 500 merges on a
     hapax-hex-dominated 100k table vs <1 s on the natural-word table;
-    tools/probe_r9_bpe.py). Real tokenizer pipelines drop hapax words
+    SCALE.md "r9 5M-doc bpe probe"). Real tokenizer pipelines drop hapax words
     for the same reason; default 1 keeps the exact r8 behavior.
 
     Returns the merge list in learned order (feed to ``bpe_segment``).

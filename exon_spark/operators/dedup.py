@@ -36,14 +36,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-MERSENNE_P = 2_147_483_647  # 2^31 - 1 (prime)
+from exon_spark.operators import regime
 
-# minhash_dedup materialization regime switch: above this many input docs
-# the hashed-shingle frame is persisted COLUMNAR (consumers column-prune
-# disjoint hash columns); below it raw-block localCheckpoint wins (see
-# minhash_dedup). Crossover measured between 5e4 (persist loses ~30%)
-# and 5e5 docs (persist wins ~30%); 2^18 splits the gap.
-_COLUMNAR_ROWS = 262_144
+MERSENNE_P = 2_147_483_647  # 2^31 - 1 (prime)
 
 # fixed affine permutation constants (a, b); a,b < 2^30 so a*h + b < 2^62
 MINHASH_PERMS: list[tuple[int, int]] = [
@@ -280,26 +275,6 @@ def fanout_repartition(df: DataFrame) -> DataFrame:
     except Exception:
         pass  # connect session / non-file input: leave as-is
     return df
-
-
-def _input_rows(df: DataFrame) -> int | None:
-    """Input row count from local parquet footer metadata — zero Spark
-    jobs (the q42/q36 ``_parquet_rows`` idiom, generalized to any frame
-    whose lineage bottoms out in local parquet scans). Returns None when
-    the inputs aren't locally readable parquet; callers treat None as
-    "unknown" and fall back to their latency-regime default. An upstream
-    filter makes this an OVER-estimate, which for regime switches errs
-    toward the scale-safe path."""
-    try:
-        files = [f for f in df.inputFiles() if f.endswith(".parquet")]
-        local = [f[7:] for f in files if f.startswith("file:///")]
-        if not files or len(local) != len(files):
-            return None
-        import pyarrow.parquet as _pq
-
-        return sum(_pq.ParquetFile(f).metadata.num_rows for f in local)
-    except Exception:
-        return None
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -654,12 +629,7 @@ def minhash_dedup(
     """End-to-end MinHash-LSH near-dup detection: shingle -> 16-perm
     signatures -> 4x4 LSH banding -> exact-Jaccard verification.
 
-    ``n_rows``: caller-supplied input cardinality for the regime switch
-    (r13, the ngram_containment_pairs/tfidf_keywords precedent). The
-    auto-detection (``_input_rows``) only reads local parquet footers, so
-    on s3://hdfs/non-parquet deployments it returns None and the operator
-    would silently stay in the latency regime at any scale — pass the
-    (approximate) doc count to opt into the scale path there.
+    ``n_rows``: input cardinality hint for the regime switch (see regime.py).
 
     Signatures are computed like ``minhash_signatures`` (explode + one
     codegen'd hash aggregate with map-side partial min) — measured ~1.7x
@@ -673,7 +643,7 @@ def minhash_dedup(
     string arrays (~5x the checkpoint bytes); set sizes fold into the
     signature aggregate (one groupBy computes n_sh + all 16 minima), and
     the verify keys come straight off the materialized rows."""
-    # size-adaptive materialization (r12): above _COLUMNAR_ROWS docs the
+    # size-adaptive materialization (r12): above the columnar floor the
     # hashed shingle frame goes through a COLUMNAR persist+count — the
     # signature aggregate reads (doc_id, h) and the verify path
     # (doc_id, hk), disjoint hash columns, so InMemoryTableScan
@@ -691,8 +661,7 @@ def minhash_dedup(
             F.xxhash64("shingle").alias("hk"),
         )
     )
-    rows_in = n_rows if n_rows is not None else _input_rows(df)
-    scale = (rows_in or 0) > _COLUMNAR_ROWS
+    scale = regime.above(df, "columnar", "minhash_dedup", n_rows)
     if scale:
         rows = _materialize(hashed)
         rows.count()
@@ -749,11 +718,10 @@ def ngram_jaccard_pairs(
     fail where a shuffled join degrades gracefully). Pass ``False`` on
     such shards to leave the join strategy to AQE — output identical.
 
-    ``n_rows``: caller-supplied input cardinality (the regime-switch
-    convention shared with ngram_containment_pairs/minhash_dedup); above
-    2^18 rows the materialized hash frame is force-computed by a
-    ``count()`` so the big downstream jobs read a warm cache, below it
-    the count job is skipped (one fewer job at latency scale — the first
+    ``n_rows``: input cardinality hint for the regime switch (see
+    regime.py); above the columnar floor the materialized hash frame is
+    force-computed by a ``count()`` so the big downstream jobs read a
+    warm cache, below it the count job is skipped (one fewer job at latency scale — the first
     consumer populates the cache, VERDICT r12 finding 5).
 
     Declared collision tolerance (r13, VERDICT r12 #3 considered): the
@@ -822,8 +790,7 @@ def ngram_jaccard_pairs(
             ).alias("hs"),
         )
     )
-    rows_in = n_rows if n_rows is not None else _input_rows(df)
-    if (rows_in or 0) > _COLUMNAR_ROWS:
+    if regime.above(df, "columnar", "ngram_jaccard_pairs", n_rows):
         p0.count()
     rows = p0.select("doc_id", F.explode("hs").alias("h"))
     # exact df of DUPLICATED shingles only — df=1 rows (the overwhelming
@@ -1242,15 +1209,6 @@ def word_ngrams(toks: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-# corpora at or below this document count keep dup_ngram_coverage's
-# oracle-bit-true string gram keys under hashed="auto"; larger ones take
-# the 8-byte xxhash64 keys (collision P ~ 2^-64 per gram pair — can only
-# ADD one window, never drop coverage). 2^20 sits 2x above the largest
-# oracle-proven corpus (sf10: 500k docs) and below the sf100 replica
-# (5M), where string keys are a measured single-box disk-death.
-_HASHED_GRAM_ROWS = 1_048_576
-
-
 def dup_ngram_coverage(
     df: DataFrame,
     n: int = 8,
@@ -1289,11 +1247,7 @@ def dup_ngram_coverage(
       gram index is a measured single-box disk-death (sf100: ~1B gram
       positions x ~70 B string rows through a localCheckpoint and two
       shuffles filled 72 GB of scratch; hashed is ~3.5x leaner). The
-      "auto" count executes the FULL upstream lineage once before the
-      operator runs it again — a caller whose input is an expensive
-      unmaterialized pipeline should persist it first, pass ``n_rows=``
-      (caller-supplied cardinality), or pass an explicit bool, any of
-      which skips the count (same guidance as ``semantic_dedup``).
+      input is sized per regime.py (``n_rows`` is the hint).
     - ``max_gram_df`` drops grams whose document frequency exceeds the cap
       (corpus-level stop-grams) before the join back, mirroring
       ngram_jaccard_pairs' ``max_shingle_df``: one viral boilerplate gram
@@ -1322,7 +1276,7 @@ def dup_ngram_coverage(
     if hashed not in (True, False, "auto"):
         raise ValueError(f"hashed must be a bool or 'auto', got {hashed!r}")
     if hashed == "auto":
-        hashed = (df.count() if n_rows is None else int(n_rows)) > _HASHED_GRAM_ROWS
+        hashed = regime.above(df, "hashed_grams", "dup_ngram_coverage", n_rows)
     # token array pinned behind the explode(array()) Generate barrier:
     # word_ngrams does n element_at calls per window, and with the split()
     # inlined each one re-tokenizes the document (measured 131s vs 1.5s at
@@ -1735,15 +1689,13 @@ def ngram_containment_pairs(
     exchange): sf10 zero spill, warm wall -27%. The extra aggregate
     pass costs more than it saves on small corpora, so ``"auto"``
     (default) switches it — and the columnar persist that lets the df
-    aggregate column-prune its cached input — on above 2^18 input rows
-    (parquet-footer estimated, zero jobs; pass ``n_rows`` when the
-    lineage hides its scans, or True/False to force). On corpora where
+    aggregate column-prune its cached input — on above the columnar floor
+    (sized per regime.py; True/False forces). On corpora where
     the df >= 2 key set itself would exceed broadcast limits
     (boilerplate-heavy shards), force ``prefilter=False``.
     """
     if prefilter == "auto":
-        rows_in = n_rows if n_rows is not None else _input_rows(df)
-        prefilter = bool(rows_in is not None and rows_in > (1 << 18))
+        prefilter = regime.above(df, "columnar", "ngram_containment_pairs", n_rows)
     # sh feeds the two join sides (+ the df/hot-shingle agg); left lazy
     # each replans the full tokenize -> shingle pipeline from the scan.
     #

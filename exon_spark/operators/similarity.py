@@ -28,6 +28,8 @@ import hashlib
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from exon_spark.operators import regime
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -80,9 +82,8 @@ def cosine_topk(
 
     Output: (q_id, vec_id, score, rnk). Deterministic tie-break on vec_id.
 
-    Two regimes on corpus size (r13, the semantic_dedup precedent —
-    ``_SCALE_REGIME_ROWS``; auto-detected from parquet footers, ``n_rows``
-    overrides):
+    Two regimes on corpus size (r13, the semantic_dedup precedent — the
+    vectors floor; sized per regime.py, ``n_rows`` is the hint):
 
     * latency (default): the scan scores each (corpus row, query) pair
       with the codegen'd ``cosine_pre`` expression — interpreted
@@ -107,11 +108,8 @@ def cosine_topk(
         F.col(vec_col).alias("q_vec"),
         _norm(F.col(vec_col)).alias("_qn"),
     )
-    from exon_spark.operators.dedup import _input_rows
-
-    rows_in = n_rows if n_rows is not None else _input_rows(corpus)
     w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    if (rows_in or 0) > _SCALE_REGIME_ROWS:
+    if regime.above(corpus, "vectors", "cosine_topk", n_rows):
         qrows = q.collect()  # query-fanout-bounded by contract
         scored = _blas_topk_scan(
             corpus.select(
@@ -798,15 +796,6 @@ def _assign_cluster_udf(centroids: list[tuple[int, list[float]]]):
 # (~128 MB); module-level so tests can shrink it to force multi-block
 _PAIR_BLOCK_DOUBLES = 16_777_216
 
-# corpora at or below this row count keep semantic_dedup's oracle-exact
-# expr regimes under the "auto" defaults; larger ones take the scale
-# regimes (udf assignment + grouped pairs). 2^17 sits 60x above the
-# largest DuckDB-gated corpus (sf0.1: 2.2k vectors) and below the sf10
-# board (220k), where the expr pair stream is already the measured
-# bottleneck (62 s, vs aborting outright at sf100) and no in-process
-# oracle row exists for this operator.
-_SCALE_REGIME_ROWS = 131_072
-
 
 def _grouped_cluster_pairs(assign: DataFrame, threshold: float) -> DataFrame:
     """Within-cluster cosine pairs as one BLAS matmul per cluster via
@@ -958,17 +947,13 @@ def semantic_dedup(
     ~sqrt(n)*dim doubles, trivial at any n.
 
     Both regime knobs default to ``"auto"`` (the q28 ``band_bits="auto"``
-    precedent): corpora at or below ``_SCALE_REGIME_ROWS`` (2^17 — 60x
+    precedent): corpora at or below the vectors floor (2^17 — 60x
     above the largest DuckDB-gated corpus) stay on the oracle-bit-true
     expr regimes, and larger corpora, where the expr pair stream is the
     measured bottleneck (62 s at 220k vectors, disk-abort at 2.2M),
-    switch to udf+grouped. The size read costs one id-only count,
-    shared with ``n_clusters="auto"`` — cheap on a source scan, but a
-    caller whose input is an expensive UNMATERIALIZED pipeline should
-    persist it first, pass ``n_rows=`` (a caller-supplied cardinality —
-    standing pipelines usually already know it), or pass explicit
-    regimes plus an int ``n_clusters``, any of which skips the count
-    entirely.
+    switch to udf+grouped. The input is sized per regime.py (``n_rows``
+    is the hint); ``n_clusters="auto"`` needs the exact count, which
+    then also sizes the regimes.
     """
     if assignment not in ("expr", "udf", "auto"):
         raise ValueError(
@@ -978,12 +963,15 @@ def semantic_dedup(
         raise ValueError(
             f"pairs must be 'expr', 'grouped' or 'auto', got {pairs!r}"
         )
-    if n_rows is None and (n_clusters == "auto" or "auto" in (assignment, pairs)):
+    if n_rows is None and n_clusters == "auto":
         n_rows = df.count()
+    scale = "auto" in (assignment, pairs) and regime.above(
+        df, "vectors", "semantic_dedup", n_rows
+    )
     if assignment == "auto":
-        assignment = "udf" if n_rows > _SCALE_REGIME_ROWS else "expr"
+        assignment = "udf" if scale else "expr"
     if pairs == "auto":
-        pairs = "grouped" if n_rows > _SCALE_REGIME_ROWS else "expr"
+        pairs = "grouped" if scale else "expr"
     if n_clusters == "auto":
         # k = ceil(sqrt(n)): balances the two scale terms — assignment
         # is O(n*k), within-cluster pairs are O(n^2/k) — at O(n^1.5)

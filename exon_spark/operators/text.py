@@ -741,8 +741,8 @@ def tfidf_keywords(
 
     Output: (doc_id, term, tf, score, rank), rank 1..k.
 
-    Scale regimes (r12): above 2^18 input rows (parquet-footer
-    estimated; ``n_rows`` overrides) the plan follows guide §2.4
+    Scale regimes (r12): above the columnar floor (sized per regime.py,
+    ``n_rows`` is the hint) the plan follows guide §2.4
     "establish the partitioning once" — token rows shuffle ONCE by
     doc_id, and the (doc, term) tf aggregate, the broadcast vocab
     scoring join, and the per-doc top-k window all reuse that
@@ -765,10 +765,10 @@ def tfidf_keywords(
     """
     from pyspark.sql import Window
 
-    from exon_spark.operators.dedup import _input_rows, _materialize
+    from exon_spark.operators import regime
+    from exon_spark.operators.dedup import _materialize
 
-    rows_in = n_rows if n_rows is not None else _input_rows(df)
-    scale = bool(rows_in is not None and rows_in > (1 << 18))
+    scale = regime.above(df, "columnar", "tfidf_keywords", n_rows)
     tok_rows = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(tokens(text_col, lowercase=True)).alias("term"),

@@ -36,55 +36,10 @@ from exon_spark.operators import (
     text_stats,
     with_media_payload,
 )
+from exon_spark.operators import regime
 from exon_spark.operators.dedup import MERSENNE_P, MINHASH_PERMS
 from exon_spark.operators.text import LANG_MARKERS, STOPWORDS_EN, _LANG_ORDER
 from exon_spark.queries.base import QuerySpec, table
-
-# corpora above this document count stage their fused gates' corpus-
-# tokenizing arms sequentially (materialize one arm's narrow per-doc
-# output before the next plans) instead of letting them run concurrently:
-# concurrency stacks each arm's in-flight Arrow state, and at the sf100
-# probe (5M docs) that put q42's floor at 2.5 GB/core (G1 GCLocker
-# exhaustion) while a single arm passes at 1.5. Below the threshold the
-# arms overlap freely — serializing them costs measured wall time at
-# small SFs (q36 2.5->4.8 s at sf0.1) for memory nobody is short of.
-# r13: lowered 2^20 -> 2^18 (the shared regime constant) after a full
-# sf10 bench leg OOMed the 8 GB heap inside q42's dsir materialization
-# with GCLocker retry warnings — the same mechanism the sf100 probe hit
-# — in a JVM warmed by 41 prior queries. Isolated q42 runs passed at
-# sf10 every time; the in-bench heap is the binding constraint, and the
-# staged spelling costs ~1 tiny materialization at sf10 while halving
-# peak concurrent Arrow state. sf0.1/sf1 (<= 50k docs) keep the
-# overlapped arms.
-_STAGE_ARMS_ROWS = 262_144
-
-
-def _parquet_rows(sf_dir: str, name: str) -> int | None:
-    """Table row count straight from parquet footer metadata — zero Spark
-    jobs, exact for any parquet layout (single file or directory of
-    parts). Returns None when the footers aren't locally readable (e.g.
-    a remote object-store path); callers treat None as "small" and keep
-    the concurrent-arms plan, which is correct at any size — a cluster
-    reading remote 100 TB inputs sizes executor memory for concurrency
-    anyway, and can force staging via the operators' explicit knobs."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isfile(path):
-            return pq.ParquetFile(path).metadata.num_rows
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-    except Exception:  # unreadable footer == unknown size, never fatal
-        return None
-    return None
-
 
 # ---------------------------------------------------------------- exact dedup
 
@@ -960,13 +915,10 @@ def _q36_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         lr_model,
         {"intercept": _LR_INTERCEPT, "buckets": NB_BUCKETS},
     )
-    # STAGE the two corpus-tokenizing arms above _STAGE_ARMS_ROWS (same
-    # fix as _q42_spark, r12: planned as one job they tokenize
-    # concurrently and stack Arrow state; the per-doc outputs are
-    # narrow frames — materializing one serializes the arms so peak
-    # in-flight state is ONE arm's)
+    # STAGE the two corpus-tokenizing arms above the stage_arms floor
+    # (same fix as _q42_spark): the per-doc outputs are narrow frames
     qs = quality_signals(docs)
-    if (_parquet_rows(sf_dir, "documents") or 0) > _STAGE_ARMS_ROWS:
+    if regime.above(docs, "stage_arms", "q36"):
         from exon_spark.operators.dedup import _materialize
 
         qs = _materialize(qs, eager=True)
@@ -1462,21 +1414,12 @@ def _q42_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exon_spark.operators.dedup import _materialize
 
     docs = table(spark, sf_dir, "documents")
-    # STAGE the two corpus-tokenizing arms above _STAGE_ARMS_ROWS (r12,
-    # VERDICT r11 next #2): planned as one job, the unigram ladder and
-    # the DSIR hashed-bigram featurizer run their Arrow-batched tokenize
-    # stages CONCURRENTLY, doubling peak in-flight Arrow state — at the
-    # sf100 probe that put the fused gate's floor at 2.5 GB/core (G1
-    # GCLocker exhaustion on ~32 MB humongous allocations at 1.5
-    # GB/core) while q52's single ladder passes at the same heap with a
-    # heavier model. Materializing the ladder's per-doc output (3 narrow
-    # columns, one row per doc — trivial to cache) forces that arm to
-    # COMPLETE before the DSIR arm plans, halving peak concurrent state
-    # for one extra materialization of a tiny frame. Below the threshold
-    # the arms overlap — serializing them costs measured wall time at
-    # small SFs (see _STAGE_ARMS_ROWS) for memory nobody is short of.
+    # STAGE the two corpus-tokenizing arms above the stage_arms floor (r12,
+    # see regime.FLOORS): materializing the ladder's per-doc output (3
+    # narrow columns, one row per doc) forces that arm to COMPLETE before
+    # the DSIR arm plans, halving peak in-flight Arrow state.
     lp = unigram_logppl(docs)
-    if (_parquet_rows(sf_dir, "documents") or 0) > _STAGE_ARMS_ROWS:
+    if regime.above(docs, "stage_arms", "q42"):
         lp = _materialize(lp, eager=True)
     w = dsir_weights(
         docs,

@@ -240,18 +240,18 @@ def test_pipeline_r9_retrieval_side(spark):
 
 def test_staged_arms_regime(spark, monkeypatch):
     """r12 (VERDICT r11 next #2): fused multi-arm gates (q42, q36) stage
-    their corpus-tokenizing arms sequentially above _STAGE_ARMS_ROWS —
-    result-invariant, and the threshold read comes from parquet footers
+    their corpus-tokenizing arms sequentially above the stage_arms floor —
+    result-invariant, and the size read comes from parquet footers
     (zero Spark jobs). Below the threshold the plan keeps concurrent
     arms (no InMemory/checkpoint scan of the ladder output)."""
     import exon_spark.queries.pipeline as pl
+    from exon_spark.operators import regime
 
     sf = "/root/testdata/sf0.01"
-    n = pl._parquet_rows(sf, "documents")
-    assert n == spark.read.parquet(f"{sf}/documents.parquet").count()
-    assert pl._parquet_rows(sf, "no_such_table") is None
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    assert regime.rows(docs) == docs.count()
     base42 = sorted(map(tuple, pl._q42_spark(spark, sf).collect()))
     base36 = sorted(map(tuple, pl._q36_spark(spark, sf).collect()))
-    monkeypatch.setattr(pl, "_STAGE_ARMS_ROWS", 1)
+    monkeypatch.setitem(regime.FLOORS, "stage_arms", 1)
     assert sorted(map(tuple, pl._q42_spark(spark, sf).collect())) == base42
     assert sorted(map(tuple, pl._q36_spark(spark, sf).collect())) == base36

@@ -190,6 +190,7 @@ def test_ngram_jaccard_stop_shingle_cap(spark):
     a generous cap reproduces the exact (uncapped) output; a cap of 1
     can only lose pairs whose every shared prefix shingle is hot —
     emitted pairs keep exact jaccard values either way."""
+    from exon_spark.operators import regime
     from exon_spark.operators.dedup import ngram_jaccard_pairs
 
     rows = [
@@ -229,7 +230,7 @@ def test_ngram_jaccard_stop_shingle_cap(spark):
     forced = {
         (r.doc_a, r.doc_b, r.jaccard)
         for r in ngram_jaccard_pairs(
-            df, threshold=0.3, n_rows=(1 << 18) + 1
+            df, threshold=0.3, n_rows=regime.FLOORS["columnar"] + 1
         ).collect()
     }
     assert forced == exact
@@ -631,6 +632,7 @@ def test_semantic_dedup_auto_regime_switch(spark, monkeypatch):
     switch is result-invariant on the fixture (the parity the scale
     regimes are pinned to)."""
     import exon_spark.operators.similarity as sim
+    from exon_spark.operators import regime
     from exon_spark.queries.base import table
 
     emb = table(spark, "/root/testdata/sf0.01", "embeddings").select(
@@ -641,7 +643,7 @@ def test_semantic_dedup_auto_regime_switch(spark, monkeypatch):
     assert "FlatMapGroupsInPandas" not in small._jdf.queryExecution().executedPlan().toString()
     expr_rows = sorted(map(tuple, small.collect()))
     # force the scale regimes via a tiny threshold: grouped plan, same rows
-    monkeypatch.setattr(sim, "_SCALE_REGIME_ROWS", 10)
+    monkeypatch.setitem(regime.FLOORS, "vectors", 10)
     big = sim.semantic_dedup(emb, n_clusters=16, threshold=0.8)
     assert "FlatMapGroupsInPandas" in big._jdf.queryExecution().executedPlan().toString()
     assert sorted(map(tuple, big.collect())) == expr_rows

@@ -187,6 +187,7 @@ def test_dup_ngram_coverage_auto_hash_switch(spark, monkeypatch):
     import re
 
     import exon_spark.operators.dedup as dd
+    from exon_spark.operators import regime
 
     rows = [(1, "p q r s t"), (2, "p q r s u"), (3, "m n o v w")]
     small = dd.dup_ngram_coverage(_docs(spark, rows), n=3)
@@ -194,7 +195,7 @@ def test_dup_ngram_coverage_auto_hash_switch(spark, monkeypatch):
         r"xxhash64", small._jdf.queryExecution().toString()
     ), "auto must keep string keys below the threshold"
     base = sorted(map(tuple, small.collect()))
-    monkeypatch.setattr(dd, "_HASHED_GRAM_ROWS", 1)
+    monkeypatch.setitem(regime.FLOORS, "hashed_grams", 1)
     big = dd.dup_ngram_coverage(_docs(spark, rows), n=3)
     assert sorted(map(tuple, big.collect())) == base
     import pytest
@@ -210,6 +211,7 @@ def test_dup_ngram_coverage_caller_cardinality_skips_count(spark):
     import re
 
     import exon_spark.operators.dedup as dd
+    from exon_spark.operators import regime
 
     rows = [(1, "p q r s t"), (2, "p q r s u"), (3, "m n o v w")]
     base = sorted(map(tuple, dd.dup_ngram_coverage(_docs(spark, rows), n=3).collect()))
@@ -224,7 +226,9 @@ def test_dup_ngram_coverage_caller_cardinality_skips_count(spark):
     d2.count = lambda: (_ for _ in ()).throw(  # type: ignore[method-assign]
         AssertionError("n_rows supplied — count() must not run")
     )
-    big = dd.dup_ngram_coverage(d2, n=3, n_rows=dd._HASHED_GRAM_ROWS + 1)
+    big = dd.dup_ngram_coverage(
+        d2, n=3, n_rows=regime.FLOORS["hashed_grams"] + 1
+    )
     # the xxhash64 runs inside the eagerly-materialized gram stage; the
     # final plan sees only the 8-byte bigint key column (same pin as
     # test_dup_ngram_coverage_scale_knobs)
@@ -242,6 +246,7 @@ def test_minhash_dedup_columnar_regime_parity(spark, tmp_path, monkeypatch):
     The regime only re-spells materialization and join strategy — the
     hash arithmetic is shared — so parity is exact, not approximate."""
     import exon_spark.operators.dedup as dd
+    from exon_spark.operators import regime
 
     rows = [
         (1, "a b c d e f g h"),
@@ -255,7 +260,7 @@ def test_minhash_dedup_columnar_regime_parity(spark, tmp_path, monkeypatch):
     docs = spark.read.parquet(p)
     base = sorted(map(tuple, dd.minhash_dedup(docs, n=3).collect()))
     assert base, "fixture must plant at least one near-dup pair"
-    monkeypatch.setattr(dd, "_COLUMNAR_ROWS", 0)
+    monkeypatch.setitem(regime.FLOORS, "columnar", 0)
     scale = sorted(map(tuple, dd.minhash_dedup(docs, n=3).collect()))
     assert scale == base
     monkeypatch.undo()
@@ -266,7 +271,7 @@ def test_minhash_dedup_columnar_regime_parity(spark, tmp_path, monkeypatch):
         map(
             tuple,
             dd.minhash_dedup(
-                docs, n=3, n_rows=dd._COLUMNAR_ROWS + 1
+                docs, n=3, n_rows=regime.FLOORS["columnar"] + 1
             ).collect(),
         )
     )
