@@ -1,11 +1,19 @@
 """JVM helper artifacts (compiled once, cached, committed).
 
-`bgzf-codec.jar` holds exonspark.hadoop.BgzfCodec — a splittable Hadoop
-compression codec for BGZF (suffix ".bgz") that lets spark.read.text/csv
-fan a multi-GB bgzipped file out across executors with zero Python in the
-data path (see java/exonspark/hadoop/BgzfCodec.java). The jar is committed
-so the codec works without a JDK; when javac is available and the source
-is newer than the jar, ensure_bgzf_jar() rebuilds it.
+`bgzf-codec.jar` holds the classes under java/:
+
+- exonspark.hadoop.BgzfCodec — a splittable Hadoop compression codec for
+  BGZF (suffix ".bgz") that lets spark.read.text/csv fan a multi-GB
+  bgzipped file out across executors with zero Python in the data path;
+- exonspark.hadoop.ExonCatFileSystem — the exoncat:// virtual views of
+  index-pruned BGZF blocks (GFF region scans);
+- exonspark.spark.VcfBgzfSource and exonspark.spark.BamBgzfSource — the
+  DataSourceV2 readers of indexed VCF region scans and of local BAM reads.
+
+The jar is committed so all of these work without a JDK; when javac is
+available and a source is newer than the jar, ensure_bgzf_jar() rebuilds
+it. tests/test_jvm_jar.py checks that the committed jar holds a class for
+every source file.
 """
 
 from __future__ import annotations
@@ -21,6 +29,7 @@ _JAR = os.path.join(_JVM_DIR, "bgzf-codec.jar")
 BGZF_CODEC_CLASS = "exonspark.hadoop.BgzfCodec"
 EXONCAT_FS_CLASS = "exonspark.hadoop.ExonCatFileSystem"
 VCF_DSV2_CLASS = "exonspark.spark.VcfBgzfSource"
+BAM_DSV2_CLASS = "exonspark.spark.BamBgzfSource"
 
 
 def _compile_classpath() -> str | None:

@@ -42,8 +42,8 @@ import org.apache.hadoop.io.compress.SplittableCompressionCodec;
  * With this codec on io.compression.codecs, spark.read.text()/csv() over a
  * multi-GB .bgz file fans out across executors as plain byte-range splits
  * — no Python in the data path, no re-compression, no temp copies. Used by
- * exon_spark.sources.jvm_fast.read_vcf_region_jvm for whole-chromosome
- * region scans where index pruning would keep most of the file anyway.
+ * the full VCF/GFF text scans of exon_spark.sources.jvm_fast and tabular,
+ * and by the exoncat:// GFF region views.
  *
  * Read-only: BGZF write stays in the Python sinks (createOutputStream
  * throws). CRC32 of each member is not re-verified (ISIZE is checked);

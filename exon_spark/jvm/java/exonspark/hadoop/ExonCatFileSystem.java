@@ -30,8 +30,8 @@ import org.apache.hadoop.util.Progressable;
  * A virtual path exoncat:///abs/dir/view.bgz is backed by a real manifest
  * at /abs/dir/view.bgz.manifest — tab-separated lines
  * "absolute-path<TAB>start<TAB>length" — and reads as those ranges spliced
- * in order. Written by exon_spark.sources.jvm_fast (index-pruned region
- * views): the driver plans the tabix/index chunk ranges of a BGZF file,
+ * in order. Written by exon_spark.sources.bgzf_view (index-pruned GFF
+ * region views): the driver plans the tabix/index chunk ranges of a BGZF file,
  * re-compresses the partial boundary blocks into tiny synthetic side
  * files, and hands Spark a .bgz-suffixed virtual file that contains ONLY
  * the region's blocks. Combined with BgzfCodec the JVM text/csv readers

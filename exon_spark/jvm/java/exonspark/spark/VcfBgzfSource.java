@@ -38,25 +38,23 @@ import org.apache.spark.unsafe.types.UTF8String;
 
 /**
  * DataSourceV2 batch source for tabix-indexed, bgzip-compressed VCF region
- * scans. The Python driver plans record-exact BGZF virtual-offset ranges
- * from the tabix index (chunk begins/ends re-cut at linear-index record
- * offsets) and passes them as the "partitions" option; each partition
- * reader seeks its compressed ranges, inflates the blocks, and parses the
- * projected leading VCF fields straight out of the decompressed bytes into
- * InternalRows. Compared to the codec + spark.read.text route
- * (exon_spark.sources.jvm_fast.read_vcf_region_jvm) this skips the Hadoop
- * LineReader Text copy, the full-line UTF8String row, and the per-field
- * substring scans — the remaining cost is the inflate itself plus one
- * small copy per projected field.
+ * scans (exon_spark.sources.jvm_fast.read_vcf_region_jvm). The Python
+ * driver plans record-exact BGZF virtual-offset ranges from the tabix
+ * index (chunk begins/ends re-cut at linear-index record offsets) and
+ * passes them as the "partitions" option; each partition reader seeks its
+ * compressed ranges, inflates the blocks, and parses the projected VCF
+ * fields straight out of the decompressed bytes into InternalRows. No
+ * Hadoop LineReader Text copy, no full-line row, no per-field substring
+ * scans — the remaining cost is the inflate itself plus one small copy
+ * per projected field.
  *
  * Semantics mirror the Python VCF DataSource exactly (sources/vcf.py
- * BASE_SCHEMA, leading 8 fields; reference schema exon/exon-core/src/
+ * BASE_SCHEMA, all nine base columns; reference schema exon/exon-core/src/
  * datasources/vcf/table_provider.rs): '.'/'' => null for id/alt/qual/
  * filter/info, id/filter split on ';', alt on ',', pos bigint (non-numeric
- * => null, as try_cast), region filter = chrom equality + 1-based
- * inclusive pos bounds. FORMAT/sample columns are not served here — the
- * Python router only takes this path when the projection stays within the
- * leading fields.
+ * => null, as try_cast), formats = the bytes after the 8th tab (FORMAT
+ * plus every sample column) when the line has at least 9 fields, else
+ * null; region filter = chrom equality + 1-based inclusive pos bounds.
  *
  * Options (all lowercase):
  *   path        local filesystem path of the .bgz/.gz BGZF VCF
@@ -83,7 +81,8 @@ public class VcfBgzfSource implements TableProvider {
           .add("alt", DataTypes.createArrayType(DataTypes.StringType, true), true)
           .add("qual", DataTypes.FloatType, true)
           .add("filter", DataTypes.createArrayType(DataTypes.StringType, true), true)
-          .add("info", DataTypes.StringType, true);
+          .add("info", DataTypes.StringType, true)
+          .add("formats", DataTypes.StringType, true);
 
   @Override
   public StructType inferSchema(CaseInsensitiveStringMap options) {
@@ -280,7 +279,9 @@ public class VcfBgzfSource implements TableProvider {
   static final class VcfPartitionReader implements PartitionReader<InternalRow> {
     // field indices in the VCF line for each projected column
     private final int[] fieldOf;
-    private final int[] colKind; // 0 str, 1 pos-long, 2 split';', 3 split',', 4 float, 5 dotnull-str
+    // 0 str, 1 pos-long, 2 split';', 3 split',', 4 float, 5 dotnull-str,
+    // 6 line tail after the 8th tab (formats)
+    private final int[] colKind;
     private final int maxField;
 
     private final byte[][] regionChroms;
@@ -299,12 +300,15 @@ public class VcfBgzfSource implements TableProvider {
     private int llen;
 
     private final int[] tabs; // positions of line tabs (end of field i)
+    private int nTabs; // tabs found on the current line (capped at maxField + 1)
 
     VcfPartitionReader(
         String path, String[] cols, String regionSpec, VcfPartition part)
         throws IOException {
-      String[] names = {"chrom", "pos", "id", "ref", "alt", "qual", "filter", "info"};
-      int[] kinds = {0, 1, 2, 0, 3, 4, 2, 5};
+      String[] names = {
+        "chrom", "pos", "id", "ref", "alt", "qual", "filter", "info", "formats"
+      };
+      int[] kinds = {0, 1, 2, 0, 3, 4, 2, 5, 6};
       fieldOf = new int[cols.length];
       colKind = new int[cols.length];
       int mx = 1; // chrom + pos always parsed for the region filter
@@ -430,6 +434,7 @@ public class VcfBgzfSource implements TableProvider {
           tabs[found++] = i;
         }
       }
+      nTabs = found;
       for (int f = found; f <= maxField; f++) {
         tabs[f] = llen; // missing trailing fields read as empty
       }
@@ -461,11 +466,20 @@ public class VcfBgzfSource implements TableProvider {
       return s > tabs[f] ? llen : s;
     }
 
-    /** End offset of projected column i's field in lbuf. */
+    /** End offset of projected column i's field in lbuf; formats runs to
+     * the end of the line, sample columns included. */
     int fieldEnd(int i) {
       int f = fieldOf[i];
       int s = f == 0 ? 0 : tabs[f - 1] + 1;
+      if (colKind[i] == 6) {
+        return llen;
+      }
       return s > tabs[f] ? llen : tabs[f];
+    }
+
+    /** True when column i is formats and the line has fewer than 9 fields. */
+    boolean formatsAbsent(int i) {
+      return colKind[i] == 6 && nTabs < 8;
     }
 
     private InternalRow buildRow() {
@@ -488,6 +502,9 @@ public class VcfBgzfSource implements TableProvider {
             break;
           case 4:
             vals[i] = parseFloatNullable(s, e);
+            break;
+          case 6:
+            vals[i] = formatsAbsent(i) ? null : utf8(s, e);
             break;
           default:
             vals[i] = isDot(s, e) ? null : utf8(s, e);
@@ -657,6 +674,13 @@ public class VcfBgzfSource implements TableProvider {
               v.putFloat(rowId, (Float) f);
             }
             break;
+          case 6:
+            if (core.formatsAbsent(i)) {
+              v.putNull(rowId);
+            } else {
+              v.putByteArray(rowId, lbuf, s, e - s);
+            }
+            break;
           default:
             if (core.isDot(s, e)) {
               v.putNull(rowId);
@@ -711,6 +735,8 @@ public class VcfBgzfSource implements TableProvider {
    * Sequential decompressed view of a list of BGZF virtual-offset ranges.
    * Exposes the current block buffer (ubuf[upos..ulim)); advance() loads
    * the next block, honoring each range's record-exact [beg,end) bounds.
+   * seek()/nextBlock()/tell() are the unbounded block-level face, for
+   * binary records that are owned by their start offset (BamBgzfSource).
    */
   static final class BgzfRanges implements Closeable {
     private final FileInputStream fis;
@@ -721,6 +747,7 @@ public class VcfBgzfSource implements TableProvider {
     private long endC;
     private int endU;
     private BufferedInputStream bin;
+    private long blockCoffset = -1; // compressed offset of the block in ubuf
     private final Inflater inflater = new Inflater(true);
     private final byte[] cbuf = new byte[MAX_BLOCK + 512];
 
@@ -777,6 +804,41 @@ public class VcfBgzfSource implements TableProvider {
           return true;
         }
       }
+    }
+
+    /** Position at virtual offset voff. False at physical EOF. */
+    boolean seek(long voff) throws IOException {
+      long c = voff >>> 16;
+      fis.getChannel().position(c);
+      bin = new BufferedInputStream(fis, 1 << 16);
+      nextCoffset = c;
+      if (!loadBlock()) {
+        upos = ulim = 0;
+        return false;
+      }
+      upos = Math.min((int) (voff & 0xFFFF), ulim);
+      return true;
+    }
+
+    /** Load the block that follows the current one. False at EOF. */
+    boolean nextBlock() throws IOException {
+      upos = 0;
+      if (!loadBlock()) {
+        ulim = 0;
+        return false;
+      }
+      return true;
+    }
+
+    /** Virtual offset of the next unread byte, stepping over exhausted
+     * and empty blocks; -1 at EOF. */
+    long tell() throws IOException {
+      while (upos >= ulim) {
+        if (!nextBlock()) {
+          return -1;
+        }
+      }
+      return (blockCoffset << 16) | upos;
     }
 
     /** Decompress the BGZF block at nextCoffset into ubuf (ulim = its
@@ -845,6 +907,7 @@ public class VcfBgzfSource implements TableProvider {
         throw new IOException(
             "BGZF ISIZE mismatch at " + nextCoffset + ": " + n + " != " + isize);
       }
+      blockCoffset = nextCoffset;
       nextCoffset += bsize + 1;
       ulim = n;
       return true;

@@ -206,10 +206,10 @@ def get_spark(
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
         .config("spark.sql.session.timeZone", "UTC")
     )
-    # Splittable BGZF codec (.bgz): lets the JVM text/csv readers byte-range
-    # split bgzipped files — the fast path for whole-chromosome VCF region
-    # scans (jvm_fast.read_vcf_region_jvm). extraClassPath must be set
-    # before the JVM launches; spark.jars covers real-cluster executors.
+    # The exon_spark jar: the splittable BGZF codec (.bgz) that lets the JVM
+    # text/csv readers byte-range split bgzipped files, and the VCF/BAM
+    # DataSourceV2 readers (jvm_fast). extraClassPath must be set before
+    # the JVM launches; spark.jars covers real-cluster executors.
     from exon_spark.jvm import (
         BGZF_CODEC_CLASS,
         EXONCAT_FS_CLASS,

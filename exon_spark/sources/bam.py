@@ -1,10 +1,20 @@
 """BAM data source — pure-Python binary decoder over BGZF, with .bai-pruned
-region scans.
+region scans, and the one BAM partition planner.
 
 Parity: reference ListingBAMTable
 (exon/exon-core/src/datasources/bam/table_provider.rs; schema shared with
 SAM, exon-sam/src/schema_builder.rs:383-397) and the .bai indexed path
 (indexed_file/indexed_bgzf_file.rs:88-108).
+
+``BamSource.plan_partitions`` plans every BAM scan: index chunk groups
+per region, index-cut byte ranges for full scans, or the whole file.
+``read_format`` sends a local single-file read to the Java DataSourceV2
+(exonspark.spark.BamBgzfSource via jvm_fast.read_bam_jvm), which runs
+this planner on the driver and decodes the planned ranges in the JVM,
+row for row equal to ``decode_record``. The Python decoder below serves
+the rest: typed tags (``parse_tags``), filter-derived regions,
+``file_extension``, directories, globs, object stores, streaming and
+the scan UDTFs.
 
 Format: SAM spec §4 (BAM). Also provides ``build_bai`` so BAM files can be
 indexed without htslib.

@@ -1,19 +1,25 @@
-"""JVM-side fast paths for text formats (no Python in the data path).
+"""JVM-side fast paths (no Python in the data path).
 
-The Python DataSources (fasta.py, vcf.py, ...) are the fully-featured
-readers: header-driven schemas, index-pruned region scans, integer
-encodings. But for the *plain scan* case their per-record Python parse is
-the bottleneck (~20x slower per record than the reference's Rust parsers).
+The Python DataSources (fasta.py, vcf.py, bam.py, ...) are the
+fully-featured readers: header-driven schemas, typed tags, parse options.
+But their per-record Python parse is the bottleneck (~20x slower per
+record than the reference's Rust parsers), and every read of one starts
+Python planner and executor workers. ``read_format`` routes a read here
+automatically when no Python-only option is requested. Schemas and rows
+are identical to the DataSource's, so callers can't tell which path
+served them.
 
-These readers express the same parse as Column expressions over
-``spark.read.text`` / ``spark.read.csv`` — whole-stage-codegen'd, Arrow-free,
-zero Python workers — and are used by ``read_format`` automatically when no
-Python-only option (regions, sequence_data_type, parse_info) is requested.
-Schemas are identical to the DataSource schemas, so callers can't tell
-which path served them. gzip input is decompressed by the JVM codec;
-uncompressed input splits by byte range (Hadoop line reader semantics), so
-a single large file fans out across executors — same scale behavior as the
-reference's regrouped file scans (SURVEY.md §4.4).
+* Plain FASTA/VCF scans and mzML metadata projections are Column
+  expressions over ``spark.read.text`` / ``spark.read.csv`` —
+  whole-stage-codegen'd and Arrow-free. gzip input is decompressed by the
+  JVM codec; uncompressed and BGZF input splits by byte range, so a
+  single large file fans out across executors (SURVEY.md §4.4).
+* Indexed VCF region scans and local BAM reads go to the Java
+  DataSourceV2 readers in exon_spark/jvm (``VcfBgzfSource``,
+  ``BamBgzfSource``). The driver plans virtual-offset ranges from the
+  index (for BAM with ``BamSource.plan_partitions`` itself); executors
+  inflate only those BGZF blocks and decode only the columns Catalyst
+  requires.
 """
 
 from __future__ import annotations
@@ -126,17 +132,14 @@ _VCF_BASE_COLS = (
 )
 
 
-# DSv2 full-schema types (exonspark.spark.VcfBgzfSource.FULL_SCHEMA)
-_DSV2_TYPES = {
-    "chrom": "string",
-    "pos": "bigint",
-    "id": "array<string>",
-    "ref": "string",
-    "alt": "array<string>",
-    "qual": "float",
-    "filter": "array<string>",
-    "info": "string",
-}
+def _projection(base_cols, columns) -> list[str]:
+    """The ``columns`` option as the Python DataSources read it
+    (FileFormatSource.schema): the named base columns in schema order,
+    or every base column when it names none of them."""
+    if isinstance(columns, str):
+        columns = [c.strip() for c in columns.split(",")]
+    keep = set(columns or ())
+    return [c for c in base_cols if c in keep] or list(base_cols)
 
 
 def _plan_dsv2_partitions(index, region_list, target: int):
@@ -223,18 +226,22 @@ def _plan_voff_partitions(per_region, target: int):
     return parts
 
 
-def read_vcf_region_dsv2(
-    spark: SparkSession, path: str, regions: str, columns
-) -> DataFrame | None:
-    """Region scan through the Java DataSourceV2 (exonspark.spark.
-    VcfBgzfSource): the driver plans record-exact virtual-offset ranges
-    from the tabix index; executors seek + inflate only those BGZF blocks
-    and parse the projected fields straight from the decompressed bytes
-    into InternalRows. Beats the codec + spark.read.text route by skipping
-    the LineReader Text copy, the full-line row, and the per-field
-    substring scans. Returns None when the projection needs FORMAT/sample
-    columns (not served) or the source class is absent from the session's
-    jar (caller falls back to the text/Python paths).
+def read_vcf_region_jvm(
+    spark: SparkSession, path: str, regions: str, columns=None
+) -> DataFrame:
+    """Region scan of a bgzipped, tabix- or CSI-indexed VCF through the
+    Java DataSourceV2 (exonspark.spark.VcfBgzfSource): the driver plans
+    record-exact virtual-offset ranges from the index; executors seek and
+    inflate only those BGZF blocks and parse the fields Catalyst asks for
+    (SupportsPushDownRequiredColumns) straight from the decompressed bytes
+    into rows. No Python worker touches the data path, which clears the
+    ~1.8 us/row Arrow-to-row ingest floor of the Python DataSource route
+    (SCALE.md "Measured floors").
+
+    Rows equal the Python DataSource's on all nine base columns: same
+    dot-null handling, same region filter (1-based inclusive,
+    udfs/vcf/mod.rs:107-121), and per-region multiset semantics — a record
+    overlapped by k requested regions appears k times.
 
     At cluster scale the planned ranges ship inside InputPartitions, so
     executors need only the file itself (any shared/posix fs); partition
@@ -242,29 +249,15 @@ def read_vcf_region_dsv2(
     import os
 
     from exon_spark.functions.region import expand_regions, parse_region
+    from exon_spark.jvm import VCF_DSV2_CLASS
     from exon_spark.sources.indexes import read_csi, read_tabix
 
-    want = (
-        [c.strip() for c in columns.split(",") if c.strip()]
-        if isinstance(columns, str)
-        else list(columns)
-    )
-    if not set(want) <= set(_DSV2_TYPES):
-        return None
     region_list = expand_regions(regions)
     target = spark.sparkContext.defaultParallelism * 2
     if os.path.exists(path + ".tbi"):
         parts = _plan_dsv2_partitions(read_tabix(path + ".tbi"), region_list, target)
-    elif os.path.exists(path + ".csi"):
-        cindex = read_csi(path + ".csi")
-        if not cindex.names:
-            return None  # BCF/BAM-style .csi without the tabix aux names
-        parts = _plan_csi_partitions(cindex, region_list, target)
     else:
-        return None
-    ddl = ", ".join(f"{c} {_DSV2_TYPES[c]}" for c in want)
-    if not parts:
-        return spark.createDataFrame([], ddl)
+        parts = _plan_csi_partitions(read_csi(path + ".csi"), region_list, target)
     pstr = "|".join(
         f"{ridx}@" + ";".join(f"{b}:{e}" for b, e in ranges)
         for ridx, ranges in parts
@@ -273,206 +266,23 @@ def read_vcf_region_dsv2(
         f"{n}:{lo}:{hi}" for n, lo, hi in map(parse_region, region_list)
     )
     df = (
-        spark.read.format("exonspark.spark.VcfBgzfSource")
+        spark.read.format(VCF_DSV2_CLASS)
         .option("path", path)
         .option("partitions", pstr)
         .option("regions", rstr)
         .load()
     )
-    return df.select(*want)
-
-
-def read_vcf_region_jvm(
-    spark: SparkSession, path: str, regions: str, columns=None
-) -> DataFrame:
-    """Region scan of a bgzipped VCF entirely JVM-side: the splittable BGZF
-    codec (exon_spark.jvm, suffix .bgz) byte-range-splits the compressed
-    file across executors, a codegen'd ``startswith('<chrom>\\t')`` prefix
-    filter rejects non-region lines before any field split, and only the
-    fields the projection needs are split out (split-with-limit). No Python
-    worker touches the data path — this clears the ~1.8 us/row Arrow→row
-    ingest floor of the Python DataSource route (SCALE.md "Measured
-    floors"), which is the entire gap to the reference on whole-chromosome
-    scans (BASELINE vcf_region_chr1).
-
-    jvm_fast_reader routes every local, indexed region scan here, small
-    regions included (see _vcf_region_jvm_route): the DSv2 byte parser and
-    the exoncat pruned views both decompress only the region's share, so
-    this path wins at every span.
-
-    Row semantics match the Python DataSource exactly: same dot-null
-    handling, same region_match filter (1-based inclusive,
-    udfs/vcf/mod.rs:107-121)."""
-    from exon_spark.functions.region import expand_regions
-
-    region_list = expand_regions(regions)
-    if isinstance(columns, str):
-        want = [c.strip() for c in columns.split(",") if c.strip()]
-    else:
-        want = list(columns) if columns else list(_VCF_BASE_COLS)
-
-    # Fastest route first: the Java DataSourceV2 parses projected fields
-    # straight from the inflated bytes (no LineReader copy, no full-line
-    # row). Falls through to the codec+text path when the class is absent
-    # (stale jar) or the projection needs FORMAT/sample columns.
-    if set(want) <= set(_DSV2_TYPES):
-        import os as _os
-
-        if _os.path.exists(path + ".tbi") or _os.path.exists(path + ".csi"):
-            try:
-                dsv2 = read_vcf_region_dsv2(spark, path, regions, want)
-                if dsv2 is not None:
-                    return dsv2
-            except Exception:
-                pass
-
-    if len(region_list) > 1:
-        # Per-region multiset semantics (pinned equal to the DSv2 and
-        # Python-DataSource routes by test): a record overlapped by k
-        # requested regions appears k times, once from each region's
-        # branch. The OR-of-predicates spelling this replaces emitted
-        # shared records once — a different multiset for overlapping or
-        # duplicate region lists. Each branch prunes to its own region's
-        # index chunks, so the union scans no more blocks than the merged
-        # view did (shared blocks are decoded once per overlapping region,
-        # the price of the exact semantics; multi-region codec-path scans
-        # are rare — DSv2 serves them when the class is present).
-        from functools import reduce
-
-        return reduce(
-            DataFrame.unionAll,
-            [
-                _vcf_codec_text_scan(spark, path, [r], want)
-                for r in region_list
-            ],
-        )
-    return _vcf_codec_text_scan(spark, path, region_list, want)
-
-
-def _vcf_codec_text_scan(
-    spark: SparkSession, path: str, region_list: list[str], want: list[str]
-) -> DataFrame:
-    """The codec+text fallback for one region group: BGZF-view (or
-    full-file) ``spark.read.text`` scan + codegen'd prefix filter + field
-    extraction. Region semantics are single-region here — multi-region
-    calls go through read_vcf_region_jvm's per-region union."""
-    from exon_spark.functions.region import parse_region, region_match
-
-    names = sorted({parse_region(r)[0] for r in region_list})
-    idx = {c: i for i, c in enumerate(_VCF_BASE_COLS)}
-    needed = set(want) | {"chrom", "pos"}
-    max_i = max(idx[c] for c in needed)
-
-    # Index pruning: scan an exoncat:// view holding only the regions'
-    # BGZF blocks (driver-planned from the tabix index, boundary blocks
-    # re-cut at record offsets — bgzf_view.build_region_view). The filters
-    # below still run — chunk ranges are block-granular supersets.
-    scan_path = path
-    import os as _os
-
-    if _os.path.exists(path + ".tbi"):
-        try:
-            from exon_spark.sources.bgzf_view import build_region_view
-            from exon_spark.sources.indexes import read_tabix, tabix_chunks
-
-            index = read_tabix(path + ".tbi")
-            chunks: list[tuple[int, int]] = []
-            for region in region_list:
-                chunks.extend(tabix_chunks(index, region))
-            if chunks:
-                scan_path = build_region_view(path, chunks)
-        except Exception:
-            scan_path = path  # full-file codec scan; filters keep it exact
-
-    txt = spark.read.text(scan_path)
-    parts = _partition_cols(txt)
-    pre = None
-    for n in names:
-        c = F.col("value").startswith(n + "\t")
-        pre = c if pre is None else (pre | c)
-    rec = txt.filter(pre)
-
-    def dot_null(c):
-        return F.when(c.isin(".", ""), None).otherwise(c)
-
-    # Field extraction strategy (measured at 28M rows / 2.6 GB, floor =
-    # decompress+lines+prefix-filter 1.47 s): a split('\t')-array pinned
-    # behind a Generate barrier costs +1.7 s (array + line-remainder
-    # materialization); a locate()-chain with expression offsets costs
-    # +2.8 s (character-position scans are UTF-8-aware and re-run per
-    # consumer). Cheapest measured: double substring_index per field
-    # (+0.57 s for pos) — it scans only the leading bytes and stays inside
-    # whole-stage codegen. The barrier idiom is for *expensive* producers;
-    # these are not. Fall back to the barrier-pinned full split only when
-    # trailing fields (formats) are requested.
-    if "formats" not in needed and max_i <= 6:
-        def g(i: int):
-            # field i = last field of the first (i+1) fields
-            return F.substring_index(
-                F.substring_index(F.col("value"), "\t", i + 1), "\t", -1
-            )
-
-        # after the single-name prefix filter, chrom is a constant
-        chrom_expr = F.lit(names[0]) if len(names) == 1 else g(0)
-    else:
-        rec = rec.select(
-            F.explode(F.array(F.split(F.col("value"), "\t", -1))).alias("f"),
-            *parts,
-        )
-
-        def g(i: int):
-            return F.element_at(F.col("f"), i + 1)
-
-        chrom_expr = g(0)
-
-    arr = "array<string>"
-
-    def split_null(i: int, sep: str):
-        # '.'/'' -> null checked BEFORE the split, so the field expression
-        # is evaluated once on the hot path (codegen subexpression
-        # elimination does not reach into CASE branches — a
-        # when(split(dot_null(x))) spelling re-evaluates x per branch,
-        # measured +1 s on 28M rows)
-        return F.when(g(i).isin(".", ""), None).otherwise(
-            F.split(g(i), sep)
-        ).cast(arr)
-
-    builders = {
-        "chrom": lambda: chrom_expr,
-        "pos": lambda: g(1).try_cast("bigint"),
-        "id": lambda: split_null(2, ";"),
-        "ref": lambda: g(3),
-        "alt": lambda: split_null(4, ","),
-        "qual": lambda: dot_null(g(5)).try_cast("float"),
-        "filter": lambda: split_null(6, ";"),
-        "info": lambda: dot_null(g(7)),
-        "formats": lambda: F.nullif(
-            F.array_join(F.slice(F.col("f"), 10, 2147483647), "\t"), F.lit("")
-        ),
-    }
-    exprs = {c: builders[c]() for c in needed}
-    # the chrom prefix filter already holds; add pos bounds only for
-    # regions that actually have them (a whole-chromosome region scan
-    # never parses pos for its filter)
-    bounded = [r for r in region_list if parse_region(r)[1:] != (1, 2**63 - 1)]
-    if bounded or len(names) > 1:
-        pred = None
-        for r in region_list:
-            m = region_match(exprs["chrom"], exprs["pos"], r)
-            pred = m if pred is None else (pred | m)
-        rec = rec.filter(pred)
-    return rec.select(
-        *[exprs[c].alias(c) for c in want],
-        *[F.col(c).cast("string").alias(c) for c in parts],
-    )
+    return df.select(*_projection(_VCF_BASE_COLS, columns))
 
 
 def _vcf_region_jvm_route(path: str, options: dict, spark=None):
-    """Route a VCF region scan to the JVM codec path when (a) the file is a
-    local bgzf (.bgz, or .gz proven bgzf by its .tbi) with a tabix or
-    tabix-style .csi index, (b) no Python-only parse option is set, and
-    (c) the index yields at least one chunk for the regions. Region size
-    does not matter: small regions route here too."""
+    """Route a VCF region scan to the DataSourceV2 when the file is a local
+    bgzf (.bgz, or .gz) with a .tbi or a tabix-style .csi (one that carries
+    the sequence names) and no Python-only parse option is set. Region
+    size does not matter; a region with no index chunk reads as an empty
+    scan."""
+    import os
+
     regions = options.get("regions") or options.get("region")
     if not regions or not str(path).lower().endswith((".bgz", ".gz")):
         return None
@@ -481,72 +291,107 @@ def _vcf_region_jvm_route(path: str, options: dict, spark=None):
             return None
     from exon_spark.sources.fs import scheme_of
 
-    if scheme_of(path) is not None:
+    if scheme_of(path) is not None or not os.path.isfile(path):
         return None
-    import os
+    from exon_spark.sources.bgzf_view import codec_active
 
-    tbi = path + ".tbi"
-    csi = path + ".csi"
-    if not os.path.exists(tbi) and not os.path.exists(csi):
+    # get_spark puts the jar that holds the DSv2 on the classpath together
+    # with the codec conf, so the codec conf marks a session that has it
+    if spark is not None and not codec_active(spark):
         return None
-    if spark is not None:
-        from exon_spark.sources.bgzf_view import codec_active
-
-        if not codec_active(spark):
+    if not os.path.exists(path + ".tbi"):
+        if not os.path.exists(path + ".csi"):
             return None
-    try:
-        from exon_spark.functions.region import expand_regions, parse_region
-        from exon_spark.sources.indexes import (
-            csi_chunks,
-            read_csi,
-            read_tabix,
-            tabix_chunks,
-        )
+        from exon_spark.sources.indexes import read_csi
 
-        chunks: list[tuple[int, int]] = []
-        if os.path.exists(tbi):
-            index = read_tabix(tbi)
-            for region in expand_regions(str(regions)):
-                chunks.extend(tabix_chunks(index, region) or [])
-        else:
-            # htslib `tabix --csi` layout: the DSv2 plans from the CSI
-            # directly; only route when the aux names are present (the
-            # Python path keeps csi files the DSv2 can't serve)
-            cindex = read_csi(csi)
-            if not cindex.names:
-                return None
-            for region in expand_regions(str(regions)):
-                name, lo, hi = parse_region(region)
-                if name in cindex.names:
-                    chunks.extend(
-                        csi_chunks(cindex, cindex.names.index(name), lo, hi)
-                    )
-        size = os.path.getsize(path)
-        if (
-            os.path.exists(tbi)
-            and not path.lower().endswith(".bgz")
-            and chunks
-        ):
-            # .gz name: the codec+text FALLBACK must go through the pruned
-            # view (the raw path would hit the unsplittable gzip codec) —
-            # build it eagerly so failure routes to the Python path
-            # instead. csi-only files skip this: their fallback-of-last-
-            # resort is the filtered full scan, still correct.
-            from exon_spark.sources.bgzf_view import build_region_view
-
-            build_region_view(path, chunks)
-    except Exception:
-        return None
-    if size <= 0 or not chunks:
-        return None
-    # Small regions used to stay on the Python tabix path (pruning
-    # dominated, parse cost was irrelevant); with the DSv2 byte parser and
-    # the exoncat pruned views both decompressing only the region's share,
-    # the JVM path wins at every span, so route unconditionally.
+        # a BCF/BAM-style .csi has no sequence names; the Python path
+        # keeps those
+        if not read_csi(path + ".csi").names:
+            return None
     cols = options.get("columns")
     return lambda spark, p: read_vcf_region_jvm(
         spark, p, regions=str(regions), columns=cols
     )
+
+
+def read_bam_jvm(spark: SparkSession, path: str, options: dict) -> DataFrame:
+    """A local BAM through the Java DataSourceV2 (exonspark.spark.
+    BamBgzfSource). ``BamSource.plan_partitions`` plans the scan on the
+    driver — .bai/.csi chunk groups for regions, index-cut byte ranges
+    for full scans, the whole file without an index — and each planned
+    partition becomes one DSv2 partition of virtual-offset ranges.
+    Executors decode only the columns Catalyst requires. Rows equal the
+    Python DataSource's on every column: ``bai`` partitions keep records
+    overlapping their own region (overlapping regions keep their
+    duplicates), ``filter`` partitions keep records overlapping any."""
+    import os
+
+    from exon_spark.functions.region import parse_region
+    from exon_spark.jvm import BAM_DSV2_CLASS
+    from exon_spark.sources.bam import BamSource
+    from exon_spark.sources.base import _split_ddl_fields
+    from exon_spark.sources.util import FoundFile
+
+    opts = dict(options)
+    opts.setdefault("target_parallelism", spark.sparkContext.defaultParallelism)
+    regions = str(opts.get("regions") or opts.get("region") or "")
+    region_list = [r.strip() for r in regions.split(",") if r.strip()]
+    specs = []
+    for part in BamSource.plan_partitions(
+        FoundFile(path, os.path.getsize(path)), opts
+    ):
+        kind = part.extra[0] if part.extra else None
+        if kind is None:
+            specs.append("-@-1:-1")
+        elif kind == "range":
+            _, beg, end = part.extra
+            specs.append(f"-@{beg}:{-1 if end is None else end}")
+        elif kind == "bai":
+            _, region, chunks = part.extra
+            specs.append(
+                f"{region_list.index(region)}@"
+                + ";".join(f"{b}:{e}" for b, e in chunks)
+            )
+        elif kind == "filter":
+            specs.append("*@-1:-1")
+        # "empty": no region has an index chunk, so no partition
+    df = (
+        spark.read.format(BAM_DSV2_CLASS)
+        .option("path", path)
+        .option("partitions", "|".join(specs))
+        .option(
+            "regions",
+            ",".join(f"{n}:{lo}:{hi}" for n, lo, hi in map(parse_region, region_list)),
+        )
+        .load()
+    )
+    base = [n for n, _t in _split_ddl_fields(BamSource.BASE_SCHEMA)]
+    return df.select(*_projection(base, opts.get("columns")))
+
+
+def _bam_jvm_route(path: str, options: dict, spark):
+    """Route a BAM read to the DataSourceV2 when it is one local file and
+    asks for nothing only the Python reader does: typed tags
+    (``parse_tags``), filter-derived regions (``derive_regions``) or a
+    custom ``file_extension``. An INDEXED_BAM read without a region also
+    stays on the Python reader, which raises its error at scan time."""
+    import os
+
+    for k in ("parse_tags", "derive_regions", "file_extension"):
+        if str(options.get(k, "")).strip() not in ("", "false"):
+            return None
+    regions = options.get("regions") or options.get("region")
+    if not regions and str(options.get("indexed", "")).lower() in ("true", "1"):
+        return None
+    from exon_spark.sources.fs import scheme_of
+
+    if scheme_of(path) is not None or not os.path.isfile(path):
+        return None
+    from exon_spark.sources.bgzf_view import codec_active
+
+    if spark is None or not codec_active(spark):
+        return None
+    return lambda spark, p: read_bam_jvm(spark, p, options)
 
 
 # mzML columns expressible without the base64/zlib binary decode
@@ -599,6 +444,8 @@ def jvm_fast_reader(fmt: str, path: str, options: dict, spark=None):
         region_reader = _vcf_region_jvm_route(path, options, spark)
         if region_reader is not None:
             return region_reader
+    if fmt == "bam":
+        return _bam_jvm_route(path, options, spark)
     python_only = {"regions", "region", "sequence_data_type", "parse_info",
                    "parse_formats", "indexed", "file_extension"}
     if any(str(options.get(k, "")).strip() not in ("", "false")

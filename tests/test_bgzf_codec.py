@@ -1,4 +1,5 @@
-"""JVM splittable BGZF codec (exon_spark/jvm) + exoncat region views.
+"""JVM splittable BGZF codec (exon_spark/jvm) and the VCF region
+DataSourceV2 (exonspark.spark.VcfBgzfSource).
 
 The codec's split contract (pos lags one block; first partial line of a
 non-zero split is skipped) must yield every text line exactly once for ANY
@@ -95,14 +96,13 @@ def test_vcf_region_routing(spark):
 
 def test_vcf_dsv2_matches_python_source(spark):
     """The Java DataSourceV2 byte parser must agree with the Python
-    DataSource value-for-value on every projected column and region
-    shape (dot-null, splits, qual float, bounded regions)."""
+    DataSource value-for-value on every base column and region shape
+    (dot-null, splits, qual float, bounded regions)."""
     from exon_spark.queries.formats import ensure_format_fixtures
-    from exon_spark.sources.jvm_fast import read_vcf_region_dsv2
+    from exon_spark.sources.jvm_fast import read_vcf_region_jvm
 
     fx = ensure_format_fixtures("/root/testdata/sf0.01")
     vcf = os.path.join(fx, "variants.vcf.bgz")
-    cols = "chrom,pos,id,ref,alt,qual,filter,info"
     for region in (
         "chr1",
         "chr17:1-2000000",
@@ -112,19 +112,69 @@ def test_vcf_dsv2_matches_python_source(spark):
         # matching region — the DSv2's region-bound partitions must
         # reproduce that multiset exactly
         "chr1:1-50000000,chr1:20000000-90000000",
+        "chr17:1-2000000,chr17:1-2000000",  # exact duplicate
         "chr17:1-2000000,chr1:1-5000000",
     ):
-        py = (
-            spark.read.format("vcf")
-            .option("regions", region)
-            .load(vcf)
-            .select(*cols.split(","))
-        )
-        ds = read_vcf_region_dsv2(spark, vcf, region, cols)
+        py = spark.read.format("vcf").option("regions", region).load(vcf)
+        ds = read_vcf_region_jvm(spark, vcf, region)
         assert ds.schema == py.schema
         assert ds.exceptAll(py).count() == 0
         assert py.exceptAll(ds).count() == 0
         assert ds.count() == py.count()
+
+
+@pytest.fixture(scope="module")
+def sample_vcfs(tmp_path_factory):
+    """A bgzipped, tabix-indexed VCF with FORMAT and two sample columns,
+    under a .gz and a .bgz name."""
+    from exon_spark.sources.bgzf import bgzip_file
+    from exon_spark.sources.indexes import build_tabix_vcf
+
+    root = tmp_path_factory.mktemp("samples_vcf")
+    rng = random.Random(21)
+    lines = [
+        "##fileformat=VCFv4.2",
+        '##FORMAT=<ID=GT,Number=1,Type=String,Description="Genotype">',
+        '##FORMAT=<ID=DP,Number=1,Type=Integer,Description="Depth">',
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2",
+    ]
+    for chrom in ("1", "2"):
+        for pos in sorted(rng.sample(range(1, 500_000), 400)):
+            gt = rng.choice(["0/1\t1/1", "0|0:3\t./.:.", "1/1:12\t0/1:7"])
+            fmt = "GT" if gt.count(":") == 0 else "GT:DP"
+            lines.append(f"{chrom}\t{pos}\trs{pos}\tA\tG\t50\tPASS\tDP=9\t{fmt}\t{gt}")
+    plain = root / "s.vcf"
+    plain.write_text("\n".join(lines) + "\n")
+    paths = []
+    for name in ("s.vcf.gz", "s.vcf.bgz"):
+        path = str(root / name)
+        bgzip_file(str(plain), path)
+        build_tabix_vcf(path)
+        paths.append(path)
+    return paths
+
+
+@pytest.mark.parametrize(
+    "region",
+    [
+        "1:100000-200000",
+        "1:100000-300000,1:250000-400000,2:1-50000",  # overlapping
+        "2:1000-90000,2:1000-90000",  # duplicate
+    ],
+)
+def test_vcf_region_read_keeps_formats_and_samples(spark, sample_vcfs, region):
+    """A region read returns the whole FORMAT + sample tail in
+    ``formats``, equal row for row to the Python DataSource."""
+    from exon_spark.sources import read_format
+
+    for path in sample_vcfs:
+        got = read_format(spark, "vcf", path, regions=region)
+        assert "VcfBgzfScan" in got._jdf.queryExecution().executedPlan().toString()
+        py = spark.read.format("vcf").option("regions", region).load(path)
+        assert got.schema == py.schema
+        rows = sorted(got.collect(), key=repr)
+        assert rows == sorted(py.collect(), key=repr)
+        assert rows and all(r.formats.startswith("GT") for r in rows)
 
 
 def test_vcf_dsv2_partition_planner_exact(spark):
@@ -180,54 +230,6 @@ def test_vcf_dsv2_plan_is_batch_scan(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchScan" in plan and "VcfBgzfScan" in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_region_view_projection_plan(spark, monkeypatch):
-    """The codec+text FALLBACK (taken when the DSv2 class is absent from
-    the session jar): 3-column projection must stay inside whole-stage
-    codegen with no Python eval nodes and no Generate (lean
-    substring_index path)."""
-    from exon_spark.queries.formats import ensure_format_fixtures
-    from exon_spark.sources import jvm_fast
-    from exon_spark.sources.jvm_fast import read_vcf_region_jvm
-
-    monkeypatch.setattr(
-        jvm_fast, "read_vcf_region_dsv2", lambda *a, **k: None
-    )
-    fx = ensure_format_fixtures("/root/testdata/sf0.01")
-    vcf = os.path.join(fx, "variants.vcf.bgz")
-    df = read_vcf_region_jvm(spark, vcf, "chr1", columns="chrom,pos,id")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "Generate" not in plan
-    assert "*(1)" in plan  # the '*' prefix marks WholeStageCodegen spans
-    # index pruning: the scan reads an exoncat:// view, not the raw file
-    assert "exoncat" in plan
-
-
-def test_vcf_region_jvm_fallback_overlapping_regions(spark, monkeypatch):
-    """The codec+text FALLBACK must preserve the per-region multiset
-    semantics the DSv2 and Python-DataSource routes pin: a record
-    overlapped by k requested regions appears k times. The old OR-filter
-    spelling emitted shared records once."""
-    from exon_spark.queries.formats import ensure_format_fixtures
-    from exon_spark.sources import jvm_fast
-    from exon_spark.sources.jvm_fast import read_vcf_region_jvm
-
-    monkeypatch.setattr(jvm_fast, "read_vcf_region_dsv2", lambda *a, **k: None)
-    fx = ensure_format_fixtures("/root/testdata/sf0.01")
-    vcf = os.path.join(fx, "variants.vcf.bgz")
-    for region in (
-        "chr1:1-50000000,chr1:20000000-90000000",  # overlapping span
-        "chr17:1-2000000,chr17:1-2000000",  # exact duplicate
-        "chr17:1-2000000,chr1:1-5000000",  # disjoint control
-    ):
-        py = spark.read.format("vcf").option("regions", region).load(vcf)
-        jvm = read_vcf_region_jvm(spark, vcf, region)
-        assert jvm.schema == py.schema
-        assert jvm.count() == py.count()
-        assert jvm.exceptAll(py).count() == 0
-        assert py.exceptAll(jvm).count() == 0
 
 
 @pytest.fixture(scope="module")

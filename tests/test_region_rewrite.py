@@ -358,3 +358,100 @@ def test_register_sources_once_per_session(spark, tmp_path, monkeypatch):
     assert len(registered) == len(sources._datasource_classes()) == 13
     assert frames[-1].count() == 2
     assert fresh.read.format("fasta").load(str(fa)).count() == 2
+
+
+# ------------------------------------------------------------ plan and jobs
+# A region statement over an INDEXED_* view is one Spark job over a JVM
+# DataSourceV2 scan that reads only the columns the statement references.
+
+
+def _region_statement(spark, sess, sql):
+    import re
+
+    sc = spark.sparkContext
+    gid = f"region_statement_{abs(hash(sql))}"
+    df = sess.sql(sql)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    sc.setJobGroup(gid, sql)
+    try:
+        rows = df.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(gid)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    scans = re.findall(r"BatchScan (\S+)\[([^\]]*)\]", plan)
+    cols = [
+        {re.sub(r"#\d+L?$", "", c.strip()) for c in out.split(",")}
+        for _name, out in scans
+    ]
+    return rows, jobs, plan, [name for name, _ in scans], cols
+
+
+def test_indexed_vcf_region_statement_plan(spark, indexed_vcf_table):
+    gz, expected = indexed_vcf_table
+    sess = ExonSession(spark)
+    sess.sql(f"CREATE EXTERNAL TABLE plan_vcf STORED AS INDEXED_VCF LOCATION '{gz}'")
+    try:
+        rows, jobs, plan, scans, cols = _region_statement(
+            spark,
+            sess,
+            "SELECT pos FROM plan_vcf "
+            "WHERE vcf_region_filter('1:100000-900000', chrom, pos)",
+        )
+        assert sorted(r.pos for r in rows) == [
+            p for p in expected["1"] if 100_000 <= p <= 900_000
+        ]
+        assert len(jobs) == 1, jobs
+        assert "(Python)" not in plan
+        assert scans == ["vcf-bgzf"] and cols == [{"chrom", "pos"}], plan
+    finally:
+        sess.sql("DROP TABLE plan_vcf")
+
+
+def test_indexed_bam_region_statement_plan(spark, indexed_bam):
+    bam, positions = indexed_bam
+    sess = ExonSession(spark)
+    sess.sql(f"CREATE EXTERNAL TABLE plan_bam STORED AS INDEXED_BAM LOCATION '{bam}'")
+    try:
+        rows, jobs, plan, scans, cols = _region_statement(
+            spark,
+            sess,
+            "SELECT start FROM plan_bam "
+            "WHERE bam_region_filter('chr2:100000-900000', reference, start, end)",
+        )
+        assert sorted(r.start for r in rows) == [
+            p for p in positions if p + 9 >= 100_000 and p <= 900_000
+        ]
+        assert len(jobs) == 1, jobs
+        assert "(Python)" not in plan
+        assert scans == ["bam-bgzf"] and cols == [{"reference", "start", "end"}], plan
+    finally:
+        sess.sql("DROP TABLE plan_bam")
+
+
+def test_vcf_region_statements_write_no_view_files(spark, indexed_vcf_table):
+    """Region statements over a full-schema INDEXED_VCF view leave nothing
+    behind: the DataSourceV2 reads the file itself, so no exoncat view
+    (a .manifest/.synth pair per chunk set) is written."""
+    import os
+    import tempfile
+
+    gz, expected = indexed_vcf_table
+    views = os.path.join(tempfile.gettempdir(), "exon_spark_views")
+
+    def listing():
+        return set(os.listdir(views)) if os.path.isdir(views) else set()
+
+    sess = ExonSession(spark)
+    sess.sql(f"CREATE EXTERNAL TABLE leak_vcf STORED AS INDEXED_VCF LOCATION '{gz}'")
+    try:
+        before = listing()
+        for lo in range(10_000, 1_000_000, 200_000):
+            rows = sess.sql(
+                "SELECT * FROM leak_vcf "
+                f"WHERE vcf_region_filter('9:{lo}-{lo + 150_000}', chrom, pos)"
+            ).collect()
+            assert len(rows) == sum(1 for p in expected["9"] if lo <= p <= lo + 150_000)
+        assert listing() - before == set()
+    finally:
+        sess.sql("DROP TABLE leak_vcf")
