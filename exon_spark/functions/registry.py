@@ -9,6 +9,9 @@ functions** (``CREATE OR REPLACE TEMPORARY FUNCTION ... RETURN <expr>``,
 Spark 3.5+/4.x) so the SQL surface stays JVM-side and inlineable by Catalyst —
 NOT as Python UDFs. Only ``alignment_score`` and ``locate_regex`` register
 pandas UDFs.
+
+Cost: all SQL functions are created by one ``BEGIN ... END`` SQL script,
+and ``exon_spark.register_all`` calls this once per SparkSession object.
 """
 
 from __future__ import annotations
@@ -135,16 +138,27 @@ _SQL_FUNCTIONS["fasta_region_filter"] = (
 )
 
 
+def _install_script() -> str:
+    """One ``BEGIN ... END`` SQL script that creates every SQL function."""
+    stmts = [
+        f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{args} RETURNS {ret} RETURN {body}"
+        for name, (args, ret, body) in _SQL_FUNCTIONS.items()
+    ]
+    stmts += [
+        f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(flag INT) RETURNS BOOLEAN "
+        f"RETURN (flag & {mask}) != 0"
+        for name, mask in SAM_FLAG_MASKS.items()
+    ]
+    return "BEGIN\n" + ";\n".join(stmts) + ";\nEND"
+
+
 def register_sql_functions(spark: SparkSession) -> None:
-    """Register the full §2.4 function surface for ``spark.sql`` use."""
-    for name, (args, ret, body) in _SQL_FUNCTIONS.items():
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{args} RETURNS {ret} RETURN {body}"
-        )
-    for name, mask in SAM_FLAG_MASKS.items():
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(flag INT) RETURNS BOOLEAN "
-            f"RETURN (flag & {mask}) != 0"
-        )
+    """Register the full §2.4 function surface for ``spark.sql`` use.
+
+    The 30 SQL functions go in as one SQL script (Spark 4.1 runs
+    ``BEGIN ... END`` eagerly in ``spark.sql``): one py4j round trip
+    instead of 30 separately parsed and analysed statements (timings in
+    SCALE.md "Session set-up cost")."""
+    spark.sql(_install_script())
     spark.udf.register("alignment_score", _alignment_score_udf())
     spark.udf.register("locate_regex", _locate_regex_udf())

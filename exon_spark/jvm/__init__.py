@@ -10,17 +10,22 @@
 - exonspark.spark.VcfBgzfSource and exonspark.spark.BamBgzfSource — the
   DataSourceV2 readers of indexed VCF region scans and of local BAM reads.
 
-The jar is committed so all of these work without a JDK; when javac is
-available and a source is newer than the jar, ensure_bgzf_jar() rebuilds
-it. tests/test_jvm_jar.py checks that the committed jar holds a class for
-every source file.
+The jar is committed so all of these work without a JDK. It carries a
+SHA-256 digest of the Java sources as the entry SOURCES_ENTRY; when javac is
+available and the sources' digest differs from the jar's, ensure_bgzf_jar()
+rebuilds it. Staleness is keyed on content, not mtimes: a fresh clone
+writes the jar and the sources in any order. tests/test_jvm_jar.py checks
+that the committed jar holds a class for every source file and the digest
+of the committed sources.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import subprocess
+import zipfile
 
 _JVM_DIR = os.path.dirname(os.path.abspath(__file__))
 _SRC_DIR = os.path.join(_JVM_DIR, "java")
@@ -30,6 +35,7 @@ BGZF_CODEC_CLASS = "exonspark.hadoop.BgzfCodec"
 EXONCAT_FS_CLASS = "exonspark.hadoop.ExonCatFileSystem"
 VCF_DSV2_CLASS = "exonspark.spark.VcfBgzfSource"
 BAM_DSV2_CLASS = "exonspark.spark.BamBgzfSource"
+SOURCES_ENTRY = "META-INF/exonspark-sources.sha256"
 
 
 def _compile_classpath() -> str | None:
@@ -60,21 +66,43 @@ def _compile_classpath() -> str | None:
     return os.pathsep.join(found)
 
 
-def ensure_bgzf_jar() -> str | None:
-    """Path to the codec jar, rebuilding from source when possible and
-    stale. Returns None only if the jar is absent AND cannot be built."""
-    have_jar = os.path.exists(_JAR)
-    srcs = sorted(
+def _java_sources() -> list[str]:
+    return sorted(
         os.path.join(root, f)
         for root, _dirs, files in os.walk(_SRC_DIR)
         for f in files
         if f.endswith(".java")
     )
-    src_newer = bool(srcs) and (
-        not have_jar
-        or max(os.path.getmtime(f) for f in srcs) > os.path.getmtime(_JAR)
-    )
-    if have_jar and not src_newer:
+
+
+def sources_digest() -> str:
+    """SHA-256 over every Java source's path (relative to java/) and bytes."""
+    h = hashlib.sha256()
+    for f in _java_sources():
+        h.update(os.path.relpath(f, _SRC_DIR).replace(os.sep, "/").encode())
+        h.update(b"\0")
+        with open(f, "rb") as fh:
+            h.update(fh.read())
+        h.update(b"\0")
+    return h.hexdigest()
+
+
+def jar_digest() -> str | None:
+    """The sources digest stored in the jar, or None if it has none."""
+    try:
+        with zipfile.ZipFile(_JAR) as jar:
+            return jar.read(SOURCES_ENTRY).decode().strip()
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return None
+
+
+def ensure_bgzf_jar() -> str | None:
+    """Path to the codec jar, rebuilding from source when possible and
+    stale. Returns None only if the jar is absent AND cannot be built."""
+    have_jar = os.path.exists(_JAR)
+    srcs = _java_sources()
+    digest = sources_digest()
+    if have_jar and (not srcs or jar_digest() == digest):
         return _JAR
     javac = shutil.which("javac")
     jar = shutil.which("jar") or os.path.join(
@@ -84,7 +112,13 @@ def ensure_bgzf_jar() -> str | None:
     if not (javac and os.path.exists(jar) and cp and srcs):
         return _JAR if have_jar else None
     build = os.path.join(_JVM_DIR, "build")
-    os.makedirs(build, exist_ok=True)
+    shutil.rmtree(build, ignore_errors=True)
+    os.makedirs(os.path.join(build, os.path.dirname(SOURCES_ENTRY)))
+    with open(os.path.join(build, SOURCES_ENTRY), "w") as fh:
+        fh.write(digest + "\n")
+    # written beside the jar, then renamed over it: a JVM that has the old
+    # jar open keeps reading the old file
+    tmp = _JAR + ".tmp"
     try:
         subprocess.run(
             [javac, "-encoding", "UTF-8", "-cp", cp, "-d", build, *srcs],
@@ -92,8 +126,9 @@ def ensure_bgzf_jar() -> str | None:
             capture_output=True,
         )
         subprocess.run(
-            [jar, "cf", _JAR, "-C", build, "."], check=True, capture_output=True
+            [jar, "cf", tmp, "-C", build, "."], check=True, capture_output=True
         )
+        os.replace(tmp, _JAR)
     except (subprocess.CalledProcessError, OSError):
         return _JAR if have_jar else None
     return _JAR

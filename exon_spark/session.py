@@ -235,16 +235,24 @@ def get_spark(
 
 def register_all(spark: SparkSession) -> None:
     """Install the full exon_spark surface on an existing session:
-    SQL functions (§2.4) + data sources (§2.1). Mirrors
-    ``ExonSession::new`` (exon_context_ext.rs:121-213)."""
-    from exon_spark.functions.registry import register_sql_functions
+    SQL functions (§2.4), data sources (§2.1) and scan UDTFs. Mirrors
+    ``ExonSession::new`` (exon_context_ext.rs:121-213).
 
-    register_sql_functions(spark)
+    Runs once per SparkSession object, like ``register_sources``:
+    ``get_spark()`` and ``ExonSession(spark)`` both call it, and a second
+    pass would only re-install the same temporary functions. A
+    ``spark.newSession()`` is a new object with its own function registry,
+    so it gets a full pass."""
+    if getattr(spark, "_exon_registered", False):
+        return
+    from exon_spark.functions.registry import register_sql_functions
     from exon_spark.sources import register_sources
     from exon_spark.sources.udtfs import register_scan_udtfs
 
+    register_sql_functions(spark)
     register_sources(spark)
     register_scan_udtfs(spark)
+    spark._exon_registered = True  # type: ignore[attr-defined]
 
 
 class ExonSession:

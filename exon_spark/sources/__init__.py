@@ -15,11 +15,8 @@ by ``ExonSession.read_*``.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import zipfile
-
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import CaseInsensitiveDict
 
 from exon_spark.sources.tabular import TABULAR_READERS
 
@@ -62,25 +59,12 @@ def _datasource_classes():
     return _DATASOURCES
 
 
-def ship_package(spark: SparkSession) -> None:
-    """Make exon_spark importable on executors regardless of how the driver
-    found it (cluster deploys included): zip the package and addPyFile."""
-    if getattr(spark, "_exon_spark_shipped", False):
-        return
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zip_path = os.path.join(tempfile.gettempdir(), "exon_spark_pkg.zip")
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(os.path.join(pkg_dir, "exon_spark")):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        zf.write(full, os.path.relpath(full, pkg_dir))
-    try:
-        spark.sparkContext.addPyFile(zip_path)
-    except Exception:
-        pass  # Spark Connect has no sparkContext; rely on installed package
-    spark._exon_spark_shipped = True  # type: ignore[attr-defined]
+def source_class(fmt: str):
+    """The Python DataSource class registered under ``fmt``, or None."""
+    for cls in _datasource_classes():
+        if cls.NAME == fmt:
+            return cls
+    return None
 
 
 def register_sources(spark: SparkSession) -> None:
@@ -90,7 +74,6 @@ def register_sources(spark: SparkSession) -> None:
     read, and re-registering costs tens of ms and a WARN per source."""
     if getattr(spark, "_exon_sources_registered", False):
         return
-    ship_package(spark)
     # Spark checks a new source's name against the *active* session's
     # registry, so a spark.newSession() must be active while it registers
     jvm_session = spark._jvm.SparkSession
@@ -108,6 +91,17 @@ def register_sources(spark: SparkSession) -> None:
 
 
 def read_format(spark: SparkSession, fmt: str, path: str, **options) -> DataFrame:
+    """A DataFrame over ``path`` in format ``fmt``: the delta reader, a
+    tabular (csv/text) reader, a JVM fast reader, or else the Python
+    DataSource registered under ``fmt``.
+
+    For a Python DataSource the schema is computed here, on the driver, by
+    the source's own ``schema()`` with the reader's options (as strings,
+    plus ``path``), and handed to the reader. So ``load()`` starts no
+    planner worker, and a frame that is never scanned (a ``CREATE
+    EXTERNAL TABLE`` view that region statements rebind) costs no Python
+    worker at all. A scan still creates its data source in a worker when
+    Spark plans it."""
     fmt = fmt.lower()
     if fmt in ("delta", "deltatable"):
         from exon_spark.sources.delta import read_delta
@@ -124,12 +118,17 @@ def read_format(spark: SparkSession, fmt: str, path: str, **options) -> DataFram
     if fast is not None:
         return fast(spark, path)
     register_sources(spark)
-    reader = spark.read.format(fmt)
     # let planners size index-chunk / byte-range splits to the cluster
     # (plan_partitions runs in a sessionless worker and can't ask Spark)
     options.setdefault(
         "target_parallelism", spark.sparkContext.defaultParallelism
     )
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
+    options = {k: str(v) for k, v in options.items()}
+    reader = spark.read.format(fmt).options(**options)
+    cls = source_class(fmt)
+    if cls is not None:
+        # the schema the planner worker would compute, from the same class
+        # and options: with it given, load() starts no Python worker
+        source = cls(options=CaseInsensitiveDict({**options, "path": path}))
+        reader = reader.schema(source.schema())
     return reader.load(path)

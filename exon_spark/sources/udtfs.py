@@ -15,34 +15,31 @@ The partition-parallel path is the reader (``spark.read.format``); the UDTF
 surface targets SQL ergonomics like the reference's.
 
 Serialization note: UDTF classes are cloudpickled into the analyze/eval
-workers, which do NOT inherit the driver's ``sys.path`` (only PYTHONPATH and
-addPyFile zips reach executors; the analyze worker gets neither). So the
-classes below capture only plain strings in their closures and import
+workers, which do NOT inherit the driver's ``sys.path`` (only PYTHONPATH
+reaches them). So the classes below capture only plain strings in their closures and import
 exon_spark lazily inside each method after a sys.path bootstrap.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf
 
-# candidate import roots shipped to workers as plain strings
+# import root shipped to workers as a plain string
 _PKG_PARENT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
-_PKG_ZIP = os.path.join(tempfile.gettempdir(), "exon_spark_pkg.zip")
 
 
 def _source_cls_for(fmt: str):
-    from exon_spark.sources import _datasource_classes
+    from exon_spark.sources import source_class
 
-    for cls in _datasource_classes():
-        if cls.NAME == fmt:
-            return cls
-    raise ValueError(f"unknown format {fmt}")
+    cls = source_class(fmt)
+    if cls is None:
+        raise ValueError(f"unknown format {fmt}")
+    return cls
 
 
 def _scan_rows(source_cls, path: str, options: dict):
@@ -73,7 +70,7 @@ def _ddl_field_names(ddl: str) -> list[str]:
     return names
 
 
-def _make_bootstrap(pkg_parent: str, pkg_zip: str):
+def _make_bootstrap(pkg_parent: str):
     """Return a closure (pickled by value — only string captures) that makes
     exon_spark importable inside analyze/eval workers."""
 
@@ -84,9 +81,8 @@ def _make_bootstrap(pkg_parent: str, pkg_zip: str):
             import importlib
             import sys
 
-            for p in (pkg_parent, pkg_zip):
-                if os.path.exists(p) and p not in sys.path:
-                    sys.path.insert(0, p)
+            if os.path.exists(pkg_parent) and pkg_parent not in sys.path:
+                sys.path.insert(0, pkg_parent)
             importlib.invalidate_caches()
             import exon_spark  # noqa: F401
 
@@ -96,7 +92,7 @@ def _make_bootstrap(pkg_parent: str, pkg_zip: str):
 def _make_scan_udtf(fmt: str, indexed: bool):
     """Build a UDTF class for one format. Uses analyze() for the dynamic
     schema (depends on path: partition columns, header-inferred fields)."""
-    bootstrap = _make_bootstrap(_PKG_PARENT, _PKG_ZIP)
+    bootstrap = _make_bootstrap(_PKG_PARENT)
 
     class ScanUDTF:
         @staticmethod
@@ -235,7 +231,7 @@ def _parse_tabular_line(fmt: str, line: str):
 
 
 def _make_tabular_udtf(fmt: str, indexed: bool = False):
-    bootstrap = _make_bootstrap(_PKG_PARENT, _PKG_ZIP)
+    bootstrap = _make_bootstrap(_PKG_PARENT)
     schema_ddl = _TABULAR_SCHEMAS[fmt]
 
     class TabularScanUDTF:

@@ -360,6 +360,65 @@ def test_register_sources_once_per_session(spark, tmp_path, monkeypatch):
     assert fresh.read.format("fasta").load(str(fa)).count() == 2
 
 
+def test_register_all_once_per_session(spark, tmp_path, monkeypatch):
+    """ExonSession(s) installs the surface once; a second ExonSession over
+    the same session installs nothing, and everything resolves straight
+    after the first."""
+    import exon_spark.functions.registry as registry
+    import exon_spark.sources as sources
+    import exon_spark.sources.udtfs as udtfs
+    from exon_spark.functions.samflags import SAM_FLAG_MASKS
+
+    calls: list[str] = []
+    for mod, name in (
+        (registry, "register_sql_functions"),
+        (sources, "register_sources"),
+        (udtfs, "register_scan_udtfs"),
+    ):
+        def spy(s, _real=getattr(mod, name), _name=name):
+            calls.append(_name)
+            return _real(s)
+
+        monkeypatch.setattr(mod, name, spy)
+    fresh = spark.newSession()
+    ExonSession(fresh)
+    assert sorted(calls) == [
+        "register_scan_udtfs", "register_sources", "register_sql_functions"
+    ]
+    ExonSession(fresh)
+    assert len(calls) == 3
+
+    def call(name, args):
+        nulls = [f"CAST(NULL AS {a.split()[1]})" for a in args.strip("()").split(",")]
+        return f"{name}({', '.join(nulls)})"
+
+    exprs = [call(n, args) for n, (args, _r, _b) in registry._SQL_FUNCTIONS.items()]
+    exprs += [f"{n}(4)" for n in SAM_FLAG_MASKS]
+    row = fresh.sql("SELECT " + ", ".join(exprs)).collect()[0]
+    assert len(row) == len(registry._SQL_FUNCTIONS) + len(SAM_FLAG_MASKS) == 30
+    assert row[-len(SAM_FLAG_MASKS):] == tuple(
+        mask & 4 != 0 for mask in SAM_FLAG_MASKS.values()
+    )
+    fa = tmp_path / "fresh.fasta"
+    fa.write_text(">a\nACGT\n>b\nGG\n")
+    assert fresh.read.format("fasta").load(str(fa)).count() == 2
+
+
+def test_indexed_vcf_without_region_raises_at_collect(spark, indexed_vcf_table):
+    """The CREATE frame gets its schema on the driver; a statement with no
+    region still scans the Python reader, which refuses it."""
+    gz, _expected = indexed_vcf_table
+    sess = ExonSession(spark)
+    sess.sql(f"CREATE EXTERNAL TABLE noregion_vcf STORED AS INDEXED_VCF LOCATION '{gz}'")
+    try:
+        df = sess.sql("SELECT chrom, pos FROM noregion_vcf")
+        assert df.columns == ["chrom", "pos"]
+        with pytest.raises(Exception, match="requires a region filter"):
+            df.collect()
+    finally:
+        sess.sql("DROP TABLE noregion_vcf")
+
+
 # ------------------------------------------------------------ plan and jobs
 # A region statement over an INDEXED_* view is one Spark job over a JVM
 # DataSourceV2 scan that reads only the columns the statement references.
