@@ -9,6 +9,9 @@
   index-pruned BGZF blocks (GFF region scans);
 - exonspark.spark.VcfBgzfSource and exonspark.spark.BamBgzfSource — the
   DataSourceV2 readers of indexed VCF region scans and of local BAM reads.
+  Both read the partitions that VcfSource/BamSource.plan_partitions
+  planned, in one "scope@beg:end;..." spec (VcfBgzfSource.parsePartitions,
+  written by exon_spark.sources.jvm_fast.read_dsv2).
 
 The jar is committed so all of these work without a JDK. It carries a
 SHA-256 digest of the Java sources as the entry SOURCES_ENTRY; when javac is

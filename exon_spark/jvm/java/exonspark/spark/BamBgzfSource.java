@@ -37,7 +37,8 @@ import org.apache.spark.unsafe.types.UTF8String;
  * byte ranges, or the whole file) and passes the plan as the "partitions"
  * option; each partition reader parses the BAM header for the reference
  * names, seeks its virtual-offset ranges through VcfBgzfSource.BgzfRanges
- * and decodes only the required columns of each record.
+ * and decodes only the required columns of each record. The partition
+ * spec, its parser and the region scopes are VcfBgzfSource's.
  *
  * Rows equal the Python BAM DataSource's (sources/bam.py decode_record)
  * on every column: name '' => null, start/end 1-based (null when unmapped;
@@ -48,13 +49,14 @@ import org.apache.spark.unsafe.types.UTF8String;
  *
  * Options (all lowercase):
  *   path        local filesystem path of the BAM
- *   partitions  '|'-separated partitions, each "scope@beg:end;beg:end...":
- *               BGZF virtual-offset [beg,end) ranges owning the records
- *               that START inside them (beg -1 = first record after the
- *               header, end -1 = end of file). scope "-" keeps every
- *               record, "*" keeps records overlapping any region, a
- *               number keeps records overlapping that one region (so
- *               overlapping regions each emit their own matches).
+ *   partitions  '|'-separated partitions, each "scope@beg:end;beg:end...",
+ *               the grammar of VcfBgzfSource.parsePartitions: BGZF
+ *               virtual-offset [beg,end) ranges owning the records that
+ *               START inside them (beg -1 = first record after the header,
+ *               end -1 = end of file). scope "-" keeps every record, "*"
+ *               keeps records overlapping any region, a number keeps
+ *               records overlapping that one region (so overlapping
+ *               regions each emit their own matches).
  *   regions     ','-separated "chrom:lo:hi" (1-based inclusive; parsed
  *               from the right so chrom names may contain ':')
  */
@@ -170,29 +172,7 @@ public class BamBgzfSource implements TableProvider {
 
     @Override
     public InputPartition[] planInputPartitions() {
-      if (partitionSpec.isEmpty()) {
-        return new InputPartition[0];
-      }
-      String[] parts = partitionSpec.split("\\|");
-      InputPartition[] out = new InputPartition[parts.length];
-      for (int p = 0; p < parts.length; p++) {
-        int at = parts[p].indexOf('@');
-        String scope = parts[p].substring(0, at);
-        String[] ranges = parts[p].substring(at + 1).split(";");
-        long[] begs = new long[ranges.length];
-        long[] ends = new long[ranges.length];
-        for (int i = 0; i < ranges.length; i++) {
-          int c = ranges[i].indexOf(':');
-          begs[i] = Long.parseLong(ranges[i].substring(0, c));
-          ends[i] = Long.parseLong(ranges[i].substring(c + 1));
-        }
-        int region =
-            scope.equals("-") ? BamPartition.ALL_RECORDS
-                : scope.equals("*") ? BamPartition.ANY_REGION
-                : Integer.parseInt(scope);
-        out[p] = new BamPartition(begs, ends, region);
-      }
-      return out;
+      return VcfBgzfSource.parsePartitions(partitionSpec);
     }
 
     @Override
@@ -202,21 +182,6 @@ public class BamBgzfSource implements TableProvider {
         cols[i] = required.fields()[i].name();
       }
       return new BamReaderFactory(path, cols, regionSpec);
-    }
-  }
-
-  static final class BamPartition implements InputPartition {
-    static final int ALL_RECORDS = -2;
-    static final int ANY_REGION = -1;
-
-    final long[] begs;
-    final long[] ends;
-    final int region; // ALL_RECORDS, ANY_REGION or one region's index
-
-    BamPartition(long[] begs, long[] ends, int region) {
-      this.begs = begs;
-      this.ends = ends;
-      this.region = region;
     }
   }
 
@@ -234,7 +199,8 @@ public class BamBgzfSource implements TableProvider {
     @Override
     public PartitionReader<InternalRow> createReader(InputPartition partition) {
       try {
-        return new BamPartitionReader(path, cols, regionSpec, (BamPartition) partition);
+        return new BamPartitionReader(
+            path, cols, regionSpec, (VcfBgzfSource.RangePartition) partition);
       } catch (IOException e) {
         throw new RuntimeException("bam-bgzf: cannot open " + path, e);
       }
@@ -264,7 +230,7 @@ public class BamBgzfSource implements TableProvider {
     private final VcfBgzfSource.BgzfRanges in;
     private final UTF8String[] refNames;
     private final long headerEnd;
-    private final BamPartition part;
+    private final VcfBgzfSource.RangePartition part;
 
     // region filter: refid match table per region, 1-based bounds
     private final boolean[][] regionRef;
@@ -278,7 +244,8 @@ public class BamBgzfSource implements TableProvider {
     private int recLen;
     private InternalRow current;
 
-    BamPartitionReader(String path, String[] cols, String regionSpec, BamPartition part)
+    BamPartitionReader(
+        String path, String[] cols, String regionSpec, VcfBgzfSource.RangePartition part)
         throws IOException {
       colOf = new int[cols.length];
       for (int i = 0; i < cols.length; i++) {
@@ -305,22 +272,15 @@ public class BamBgzfSource implements TableProvider {
       }
       headerEnd = in.tell();
 
-      String[] rs = regionSpec.isEmpty() ? new String[0] : regionSpec.split(",");
-      if (part.region >= 0) {
-        rs = new String[] {rs[part.region]};
-      }
-      regionRef = new boolean[rs.length][refNames.length];
-      regionLo = new long[rs.length];
-      regionHi = new long[rs.length];
-      for (int i = 0; i < rs.length; i++) {
-        int h = rs[i].lastIndexOf(':');
-        int c = rs[i].lastIndexOf(':', h - 1);
-        UTF8String chrom = UTF8String.fromString(rs[i].substring(0, c));
+      VcfBgzfSource.Regions rs = new VcfBgzfSource.Regions(regionSpec, part.region);
+      regionRef = new boolean[rs.chroms.length][refNames.length];
+      regionLo = rs.lo;
+      regionHi = rs.hi;
+      for (int i = 0; i < rs.chroms.length; i++) {
+        UTF8String chrom = UTF8String.fromString(rs.chroms[i]);
         for (int r = 0; r < refNames.length; r++) {
           regionRef[i][r] = refNames[r].equals(chrom);
         }
-        regionLo[i] = Long.parseLong(rs[i].substring(c + 1, h));
-        regionHi[i] = Long.parseLong(rs[i].substring(h + 1));
       }
     }
 
@@ -335,7 +295,7 @@ public class BamBgzfSource implements TableProvider {
           inRange = false;
           continue;
         }
-        if (part.region == BamPartition.ALL_RECORDS || overlapsRegion()) {
+        if (part.region == VcfBgzfSource.RangePartition.ALL_RECORDS || overlapsRegion()) {
           current = buildRow();
           return true;
         }

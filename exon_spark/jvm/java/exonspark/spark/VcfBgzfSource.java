@@ -7,17 +7,13 @@ import java.io.FileInputStream;
 import java.io.IOException;
 import java.io.Serializable;
 import java.nio.charset.StandardCharsets;
-import java.util.ArrayList;
 import java.util.Arrays;
-import java.util.List;
 import java.util.Map;
 import java.util.Set;
 import java.util.zip.DataFormatException;
 import java.util.zip.Inflater;
 
 import org.apache.spark.sql.catalyst.InternalRow;
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow;
-import org.apache.spark.sql.catalyst.util.GenericArrayData;
 import org.apache.spark.sql.connector.catalog.SupportsRead;
 import org.apache.spark.sql.connector.catalog.Table;
 import org.apache.spark.sql.connector.catalog.TableCapability;
@@ -34,19 +30,17 @@ import org.apache.spark.sql.types.DataTypes;
 import org.apache.spark.sql.types.StructField;
 import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
-import org.apache.spark.unsafe.types.UTF8String;
 
 /**
- * DataSourceV2 batch source for tabix-indexed, bgzip-compressed VCF region
- * scans (exon_spark.sources.jvm_fast.read_vcf_region_jvm). The Python
- * driver plans record-exact BGZF virtual-offset ranges from the tabix
- * index (chunk begins/ends re-cut at linear-index record offsets) and
- * passes them as the "partitions" option; each partition reader seeks its
- * compressed ranges, inflates the blocks, and parses the projected VCF
- * fields straight out of the decompressed bytes into InternalRows. No
- * Hadoop LineReader Text copy, no full-line row, no per-field substring
- * scans — the remaining cost is the inflate itself plus one small copy
- * per projected field.
+ * DataSourceV2 batch source for tabix- or CSI-indexed, bgzip-compressed VCF
+ * region scans (exon_spark.sources.jvm_fast.read_vcf_region_jvm). The
+ * Python driver plans record-exact BGZF virtual-offset chunk groups with
+ * VcfSource.plan_partitions and passes them as the "partitions" option;
+ * each partition reader seeks its compressed ranges, inflates the blocks,
+ * and parses the projected VCF fields straight out of the decompressed
+ * bytes into ColumnarBatches. No Hadoop LineReader Text copy, no
+ * full-line row, no per-field substring scans — the remaining cost is the
+ * inflate itself plus one small copy per projected field.
  *
  * Semantics mirror the Python VCF DataSource exactly (sources/vcf.py
  * BASE_SCHEMA, all nine base columns; reference schema exon/exon-core/src/
@@ -58,15 +52,14 @@ import org.apache.spark.unsafe.types.UTF8String;
  *
  * Options (all lowercase):
  *   path        local filesystem path of the .bgz/.gz BGZF VCF
- *   partitions  "beg:end;beg:end|..." — '|'-separated partitions, each a
- *               ';'-separated list of BGZF virtual-offset [beg,end) ranges.
- *               A partition may carry a "ridx@" prefix binding it to ONE
- *               region of the regions option; its reader then filters by
- *               that region alone. This reproduces the per-region
- *               partition semantics of the reference and the Python
- *               DataSource (overlapping regions each emit their own
- *               matches — duplicates included); without the prefix the
- *               partition filters by the OR of all regions.
+ *   partitions  '|'-separated partitions, each "scope@beg:end;beg:end...":
+ *               BGZF virtual-offset [beg,end) ranges (beg -1 = start of
+ *               file, end -1 = end of file). scope "-" keeps every line,
+ *               "*" keeps lines in any region, a number keeps lines in
+ *               that one region, so overlapping regions each emit their
+ *               own matches (duplicates included), as the Python
+ *               DataSource's per-region partitions do. parsePartitions
+ *               reads this grammar for both DSv2 readers.
  *   regions     ','-separated "chrom:lo:hi" (1-based inclusive; parsed
  *               from the right so chrom names may contain ':')
  */
@@ -142,8 +135,7 @@ public class VcfBgzfSource implements TableProvider {
           options.get("path"),
           options.getOrDefault("partitions", ""),
           options.getOrDefault("regions", ""),
-          required,
-          !"false".equalsIgnoreCase(options.getOrDefault("columnar", "true")));
+          required);
     }
   }
 
@@ -152,19 +144,12 @@ public class VcfBgzfSource implements TableProvider {
     private final String partitionSpec;
     private final String regionSpec;
     private final StructType required;
-    private final boolean columnar;
 
-    VcfScan(
-        String path,
-        String partitionSpec,
-        String regionSpec,
-        StructType required,
-        boolean columnar) {
+    VcfScan(String path, String partitionSpec, String regionSpec, StructType required) {
       this.path = path;
       this.partitionSpec = partitionSpec;
       this.regionSpec = regionSpec;
       this.required = required;
-      this.columnar = columnar;
     }
 
     @Override
@@ -184,30 +169,7 @@ public class VcfBgzfSource implements TableProvider {
 
     @Override
     public InputPartition[] planInputPartitions() {
-      if (partitionSpec.isEmpty()) {
-        return new InputPartition[0];
-      }
-      String[] parts = partitionSpec.split("\\|");
-      InputPartition[] out = new InputPartition[parts.length];
-      for (int p = 0; p < parts.length; p++) {
-        String spec = parts[p];
-        int regionIdx = -1;
-        int at = spec.indexOf('@');
-        if (at >= 0) {
-          regionIdx = Integer.parseInt(spec.substring(0, at));
-          spec = spec.substring(at + 1);
-        }
-        String[] ranges = spec.split(";");
-        long[] begs = new long[ranges.length];
-        long[] ends = new long[ranges.length];
-        for (int i = 0; i < ranges.length; i++) {
-          int c = ranges[i].indexOf(':');
-          begs[i] = Long.parseLong(ranges[i].substring(0, c));
-          ends[i] = Long.parseLong(ranges[i].substring(c + 1));
-        }
-        out[p] = new VcfPartition(begs, ends, regionIdx);
-      }
-      return out;
+      return parsePartitions(partitionSpec);
     }
 
     @Override
@@ -216,19 +178,83 @@ public class VcfBgzfSource implements TableProvider {
       for (int i = 0; i < cols.length; i++) {
         cols[i] = required.fields()[i].name();
       }
-      return new VcfReaderFactory(path, cols, regionSpec, columnar);
+      return new VcfReaderFactory(path, cols, regionSpec);
     }
   }
 
-  static final class VcfPartition implements InputPartition {
-    final long[] begs;
-    final long[] ends;
-    final int regionIdx; // -1 = filter by all regions OR'd
+  /**
+   * One planned partition of either DSv2 reader: BGZF virtual-offset
+   * [beg,end) ranges and the region scope its records are filtered by.
+   */
+  public static final class RangePartition implements InputPartition {
+    public static final int ALL_RECORDS = -2;
+    public static final int ANY_REGION = -1;
 
-    VcfPartition(long[] begs, long[] ends, int regionIdx) {
+    public final long[] begs;
+    public final long[] ends;
+    public final int region; // ALL_RECORDS, ANY_REGION or one region's index
+
+    RangePartition(long[] begs, long[] ends, int region) {
       this.begs = begs;
       this.ends = ends;
-      this.regionIdx = regionIdx;
+      this.region = region;
+    }
+  }
+
+  /** The "partitions" option of VcfBgzfSource and BamBgzfSource:
+   * '|'-separated "scope@beg:end;beg:end...", scope "-", "*" or a region
+   * index; an empty spec is no partition. */
+  public static InputPartition[] parsePartitions(String spec) {
+    if (spec.isEmpty()) {
+      return new InputPartition[0];
+    }
+    String[] parts = spec.split("\\|");
+    InputPartition[] out = new InputPartition[parts.length];
+    for (int p = 0; p < parts.length; p++) {
+      int at = parts[p].indexOf('@');
+      String scope = parts[p].substring(0, at);
+      String[] ranges = parts[p].substring(at + 1).split(";");
+      long[] begs = new long[ranges.length];
+      long[] ends = new long[ranges.length];
+      for (int i = 0; i < ranges.length; i++) {
+        int c = ranges[i].indexOf(':');
+        begs[i] = Long.parseLong(ranges[i].substring(0, c));
+        ends[i] = Long.parseLong(ranges[i].substring(c + 1));
+      }
+      int region =
+          scope.equals("-") ? RangePartition.ALL_RECORDS
+              : scope.equals("*") ? RangePartition.ANY_REGION
+              : Integer.parseInt(scope);
+      out[p] = new RangePartition(begs, ends, region);
+    }
+    return out;
+  }
+
+  /** The "chrom:lo:hi" entries of the "regions" option that a partition
+   * of the given scope filters by (none for ALL_RECORDS). */
+  static final class Regions {
+    final String[] chroms;
+    final long[] lo;
+    final long[] hi;
+
+    Regions(String regionSpec, int scope) {
+      String[] rs =
+          scope == RangePartition.ALL_RECORDS || regionSpec.isEmpty()
+              ? new String[0]
+              : regionSpec.split(",");
+      if (scope >= 0) {
+        rs = new String[] {rs[scope]};
+      }
+      chroms = new String[rs.length];
+      lo = new long[rs.length];
+      hi = new long[rs.length];
+      for (int i = 0; i < rs.length; i++) {
+        int h = rs[i].lastIndexOf(':');
+        int c = rs[i].lastIndexOf(':', h - 1);
+        chroms[i] = rs[i].substring(0, c);
+        lo[i] = Long.parseLong(rs[i].substring(c + 1, h));
+        hi[i] = Long.parseLong(rs[i].substring(h + 1));
+      }
     }
   }
 
@@ -236,27 +262,23 @@ public class VcfBgzfSource implements TableProvider {
     private final String path;
     private final String[] cols;
     private final String regionSpec;
-    private final boolean columnar;
 
-    VcfReaderFactory(String path, String[] cols, String regionSpec, boolean columnar) {
+    VcfReaderFactory(String path, String[] cols, String regionSpec) {
       this.path = path;
       this.cols = cols;
       this.regionSpec = regionSpec;
-      this.columnar = columnar;
     }
 
+    /** Never called: every partition reads columnar (Spark's
+     * DataSourceRDD then asks only for createColumnarReader). */
     @Override
     public PartitionReader<InternalRow> createReader(InputPartition partition) {
-      try {
-        return new VcfPartitionReader(path, cols, regionSpec, (VcfPartition) partition);
-      } catch (IOException e) {
-        throw new RuntimeException("vcf-bgzf: cannot open " + path, e);
-      }
+      throw new UnsupportedOperationException("vcf-bgzf reads columnar only");
     }
 
     @Override
     public boolean supportColumnarReads(InputPartition partition) {
-      return columnar;
+      return true;
     }
 
     @Override
@@ -264,8 +286,7 @@ public class VcfBgzfSource implements TableProvider {
         createColumnarReader(InputPartition partition) {
       try {
         return new VcfColumnarReader(
-            new VcfPartitionReader(path, cols, regionSpec, (VcfPartition) partition),
-            cols);
+            new VcfLineCursor(path, cols, regionSpec, (RangePartition) partition), cols);
       } catch (IOException e) {
         throw new RuntimeException("vcf-bgzf: cannot open " + path, e);
       }
@@ -276,7 +297,9 @@ public class VcfBgzfSource implements TableProvider {
 
   private static final int MAX_BLOCK = 1 << 16;
 
-  static final class VcfPartitionReader implements PartitionReader<InternalRow> {
+  /** The lines of one partition that pass the header/blank/region
+   * checks, with the field bounds of the projected columns. */
+  static final class VcfLineCursor implements Closeable {
     // field indices in the VCF line for each projected column
     private final int[] fieldOf;
     // 0 str, 1 pos-long, 2 split';', 3 split',', 4 float, 5 dotnull-str,
@@ -284,17 +307,13 @@ public class VcfBgzfSource implements TableProvider {
     private final int[] colKind;
     private final int maxField;
 
+    private final boolean filter; // false: the partition keeps every line
     private final byte[][] regionChroms;
     private final long[] regionLo;
     private final long[] regionHi;
     private final boolean needPos;
 
     private final BgzfRanges in;
-    private InternalRow current;
-
-    // chrom of region scans is near-constant: cache the last interned value
-    private byte[] lastChrom = new byte[0];
-    private UTF8String lastChromU = UTF8String.EMPTY_UTF8;
 
     private byte[] lbuf = new byte[1 << 12];
     private int llen;
@@ -302,8 +321,7 @@ public class VcfBgzfSource implements TableProvider {
     private final int[] tabs; // positions of line tabs (end of field i)
     private int nTabs; // tabs found on the current line (capped at maxField + 1)
 
-    VcfPartitionReader(
-        String path, String[] cols, String regionSpec, VcfPartition part)
+    VcfLineCursor(String path, String[] cols, String regionSpec, RangePartition part)
         throws IOException {
       String[] names = {
         "chrom", "pos", "id", "ref", "alt", "qual", "filter", "info", "formats"
@@ -324,47 +342,22 @@ public class VcfBgzfSource implements TableProvider {
       maxField = mx;
       tabs = new int[maxField + 1];
 
-      if (regionSpec.isEmpty()) {
-        regionChroms = new byte[0][];
-        regionLo = regionHi = new long[0];
-        needPos = false;
-      } else {
-        String[] rs = regionSpec.split(",");
-        if (part.regionIdx >= 0) {
-          // region-scoped partition: filter by its own region only (the
-          // per-region semantics of the Python DataSource — overlapping
-          // regions each emit their own matches)
-          rs = new String[] {rs[part.regionIdx]};
-        }
-        regionChroms = new byte[rs.length][];
-        regionLo = new long[rs.length];
-        regionHi = new long[rs.length];
-        boolean np = false;
-        for (int i = 0; i < rs.length; i++) {
-          int h = rs[i].lastIndexOf(':');
-          int c = rs[i].lastIndexOf(':', h - 1);
-          regionChroms[i] = rs[i].substring(0, c).getBytes(StandardCharsets.UTF_8);
-          regionLo[i] = Long.parseLong(rs[i].substring(c + 1, h));
-          regionHi[i] = Long.parseLong(rs[i].substring(h + 1));
-          np |= regionLo[i] > 1 || regionHi[i] < Long.MAX_VALUE;
-        }
-        needPos = np;
+      filter = part.region != RangePartition.ALL_RECORDS;
+      Regions rs = new Regions(regionSpec, part.region);
+      regionChroms = new byte[rs.chroms.length][];
+      regionLo = rs.lo;
+      regionHi = rs.hi;
+      boolean np = false;
+      for (int i = 0; i < regionChroms.length; i++) {
+        regionChroms[i] = rs.chroms[i].getBytes(StandardCharsets.UTF_8);
+        np |= regionLo[i] > 1 || regionHi[i] < Long.MAX_VALUE;
       }
+      needPos = np;
       in = new BgzfRanges(path, part.begs, part.ends);
     }
 
-    @Override
-    public boolean next() throws IOException {
-      if (!nextFields()) {
-        return false;
-      }
-      current = buildRow();
-      return true;
-    }
-
     /** Advance to the next line that passes the header/blank/region
-     * checks, leaving its bytes in lbuf/llen and field ends in tabs.
-     * Shared by the row and columnar readers. */
+     * checks, leaving its bytes in lbuf/llen and field ends in tabs. */
     boolean nextFields() throws IOException {
       while (true) {
         if (!fillLine()) {
@@ -374,11 +367,6 @@ public class VcfBgzfSource implements TableProvider {
           return true;
         }
       }
-    }
-
-    @Override
-    public InternalRow get() {
-      return current;
     }
 
     @Override
@@ -443,7 +431,7 @@ public class VcfBgzfSource implements TableProvider {
       if (needPos || contains(fieldOf, 1)) {
         linePos = parseLong(chromEnd + 1, tabs[1]);
       }
-      if (regionChroms.length > 0) {
+      if (filter) {
         boolean hit = false;
         for (int r = 0; r < regionChroms.length; r++) {
           if (bytesEqual(regionChroms[r], lbuf, 0, chromEnd)
@@ -482,37 +470,6 @@ public class VcfBgzfSource implements TableProvider {
       return colKind[i] == 6 && nTabs < 8;
     }
 
-    private InternalRow buildRow() {
-      Object[] vals = new Object[fieldOf.length];
-      for (int i = 0; i < fieldOf.length; i++) {
-        int s = fieldStart(i);
-        int e = fieldEnd(i);
-        switch (colKind[i]) {
-          case 0:
-            vals[i] = fieldOf[i] == 0 ? chromString(e) : utf8(s, e);
-            break;
-          case 1:
-            vals[i] = linePos == Long.MIN_VALUE ? null : (Long) linePos;
-            break;
-          case 2:
-            vals[i] = splitNullable(s, e, (byte) ';');
-            break;
-          case 3:
-            vals[i] = splitNullable(s, e, (byte) ',');
-            break;
-          case 4:
-            vals[i] = parseFloatNullable(s, e);
-            break;
-          case 6:
-            vals[i] = formatsAbsent(i) ? null : utf8(s, e);
-            break;
-          default:
-            vals[i] = isDot(s, e) ? null : utf8(s, e);
-        }
-      }
-      return new GenericInternalRow(vals);
-    }
-
     private static boolean contains(int[] a, int v) {
       for (int x : a) {
         if (x == v) {
@@ -524,18 +481,6 @@ public class VcfBgzfSource implements TableProvider {
 
     private boolean isDot(int s, int e) {
       return s == e || (e - s == 1 && lbuf[s] == '.');
-    }
-
-    private UTF8String utf8(int s, int e) {
-      return UTF8String.fromBytes(Arrays.copyOfRange(lbuf, s, e));
-    }
-
-    private UTF8String chromString(int e) {
-      if (!bytesEqual(lastChrom, lbuf, 0, e)) {
-        lastChrom = Arrays.copyOfRange(lbuf, 0, e);
-        lastChromU = UTF8String.fromBytes(lastChrom);
-      }
-      return lastChromU;
     }
 
     private static boolean bytesEqual(byte[] a, byte[] b, int s, int e) {
@@ -575,48 +520,25 @@ public class VcfBgzfSource implements TableProvider {
         return null;
       }
     }
-
-    private Object splitNullable(int s, int e, byte sep) {
-      if (isDot(s, e)) {
-        return null;
-      }
-      int cnt = 1;
-      for (int i = s; i < e; i++) {
-        if (lbuf[i] == sep) {
-          cnt++;
-        }
-      }
-      Object[] out = new Object[cnt];
-      int k = 0;
-      int tok = s;
-      for (int i = s; i <= e; i++) {
-        if (i == e || lbuf[i] == sep) {
-          out[k++] = UTF8String.fromBytes(Arrays.copyOfRange(lbuf, tok, i));
-          tok = i + 1;
-        }
-      }
-      return new GenericArrayData(out);
-    }
   }
 
   /**
-   * Columnar variant: same line/field scanning as VcfPartitionReader (it
-   * wraps one), but emits 4096-row ColumnarBatches of OnHeapColumnVectors
-   * instead of per-row InternalRows — no per-row object allocation, no
-   * per-row reader round trip; the downstream ColumnarToRow is a tight
-   * codegen'd loop. Field bytes are APPENDED into the vectors' storage
+   * The partition reader: emits the lines of a VcfLineCursor as 4096-row
+   * ColumnarBatches of OnHeapColumnVectors — no per-row object
+   * allocation, no per-row reader round trip; the downstream ColumnarToRow
+   * is a tight codegen'd loop. Field bytes are APPENDED into the vectors' storage
    * (putByteArray), so nothing references the reused line buffer.
    */
   static final class VcfColumnarReader
       implements PartitionReader<org.apache.spark.sql.vectorized.ColumnarBatch> {
     private static final int CAPACITY = 4096;
 
-    private final VcfPartitionReader core;
+    private final VcfLineCursor core;
     private final org.apache.spark.sql.execution.vectorized.OnHeapColumnVector[] vecs;
     private final org.apache.spark.sql.vectorized.ColumnarBatch batch;
     private final int[] elemIdx; // per-column element cursor for array cols
 
-    VcfColumnarReader(VcfPartitionReader core, String[] cols) {
+    VcfColumnarReader(VcfLineCursor core, String[] cols) {
       this.core = core;
       StructField[] fields = new StructField[cols.length];
       for (int i = 0; i < cols.length; i++) {
@@ -787,8 +709,9 @@ public class VcfBgzfSource implements TableProvider {
         if (range >= begs.length) {
           return false;
         }
-        long begC = begs[range] >>> 16;
-        int begU = (int) (begs[range] & 0xFFFF);
+        long beg = Math.max(begs[range], 0); // -1: start of the file
+        long begC = beg >>> 16;
+        int begU = (int) (beg & 0xFFFF);
         endC = ends[range] >>> 16;
         endU = (int) (ends[range] & 0xFFFF);
         fis.getChannel().position(begC);

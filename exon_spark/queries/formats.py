@@ -18,7 +18,7 @@ Scale notes (the part the judge grades):
   of the full corpus — the reference's exact 8-file layout (4.48M records
   vs its asserted 4,437,864).
 * The VCF is bgzf + .tbi; region queries prune to index chunks at planning
-  time and fan out across executors via split_chunk_groups.
+  time and fan out across executors via indexes.chunk_groups.
 * The BAM has a .bai; the full scan splits on linear-index record boundaries,
   the region query prunes via reg2bin.
 """

@@ -26,7 +26,7 @@ import os
 import struct
 from collections.abc import Iterator
 
-from exon_spark.functions.region import parse_region
+from exon_spark.functions.region import expand_regions, parse_region
 from exon_spark.sources.fs import fs_exists
 from exon_spark.sources.base import FileFormatSource, FilePartition
 from exon_spark.sources.util import FoundFile, detect_compression
@@ -480,106 +480,70 @@ class BamSource(FileFormatSource):
                 ".option('regions', 'chr:lo-hi') or WHERE "
                 "bam_region_filter('chr:lo-hi', reference, start, end)"
             )
-        if regions:
-            bai = f.path + ".bai"
-            csi = f.path + ".csi"
-            region_list = [r.strip() for r in regions.split(",") if r.strip()]
-            if fs_exists(bai) or fs_exists(csi):
-                from exon_spark.sources.bgzf import BGZFReader
-                from exon_spark.sources.indexes import (
-                    adaptive_target_bytes,
-                    bai_chunks,
-                    csi_chunks,
-                    read_bai,
-                    read_csi,
-                    split_chunk_groups,
-                    split_chunks_at_offsets,
-                )
-
-                with BGZFReader(f.path) as bg:
-                    refs = read_bam_header(bg.stream_from(0))
-                ref_names = [n for n, _ in refs]
-                index = read_bai(bai) if fs_exists(bai) else None
-                cindex = None if index is not None else read_csi(csi)
-
-                per_region = []
-                for region in region_list:
-                    name, lo, hi = parse_region(region)
-                    if name not in ref_names:
-                        continue
-                    rid = ref_names.index(name)
-                    if index is not None:
-                        chunks = bai_chunks(index, rid, region)
-                        lin = index.linear[rid]
-                    else:
-                        # samtools `index -c` .csi fallback: names come
-                        # from the BAM's own header
-                        chunks = csi_chunks(cindex, rid, lo, hi)
-                        lin = list(cindex.loffsets[rid].values())
-                    if chunks:
-                        per_region.append((region, chunks, lin))
-                par = int(options.get("target_parallelism", 0) or 0)
-                total = sum(
-                    (ce >> 16) - (cb >> 16)
-                    for _, chunks, _lin in per_region
-                    for cb, ce in chunks
-                )
-                target = adaptive_target_bytes(total, par)
-                parts = []
-                for region, chunks, lin in per_region:
-                    # subdivide merged chunks at linear-index record
-                    # boundaries so a whole-chromosome region fans out
-                    # (split_chunk_groups can group but never split)
-                    chunks = split_chunks_at_offsets(chunks, lin, target)
-                    for group in split_chunk_groups(chunks, target):
-                        parts.append(
-                            FilePartition(
-                                f.path, comp, pv, extra=("bai", region, tuple(group))
-                            )
-                        )
-                if not parts:
-                    parts = [FilePartition(f.path, comp, pv, extra=("empty",))]
-                return parts
-            return [FilePartition(f.path, comp, pv, extra=("filter", regions, ()))]
         bai = f.path + ".bai"
         csi = f.path + ".csi"
-        if fs_exists(bai) or fs_exists(csi):
-            # full scan, but the index gives record-boundary virtual
-            # offsets — split the file so one BAM fans out across executors
-            # (without an index BAM is unsplittable: one partition per file,
-            # same as the reference's per-file parallelism). `samtools
-            # index -c` files carry a .csi instead of a .bai: its per-bin
-            # loffsets are record starts too.
-            from exon_spark.sources.bgzf import BGZFReader
-            from exon_spark.sources.indexes import read_bai, read_csi
+        if not (fs_exists(bai) or fs_exists(csi)):
+            # without an index BAM is unsplittable: one partition per file,
+            # same as the reference's per-file parallelism
+            if regions:
+                regions = tuple(expand_regions(regions))
+                return [FilePartition(f.path, comp, pv, extra=("filter", regions, ()))]
+            return [FilePartition(f.path, comp, pv)]
+        from exon_spark.sources.bgzf import BGZFReader
+        from exon_spark.sources.indexes import (
+            adaptive_target_bytes,
+            bai_chunks,
+            chunk_groups,
+            csi_chunks,
+            full_scan_ranges,
+            read_bai,
+            read_csi,
+        )
 
-            with BGZFReader(f.path) as bg:
-                stream = bg.stream_from(0)
-                read_bam_header(stream)
-                start0 = stream.tell_virtual()
-            if fs_exists(bai):
-                index = read_bai(bai)
-                voff_src = (v for lin in index.linear for v in lin)
+        with BGZFReader(f.path) as bg:
+            stream = bg.stream_from(0)
+            ref_names = [n for n, _ in read_bam_header(stream)]
+            header_end = stream.tell_virtual()
+        # `samtools index -c` files carry a .csi instead of a .bai, with
+        # no reference names: those come from the BAM's own header
+        index = read_bai(bai) if fs_exists(bai) else None
+        cindex = None if index is not None else read_csi(csi)
+        par = int(options.get("target_parallelism", 0) or 0)
+        if not regions:
+            # full scan, but the index gives record-start virtual offsets
+            # (BAI linear index, CSI per-bin loffsets) — split the file so
+            # one BAM fans out across executors
+            if index is not None:
+                linear = index.linear
             else:
-                cindex = read_csi(csi)
-                voff_src = (v for lo in cindex.loffsets for v in lo.values())
-            offs = sorted({v for v in voff_src if v > start0})
-            from exon_spark.sources.indexes import adaptive_target_bytes
-
-            par = int(options.get("target_parallelism", 0) or 0)
-            target = adaptive_target_bytes(
-                f.size, par, floor=1 << 20, ceil=16 << 20
-            )  # compressed bytes per split
-            splits = [start0]
-            for v in offs:
-                if (v >> 16) - (splits[-1] >> 16) >= target:
-                    splits.append(v)
-            bounds = list(zip(splits, splits[1:] + [None]))
+                linear = [lo.values() for lo in cindex.loffsets]
+            target = adaptive_target_bytes(f.size, par, floor=1 << 20, ceil=16 << 20)
             return [
                 FilePartition(f.path, comp, pv, extra=("range", s, e))
-                for s, e in bounds
+                for s, e in full_scan_ranges(linear, target, start=header_end)
             ]
-        return [FilePartition(f.path, comp, pv)]
+        per_region = []
+        for region in expand_regions(regions):
+            name, lo, hi = parse_region(region)
+            if name not in ref_names:
+                continue
+            rid = ref_names.index(name)
+            if index is not None:
+                chunks = bai_chunks(index, rid, region)
+                lin = index.linear[rid]
+            else:
+                chunks = csi_chunks(cindex, rid, lo, hi)
+                lin = list(cindex.loffsets[rid].values())
+            if chunks:
+                per_region.append((region, chunks, lin))
+        total = sum(
+            (ce >> 16) - (cb >> 16) for _, chunks, _lin in per_region for cb, ce in chunks
+        )
+        parts = [
+            FilePartition(f.path, comp, pv, extra=("bai", region, tuple(group)))
+            for region, group in chunk_groups(per_region, adaptive_target_bytes(total, par))
+        ]
+        return parts or [FilePartition(f.path, comp, pv, extra=("empty",))]
 
     @classmethod
     def read_arrow_partition(cls, partition: FilePartition, options: dict, schema):
@@ -651,11 +615,7 @@ class BamSource(FileFormatSource):
                 return
             region_filters = None
             if partition.extra and partition.extra[0] == "filter":
-                region_filters = [
-                    parse_region(r.strip())
-                    for r in partition.extra[1].split(",")
-                    if r.strip()
-                ]
+                region_filters = [parse_region(r) for r in partition.extra[1]]
             for rec, _vs, _ve in iter_bam_records(stream, refs, typed_tags=typed):
                 if region_filters is not None and not any(
                     rec["reference"] == n

@@ -320,6 +320,7 @@ class BcfSource(VcfSource):
 
         csi_path = f.path + ".csi"
         if not fs_exists(csi_path):
+            regions = tuple(expand_regions(regions))
             return [FilePartition(f.path, "bgzf", pv, extra=("filter", regions, ()))]
         from exon_spark.sources.indexes import csi_chunks, read_csi
 
@@ -386,11 +387,7 @@ class BcfSource(VcfSource):
                 return
             region_filters = None
             if partition.extra and partition.extra[0] == "filter":
-                region_filters = [
-                    parse_region(r.strip())
-                    for r in partition.extra[1].split(",")
-                    if r.strip()
-                ]
+                region_filters = [parse_region(r) for r in partition.extra[1]]
             with gzip.GzipFile(fileobj=fs_open(partition.path)) as gz:
                 hdr = read_bcf_header(gz)
                 for rec in iter_bcf_records(gz, hdr):

@@ -1054,6 +1054,9 @@ class CramSource(FileFormatSource):
                     )
             return parts or [FilePartition(f.path, None, pv, extra=("empty",))]
         if regions:
+            from exon_spark.functions.region import expand_regions
+
+            regions = tuple(expand_regions(regions))
             return [FilePartition(f.path, None, pv, extra=("filter", regions, ()))]
         return [FilePartition(f.path, None, pv)]
 
@@ -1087,11 +1090,7 @@ class CramSource(FileFormatSource):
             if partition.extra and partition.extra[0] == "filter":
                 from exon_spark.functions.region import parse_region
 
-                region_filters = [
-                    parse_region(r.strip())
-                    for r in partition.extra[1].split(",")
-                    if r.strip()
-                ]
+                region_filters = [parse_region(r) for r in partition.extra[1]]
             for coff in reader.container_offsets():
                 for rec in reader.iter_container(coff):
                     if region_filters is not None:

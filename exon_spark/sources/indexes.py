@@ -466,32 +466,10 @@ def tabix_chunks(
     """BGZF virtual-offset chunks overlapping the region, merged and
     filtered by the linear index (indexed_bgzf_file.rs:52-112 semantics).
     Returns None when the reference name is absent (no rows)."""
-    name, lo, hi = parse_region(region)
+    name = parse_region(region)[0]
     if name not in index.names:
         return None
-    rid = index.names.index(name)
-    beg0 = max(lo - 1, 0)
-    # The tabix/BAI binning scheme covers 2^29 bp; clamp so _reg2bins never
-    # sweeps past the valid bin range for open-ended / whole-chrom regions.
-    end0 = min(hi, 1 << 29)
-    min_voff = 0
-    lin = index.linear[rid]
-    win = beg0 >> 14
-    if lin:
-        min_voff = lin[min(win, len(lin) - 1)]
-    chunks: list[tuple[int, int]] = []
-    for b in _reg2bins(beg0, end0):
-        for cb, ce in index.bins[rid].get(b, ()):
-            if ce > min_voff:
-                chunks.append((max(cb, min_voff), ce))
-    chunks.sort()
-    merged: list[tuple[int, int]] = []
-    for cb, ce in chunks:
-        if merged and cb <= merged[-1][1]:
-            merged[-1] = (merged[-1][0], max(merged[-1][1], ce))
-        else:
-            merged.append((cb, ce))
-    return merged
+    return bai_chunks(index, index.names.index(name), region)
 
 
 # ----------------------------------------------------------------------- bai
@@ -543,8 +521,11 @@ def read_bai(path: str) -> BaiIndex:
     return BaiIndex(bins=bins_per_ref, linear=linear_per_ref)
 
 
-def bai_chunks(index: BaiIndex, ref_id: int, region: str) -> list[tuple[int, int]]:
+def bai_chunks(
+    index: BaiIndex | TabixIndex, ref_id: int, region: str
+) -> list[tuple[int, int]]:
     """Merged BGZF chunks overlapping the region for the given reference id
+    of a BAI or tabix index, filtered by its linear index
     (indexed_bgzf_file.rs:88-108 semantics)."""
     _, lo, hi = parse_region(region)
     beg0 = max(lo - 1, 0)
@@ -619,22 +600,46 @@ def split_chunks_at_offsets(
 
 
 def full_scan_ranges(
-    linear: list[list[int]],
+    linear,
     target_bytes: int,
+    start: int = 0,
 ) -> list[tuple[int, int | None]]:
     """Record-aligned (start_voff, end_voff|None) ranges covering a whole
-    tabix-indexed BGZF file, ~target_bytes compressed each — the full-scan
+    indexed BGZF file, ~target_bytes compressed each — the full-scan
     analogue of ``split_chunks_at_offsets`` (a bgzf stream is otherwise one
-    unsplittable gzip partition). The final range is open-ended (None =
-    read to EOF)."""
-    voffs = sorted({v for lin in linear for v in lin if v > 0})
-    if not voffs:
-        return []
-    splits = [voffs[0]]
-    for v in voffs[1:]:
+    unsplittable gzip partition). ``linear`` holds each reference's
+    record-start virtual offsets (a tabix/BAI linear index, or CSI
+    loffsets). The first range begins at ``start`` when given (BAM: the
+    end of its header), else at the first indexed record; the final range
+    is open-ended (None = read to EOF)."""
+    voffs = sorted({v for lin in linear for v in lin if v > start})
+    if not start:
+        if not voffs:
+            return []
+        start, voffs = voffs[0], voffs[1:]
+    splits = [start]
+    for v in voffs:
         if (v >> 16) - (splits[-1] >> 16) >= target_bytes:
             splits.append(v)
     return list(zip(splits, splits[1:] + [None]))
+
+
+def chunk_groups(per_key, target_bytes: int) -> list[tuple[object, list]]:
+    """The region planner of every indexed BGZF format (VCF .tbi/.csi, BAM
+    .bai/.csi, GFF .tbi): ``per_key`` = [(key, merged_chunks,
+    cut_voffs)], where ``cut_voffs`` are record-start virtual offsets (the
+    linear index, or CSI loffsets). Chunks above ``target_bytes``
+    compressed are first cut at those offsets, then grouped into
+    ~``target_bytes`` groups. Returns [(key, [(beg, end), ...]), ...] in
+    ``per_key`` order; the groups of one key tile its chunks exactly, and
+    a group never mixes keys."""
+    return [
+        (key, group)
+        for key, chunks, cuts in per_key
+        for group in split_chunk_groups(
+            split_chunks_at_offsets(chunks, cuts, target_bytes), target_bytes
+        )
+    ]
 
 
 def split_chunk_groups(

@@ -16,15 +16,14 @@ served them.
   single large file fans out across executors (SURVEY.md §4.4).
 * Indexed VCF region scans and local BAM reads go to the Java
   DataSourceV2 readers in exon_spark/jvm (``VcfBgzfSource``,
-  ``BamBgzfSource``). The driver plans virtual-offset ranges from the
-  index (for BAM with ``BamSource.plan_partitions`` itself); executors
-  inflate only those BGZF blocks and decode only the columns Catalyst
-  requires.
+  ``BamBgzfSource``). Both plan on the driver with their Python source's
+  own planner (``VcfSource``/``BamSource.plan_partitions``), so either
+  route reads the same partitions; ``read_dsv2`` encodes the plan as the
+  one partition spec both Java readers parse. Executors inflate only
+  the planned BGZF blocks and decode only the columns Catalyst requires.
 """
 
 from __future__ import annotations
-
-import bisect
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -142,101 +141,60 @@ def _projection(base_cols, columns) -> list[str]:
     return [c for c in base_cols if c in keep] or list(base_cols)
 
 
-def _plan_dsv2_partitions(index, region_list, target: int):
-    """Tabix entry point for _plan_voff_partitions: chunks from the bin
-    index, cut points from the linear index."""
+def read_dsv2(spark: SparkSession, cls: str, path: str, parts) -> DataFrame:
+    """Load a Java DataSourceV2 reader (VcfBgzfSource, BamBgzfSource) over
+    the planner partitions of ``VcfSource``/``BamSource.plan_partitions``.
+    Each partition becomes one entry ``scope@beg:end;beg:end...`` of the
+    ``partitions`` option (BGZF virtual-offset ranges, -1 = after the
+    header / end of file): scope ``-`` keeps every record, ``*`` records
+    overlapping any region of the ``regions`` option, a number records
+    overlapping that one region — a ``tabix``/``bai`` partition keeps its
+    own region's matches, so overlapping regions each emit theirs. An
+    ``empty`` partition reads nothing."""
     from exon_spark.functions.region import parse_region
-    from exon_spark.sources.indexes import tabix_chunks
 
-    per_region = []
-    for ridx, region in enumerate(region_list):
-        name = parse_region(region)[0]
-        chunks = tabix_chunks(index, region) or []
-        if chunks:
-            cuts = sorted(set(index.linear[index.names.index(name)]))
-            per_region.append((ridx, chunks, cuts))
-    return _plan_voff_partitions(per_region, target)
-
-
-def _plan_csi_partitions(cindex, region_list, target: int):
-    """CSI entry point (htslib ``tabix --csi`` layout): chunks from the
-    binning index, cut points from the per-bin loffsets — both are
-    record-start virtual offsets, same contract as the tabix linear
-    index."""
-    from exon_spark.functions.region import parse_region
-    from exon_spark.sources.indexes import csi_chunks
-
-    per_region = []
-    for ridx, region in enumerate(region_list):
-        name, lo, hi = parse_region(region)
-        if name not in cindex.names:
+    regions: list[str] = []
+    specs = []
+    for part in parts:
+        kind = part.extra[0] if part.extra else None
+        if kind == "empty":
             continue
-        rid = cindex.names.index(name)
-        chunks = csi_chunks(cindex, rid, lo, hi)
-        if chunks:
-            cuts = sorted(set(cindex.loffsets[rid].values()))
-            per_region.append((ridx, chunks, cuts))
-    return _plan_voff_partitions(per_region, target)
-
-
-def _plan_voff_partitions(per_region, target: int):
-    """Record-exact BGZF virtual-offset [beg, end) ranges per region, cut
-    at index record offsets and packed into ~`target` partitions balanced
-    by compressed size. Every cut point is the virtual offset of a record
-    start, so cutting there keeps each range a whole number of VCF lines
-    — partitions never split or duplicate a record.
-
-    ``per_region`` = [(region_idx, merged_chunks, sorted_cut_voffsets)].
-    Returns [(region_idx, [(beg, end), ...]), ...]. Partitions never mix
-    regions: each is filtered executor-side by its OWN region only, which
-    reproduces the Python DataSource's per-region scan semantics exactly
-    (overlapping regions each emit their own matches)."""
-    subranges: list[tuple[int, int, int]] = []  # (region_idx, beg, end)
-    for ridx, chunks, cuts in per_region:
-        for cb, ce in chunks:
-            lo = bisect.bisect_right(cuts, cb)
-            hi = bisect.bisect_left(cuts, ce)
-            prev = cb
-            for v in cuts[lo:hi]:
-                if v > prev:
-                    subranges.append((ridx, prev, v))
-                    prev = v
-            if ce > prev:
-                subranges.append((ridx, prev, ce))
-    if not subranges:
-        return []
-    total = sum((e >> 16) - (b >> 16) for _r, b, e in subranges)
-    per = max(1, total // max(target, 1))
-    parts: list[tuple[int, list[tuple[int, int]]]] = []
-    cur: list[tuple[int, int]] = []
-    cur_ridx = subranges[0][0]
-    acc = 0
-    for ridx, b, e in subranges:
-        if cur and ridx != cur_ridx:
-            parts.append((cur_ridx, cur))
-            cur, acc = [], 0
-        cur_ridx = ridx
-        cur.append((b, e))
-        acc += (e >> 16) - (b >> 16)
-        if acc >= per and len(parts) < target - 1:
-            parts.append((cur_ridx, cur))
-            cur, acc = [], 0
-    if cur:
-        parts.append((cur_ridx, cur))
-    return parts
+        scope, ranges = "-", [(-1, -1)]
+        if kind == "range":
+            _, beg, end = part.extra
+            ranges = [(beg, -1 if end is None else end)]
+        elif kind in ("tabix", "bai"):
+            _, region, ranges = part.extra
+            if region not in regions:
+                regions.append(region)
+            scope = str(regions.index(region))
+        elif kind == "filter":
+            regions, scope = list(part.extra[1]), "*"
+        specs.append(f"{scope}@" + ";".join(f"{b}:{e}" for b, e in ranges))
+    return (
+        spark.read.format(cls)
+        .option("path", path)
+        .option("partitions", "|".join(specs))
+        .option(
+            "regions",
+            ",".join(f"{n}:{lo}:{hi}" for n, lo, hi in map(parse_region, regions)),
+        )
+        .load()
+    )
 
 
 def read_vcf_region_jvm(
     spark: SparkSession, path: str, regions: str, columns=None
 ) -> DataFrame:
     """Region scan of a bgzipped, tabix- or CSI-indexed VCF through the
-    Java DataSourceV2 (exonspark.spark.VcfBgzfSource): the driver plans
-    record-exact virtual-offset ranges from the index; executors seek and
-    inflate only those BGZF blocks and parse the fields Catalyst asks for
+    Java DataSourceV2 (exonspark.spark.VcfBgzfSource): ``VcfSource.
+    plan_partitions`` plans record-exact virtual-offset chunk groups from
+    the index on the driver; executors seek and inflate only those BGZF
+    blocks and parse the fields Catalyst asks for
     (SupportsPushDownRequiredColumns) straight from the decompressed bytes
-    into rows. No Python worker touches the data path, which clears the
-    ~1.8 us/row Arrow-to-row ingest floor of the Python DataSource route
-    (SCALE.md "Measured floors").
+    into columnar batches. No Python worker touches the data path, which
+    clears the ~1.8 us/row Arrow-to-row ingest floor of the Python
+    DataSource route (SCALE.md "Measured floors").
 
     Rows equal the Python DataSource's on all nine base columns: same
     dot-null handling, same region filter (1-based inclusive,
@@ -248,30 +206,18 @@ def read_vcf_region_jvm(
     count tracks defaultParallelism, not file count."""
     import os
 
-    from exon_spark.functions.region import expand_regions, parse_region
     from exon_spark.jvm import VCF_DSV2_CLASS
-    from exon_spark.sources.indexes import read_csi, read_tabix
+    from exon_spark.sources.util import FoundFile
+    from exon_spark.sources.vcf import VcfSource
 
-    region_list = expand_regions(regions)
-    target = spark.sparkContext.defaultParallelism * 2
-    if os.path.exists(path + ".tbi"):
-        parts = _plan_dsv2_partitions(read_tabix(path + ".tbi"), region_list, target)
-    else:
-        parts = _plan_csi_partitions(read_csi(path + ".csi"), region_list, target)
-    pstr = "|".join(
-        f"{ridx}@" + ";".join(f"{b}:{e}" for b, e in ranges)
-        for ridx, ranges in parts
+    parts = VcfSource.plan_partitions(
+        FoundFile(path, os.path.getsize(path)),
+        {
+            "regions": regions,
+            "target_parallelism": spark.sparkContext.defaultParallelism,
+        },
     )
-    rstr = ",".join(
-        f"{n}:{lo}:{hi}" for n, lo, hi in map(parse_region, region_list)
-    )
-    df = (
-        spark.read.format(VCF_DSV2_CLASS)
-        .option("path", path)
-        .option("partitions", pstr)
-        .option("regions", rstr)
-        .load()
-    )
+    df = read_dsv2(spark, VCF_DSV2_CLASS, path, parts)
     return df.select(*_projection(_VCF_BASE_COLS, columns))
 
 
@@ -326,7 +272,6 @@ def read_bam_jvm(spark: SparkSession, path: str, options: dict) -> DataFrame:
     duplicates), ``filter`` partitions keep records overlapping any."""
     import os
 
-    from exon_spark.functions.region import parse_region
     from exon_spark.jvm import BAM_DSV2_CLASS
     from exon_spark.sources.bam import BamSource
     from exon_spark.sources.base import _split_ddl_fields
@@ -334,37 +279,8 @@ def read_bam_jvm(spark: SparkSession, path: str, options: dict) -> DataFrame:
 
     opts = dict(options)
     opts.setdefault("target_parallelism", spark.sparkContext.defaultParallelism)
-    regions = str(opts.get("regions") or opts.get("region") or "")
-    region_list = [r.strip() for r in regions.split(",") if r.strip()]
-    specs = []
-    for part in BamSource.plan_partitions(
-        FoundFile(path, os.path.getsize(path)), opts
-    ):
-        kind = part.extra[0] if part.extra else None
-        if kind is None:
-            specs.append("-@-1:-1")
-        elif kind == "range":
-            _, beg, end = part.extra
-            specs.append(f"-@{beg}:{-1 if end is None else end}")
-        elif kind == "bai":
-            _, region, chunks = part.extra
-            specs.append(
-                f"{region_list.index(region)}@"
-                + ";".join(f"{b}:{e}" for b, e in chunks)
-            )
-        elif kind == "filter":
-            specs.append("*@-1:-1")
-        # "empty": no region has an index chunk, so no partition
-    df = (
-        spark.read.format(BAM_DSV2_CLASS)
-        .option("path", path)
-        .option("partitions", "|".join(specs))
-        .option(
-            "regions",
-            ",".join(f"{n}:{lo}:{hi}" for n, lo, hi in map(parse_region, region_list)),
-        )
-        .load()
-    )
+    parts = BamSource.plan_partitions(FoundFile(path, os.path.getsize(path)), opts)
+    df = read_dsv2(spark, BAM_DSV2_CLASS, path, parts)
     base = [n for n, _t in _split_ddl_fields(BamSource.BASE_SCHEMA)]
     return df.select(*_projection(base, opts.get("columns")))
 

@@ -184,9 +184,8 @@ def _tabix_lines_rdd(spark: SparkSession, path: str, regions: str):
     from exon_spark.functions.region import parse_region
     from exon_spark.sources.indexes import (
         adaptive_target_bytes,
+        chunk_groups,
         read_tabix,
-        split_chunk_groups,
-        split_chunks_at_offsets,
         tabix_chunks,
     )
 
@@ -215,21 +214,15 @@ def _tabix_lines_rdd(spark: SparkSession, path: str, regions: str):
         chunks = tabix_chunks(idx, region)
         if chunks:
             per_name.setdefault(parse_region(region)[0], []).extend(chunks)
-    all_chunks = [
-        (merge_chunks(chunks), idx.linear[idx.names.index(name)])
+    per_key = [
+        (name, merge_chunks(chunks), idx.linear[idx.names.index(name)])
         for name, chunks in per_name.items()
     ]
     total = sum(
-        (ce >> 16) - (cb >> 16) for chunks, _ in all_chunks for cb, ce in chunks
+        (ce >> 16) - (cb >> 16) for _, chunks, _lin in per_key for cb, ce in chunks
     )
     target = adaptive_target_bytes(total, spark.sparkContext.defaultParallelism)
-    groups = [
-        g
-        for chunks, lin in all_chunks
-        for g in split_chunk_groups(
-            split_chunks_at_offsets(chunks, lin, target), target
-        )
-    ]
+    groups = [g for _name, g in chunk_groups(per_key, target)]
 
     def _read_group(group):
         from exon_spark.sources.bgzf import BGZFReader
@@ -248,7 +241,7 @@ def _tabix_lines_rdd(spark: SparkSession, path: str, regions: str):
         if codec_active(spark):
             try:
                 return build_region_view(
-                    path, [c for chunks, _ in all_chunks for c in chunks]
+                    path, [c for _, chunks, _lin in per_key for c in chunks]
                 )
             except Exception:
                 pass  # fall back to the Python chunk-group readers

@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator
 
-from exon_spark.functions.region import parse_region
+from exon_spark.functions.region import expand_regions, parse_region
 from exon_spark.sources.fs import fs_exists
 from exon_spark.sources.base import FileFormatSource, FilePartition
 from exon_spark.sources.util import FoundFile, detect_compression, open_maybe_compressed
@@ -220,19 +220,16 @@ class VcfSource(FileFormatSource):
                 "vcf_region_filter('chr:lo-hi', chrom, pos)"
             )
         if regions:
-            from exon_spark.functions.region import expand_regions
-
             region_list = expand_regions(regions)
             tbi = f.path + ".tbi"
             csi = f.path + ".csi"
             if comp == "gzip" and (fs_exists(tbi) or fs_exists(csi)):
                 from exon_spark.sources.indexes import (
                     adaptive_target_bytes,
+                    chunk_groups,
                     csi_chunks,
                     read_csi,
                     read_tabix,
-                    split_chunk_groups,
-                    split_chunks_at_offsets,
                     tabix_chunks,
                 )
 
@@ -265,31 +262,19 @@ class VcfSource(FileFormatSource):
                     for _, chunks, _lin in per_region
                     for cb, ce in chunks
                 )
-                target = adaptive_target_bytes(total, par)
-                parts = []
-                for region, chunks, lin in per_region:
-                    # fan a big region out across executors: ~2 groups per
-                    # core for bench-sized scans, 8 MB cap at cluster scale.
-                    # Merged chunks above the target are first subdivided at
-                    # linear-index record boundaries — a whole-chromosome
-                    # region over a contiguous multi-GB file is otherwise a
-                    # handful of ~100 MB chunks no grouping can fan out.
-                    chunks = split_chunks_at_offsets(chunks, lin, target)
-                    for group in split_chunk_groups(chunks, target):
-                        parts.append(
-                            FilePartition(
-                                path=f.path,
-                                compression=comp,
-                                partition_values=pv,
-                                extra=("tabix", region, tuple(group)),
-                            )
-                        )
-                if not parts:  # Spark needs >=1 partition; yield-nothing stub
-                    parts = [FilePartition(f.path, comp, pv, extra=("empty",))]
-                return parts
+                # fan a big region out across executors: ~2 groups per core
+                # for bench-sized scans, 8 MB cap at cluster scale
+                parts = [
+                    FilePartition(f.path, comp, pv, extra=("tabix", region, tuple(group)))
+                    for region, group in chunk_groups(
+                        per_region, adaptive_target_bytes(total, par)
+                    )
+                ]
+                # Spark needs >=1 partition; yield-nothing stub
+                return parts or [FilePartition(f.path, comp, pv, extra=("empty",))]
             # no index: full scan with residual filter per region set
             return [
-                FilePartition(f.path, comp, pv, extra=("filter", regions, ()))
+                FilePartition(f.path, comp, pv, extra=("filter", tuple(region_list), ()))
             ]
         tbi = f.path + ".tbi"
         if comp == "gzip" and fs_exists(tbi):
@@ -406,11 +391,7 @@ class VcfSource(FileFormatSource):
         elif partition.extra and partition.extra[0] == "filter":
             # unindexed region scan: full stream + vectorized residual
             # OR-of-regions predicate (was the per-row Python path)
-            region = [
-                parse_region(r.strip())
-                for r in partition.extra[1].split(",")
-                if r.strip()
-            ]
+            region = [parse_region(r) for r in partition.extra[1]]
 
         def batches():
             import pyarrow as pa
@@ -567,11 +548,7 @@ class VcfSource(FileFormatSource):
                 return
             region_filters = None
             if partition.extra and partition.extra[0] == "filter":
-                region_filters = [
-                    parse_region(r.strip())
-                    for r in partition.extra[1].split(",")
-                    if r.strip()
-                ]
+                region_filters = [parse_region(r) for r in partition.extra[1]]
             with open_maybe_compressed(partition.path, partition.compression) as fh:
                 for raw in fh:
                     rec = _parse_line(raw.decode("utf-8", "replace").rstrip("\n"))

@@ -156,7 +156,9 @@ def _bai_to_csi(bai_path: str, csi_path: str) -> None:
         payload += struct.pack("<i", len(bai.bins[rid]))
         for bin_id in sorted(bai.bins[rid]):
             chunks = bai.bins[rid][bin_id]
-            payload += struct.pack("<IQi", bin_id, 0, len(chunks))
+            # loffset: a record start in the bin, as samtools writes
+            loffset = min(cb for cb, _ce in chunks)
+            payload += struct.pack("<IQi", bin_id, loffset, len(chunks))
             for cb, ce in chunks:
                 payload += struct.pack("<QQ", cb, ce)
     with BGZFWriter(csi_path) as out:
@@ -302,3 +304,81 @@ def test_py_repr_matches_python(spark):
     repr_of = spark._jvm.exonspark.spark.BamBgzfSource.pyRepr
     bad = [(v, repr_of(v)) for v in values if repr_of(v) != repr(v)]
     assert not bad, bad[:10]
+
+
+@pytest.mark.parametrize("layout", ["bai", "csi"])
+@pytest.mark.parametrize("target", [1, 1 << 12, 1 << 16, 1 << 20, 1 << 40])
+def test_bam_full_scan_ranges(bam, monkeypatch, layout, target):
+    """A full scan of an indexed BAM cuts where the planner always has:
+    the first range starts at the end of the header, and each next one at
+    the first index offset (BAI linear index, CSI loffsets) at least
+    ``target`` compressed bytes past the previous cut."""
+    import os
+
+    from exon_spark.sources import indexes
+    from exon_spark.sources.bam import BamSource, read_bam_header
+    from exon_spark.sources.bgzf import BGZFReader
+    from exon_spark.sources.util import FoundFile
+
+    path = bam[layout]
+    with BGZFReader(path) as bg:
+        stream = bg.stream_from(0)
+        read_bam_header(stream)
+        start0 = stream.tell_virtual()
+    if layout == "bai":
+        voffs = [v for lin in indexes.read_bai(path + ".bai").linear for v in lin]
+    else:
+        voffs = [v for lo in indexes.read_csi(path + ".csi").loffsets for v in lo.values()]
+    splits = [start0]
+    for v in sorted({v for v in voffs if v > start0}):
+        if (v >> 16) - (splits[-1] >> 16) >= target:
+            splits.append(v)
+    expect = [("range", s, e) for s, e in zip(splits, splits[1:] + [None])]
+
+    monkeypatch.setattr(indexes, "adaptive_target_bytes", lambda *a, **k: target)
+    parts = BamSource.plan_partitions(FoundFile(path, os.path.getsize(path)), {})
+    assert [p.extra for p in parts] == expect
+    assert len(expect) > (2 if target <= 1 << 16 else 0)
+
+
+def test_region_file_reads_like_comma_list(spark, bam, tmp_path):
+    """A regions option naming a file (one region per line) reads the
+    same rows as the comma-separated list: indexed BAM through the JVM
+    reader and through the Python reader (parse_tags), unindexed BAM
+    through both, and unindexed VCF."""
+    from exon_spark.sources import read_format
+
+    listed = "chr1:400000-700000,chr2:1-50000,chr1:100-200"
+    region_file = tmp_path / "regions.txt"
+    region_file.write_text(listed.replace(",", "\n") + "\n")
+
+    def both(read):
+        by_file = read(str(region_file))
+        assert by_file, "region file matched no rows"
+        assert by_file == read(listed)
+
+    def jvm_rows(path):
+        return lambda regions: _rows(_jvm(spark, path, regions=regions))
+
+    def py_rows(path, **options):
+        def read(regions):
+            df = read_format(spark, "bam", path, regions=regions, **options)
+            assert "BamBgzfScan" not in df._jdf.queryExecution().executedPlan().toString()
+            return sorted(map(repr, df.collect()))
+
+        return read
+
+    both(jvm_rows(bam["bai"]))
+    both(py_rows(bam["bai"], parse_tags="true"))
+    both(jvm_rows(bam["noidx"]))
+    both(lambda regions: _rows(_python(spark, bam["noidx"], regions=regions)))
+
+    vcf = tmp_path / "plain.vcf"
+    lines = ["##fileformat=VCFv4.2", "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO"]
+    lines += [f"chr{c}\t{p}\t.\tA\tC\t.\tPASS\t." for c in (1, 2) for p in range(50, 800_000, 997)]
+    vcf.write_text("\n".join(lines) + "\n")
+    both(
+        lambda regions: sorted(
+            map(repr, read_format(spark, "vcf", str(vcf), regions=regions).collect())
+        )
+    )

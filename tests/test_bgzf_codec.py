@@ -179,43 +179,79 @@ def test_vcf_region_read_keeps_formats_and_samples(spark, sample_vcfs, region):
 
 def test_vcf_dsv2_partition_planner_exact(spark):
     """Partition boundaries are record-exact for ANY partition count: a
-    deliberately over-partitioned plan (tiny target span) must yield the
-    same multiset of rows as a single-partition plan — no record lost or
-    duplicated at a cut point."""
+    deliberately over-partitioned plan (tiny target byte count) must yield
+    the same multiset of rows as a single-partition plan — no record lost
+    or duplicated at a cut point."""
     from exon_spark.queries.formats import ensure_format_fixtures
-    from exon_spark.functions.region import expand_regions
-    from exon_spark.sources.indexes import read_tabix
-    from exon_spark.sources.jvm_fast import _plan_dsv2_partitions
+    from exon_spark.sources.base import FilePartition
+    from exon_spark.sources.indexes import chunk_groups, read_tabix, tabix_chunks
+    from exon_spark.sources.jvm_fast import read_dsv2
 
     fx = ensure_format_fixtures("/root/testdata/sf0.01")
     vcf = os.path.join(fx, "variants.vcf.bgz")
     index = read_tabix(vcf + ".tbi")
-    regions = expand_regions("chr1")
-    fine = _plan_dsv2_partitions(index, regions, 500)
-    coarse = _plan_dsv2_partitions(index, regions, 1)
-    assert len(fine) > len(coarse)
+    per_region = [("chr1", tabix_chunks(index, "chr1"), index.linear[index.names.index("chr1")])]
+    fine = chunk_groups(per_region, 1)
+    coarse = chunk_groups(per_region, 1 << 40)
+    assert len(fine) > len(coarse) == 1
 
-    def read_with(parts):
-        pstr = "|".join(
-            f"{ridx}@" + ";".join(f"{b}:{e}" for b, e in ranges)
-            for ridx, ranges in parts
-        )
-        return (
-            spark.read.format("exonspark.spark.VcfBgzfSource")
-            .option("path", vcf)
-            .option("partitions", pstr)
-            .option("regions", "chr1:1:%d" % (2**63 - 1))
-            .load()
-            .select("chrom", "pos", "id")
-        )
+    def read_with(groups):
+        parts = [FilePartition(vcf, "gzip", (), extra=("tabix", r, g)) for r, g in groups]
+        df = read_dsv2(spark, "exonspark.spark.VcfBgzfSource", vcf, parts)
+        assert df.rdd.getNumPartitions() == len(groups)
+        return df.select("chrom", "pos", "id")
 
     a, b = read_with(fine), read_with(coarse)
     assert a.count() == b.count()
     assert a.exceptAll(b).count() == 0
     # ranges must tile the chunk span: disjoint, ordered, gap-free
-    flat = [r for _ridx, ranges in fine for r in ranges]
+    flat = [r for _region, ranges in fine for r in ranges]
     for (b0, e0), (b1, _e1) in zip(flat, flat[1:]):
         assert b0 < e0 and e0 == b1
+
+
+@pytest.mark.parametrize("index_kind", ["tbi", "csi"])
+def test_vcf_region_jvm_partitions_are_the_planner_groups(
+    spark, sample_vcfs, tmp_path, index_kind
+):
+    """The partitions of a read_vcf_region_jvm scan, as the JVM parsed
+    them, are the ``tabix`` groups of VcfSource.plan_partitions: same
+    ranges, same order, each scoped to its own region."""
+    import shutil
+
+    from py4j.java_gateway import get_field
+
+    from exon_spark.functions.region import parse_region
+    from exon_spark.sources.indexes import build_csi_vcf
+    from exon_spark.sources.jvm_fast import read_vcf_region_jvm
+    from exon_spark.sources.util import FoundFile
+    from exon_spark.sources.vcf import VcfSource
+
+    vcf = sample_vcfs[0]
+    if index_kind == "csi":
+        shutil.copy(vcf, str(tmp_path / "v.vcf.gz"))
+        vcf = str(tmp_path / "v.vcf.gz")
+        build_csi_vcf(vcf)
+    regions = "1,2:1-100000,Z:1-10,1:1000-2000,2:1-100000"
+    planned = VcfSource.plan_partitions(
+        FoundFile(vcf, os.path.getsize(vcf)),
+        {"regions": regions, "target_parallelism": spark.sparkContext.defaultParallelism},
+    )
+    assert len(planned) > 3 and all(p.extra[0] == "tabix" for p in planned)
+
+    df = read_vcf_region_jvm(spark, vcf, regions)
+    qe = df._jdf.queryExecution()
+    option = qe.optimizedPlan().collectLeaves().head().relation().options().get("regions")
+    scoped = [tuple(r.rsplit(":", 2)) for r in option.split(",")]
+    jparts = qe.executedPlan().collectLeaves().head().inputPartitions()
+    got = []
+    for i in range(jparts.size()):
+        p = jparts.apply(i)
+        name, lo, hi = scoped[get_field(p, "region")]
+        got.append(
+            ((name, int(lo), int(hi)), list(zip(get_field(p, "begs"), get_field(p, "ends"))))
+        )
+    assert got == [(parse_region(p.extra[1]), list(p.extra[2])) for p in planned]
 
 
 def test_vcf_dsv2_plan_is_batch_scan(spark):
@@ -297,7 +333,8 @@ def adversarial_vcf(tmp_path_factory):
 
 
 def _dsv2_read(spark, path, parts, regions=""):
-    pstr = "|".join(";".join(f"{b}:{e}" for b, e in p) for p in parts)
+    scope = "*@" if regions else "-@"
+    pstr = "|".join(scope + ";".join(f"{b}:{e}" for b, e in p) for p in parts)
     return (
         spark.read.format("exonspark.spark.VcfBgzfSource")
         .option("path", path)
@@ -387,33 +424,6 @@ def test_vcf_dsv2_region_filter_semantics(spark, adversarial_vcf):
     # empty projection still counts every in-range record
     n = _dsv2_read(spark, path, parts, regions="chrC:1:%d" % (2**62)).count()
     assert n == sum(1 for c, *_ in recs if c == "chrC")
-
-
-def test_vcf_dsv2_row_and_columnar_readers_agree(spark, adversarial_vcf):
-    """The row-based PartitionReader (columnar=false, the fallback) must
-    produce the same multiset as the default ColumnarBatch reader on the
-    adversarial fixture."""
-    path, recs, rec_voffs, first, eof = adversarial_vcf
-    parts = [[(first, eof)]]
-
-    def read(columnar):
-        pstr = "|".join(";".join(f"{b}:{e}" for b, e in p) for p in parts)
-        return (
-            spark.read.format("exonspark.spark.VcfBgzfSource")
-            .option("path", path)
-            .option("partitions", pstr)
-            .option("regions", "")
-            .option("columnar", str(columnar).lower())
-            .load()
-        )
-
-    col, row = read(True), read(False)
-    assert col.count() == row.count() == len(recs)
-    assert col.exceptAll(row).count() == 0
-    assert row.exceptAll(col).count() == 0
-    # and the row path is actually row-based (no ColumnarToRow)
-    plan = row._jdf.queryExecution().executedPlan().toString()
-    assert "ColumnarToRow" not in plan
 
 
 def test_vcf_dsv2_csi_only_routing(spark, tmp_path):

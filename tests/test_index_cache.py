@@ -142,8 +142,8 @@ def test_remote_index_is_never_cached(indexed_files, index_opens):
 
 def test_cached_index_is_not_mutated(indexed_files):
     from exon_spark.sources.bam import BamSource
-    from exon_spark.sources.jvm_fast import _plan_dsv2_partitions
     from exon_spark.sources.util import FoundFile
+    from exon_spark.sources.vcf import VcfSource
 
     _, gz, bam = indexed_files
     tbi, bai = read_tabix(gz + ".tbi"), read_bai(bam + ".bai")
@@ -152,7 +152,10 @@ def test_cached_index_is_not_mutated(indexed_files):
     first = [tabix_chunks(tbi, r) for r in regions]
     first_bai = [bai_chunks(bai, 0, r) for r in ("chr1:1-1000000", "chr1")]
     # planners consume the shared object too
-    _plan_dsv2_partitions(tbi, regions, 8)
+    VcfSource.plan_partitions(
+        FoundFile(gz, os.path.getsize(gz)),
+        {"regions": ",".join(regions), "target_parallelism": 4},
+    )
     f = FoundFile(bam, os.path.getsize(bam))
     BamSource.plan_partitions(f, {"regions": "chr1", "target_parallelism": 4})
     assert [tabix_chunks(read_tabix(gz + ".tbi"), r) for r in regions] == first

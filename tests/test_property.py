@@ -154,69 +154,64 @@ def test_fixtures_xl_voffset_arithmetic(tmp_path_factory, lens):
 
 @settings(max_examples=60, deadline=None)
 @given(
-    n_chunks=st.integers(1, 6),
-    n_cuts=st.integers(0, 40),
-    target=st.integers(1, 64),
+    layout=st.lists(
+        st.tuples(st.integers(1, 6), st.integers(0, 40)), min_size=1, max_size=3
+    ),
+    target=st.integers(1, 1 << 25),
     data=st.data(),
 )
-def test_dsv2_partition_planner_tiles_chunks(n_chunks, n_cuts, target, data):
-    """_plan_dsv2_partitions must tile the tabix chunks exactly for ANY
-    linear index / chunk layout / target: ranges are disjoint, ordered,
-    and their union equals the chunk list — no record window lost or
-    duplicated at a cut — and the partition count never exceeds the
-    number of subranges."""
-    from exon_spark.sources.indexes import TabixIndex
-    from exon_spark.sources.jvm_fast import _plan_dsv2_partitions
+def test_chunk_groups_tile_chunks(layout, target, data):
+    """chunk_groups must tile every key's chunks exactly for ANY chunk
+    layout / cut offsets / target: each key's ranges are disjoint,
+    ordered, cut only at chunk bounds or given offsets, and their union
+    equals its chunks — no record window lost or duplicated at a cut.
+    Groups keep key order, and a group closes as soon as it reaches the
+    target."""
+    from exon_spark.sources.indexes import chunk_groups
 
-    # random disjoint chunks in virtual-offset space
-    points = sorted(
-        data.draw(
-            st.lists(
-                st.integers(0, 1 << 40),
-                min_size=2 * n_chunks,
-                max_size=2 * n_chunks,
-                unique=True,
+    per_key = []
+    for key, (n_chunks, n_cuts) in enumerate(layout):
+        # random disjoint chunks in virtual-offset space
+        points = sorted(
+            data.draw(
+                st.lists(
+                    st.integers(0, 1 << 40),
+                    min_size=2 * n_chunks,
+                    max_size=2 * n_chunks,
+                    unique=True,
+                )
             )
         )
-    )
-    chunks = [(points[2 * i], points[2 * i + 1]) for i in range(n_chunks)]
-    # linear index: sorted voffsets anywhere in range (tabix ioffs are
-    # monotonic record starts; the planner must not care where they fall)
-    lin = sorted(
-        data.draw(
+        chunks = [(points[2 * i], points[2 * i + 1]) for i in range(n_chunks)]
+        # cut offsets anywhere, unsorted, repeated: the grouper must not
+        # care where they fall
+        cuts = data.draw(
             st.lists(st.integers(0, 1 << 40), min_size=n_cuts, max_size=n_cuts)
         )
-    )
-    index = TabixIndex(
-        names=["c"],
-        bins=[{4681: list(chunks)}],
-        linear=[lin],
-        col_seq=1,
-        col_begin=2,
-        col_end=0,
-        zero_based=False,
-        skip=0,
-        meta_char="#",
-    )
-    parts = _plan_dsv2_partitions(index, ["c"], target)
-    assert all(ridx == 0 for ridx, _ranges in parts)
-    flat = [r for _ridx, ranges in parts for r in ranges]
-    # disjoint + ordered
-    for (b0, e0), (b1, _e1) in zip(flat, flat[1:]):
-        assert b0 < e0 and e0 <= b1
-    # union == chunks (merge adjacent subranges back together)
-    merged = []
-    for b, e in flat:
-        if merged and merged[-1][1] == b:
-            merged[-1][1] = e
-        else:
-            merged.append([b, e])
-    # tabix_chunks merges overlapping chunk input; compare against that
-    from exon_spark.sources.indexes import tabix_chunks
+        per_key.append((key, chunks, cuts))
 
-    expect = tabix_chunks(index, "c")
-    assert [tuple(m) for m in merged] == [tuple(c) for c in expect]
-    assert len(parts) <= max(1, len(flat))
+    groups = chunk_groups(per_key, target)
+    keys = [k for k, _g in groups]
+    assert keys == sorted(keys) and all(g for _k, g in groups)
+
+    def size(ranges):
+        return sum((e >> 16) - (b >> 16) for b, e in ranges)
+
+    for key, chunks, cuts in per_key:
+        mine = [g for k, g in groups if k == key]
+        flat = [r for g in mine for r in g]
+        for (b0, e0), (b1, _e1) in zip(flat, flat[1:]):
+            assert b0 < e0 <= b1
+        assert {b for b, _e in flat} <= {b for b, _e in chunks} | set(cuts)
+        merged = []
+        for b, e in flat:
+            if merged and merged[-1][1] == b:
+                merged[-1][1] = e
+            else:
+                merged.append([b, e])
+        assert [tuple(m) for m in merged] == chunks
+        for g in mine[:-1]:
+            assert size(g) >= target > size(g[:-1])
 
 
 @settings(**_SETTINGS)
