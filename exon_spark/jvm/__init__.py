@@ -11,7 +11,9 @@
   DataSourceV2 readers of indexed VCF region scans and of local BAM reads.
   Both read the partitions that VcfSource/BamSource.plan_partitions
   planned, in one "scope@beg:end;..." spec (VcfBgzfSource.parsePartitions,
-  written by exon_spark.sources.jvm_fast.read_dsv2).
+  written by exon_spark.sources.jvm_fast.read_dsv2);
+- exonspark.spark.FastqSource — the DataSourceV2 reader of local FASTQ
+  files (plain, gzip/BGZF, zstd), one partition per file.
 
 The jar is committed so all of these work without a JDK. It carries a
 SHA-256 digest of the Java sources as the entry SOURCES_ENTRY; when javac is
@@ -38,12 +40,14 @@ BGZF_CODEC_CLASS = "exonspark.hadoop.BgzfCodec"
 EXONCAT_FS_CLASS = "exonspark.hadoop.ExonCatFileSystem"
 VCF_DSV2_CLASS = "exonspark.spark.VcfBgzfSource"
 BAM_DSV2_CLASS = "exonspark.spark.BamBgzfSource"
+FASTQ_DSV2_CLASS = "exonspark.spark.FastqSource"
 SOURCES_ENTRY = "META-INF/exonspark-sources.sha256"
 
 
 def _compile_classpath() -> str | None:
     """Hadoop (codec/FS interfaces) + Spark catalyst/sql-api/unsafe and the
-    Scala runtime (DataSourceV2 interfaces, InternalRow, UTF8String)."""
+    Scala runtime (DataSourceV2 interfaces, InternalRow, UTF8String), and
+    zstd-jni (the FASTQ reader's zstd input)."""
     import pyspark
 
     jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
@@ -55,6 +59,7 @@ def _compile_classpath() -> str | None:
         "spark-unsafe_",
         "scala-library-",
         "kryo-shaded-",  # UTF8String implements KryoSerializable
+        "zstd-jni-",
     )
     found: list[str] = []
     try:

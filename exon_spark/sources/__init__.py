@@ -1,11 +1,16 @@
 """Format data sources (SURVEY.md §2.1 parity surface).
 
-Two tiers, each Spark-first:
+Three tiers, each Spark-first:
 
 * record formats (FASTA, FASTQ, VCF, SAM, SDF, GenBank, mzML, FCS) — Python
   DataSources emitting Arrow batches; registered with
   ``spark.dataSource.register`` so ``spark.read.format("fasta")`` and
   ``CREATE TABLE ... USING fasta`` work;
+* JVM readers (``jvm_fast``) that ``read_format`` picks when the options
+  allow: Column expressions over ``spark.read.text``/``csv`` for plain
+  FASTA/VCF scans and mzML metadata, and Java DataSourceV2 readers for
+  indexed VCF regions, local BAM and local FASTQ (files or directories
+  without hive partitions) — same schemas and rows, no Python worker;
 * tabular formats (GFF, GTF, BED, HMMDOMTAB) — pure ``spark.read.csv``/text
   + Column expressions (JVM-side parsing, no Python in the data path).
 

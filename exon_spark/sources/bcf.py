@@ -322,27 +322,37 @@ class BcfSource(VcfSource):
         if not fs_exists(csi_path):
             regions = tuple(expand_regions(regions))
             return [FilePartition(f.path, "bgzf", pv, extra=("filter", regions, ()))]
-        from exon_spark.sources.indexes import csi_chunks, read_csi
+        from exon_spark.sources.indexes import (
+            adaptive_target_bytes,
+            chunk_groups,
+            csi_chunks,
+            read_csi,
+        )
 
         # ref ids come from the BCF header's contig dictionary
         with gzip.GzipFile(fileobj=fs_open(f.path)) as gz:
             hdr = read_bcf_header(gz)
         index = read_csi(csi_path)
-        parts = []
+        per_region = []
         for region in expand_regions(regions):
             name, lo, hi = parse_region(region)
             if name not in hdr.contigs:
                 continue
-            chunks = csi_chunks(index, hdr.contigs.index(name), lo, hi)
+            rid = hdr.contigs.index(name)
+            chunks = csi_chunks(index, rid, lo, hi)
             if chunks:
-                parts.append(
-                    FilePartition(
-                        f.path, "bgzf", pv, extra=("csi", region, tuple(chunks))
-                    )
-                )
-        if not parts:
-            parts = [FilePartition(f.path, "bgzf", pv, extra=("empty",))]
-        return parts
+                per_region.append((region, chunks, list(index.loffsets[rid].values())))
+        total = sum(
+            (ce >> 16) - (cb >> 16) for _, chunks, _cuts in per_region for cb, ce in chunks
+        )
+        par = int(options.get("target_parallelism", 0) or 0)
+        parts = [
+            FilePartition(f.path, "bgzf", pv, extra=("csi", region, tuple(group)))
+            for region, group in chunk_groups(
+                per_region, adaptive_target_bytes(total, par)
+            )
+        ]
+        return parts or [FilePartition(f.path, "bgzf", pv, extra=("empty",))]
 
     @classmethod
     def parse_partition(cls, partition: FilePartition, options: dict) -> Iterator[dict]:

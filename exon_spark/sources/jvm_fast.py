@@ -21,6 +21,13 @@ served them.
   route reads the same partitions; ``read_dsv2`` encodes the plan as the
   one partition spec both Java readers parse. Executors inflate only
   the planned BGZF blocks and decode only the columns Catalyst requires.
+* Local FASTQ files and directories go to the Java DataSourceV2
+  ``FastqSource``, one partition per file listed by the Python
+  ``FastqSource._files()``: plain, gzip/BGZF and zstd, with the rows and
+  errors of the Python reader. Globs, object stores, hive partition
+  values, ``file_extension`` and a ``compression`` that disagrees with a
+  file's extension stay on the Python DataSource, as do streaming and
+  the ``fastq_scan`` table function.
 """
 
 from __future__ import annotations
@@ -310,6 +317,61 @@ def _bam_jvm_route(path: str, options: dict, spark):
     return lambda spark, p: read_bam_jvm(spark, p, options)
 
 
+_FASTQ_BASE_COLS = ("name", "description", "sequence", "quality_scores")
+
+
+def read_fastq_jvm(spark: SparkSession, files, columns=None) -> DataFrame:
+    """Local FASTQ files through the Java DataSourceV2 (exonspark.spark.
+    FastqSource), one partition per file. The reader decompresses by
+    extension (gzip/BGZF, zstd, plain), decodes only the columns Catalyst
+    requires, and gives the rows and errors of
+    ``FastqSource.read_arrow_partition``."""
+    from exon_spark.jvm import FASTQ_DSV2_CLASS
+
+    df = (
+        spark.read.format(FASTQ_DSV2_CLASS)
+        .option("files", "\n".join(f.path for f in files))
+        .load()
+    )
+    return df.select(*_projection(_FASTQ_BASE_COLS, columns))
+
+
+def _fastq_jvm_route(path: str, options: dict, spark):
+    """Route a FASTQ read to the DataSourceV2 when ``path`` is a local file
+    or directory whose files ``FastqSource._files()`` lists without hive
+    partition values, with no ``file_extension`` and no ``compression``
+    that disagrees with a file's extension. Everything else (globs,
+    object stores, custom extensions) stays on the Python DataSource."""
+    import os
+
+    if str(options.get("file_extension", "")).strip():
+        return None
+    from exon_spark.sources.fs import scheme_of
+
+    if scheme_of(path) is not None or not os.path.exists(path):
+        return None
+    from exon_spark.sources.bgzf_view import codec_active
+
+    if spark is None or not codec_active(spark):
+        return None
+    from exon_spark.sources.fastq import FastqSource
+    from exon_spark.sources.util import detect_compression
+
+    files = FastqSource(options={"path": path})._files()
+    if any(f.partition_values or "\n" in f.path for f in files):
+        return None
+    comp = str(options.get("compression", "")).strip()
+    if comp:
+        try:
+            if any(detect_compression(f.path, comp) != detect_compression(f.path)
+                   for f in files):
+                return None
+        except ValueError:
+            return None  # the Python reader reports an unknown codec
+    cols = options.get("columns")
+    return lambda spark, p: read_fastq_jvm(spark, files, cols)
+
+
 # mzML columns expressible without the base64/zlib binary decode
 _MZML_META_COLS = ("id", "precursor_mz", "precusor_charge")
 
@@ -362,6 +424,8 @@ def jvm_fast_reader(fmt: str, path: str, options: dict, spark=None):
             return region_reader
     if fmt == "bam":
         return _bam_jvm_route(path, options, spark)
+    if fmt == "fastq":
+        return _fastq_jvm_route(path, options, spark)
     python_only = {"regions", "region", "sequence_data_type", "parse_info",
                    "parse_formats", "indexed", "file_extension"}
     if any(str(options.get(k, "")).strip() not in ("", "false")

@@ -218,19 +218,7 @@ def _tabix_lines_rdd(spark: SparkSession, path: str, regions: str):
         (name, merge_chunks(chunks), idx.linear[idx.names.index(name)])
         for name, chunks in per_name.items()
     ]
-    total = sum(
-        (ce >> 16) - (cb >> 16) for _, chunks, _lin in per_key for cb, ce in chunks
-    )
-    target = adaptive_target_bytes(total, spark.sparkContext.defaultParallelism)
-    groups = [g for _name, g in chunk_groups(per_key, target)]
-
-    def _read_group(group):
-        from exon_spark.sources.bgzf import BGZFReader
-
-        with BGZFReader(path) as bg:
-            yield from bg.lines_in_chunks(list(group))
-
-    if not groups:
+    if not per_key:
         return "empty"
     # JVM first: splice the chunk ranges into an exoncat .bgz view and let
     # the codec-backed csv reader split it — record-exact (boundary blocks
@@ -245,6 +233,18 @@ def _tabix_lines_rdd(spark: SparkSession, path: str, regions: str):
                 )
             except Exception:
                 pass  # fall back to the Python chunk-group readers
+    total = sum(
+        (ce >> 16) - (cb >> 16) for _, chunks, _lin in per_key for cb, ce in chunks
+    )
+    target = adaptive_target_bytes(total, spark.sparkContext.defaultParallelism)
+    groups = [g for _name, g in chunk_groups(per_key, target)]
+
+    def _read_group(group):
+        from exon_spark.sources.bgzf import BGZFReader
+
+        with BGZFReader(path) as bg:
+            yield from bg.lines_in_chunks(list(group))
+
     return spark.sparkContext.parallelize(groups, len(groups)).flatMap(_read_group)
 
 

@@ -97,3 +97,55 @@ def test_bcf_parse_info_struct(registered, tmp_path):
     )
     row = df.collect()[0]
     assert row.info.DP == 42
+
+
+def _write_csi(path: str, bins: dict[int, tuple[int, list[tuple[int, int]]]]) -> None:
+    """A CSI v1 index (min_shift 14, depth 5) for reference 0 only, with
+    ``bins`` = {bin: (loffset, [(chunk_beg, chunk_end), ...])}."""
+    import struct
+
+    from exon_spark.sources.bgzf import BGZFWriter
+
+    payload = bytearray(b"CSI\x01") + struct.pack("<iiii", 14, 5, 0, 1)
+    payload += struct.pack("<i", len(bins))
+    for bin_id, (loffset, chunks) in sorted(bins.items()):
+        payload += struct.pack("<IQi", bin_id, loffset, len(chunks))
+        for cb, ce in chunks:
+            payload += struct.pack("<QQ", cb, ce)
+    with BGZFWriter(path) as out:
+        out.write(bytes(payload))
+
+
+def test_bcf_csi_region_plans_chunk_groups(tmp_path):
+    """A region whose CSI chunks span more than the target fans out into
+    several ("csi", region, group) partitions that tile the chunks, cut at
+    the index's loffsets, like the VCF .csi planner."""
+    from exon_spark.sources.bcf import BcfSource, vcf_to_bcf
+    from exon_spark.sources.indexes import csi_chunks, read_csi
+    from exon_spark.sources.util import FoundFile
+
+    vcf = tmp_path / "t.vcf"
+    vcf.write_text(
+        "##fileformat=VCFv4.2\n##contig=<ID=1>\n##contig=<ID=2>\n"
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
+        "1\t100\t.\tA\tT\t.\tPASS\t.\n"
+    )
+    bcf = str(tmp_path / "t.bcf")
+    vcf_to_bcf(str(vcf), bcf)
+    mb = 1 << 20
+    # one 12 MB root-bin chunk; level-1 bins put record starts every 2 MB
+    bins = {0: (0, [(0, (12 * mb) << 16)])}
+    for k in range(1, 6):
+        bins[k] = ((2 * k * mb) << 16 | 7, [((2 * k * mb) << 16 | 7, (2 * k * mb + 100) << 16)])
+    _write_csi(bcf + ".csi", bins)
+
+    parts = BcfSource.plan_partitions(
+        FoundFile(bcf, os.path.getsize(bcf)), {"regions": "1", "target_parallelism": 2}
+    )
+    assert len(parts) > 1
+    assert {p.extra[:2] for p in parts} == {("csi", "1")}
+    pieces = [c for p in parts for c in p.extra[2]]
+    assert all(a[1] == b[0] for a, b in zip(pieces, pieces[1:]))
+    whole = csi_chunks(read_csi(bcf + ".csi"), 0, 1, 2**31 - 1)
+    assert [(pieces[0][0], pieces[-1][1])] == whole
+    assert {cb for cb, _ce in pieces} <= {0} | {loff for loff, _c in bins.values()}

@@ -5,7 +5,8 @@ it on the components where a subtle off-by-one corrupts everything
 downstream: BGZF block framing / virtual offsets, Phred quality
 encode/decode, and region-string parsing.
 
-Session-free — no Spark; safe to run first and fast.
+All but the FASTQ route parity tests are session-free (no Spark); those
+two compare the JVM FASTQ reader with the Python DataSource on one session.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ from __future__ import annotations
 import gzip
 import os
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -346,3 +348,115 @@ def test_pq_codebook_bytes_roundtrip(n_sub, k, d_sub, data):
     cb2 = PQCodebook.from_bytes(cb.to_bytes())
     assert (cb2.n_sub, cb2.k, cb2.dim) == (cb.n_sub, cb.k, cb.dim)
     assert np.array_equal(cb2.centroids, cb.centroids)
+
+
+_FQ_WORD = st.text(alphabet="ACGTacgtN0123456789_:/.|é-", min_size=0, max_size=8)
+
+
+@st.composite
+def _fastq_text(draw) -> bytes:
+    """FASTQ text on the edges of the line discipline: quality lines led
+    by '@' or '+', CRLF ends, blank and whitespace-only lines anywhere,
+    headers with no space, a trailing space or tabs, and (rarely) empty
+    sequence and quality lines, which the framing skips like blank ones."""
+    lines = []
+    for _ in range(draw(st.integers(0, 6))):
+        name = draw(_FQ_WORD)
+        header = draw(
+            st.sampled_from(
+                ["@{n}", "@{n} ", "@{n} {d}", "@{n}\t{d}", "@{n} {d}\t{d} {d}", "@ {d}"]
+            )
+        ).format(n=name, d=draw(_FQ_WORD))
+        seq = draw(st.text(alphabet="ACGTN", min_size=1, max_size=12))
+        qual = draw(st.sampled_from(["", "@", "+"])) + "I" * (len(seq) - 1)
+        if draw(st.integers(0, 9)) == 0:
+            seq = qual = ""
+        lines += [header, seq, draw(st.sampled_from(["+", "+" + name])), qual]
+    out = []
+    for line in lines:
+        while draw(st.integers(0, 5)) == 0:
+            out.append(draw(st.sampled_from(["", " ", "\t", "  \t ", "\x0b", "\x0c", "\r"])))
+        out.append(line)
+    ends = [draw(st.sampled_from(["\n", "\r\n"])) for _ in out]
+    text = "".join(line + end for line, end in zip(out, ends))
+    if text and draw(st.booleans()):
+        text = text.rstrip("\r\n")  # no newline after the last record
+    return text.encode()
+
+
+def _fastq_files(d, text: bytes) -> list[str]:
+    """``text`` as plain, gzip and zstd FASTQ files in ``d``."""
+    import pyarrow as pa
+
+    paths = [str(d / "a.fastq"), str(d / "b.fq.gz"), str(d / "c.fastq.zst")]
+    with open(paths[0], "wb") as fh:
+        fh.write(text)
+    with gzip.open(paths[1], "wb") as fh:
+        fh.write(text)
+    with pa.CompressedOutputStream(paths[2], "zstd") as fh:
+        fh.write(text)
+    return paths
+
+
+def _fastq_routes(spark, paths: list[str]):
+    """The JVM route and the Python DataSource over each file, tagged
+    with the file's index, as one frame each."""
+    from functools import reduce
+
+    import pyspark.sql.functions as F
+
+    from exon_spark.sources import read_format
+
+    jvm, py = [], []
+    for i, p in enumerate(paths):
+        df = read_format(spark, "fastq", p)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FastqScan" in plan and "(Python)" not in plan, plan
+        jvm.append(df.withColumn("f", F.lit(i)))
+        py.append(spark.read.format("fastq").load(p).withColumn("f", F.lit(i)))
+    return reduce(lambda a, b: a.union(b), jvm), reduce(lambda a, b: a.union(b), py)
+
+
+def _collect_or_error(df):
+    try:
+        return sorted(map(tuple, df.collect()), key=repr), None
+    except Exception as e:  # the task failure, from either route
+        return None, e
+
+
+@settings(max_examples=25, deadline=None)
+@given(text=_fastq_text())
+def test_fastq_jvm_route_matches_python_datasource(spark, tmp_path_factory, text):
+    """read_format's JVM FASTQ reader gives the Python DataSource's rows
+    for plain, gzip and zstd input, or fails where it fails; a directory of
+    the three files reads as their row multiset, one partition per file."""
+    from exon_spark.sources import read_format
+
+    d = tmp_path_factory.mktemp("fq")
+    paths = _fastq_files(d, text)
+    jvm, py = _fastq_routes(spark, paths)
+    got, jvm_err = _collect_or_error(jvm)
+    want, py_err = _collect_or_error(py)
+    assert (jvm_err is None) == (py_err is None), (jvm_err, py_err)
+    assert got == want
+    if py_err is None:
+        whole = read_format(spark, "fastq", str(d))
+        assert whole.rdd.getNumPartitions() == 3
+        assert sorted(map(tuple, whole.collect()), key=repr) == sorted(
+            (r[:4] for r in want), key=repr
+        )
+
+
+@pytest.mark.parametrize(
+    "text, error",
+    [
+        (b"@r1\nAC\n+\nII\nr2\nAC\n+\nII\n", "malformed FASTQ header"),
+        (b"@r1\nAC\n+\nII\n@r2\nAC\n-\nII\n", "malformed FASTQ separator"),
+        (b"@r1\nAC\n+\nII\n@r2\nAC\n", "truncated FASTQ record"),
+    ],
+)
+def test_fastq_bad_records_fail_both_routes(spark, tmp_path, text, error):
+    jvm, py = _fastq_routes(spark, _fastq_files(tmp_path, text))
+    for df in (jvm, py):
+        with pytest.raises(Exception, match=error):
+            df.collect()
