@@ -4,14 +4,15 @@
 
 - exonspark.hadoop.BgzfCodec — a splittable Hadoop compression codec for
   BGZF (suffix ".bgz") that lets spark.read.text/csv fan a multi-GB
-  bgzipped file out across executors with zero Python in the data path;
-- exonspark.hadoop.ExonCatFileSystem — the exoncat:// virtual views of
-  index-pruned BGZF blocks (GFF region scans);
-- exonspark.spark.VcfBgzfSource and exonspark.spark.BamBgzfSource — the
-  DataSourceV2 readers of indexed VCF region scans and of local BAM reads.
-  Both read the partitions that VcfSource/BamSource.plan_partitions
-  planned, in one "scope@beg:end;..." spec (VcfBgzfSource.parsePartitions,
-  written by exon_spark.sources.jvm_fast.read_dsv2);
+  bgzipped file that has no index out across executors with zero Python
+  in the data path;
+- exonspark.spark.VcfBgzfSource, exonspark.spark.BamBgzfSource and
+  exonspark.spark.BgzfLineSource — the DataSourceV2 readers of local
+  indexed VCF reads, of local BAM reads, and of the lines of local
+  tabix-indexed GFF/GTF/BED text. All three read planned BGZF
+  virtual-offset ranges in one "scope@beg:end;..." spec
+  (VcfBgzfSource.parsePartitions, written by
+  exon_spark.sources.jvm_fast.read_dsv2);
 - exonspark.spark.FastqSource — the DataSourceV2 reader of local FASTQ
   files (plain, gzip/BGZF, zstd), one partition per file.
 
@@ -37,11 +38,20 @@ _SRC_DIR = os.path.join(_JVM_DIR, "java")
 _JAR = os.path.join(_JVM_DIR, "bgzf-codec.jar")
 
 BGZF_CODEC_CLASS = "exonspark.hadoop.BgzfCodec"
-EXONCAT_FS_CLASS = "exonspark.hadoop.ExonCatFileSystem"
 VCF_DSV2_CLASS = "exonspark.spark.VcfBgzfSource"
 BAM_DSV2_CLASS = "exonspark.spark.BamBgzfSource"
+LINES_DSV2_CLASS = "exonspark.spark.BgzfLineSource"
 FASTQ_DSV2_CLASS = "exonspark.spark.FastqSource"
 SOURCES_ENTRY = "META-INF/exonspark-sources.sha256"
+
+
+def codec_active(spark) -> bool:
+    """True when the session carries the jar: get_spark puts it on the
+    classpath together with the BGZF codec conf, so the codec conf marks a
+    session that has the codec and the DataSourceV2 readers."""
+    return BGZF_CODEC_CLASS in (
+        spark.conf.get("spark.hadoop.io.compression.codecs", "") or ""
+    )
 
 
 def _compile_classpath() -> str | None:

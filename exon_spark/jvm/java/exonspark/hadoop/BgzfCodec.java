@@ -42,8 +42,9 @@ import org.apache.hadoop.io.compress.SplittableCompressionCodec;
  * With this codec on io.compression.codecs, spark.read.text()/csv() over a
  * multi-GB .bgz file fans out across executors as plain byte-range splits
  * — no Python in the data path, no re-compression, no temp copies. Used by
- * the full VCF/GFF text scans of exon_spark.sources.jvm_fast and tabular,
- * and by the exoncat:// GFF region views.
+ * the full VCF/GFF/GTF/BED text scans of exon_spark.sources.jvm_fast and
+ * tabular over a .bgz that has no .tbi; an indexed file is read through
+ * the DataSourceV2 readers (exonspark.spark) instead.
  *
  * Read-only: BGZF write stays in the Python sinks (createOutputStream
  * throws). CRC32 of each member is not re-verified (ISIZE is checked);

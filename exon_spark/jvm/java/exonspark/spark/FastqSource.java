@@ -48,7 +48,8 @@ import org.apache.spark.unsafe.types.UTF8String;
  *
  * Rows and errors equal FastqSource.read_arrow_partition's: lines split
  * at '\n' with one trailing '\r' dropped, blank and whitespace-only lines
- * skipped wherever they are, four lines per record; the header is split
+ * skipped where a header is due, then four lines per record taken as they
+ * are, so an empty sequence and quality read as ''; the header is split
  * at its first space into name and description (an empty description is
  * null); a header without '@', a separator without '+' and a trailing
  * partial record each fail the read. Bytes are not UTF-8-validated (the
@@ -242,19 +243,20 @@ public class FastqSource implements TableProvider {
 
     @Override
     public boolean next() throws IOException {
-      if (!nextLine(0)) {
+      if (!nextHeader()) {
         return false;
       }
       for (int k = 1; k < 4; k++) {
-        if (!nextLine(k)) {
+        if (!readLine(k)) {
           throw new IOException(path + ": truncated FASTQ record");
         }
+        dropCr(k);
       }
       if (line[0][0] != '@') {
         throw new IOException(
             path + ": malformed FASTQ header: '" + text(0, 0, len[0]) + "'");
       }
-      if (line[2][0] != '+') {
+      if (len[2] == 0 || line[2][0] != '+') {
         throw new IOException(path + ": malformed FASTQ separator");
       }
       current = buildRow();
@@ -305,25 +307,29 @@ public class FastqSource implements TableProvider {
       return new String(line[k], from, to - from, StandardCharsets.UTF_8);
     }
 
-    /** The next line that is not blank or whitespace-only into line[k],
+    /** The next line that is not blank or whitespace-only into line[0],
      * without its '\n' and one trailing '\r'; false at end of input. */
-    private boolean nextLine(int k) throws IOException {
-      while (readLine(k)) {
-        int n = len[k];
-        byte[] l = line[k];
+    private boolean nextHeader() throws IOException {
+      while (readLine(0)) {
+        int n = len[0];
+        byte[] l = line[0];
         boolean blank = true;
         for (int i = 0; i < n && blank; i++) {
           byte b = l[i];
           blank = b == ' ' || (b >= '\t' && b <= '\r'); // Python's bytes.strip set
         }
         if (!blank) {
-          if (l[n - 1] == '\r') {
-            len[k] = n - 1;
-          }
+          dropCr(0);
           return true;
         }
       }
       return false;
+    }
+
+    private void dropCr(int k) {
+      if (len[k] > 0 && line[k][len[k] - 1] == '\r') {
+        len[k]--;
+      }
     }
 
     /** The next '\n'-terminated line (or unterminated last line) into

@@ -33,7 +33,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 
 /**
  * DataSourceV2 batch source for tabix- or CSI-indexed, bgzip-compressed VCF
- * region scans (exon_spark.sources.jvm_fast.read_vcf_region_jvm). The
+ * region scans and .tbi full scans
+ * (exon_spark.sources.jvm_fast.read_vcf_region_jvm). The
  * Python driver plans record-exact BGZF virtual-offset chunk groups with
  * VcfSource.plan_partitions and passes them as the "partitions" option;
  * each partition reader seeks its compressed ranges, inflates the blocks,
@@ -59,7 +60,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap;
  *               that one region, so overlapping regions each emit their
  *               own matches (duplicates included), as the Python
  *               DataSource's per-region partitions do. parsePartitions
- *               reads this grammar for both DSv2 readers.
+ *               reads this grammar for all three BGZF DSv2 readers.
  *   regions     ','-separated "chrom:lo:hi" (1-based inclusive; parsed
  *               from the right so chrom names may contain ':')
  */
@@ -183,7 +184,7 @@ public class VcfBgzfSource implements TableProvider {
   }
 
   /**
-   * One planned partition of either DSv2 reader: BGZF virtual-offset
+   * One planned partition of a BGZF DSv2 reader: BGZF virtual-offset
    * [beg,end) ranges and the region scope its records are filtered by.
    */
   public static final class RangePartition implements InputPartition {
@@ -201,7 +202,8 @@ public class VcfBgzfSource implements TableProvider {
     }
   }
 
-  /** The "partitions" option of VcfBgzfSource and BamBgzfSource:
+  /** The "partitions" option of VcfBgzfSource, BamBgzfSource and
+   * BgzfLineSource:
    * '|'-separated "scope@beg:end;beg:end...", scope "-", "*" or a region
    * index; an empty spec is no partition. */
   public static InputPartition[] parsePartitions(String spec) {
@@ -297,76 +299,20 @@ public class VcfBgzfSource implements TableProvider {
 
   private static final int MAX_BLOCK = 1 << 16;
 
-  /** The lines of one partition that pass the header/blank/region
-   * checks, with the field bounds of the projected columns. */
-  static final class VcfLineCursor implements Closeable {
-    // field indices in the VCF line for each projected column
-    private final int[] fieldOf;
-    // 0 str, 1 pos-long, 2 split';', 3 split',', 4 float, 5 dotnull-str,
-    // 6 line tail after the 8th tab (formats)
-    private final int[] colKind;
-    private final int maxField;
+  /**
+   * The '\n'-terminated lines of one partition's BGZF ranges: fillLine()
+   * assembles the next one, without its '\n' and one trailing '\r', in
+   * lbuf[0..llen). VcfLineCursor and BgzfLineSource read their lines
+   * through it.
+   */
+  static class BgzfLines implements Closeable {
+    final BgzfRanges in;
 
-    private final boolean filter; // false: the partition keeps every line
-    private final byte[][] regionChroms;
-    private final long[] regionLo;
-    private final long[] regionHi;
-    private final boolean needPos;
+    byte[] lbuf = new byte[1 << 12];
+    int llen;
 
-    private final BgzfRanges in;
-
-    private byte[] lbuf = new byte[1 << 12];
-    private int llen;
-
-    private final int[] tabs; // positions of line tabs (end of field i)
-    private int nTabs; // tabs found on the current line (capped at maxField + 1)
-
-    VcfLineCursor(String path, String[] cols, String regionSpec, RangePartition part)
-        throws IOException {
-      String[] names = {
-        "chrom", "pos", "id", "ref", "alt", "qual", "filter", "info", "formats"
-      };
-      int[] kinds = {0, 1, 2, 0, 3, 4, 2, 5, 6};
-      fieldOf = new int[cols.length];
-      colKind = new int[cols.length];
-      int mx = 1; // chrom + pos always parsed for the region filter
-      for (int i = 0; i < cols.length; i++) {
-        int f = Arrays.asList(names).indexOf(cols[i].toLowerCase());
-        if (f < 0) {
-          throw new IOException("vcf-bgzf: unsupported column " + cols[i]);
-        }
-        fieldOf[i] = f;
-        colKind[i] = kinds[f];
-        mx = Math.max(mx, f);
-      }
-      maxField = mx;
-      tabs = new int[maxField + 1];
-
-      filter = part.region != RangePartition.ALL_RECORDS;
-      Regions rs = new Regions(regionSpec, part.region);
-      regionChroms = new byte[rs.chroms.length][];
-      regionLo = rs.lo;
-      regionHi = rs.hi;
-      boolean np = false;
-      for (int i = 0; i < regionChroms.length; i++) {
-        regionChroms[i] = rs.chroms[i].getBytes(StandardCharsets.UTF_8);
-        np |= regionLo[i] > 1 || regionHi[i] < Long.MAX_VALUE;
-      }
-      needPos = np;
+    BgzfLines(String path, RangePartition part) throws IOException {
       in = new BgzfRanges(path, part.begs, part.ends);
-    }
-
-    /** Advance to the next line that passes the header/blank/region
-     * checks, leaving its bytes in lbuf/llen and field ends in tabs. */
-    boolean nextFields() throws IOException {
-      while (true) {
-        if (!fillLine()) {
-          return false;
-        }
-        if (parseFields()) {
-          return true;
-        }
-      }
     }
 
     @Override
@@ -376,7 +322,7 @@ public class VcfBgzfSource implements TableProvider {
 
     /** Assemble the next '\n'-terminated line (within the virtual-offset
      * ranges) into lbuf/llen. False when the ranges are exhausted. */
-    private boolean fillLine() throws IOException {
+    final boolean fillLine() throws IOException {
       llen = 0;
       while (true) {
         if (in.upos >= in.ulim && !in.advance()) {
@@ -403,6 +349,75 @@ public class VcfBgzfSource implements TableProvider {
           if (llen > 0 && lbuf[llen - 1] == '\r') {
             llen--;
           }
+          return true;
+        }
+      }
+    }
+  }
+
+  /** The lines of one partition that pass the header/blank/region
+   * checks, with the field bounds of the projected columns. */
+  static final class VcfLineCursor extends BgzfLines {
+    // field indices in the VCF line for each projected column
+    private final int[] fieldOf;
+    // 0 str, 1 pos-long, 2 split';', 3 split',', 4 float, 5 dotnull-str,
+    // 6 line tail after the 8th tab (formats)
+    private final int[] colKind;
+    private final int maxField;
+
+    private final boolean filter; // false: the partition keeps every line
+    private final byte[][] regionChroms;
+    private final long[] regionLo;
+    private final long[] regionHi;
+    private final boolean needPos;
+
+    private final int[] tabs; // positions of line tabs (end of field i)
+    private int nTabs; // tabs found on the current line (capped at maxField + 1)
+
+    VcfLineCursor(String path, String[] cols, String regionSpec, RangePartition part)
+        throws IOException {
+      super(path, part);
+      String[] names = {
+        "chrom", "pos", "id", "ref", "alt", "qual", "filter", "info", "formats"
+      };
+      int[] kinds = {0, 1, 2, 0, 3, 4, 2, 5, 6};
+      fieldOf = new int[cols.length];
+      colKind = new int[cols.length];
+      int mx = 1; // chrom + pos always parsed for the region filter
+      for (int i = 0; i < cols.length; i++) {
+        int f = Arrays.asList(names).indexOf(cols[i].toLowerCase());
+        if (f < 0) {
+          close();
+          throw new IOException("vcf-bgzf: unsupported column " + cols[i]);
+        }
+        fieldOf[i] = f;
+        colKind[i] = kinds[f];
+        mx = Math.max(mx, f);
+      }
+      maxField = mx;
+      tabs = new int[maxField + 1];
+
+      filter = part.region != RangePartition.ALL_RECORDS;
+      Regions rs = new Regions(regionSpec, part.region);
+      regionChroms = new byte[rs.chroms.length][];
+      regionLo = rs.lo;
+      regionHi = rs.hi;
+      boolean np = false;
+      for (int i = 0; i < regionChroms.length; i++) {
+        regionChroms[i] = rs.chroms[i].getBytes(StandardCharsets.UTF_8);
+        np |= regionLo[i] > 1 || regionHi[i] < Long.MAX_VALUE;
+      }
+      needPos = np;
+    }
+
+    /** Advance to the next line that passes the header/blank/region
+     * checks, leaving its bytes in lbuf/llen and field ends in tabs. */
+    boolean nextFields() throws IOException {
+      while (true) {
+        if (!fillLine()) {
+          return false;
+        }
+        if (parseFields()) {
           return true;
         }
       }

@@ -146,7 +146,7 @@ def _fold_words(
     bitmap words) that is two 15M-element arrays and one numpy
     statement, not 15M Row objects and a Python loop (the r9-verdict
     finding; measured 11.9x on the 7.5M-word summary of a 50M-item
-    build, 31s -> 2.6s, tools/probe_r10_bloom.py).
+    build, 31s -> 2.6s, SCALE.md "r10/r11 operator probes").
     """
     tbl = (
         df.where(F.col(text_col).isNotNull())

@@ -420,7 +420,7 @@ def logreg_classifier_fit(
     # arrays riding Arrow batches (useArrow=True — plain pandas_udf
     # cannot return a UDT; Arrow-optimized Python UDFs can). This
     # removed the repo's last row-at-a-time pickled UDF (r10 verdict
-    # wrong #2); probe: tools/probe_r11_logreg_fit.py.
+    # wrong #2); measured: SCALE.md "r10/r11 operator probes".
     flat = pooled.select(
         F.col("_y").alias("label"),
         F.transform("bc", lambda x: x["bucket"].cast("int")).alias("_idx"),

@@ -477,7 +477,7 @@ def ivfpq_topk(
     (~ Q*nprobe/cells), not ``n_sub x Q`` — the r9-verdict finding
     (compute waste linear in Q at real query batches; measured 3.1x
     at Q=2048 over a 200k corpus, result-identical,
-    tools/probe_r10_ivfpq.py). The (cell, slot) -> (query, bias)
+    SCALE.md "r10/r11 operator probes"). The (cell, slot) -> (query, bias)
     mapping is one broadcast Q*nprobe-row join after posexplode; LUT
     and probe lists ride ``sc.broadcast``, not the UDF closure.
     Output/semantics match ``pq_topk`` (approximate-cosine scores, or

@@ -1797,7 +1797,7 @@ def keyword_tag(
 
 #: phrase_tag regime="auto" switches expr -> Aho-Corasick above this
 #: many total phrase entries. Measured crossover ~32-64 on the sf0.1
-#: documents corpus (tools/probe_r10_phrase.py: expr grows linearly,
+#: documents corpus (SCALE.md "r10/r11 operator probes": expr grows linearly,
 #: 0.24s@16 -> 4.9s@1024; ac flat ~0.4s) — the expr regime scans the
 #: text once PER phrase in JVM codegen, the automaton once TOTAL in
 #: Python, and both scale linearly with text length so the crossover
@@ -1871,7 +1871,7 @@ def phrase_tag(
       zero shuffle; per-phrase greedy non-overlap counting mirrors
       the replace convention exactly.
     * ``"auto"`` (default) — expr below ``AC_PHRASE_THRESHOLD`` total
-      entries, ac above (crossover probe: tools/probe_r10_phrase.py).
+      entries, ac above (crossover: SCALE.md "r10/r11 operator probes").
 
     Null text counts 0 everywhere. Phrases are matched as raw
     substrings (no word-boundary anchoring): 'ass' matches 'class' —

@@ -207,14 +207,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
     )
     # The exon_spark jar: the splittable BGZF codec (.bgz) that lets the JVM
-    # text/csv readers byte-range split bgzipped files, and the VCF/BAM
-    # DataSourceV2 readers (jvm_fast). extraClassPath must be set before
-    # the JVM launches; spark.jars covers real-cluster executors.
-    from exon_spark.jvm import (
-        BGZF_CODEC_CLASS,
-        EXONCAT_FS_CLASS,
-        ensure_bgzf_jar,
-    )
+    # text/csv readers byte-range split bgzipped files, and the DataSourceV2
+    # readers (jvm_fast, tabular). extraClassPath must be set before the
+    # JVM launches; spark.jars covers real-cluster executors.
+    from exon_spark.jvm import BGZF_CODEC_CLASS, ensure_bgzf_jar
 
     codec_jar = ensure_bgzf_jar()
     if codec_jar:
@@ -223,8 +219,6 @@ def get_spark(
             .config("spark.driver.extraClassPath", codec_jar)
             .config("spark.executor.extraClassPath", codec_jar)
             .config("spark.hadoop.io.compression.codecs", BGZF_CODEC_CLASS)
-            # virtual concatenated-range views (index-pruned region scans)
-            .config("spark.hadoop.fs.exoncat.impl", EXONCAT_FS_CLASS)
         )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

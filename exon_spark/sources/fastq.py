@@ -25,6 +25,20 @@ from exon_spark.sources.base import FileFormatSource, FilePartition
 from exon_spark.sources.util import open_maybe_compressed
 
 
+def _frame(lines: list[bytes]) -> list[bytes]:
+    """``lines`` (starting where a header is due) without the blank and
+    whitespace-only lines that stand where a header is due. The four lines
+    of a record are kept as they are, so ``@r1``/empty/``+``/empty is a
+    record with an empty sequence and quality, as ``parse_records`` reads
+    it."""
+    kept, start = [], 0
+    for i in [i for i, l in enumerate(lines) if not l.strip()]:
+        if (i - start) % 4 == 0:
+            kept += lines[start:i]
+            start = i + 1
+    return kept + lines[start:]
+
+
 class FastqSource(FileFormatSource):
     NAME = "fastq"
     EXTENSIONS = ("fastq", "fq")
@@ -90,12 +104,12 @@ class FastqSource(FileFormatSource):
                 while True:
                     chunk = fh.read(16 << 20)
                     data = carry + chunk if chunk else carry
-                    raw = data.split(b"\n")
+                    # a final '\n' ends the last line; nothing follows it
+                    raw = data.split(b"\n") if data else []
                     carry = raw.pop() if chunk else b""
-                    # blank-line tolerant + CRLF, like the readline path
-                    lines = pend + [
-                        l[:-1] if l.endswith(b"\r") else l for l in raw if l.strip()
-                    ]
+                    lines = _frame(
+                        pend + [l[:-1] if l.endswith(b"\r") else l for l in raw]
+                    )
                     if not chunk:
                         if lines:
                             if len(lines) % 4:

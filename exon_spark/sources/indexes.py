@@ -624,6 +624,19 @@ def full_scan_ranges(
     return list(zip(splits, splits[1:] + [None]))
 
 
+def merge_chunks(chunks: list[tuple[int, int]]) -> list[tuple[int, int]]:
+    """Sort + merge overlapping/adjacent virtual-offset ranges."""
+    out: list[tuple[int, int]] = []
+    for vb, ve in sorted(chunks):
+        if ve <= vb:
+            continue
+        if out and vb <= out[-1][1]:
+            out[-1] = (out[-1][0], max(out[-1][1], ve))
+        else:
+            out.append((vb, ve))
+    return out
+
+
 def chunk_groups(per_key, target_bytes: int) -> list[tuple[object, list]]:
     """The region planner of every indexed BGZF format (VCF .tbi/.csi, BAM
     .bai/.csi, GFF .tbi): ``per_key`` = [(key, merged_chunks,

@@ -12,15 +12,19 @@ served them.
 * Plain FASTA/VCF scans and mzML metadata projections are Column
   expressions over ``spark.read.text`` / ``spark.read.csv`` —
   whole-stage-codegen'd and Arrow-free. gzip input is decompressed by the
-  JVM codec; uncompressed and BGZF input splits by byte range, so a
-  single large file fans out across executors (SURVEY.md §4.4).
-* Indexed VCF region scans and local BAM reads go to the Java
-  DataSourceV2 readers in exon_spark/jvm (``VcfBgzfSource``,
-  ``BamBgzfSource``). Both plan on the driver with their Python source's
-  own planner (``VcfSource``/``BamSource.plan_partitions``), so either
-  route reads the same partitions; ``read_dsv2`` encodes the plan as the
-  one partition spec both Java readers parse. Executors inflate only
-  the planned BGZF blocks and decode only the columns Catalyst requires.
+  JVM codec; uncompressed and unindexed BGZF (``.bgz``) input splits by
+  byte range, so a single large file fans out across executors
+  (SURVEY.md §4.4).
+* Local VCF reads of a ``.gz``/``.bgz`` with a ``.tbi`` (region and
+  full scans, and region scans over a tabix-style ``.csi``) and local BAM
+  reads go to the Java DataSourceV2 readers in exon_spark/jvm
+  (``VcfBgzfSource``, ``BamBgzfSource``). Both plan on the driver with
+  their Python source's own planner
+  (``VcfSource``/``BamSource.plan_partitions``), so either route reads
+  the same partitions; ``read_dsv2`` encodes the plan as the one
+  partition spec the Java readers parse (tabular's ``BgzfLineSource``
+  too). Executors inflate only the planned BGZF blocks and decode only
+  the columns Catalyst requires.
 * Local FASTQ files and directories go to the Java DataSourceV2
   ``FastqSource``, one partition per file listed by the Python
   ``FastqSource._files()``: plain, gzip/BGZF and zstd, with the rows and
@@ -149,15 +153,17 @@ def _projection(base_cols, columns) -> list[str]:
 
 
 def read_dsv2(spark: SparkSession, cls: str, path: str, parts) -> DataFrame:
-    """Load a Java DataSourceV2 reader (VcfBgzfSource, BamBgzfSource) over
-    the planner partitions of ``VcfSource``/``BamSource.plan_partitions``.
-    Each partition becomes one entry ``scope@beg:end;beg:end...`` of the
-    ``partitions`` option (BGZF virtual-offset ranges, -1 = after the
-    header / end of file): scope ``-`` keeps every record, ``*`` records
-    overlapping any region of the ``regions`` option, a number records
-    overlapping that one region — a ``tabix``/``bai`` partition keeps its
-    own region's matches, so overlapping regions each emit theirs. An
-    ``empty`` partition reads nothing."""
+    """Load a Java DataSourceV2 reader (VcfBgzfSource, BamBgzfSource,
+    BgzfLineSource) over planned partitions: those of
+    ``VcfSource``/``BamSource.plan_partitions``, or the ``chunks``
+    partitions of a tabix text read (tabular). Each partition becomes one
+    entry ``scope@beg:end;beg:end...`` of the ``partitions`` option (BGZF
+    virtual-offset ranges, -1 = after the header / end of file): scope
+    ``-`` keeps every record, ``*`` records overlapping any region of the
+    ``regions`` option, a number records overlapping that one region — a
+    ``tabix``/``bai`` partition keeps its own region's matches, so
+    overlapping regions each emit theirs. A ``chunks`` partition keeps
+    every record of its ranges; an ``empty`` partition reads nothing."""
     from exon_spark.functions.region import parse_region
 
     regions: list[str] = []
@@ -170,6 +176,8 @@ def read_dsv2(spark: SparkSession, cls: str, path: str, parts) -> DataFrame:
         if kind == "range":
             _, beg, end = part.extra
             ranges = [(beg, -1 if end is None else end)]
+        elif kind == "chunks":
+            ranges = part.extra[1]
         elif kind in ("tabix", "bai"):
             _, region, ranges = part.extra
             if region not in regions:
@@ -191,13 +199,15 @@ def read_dsv2(spark: SparkSession, cls: str, path: str, parts) -> DataFrame:
 
 
 def read_vcf_region_jvm(
-    spark: SparkSession, path: str, regions: str, columns=None
+    spark: SparkSession, path: str, regions: str | None = None, columns=None
 ) -> DataFrame:
     """Region scan of a bgzipped, tabix- or CSI-indexed VCF through the
     Java DataSourceV2 (exonspark.spark.VcfBgzfSource): ``VcfSource.
     plan_partitions`` plans record-exact virtual-offset chunk groups from
-    the index on the driver; executors seek and inflate only those BGZF
-    blocks and parse the fields Catalyst asks for
+    the index on the driver — or, with no ``regions``, the ``range``
+    partitions of a full scan cut at the .tbi linear index; executors seek
+    and inflate only those BGZF blocks and parse the fields Catalyst asks
+    for
     (SupportsPushDownRequiredColumns) straight from the decompressed bytes
     into columnar batches. No Python worker touches the data path, which
     clears the ~1.8 us/row Arrow-to-row ingest floor of the Python
@@ -217,13 +227,10 @@ def read_vcf_region_jvm(
     from exon_spark.sources.util import FoundFile
     from exon_spark.sources.vcf import VcfSource
 
-    parts = VcfSource.plan_partitions(
-        FoundFile(path, os.path.getsize(path)),
-        {
-            "regions": regions,
-            "target_parallelism": spark.sparkContext.defaultParallelism,
-        },
-    )
+    opts = {"target_parallelism": spark.sparkContext.defaultParallelism}
+    if regions:
+        opts["regions"] = regions
+    parts = VcfSource.plan_partitions(FoundFile(path, os.path.getsize(path)), opts)
     df = read_dsv2(spark, VCF_DSV2_CLASS, path, parts)
     return df.select(*_projection(_VCF_BASE_COLS, columns))
 
@@ -246,7 +253,7 @@ def _vcf_region_jvm_route(path: str, options: dict, spark=None):
 
     if scheme_of(path) is not None or not os.path.isfile(path):
         return None
-    from exon_spark.sources.bgzf_view import codec_active
+    from exon_spark.jvm import codec_active
 
     # get_spark puts the jar that holds the DSv2 on the classpath together
     # with the codec conf, so the codec conf marks a session that has it
@@ -310,7 +317,7 @@ def _bam_jvm_route(path: str, options: dict, spark):
 
     if scheme_of(path) is not None or not os.path.isfile(path):
         return None
-    from exon_spark.sources.bgzf_view import codec_active
+    from exon_spark.jvm import codec_active
 
     if spark is None or not codec_active(spark):
         return None
@@ -350,7 +357,7 @@ def _fastq_jvm_route(path: str, options: dict, spark):
 
     if scheme_of(path) is not None or not os.path.exists(path):
         return None
-    from exon_spark.sources.bgzf_view import codec_active
+    from exon_spark.jvm import codec_active
 
     if spark is None or not codec_active(spark):
         return None
@@ -457,24 +464,25 @@ def jvm_fast_reader(fmt: str, path: str, options: dict, spark=None):
         # object-store schemes (s3://, mock://), regions, encodings.
         return read_fasta_jvm
     if fmt == "vcf":
-        if path.lower().endswith((".gz", ".bgz")):
-            if spark is not None:
-                from exon_spark.sources.bgzf_view import jvm_bgzf_src
+        from exon_spark.sources.fs import fs_exists
 
-                src = jvm_bgzf_src(spark, path)
-                if src is not None:
-                    # splittable BGZF codec: the csv scan byte-range
-                    # splits the compressed file itself (a .gz-named bgzf
-                    # goes through a .bgz symlink view)
-                    return lambda spark, p, _s=src: read_vcf_jvm(spark, _s)
-            from exon_spark.sources.fs import fs_exists
+        if path.lower().endswith((".gz", ".bgz")) and fs_exists(path + ".tbi"):
+            import os
 
-            if fs_exists(path + ".tbi"):
-                # no codec in this session: the Python path splits the
-                # stream at linear-index record boundaries; the stock JVM
-                # gzip codec is one unsplittable partition per file —
-                # ~15x slower on a 2.5 GB VCF (measured)
-                return None
+            from exon_spark.jvm import codec_active
+
+            local = scheme is None and os.path.isfile(path)
+            if local and spark is not None and codec_active(spark):
+                # VcfBgzfSource reads the linear-index cuts that
+                # VcfSource.plan_partitions plans
+                cols = options.get("columns")
+                return lambda spark, p: read_vcf_region_jvm(spark, p, columns=cols)
+            # without the jar (or remote) the Python DataSource splits the
+            # stream at the same cuts; the stock JVM gzip codec is one
+            # unsplittable partition per file — ~15x slower on a 2.5 GB
+            # VCF (measured)
+            return None
+        # the BGZF codec byte-range splits an unindexed .bgz
         return read_vcf_jvm
     if fmt == "mzml":
         cols = options.get("columns")

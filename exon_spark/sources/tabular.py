@@ -2,7 +2,20 @@
 
 Spark-first design (SURVEY.md §2.1): these formats parse entirely JVM-side —
 ``spark.read.csv``/``text`` plus Column expressions for the attribute maps —
-no Python in the data path. Schemas mirror the reference:
+no Python in the data path. Which route reads the lines of GFF/GTF/BED:
+
+* a local ``.gz``/``.bgz`` with a ``.tbi``: the Java DataSourceV2
+  ``BgzfLineSource`` reads the planned index ranges in place — tabix chunk
+  groups for GFF region reads, linear-index cuts for full scans — and
+  ``from_csv`` parses its lines;
+* any other local file: the csv reader (the BGZF codec byte-range splits
+  an unindexed ``.bgz``);
+* object stores (s3://, mock://), zstd, and indexed files in a session
+  without the exon_spark jar: Python line RDDs under the csv reader.
+
+Every route parses a line on its own into n string columns with the same
+csv options, so all of them give the same rows. Schemas mirror the
+reference:
 
 * GFF  — exon/exon-gff/src/config.rs:82-101 (attributes MAP<STRING,ARRAY<STRING>>)
 * GTF  — exon/exon-gtf/src/config.rs:28-45  (attributes MAP<STRING,STRING>)
@@ -88,19 +101,50 @@ def _remote_lines_rdd(spark: SparkSession, path: str, options: dict):
     return spark.sparkContext.parallelize(files, len(files)).flatMap(_lines)
 
 
-def _bgzf_split_lines_rdd(spark: SparkSession, path: str):
-    """Full scan of a tabix-indexed bgzf text file, split at linear-index
-    record boundaries so one multi-GB .gff.gz/.bed.gz fans out across
-    executors — the JVM gzip codec would make it one unsplittable
-    partition. Returns None when the layout doesn't qualify."""
-    import os
+# the csv reader's options for every tabular text route, and from_csv's
+# for the Java line source: tab-separated, '#' lines are comments
+_TSV_OPTIONS = {"sep": "\t", "comment": "#"}
 
-    from exon_spark.sources.fs import fs_exists
+
+def _tsv_schema(n_cols: int) -> str:
+    return ", ".join(f"_c{i} string" for i in range(n_cols))
+
+
+_BLANK = "".join(map(chr, range(0x21)))
+
+
+def _csv_line(line: str) -> bool:
+    """False for a line Spark's csv file reader skips: one that starts
+    with '#', or one that ``String.trim()`` empties (no char above 0x20).
+    Its reader of a Dataset of lines trims spaces only, so the Python
+    line RDDs drop these lines themselves."""
+    return not line.startswith("#") and bool(line.strip(_BLANK))
+
+
+def _read_csv(spark: SparkSession, src, n_cols: int) -> DataFrame:
+    """``src`` (a path or an RDD of lines) through the csv reader, as
+    ``n_cols`` string columns ``_c0``.. plus discovered hive partition
+    columns. Each line parses on its own: missing trailing fields are
+    null, extra fields are dropped."""
+    if not isinstance(src, str):
+        src = src.filter(_csv_line)
+    return spark.read.options(**_TSV_OPTIONS).schema(_tsv_schema(n_cols)).csv(src)
+
+
+def _tabix_full_ranges(spark: SparkSession, path: str):
+    """Record-aligned virtual-offset ranges, ~1-16 MB compressed each,
+    that cover a local .gz/.bgz text file with a .tbi to its end, as
+    one-range chunk groups; None when the file has no .tbi. The cuts come
+    from the linear index, so one multi-GB .gff.gz/.bed.gz fans out across
+    executors (the JVM gzip codec would make it one unsplittable
+    partition); the first range starts at the top of the file, so lines
+    before the first indexed record are read too."""
+    import os
 
     if not (
         path.lower().endswith((".gz", ".bgz"))
         and os.path.isfile(path)
-        and fs_exists(path + ".tbi")
+        and os.path.exists(path + ".tbi")
     ):
         return None
     from exon_spark.sources.indexes import (
@@ -109,87 +153,33 @@ def _bgzf_split_lines_rdd(spark: SparkSession, path: str):
         read_tabix,
     )
 
-    idx = read_tabix(path + ".tbi")
     size = os.path.getsize(path)
     target = adaptive_target_bytes(
         size, spark.sparkContext.defaultParallelism, floor=1 << 20, ceil=16 << 20
     )
-    bounds = full_scan_ranges(idx.linear, target)
-    if not bounds:
-        return None
-
-    def _read(rng):
-        from exon_spark.sources.bgzf import BGZFReader
-
-        s, e = rng
-        if e is None:
-            e = os.path.getsize(path) << 16
-        with BGZFReader(path) as bg:
-            data = bg.read_range(s, e)
-        for line in data.split(b"\n"):
-            if line:
-                yield line.decode("utf-8", "replace")
-
-    return spark.sparkContext.parallelize(bounds, len(bounds)).flatMap(_read)
+    cuts = [s for s, _e in full_scan_ranges(read_tabix(path + ".tbi").linear, target)]
+    bounds = [0, *cuts[1:], size << 16]
+    return [[(b, e)] for b, e in zip(bounds, bounds[1:])]
 
 
-def _read_tsv_raw(
-    spark: SparkSession, path: str, n_cols: int, **options
-) -> tuple[DataFrame, list[str]]:
-    """Raw TSV columns as _c0.._cN plus discovered hive partition columns
-    (Spark appends them with their real names — everything not matching
-    ``_c<i>`` is a partition column and is passed through)."""
-    import re as _re
-
-    from exon_spark.sources.fs import scheme_of
-
-    if scheme_of(path) is not None:
-        src = _remote_lines_rdd(spark, path, options)
-    elif _is_zstd(path, options):
-        src = _zstd_lines_rdd(spark, path)
-    else:
-        # JVM first: with the splittable BGZF codec a local bgzf file
-        # byte-range splits inside spark.read.csv itself — no Python line
-        # RDD, no per-line Python->JVM serialization (jvm_bgzf_src proves
-        # bgzf via the .bgz suffix or a .tbi). The RDD paths remain for
-        # sessions without the codec and for plain-gzip layouts.
-        from exon_spark.sources.bgzf_view import jvm_bgzf_src
-
-        src = (
-            jvm_bgzf_src(spark, path)
-            or _bgzf_split_lines_rdd(spark, path)
-            or path
-        )
-    df = (
-        spark.read.option("sep", "\t")
-        .option("comment", "#")
-        .csv(src, inferSchema=False)
-    )
-    data = [c for c in df.columns if _re.fullmatch(r"_c\d+", c)][:n_cols]
-    parts = [c for c in df.columns if not _re.fullmatch(r"_c\d+", c)]
-    sel = [F.col(c).alias(f"_c{i}") for i, c in enumerate(data)]
-    sel += [F.col(c).cast("string").alias(c) for c in parts]
-    return df.select(*sel), parts
-
-
-def _tabix_lines_rdd(spark: SparkSession, path: str, regions: str):
-    """Distributed tabix-pruned line source for a single bgzf file: the
-    driver queries the .tbi, then chunk GROUPS (not lines) parallelize
-    across executors which each decompress + read their byte ranges
-    (INDEXED_GFF semantics, SURVEY.md §4.1). Returns None when the layout
-    doesn't support pruning (caller falls back to scan+filter)."""
+def _tabix_region_groups(spark: SparkSession, path: str, regions: str):
+    """Tabix-pruned chunk groups of a single bgzf file (INDEXED_GFF
+    semantics, SURVEY.md §4.1): the driver queries the .tbi and plans
+    ~target-sized groups of virtual-offset ranges with
+    ``indexes.chunk_groups``. None when the layout does not support
+    pruning (the caller falls back to scan+filter); [] when no region has
+    an index chunk."""
     import os
 
-    from exon_spark.functions.region import expand_regions
-    from exon_spark.functions.region import parse_region
+    from exon_spark.functions.region import expand_regions, parse_region
+    from exon_spark.sources.fs import fs_exists
     from exon_spark.sources.indexes import (
         adaptive_target_bytes,
         chunk_groups,
+        merge_chunks,
         read_tabix,
         tabix_chunks,
     )
-
-    from exon_spark.sources.fs import fs_exists
 
     if not (
         path.lower().endswith((".gz", ".bgz"))
@@ -200,15 +190,12 @@ def _tabix_lines_rdd(spark: SparkSession, path: str, regions: str):
     idx = read_tabix(path + ".tbi")
     # Merge chunk lists across regions per chromosome BEFORE grouping:
     # tabular region reads have distinct-matching-lines semantics (the
-    # residual OR-of-overlaps predicate in the callers emits each line
-    # once), and both the codec view route (build_region_view merges its
-    # chunk list) and the no-index scan+filter route already behave that
-    # way. Without this merge, overlapping regions put shared chunks in
-    # two groups and the Python fallback emitted shared lines twice —
-    # a route-dependent multiset. (VCF region scans are the deliberate
-    # contrast: per-region multiset, pinned in jvm_fast/the DataSource.)
-    from exon_spark.sources.bgzf_view import merge_chunks
-
+    # residual OR-of-overlaps predicate in read_gff emits each line once),
+    # as the no-index scan+filter route does. Without this merge,
+    # overlapping regions put shared chunks in two groups and shared lines
+    # were read twice — a route-dependent multiset. (VCF region scans are
+    # the deliberate contrast: per-region multiset, pinned in jvm_fast/the
+    # DataSource.)
     per_name: dict[str, list] = {}
     for region in expand_regions(regions):
         chunks = tabix_chunks(idx, region)
@@ -218,34 +205,80 @@ def _tabix_lines_rdd(spark: SparkSession, path: str, regions: str):
         (name, merge_chunks(chunks), idx.linear[idx.names.index(name)])
         for name, chunks in per_name.items()
     ]
-    if not per_key:
-        return "empty"
-    # JVM first: splice the chunk ranges into an exoncat .bgz view and let
-    # the codec-backed csv reader split it — record-exact (boundary blocks
-    # re-cut at the index's virtual offsets), zero Python in the data path
-    if os.path.isfile(path):
-        from exon_spark.sources.bgzf_view import build_region_view, codec_active
-
-        if codec_active(spark):
-            try:
-                return build_region_view(
-                    path, [c for _, chunks, _lin in per_key for c in chunks]
-                )
-            except Exception:
-                pass  # fall back to the Python chunk-group readers
     total = sum(
         (ce >> 16) - (cb >> 16) for _, chunks, _lin in per_key for cb, ce in chunks
     )
     target = adaptive_target_bytes(total, spark.sparkContext.defaultParallelism)
-    groups = [g for _name, g in chunk_groups(per_key, target)]
+    return [g for _name, g in chunk_groups(per_key, target)]
+
+
+def _tabix_lines_raw(spark: SparkSession, path: str, groups, n_cols: int) -> DataFrame:
+    """The ``_c0``..``_c{n_cols-1}`` columns of the lines in ``groups``
+    (lists of (beg, end) virtual-offset ranges, one partition each).
+
+    A local file in a session with the exon_spark jar is read in place by
+    the Java ``BgzfLineSource``, and its ``value`` lines parse with
+    ``from_csv`` — the csv reader's parser and options, so the rows are
+    the csv reader's; an empty plan is a zero-partition scan. Object-store
+    paths (s3://, mock://) and sessions without the jar read the groups
+    with the Python BGZF reader in executor tasks."""
+    import os
+
+    from exon_spark.jvm import codec_active
+
+    if os.path.isfile(path) and codec_active(spark):
+        from exon_spark.jvm import LINES_DSV2_CLASS
+        from exon_spark.sources.base import FilePartition
+        from exon_spark.sources.jvm_fast import read_dsv2
+
+        parts = [FilePartition(path, "gzip", (), extra=("chunks", g)) for g in groups]
+        lines = read_dsv2(spark, LINES_DSV2_CLASS, path, parts)
+        # inline(array(...)) is a Generate barrier: a filter on the columns
+        # stays above it instead of inlining from_csv once per reference
+        row = F.from_csv("value", _tsv_schema(n_cols), _TSV_OPTIONS)
+        return lines.select(F.inline(F.array(row)))
 
     def _read_group(group):
         from exon_spark.sources.bgzf import BGZFReader
 
         with BGZFReader(path) as bg:
-            yield from bg.lines_in_chunks(list(group))
+            for line in bg.lines_in_chunks(list(group)):
+                yield line[:-1] if line.endswith("\r") else line
 
-    return spark.sparkContext.parallelize(groups, len(groups)).flatMap(_read_group)
+    sc = spark.sparkContext
+    rdd = (
+        sc.parallelize(groups, len(groups)).flatMap(_read_group)
+        if groups
+        else sc.emptyRDD()
+    )
+    return _read_csv(spark, rdd, n_cols)
+
+
+def _read_tsv_raw(
+    spark: SparkSession, path: str, n_cols: int, **options
+) -> tuple[DataFrame, list[str]]:
+    """Raw TSV columns as _c0.._cN plus discovered hive partition columns
+    (Spark appends them with their real names and they are passed
+    through)."""
+    from exon_spark.sources.fs import scheme_of
+
+    if scheme_of(path) is not None:
+        src = _remote_lines_rdd(spark, path, options)
+    elif _is_zstd(path, options):
+        src = _zstd_lines_rdd(spark, path)
+    else:
+        # a local .gz/.bgz with a .tbi reads its linear-index ranges in
+        # place; any other local file goes to the csv reader, which
+        # byte-range splits an unindexed .bgz with the BGZF codec
+        groups = _tabix_full_ranges(spark, path)
+        if groups is not None:
+            return _tabix_lines_raw(spark, path, groups, n_cols), []
+        src = path
+    df = _read_csv(spark, src, n_cols)
+    parts = df.columns[n_cols:]
+    return df.select(
+        *df.columns[:n_cols], *[F.col(c).cast("string").alias(c) for c in parts]
+    ), parts
 
 
 def _region_predicate(regions: str, seq_col: str, start_col: str, end_col: str):
@@ -267,32 +300,17 @@ def _region_predicate(regions: str, seq_col: str, start_col: str, end_col: str):
 
 def read_gff(spark: SparkSession, path: str, **options) -> DataFrame:
     regions = options.pop("regions", None) or options.pop("region", None)
+    groups = _tabix_region_groups(spark, path, regions) if regions else None
+    if groups is not None:
+        df, parts = _tabix_lines_raw(spark, path, groups, 9), []
+    else:
+        df, parts = _read_tsv_raw(spark, path, 9, **options)
+    out = _gff_select(df, parts)
     if regions:
-        src = _tabix_lines_rdd(spark, path, regions)
-        if src == "empty":  # indexed, but no reference/chunks overlap
-            return spark.createDataFrame(
-                [],
-                "seqname string, source string, type string, start bigint, "
-                "end bigint, score float, strand string, phase string, "
-                "attributes map<string,array<string>>",
-            )
-        if src is not None:
-            df = (
-                spark.read.option("sep", "\t")
-                .option("comment", "#")
-                .csv(src, inferSchema=False)
-            )
-            data = [c for c in df.columns][:9]
-            df = df.select(*[F.col(c).alias(f"_c{i}") for i, c in enumerate(data)])
-            parts = []
-        else:
-            df, parts = _read_tsv_raw(spark, path, 9, **options)
-        out = _gff_select(df, parts)
         # residual predicate — index chunks are supersets; no-index layouts
         # degrade to scan+filter, never to wrong answers
-        return out.filter(_region_predicate(regions, "seqname", "start", "end"))
-    df, parts = _read_tsv_raw(spark, path, 9, **options)
-    return _gff_select(df, parts)
+        out = out.filter(_region_predicate(regions, "seqname", "start", "end"))
+    return out
 
 
 def _gff_select(df: DataFrame, parts: list[str]) -> DataFrame:
@@ -370,16 +388,16 @@ def read_bed(spark: SparkSession, path: str, n_fields: int = 12, **options) -> D
     if not 3 <= n_fields <= 12:
         raise ValueError("n_fields must be in 3..=12")
     df, parts = _read_tsv_raw(spark, path, n_fields, **options)
-    present = len(df.columns) - len(parts)
-    out = []
-    for i, (name, typ) in enumerate(_BED_SCHEMA[:n_fields]):
-        if i < present:
-            c = F.when(F.col(f"_c{i}") == ".", None).otherwise(F.col(f"_c{i}"))
-            out.append(c.try_cast(typ).alias(name))
-        else:
-            out.append(F.lit(None).cast(typ).alias(name))
-    out += [F.col(c) for c in parts]
-    return df.select(*out)
+    return df.select(
+        *[
+            F.when(F.col(f"_c{i}") == ".", None)
+            .otherwise(F.col(f"_c{i}"))
+            .try_cast(typ)
+            .alias(name)
+            for i, (name, typ) in enumerate(_BED_SCHEMA[:n_fields])
+        ],
+        *[F.col(c) for c in parts],
+    )
 
 
 _HMM_COLS = [

@@ -356,9 +356,10 @@ _FQ_WORD = st.text(alphabet="ACGTacgtN0123456789_:/.|é-", min_size=0, max_size=
 @st.composite
 def _fastq_text(draw) -> bytes:
     """FASTQ text on the edges of the line discipline: quality lines led
-    by '@' or '+', CRLF ends, blank and whitespace-only lines anywhere,
-    headers with no space, a trailing space or tabs, and (rarely) empty
-    sequence and quality lines, which the framing skips like blank ones."""
+    by '@' or '+', CRLF ends, blank and whitespace-only lines between
+    records (skipped) and, rarely, inside one (where they are the record's
+    lines), headers with no space, a trailing space or tabs, and (rarely)
+    empty sequence and quality lines, which read as ''."""
     lines = []
     for _ in range(draw(st.integers(0, 6))):
         name = draw(_FQ_WORD)
@@ -373,8 +374,8 @@ def _fastq_text(draw) -> bytes:
             seq = qual = ""
         lines += [header, seq, draw(st.sampled_from(["+", "+" + name])), qual]
     out = []
-    for line in lines:
-        while draw(st.integers(0, 5)) == 0:
+    for i, line in enumerate(lines):
+        while draw(st.integers(0, 5 if i % 4 == 0 else 40)) == 0:
             out.append(draw(st.sampled_from(["", " ", "\t", "  \t ", "\x0b", "\x0c", "\r"])))
         out.append(line)
     ends = [draw(st.sampled_from(["\n", "\r\n"])) for _ in out]
@@ -447,6 +448,36 @@ def test_fastq_jvm_route_matches_python_datasource(spark, tmp_path_factory, text
         )
 
 
+@settings(max_examples=6, deadline=None)
+@given(
+    reads=st.lists(
+        st.tuples(
+            st.text(alphabet="ACGTr0123456789_", min_size=1, max_size=6),
+            st.one_of(st.none(), st.text(alphabet="ab 12", min_size=1, max_size=6)),
+            st.sampled_from(["", "", "A", "ACGTN"]),
+        ),
+        min_size=1,
+        max_size=6,
+    )
+)
+def test_fastq_copy_round_trip_keeps_empty_sequences(spark, tmp_path_factory, reads):
+    """COPY ... STORED AS FASTQ writes an empty sequence as an empty line
+    and an empty quality line; both readers read such a record back as
+    (name, description, '', '')."""
+    from exon_spark.sinks import maybe_handle_copy
+
+    src = [(n, d, s, "I" * len(s)) for n, d, s in reads]
+    spark.createDataFrame(
+        src, "name string, description string, sequence string, quality_scores string"
+    ).createOrReplaceTempView("fq_empty_seq")
+    out = str(tmp_path_factory.mktemp("fqcopy") / "out.fastq")
+    maybe_handle_copy(spark, f"COPY (SELECT * FROM fq_empty_seq) TO '{out}' STORED AS FASTQ")
+    jvm, py = _fastq_routes(spark, [out])
+    want = sorted(((*r, 0) for r in src), key=repr)
+    assert sorted(map(tuple, jvm.collect()), key=repr) == want
+    assert sorted(map(tuple, py.collect()), key=repr) == want
+
+
 @pytest.mark.parametrize(
     "text, error",
     [
@@ -460,3 +491,175 @@ def test_fastq_bad_records_fail_both_routes(spark, tmp_path, text, error):
     for df in (jvm, py):
         with pytest.raises(Exception, match=error):
             df.collect()
+
+
+# ------------------------------------------------ tabix text route parity
+
+
+def _bgzip_blocks(text: bytes, path: str, sizes) -> None:
+    """``text`` as BGZF blocks of the drawn uncompressed sizes (cycled), so
+    lines straddle block boundaries at varied offsets."""
+    from exon_spark.sources.bgzf import BGZF_EOF, bgzf_block
+
+    with open(path, "wb") as fh:
+        off, i = 0, 0
+        while off < len(text):
+            n = sizes[i % len(sizes)]
+            fh.write(bgzf_block(text[off : off + n]))
+            off, i = off + n, i + 1
+        fh.write(BGZF_EOF)
+
+
+_GFF_CHROMS = ("chr1", "chr2", "chr3")
+_GFF_NOISE = ("#x\tsrc", "# comment", "", " ", "\t", "\t\t\t", " \t\x0b\x0c", "chr1\tx")
+
+
+@st.composite
+def _gff_text(draw) -> bytes:
+    """Coordinate-sorted GFF whose lines are on the edges of the csv
+    reader: '#' lines, blank, whitespace-only and tab-only lines (at most
+    three tabs: a fifth field would have to be a number for the tabix
+    builder) and short noise lines between records, empty and '.' fields,
+    5-8 and 10-11 fields, features spanning up to 60 kb (several linear
+    index windows), CRLF or LF ends."""
+    field = st.sampled_from(["", ".", "x", "a b", '"q', 'q"', "#h"])
+    lines = ["##gff-version 3"]
+    for chrom in draw(st.lists(st.sampled_from(_GFF_CHROMS), unique=True, max_size=3)):
+        for start in sorted(draw(st.lists(st.integers(1, 300_000), max_size=40))):
+            end = start + draw(st.sampled_from([0, 10, 500, 20_000, 60_000]))
+            attrs = draw(st.sampled_from(["ID=a", "ID=a;Name=b,c", ".", "", "k=v;;"]))
+            fields = [chrom, draw(field), "gene", str(start), str(end),
+                      draw(st.sampled_from([".", "1.5", "x"])), "+",
+                      draw(st.sampled_from([".", "0"])), attrs]
+            n = draw(st.sampled_from([9, 9, 9, 5, 7, 8, 10, 11]))
+            fields = (fields + ["extra", ""])[:n]
+            while draw(st.integers(0, 4)) == 0:
+                lines.append(draw(st.sampled_from(_GFF_NOISE)))
+            lines.append("\t".join(fields))
+    end = draw(st.sampled_from(["\n", "\r\n"]))
+    return "".join(line + end for line in lines).encode()
+
+
+def _gff_files(d, text: bytes, sizes) -> tuple[str, str]:
+    """``text`` as a plain .gff and a tabix-indexed .gff.gz in ``d``."""
+    from exon_spark.sources.indexes import build_tabix_gff
+
+    plain, gz = str(d / "t.gff"), str(d / "t.gff.gz")
+    with open(plain, "wb") as fh:
+        fh.write(text)
+    _bgzip_blocks(text, gz, sizes)
+    build_tabix_gff(gz)
+    return plain, gz
+
+
+def _rows(df) -> list[str]:
+    return sorted(map(repr, df.collect()))
+
+
+def _python_route(fn):
+    """``fn()`` with the session's jar disregarded: tabix text reads take
+    the Python BGZF reader."""
+    from unittest import mock
+
+    import exon_spark.jvm
+
+    with mock.patch.object(exon_spark.jvm, "codec_active", lambda _spark: False):
+        return fn()
+
+
+_REGION = st.one_of(
+    st.sampled_from(_GFF_CHROMS + ("chrX",)),
+    st.builds(
+        lambda c, lo, span: f"{c}:{lo}-{lo + span}",
+        st.sampled_from(_GFF_CHROMS + ("chrX",)),
+        st.integers(1, 300_000),
+        st.sampled_from([0, 100, 5_000, 80_000]),
+    ),
+)
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    text=_gff_text(),
+    sizes=st.lists(st.integers(37, 4096), min_size=1, max_size=4),
+    regions=st.lists(_REGION, min_size=1, max_size=4).map(
+        lambda rs: ",".join(rs + rs[:1])  # a duplicate region too
+    ),
+)
+def test_gff_region_routes_agree(spark, tmp_path_factory, text, sizes, regions):
+    """A GFF region read gives one multiset of rows on all three routes:
+    the Java line source over the merged chunk groups, the Python
+    chunk-group reader, and the no-index scan+filter of the plain file —
+    overlapping, duplicate and absent-chromosome regions included."""
+    from exon_spark.sources import read_format
+
+    plain, gz = _gff_files(tmp_path_factory.mktemp("gffr"), text, sizes)
+    df = read_format(spark, "gff", gz, regions=regions)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan bgzf-lines" in plan and "(Python)" not in plan, plan
+    got = _rows(df)
+    assert got == _python_route(lambda: _rows(read_format(spark, "gff", gz, regions=regions)))
+    assert got == _rows(read_format(spark, "gff", plain, regions=regions))
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    text=_gff_text(),
+    sizes=st.lists(st.integers(37, 4096), min_size=1, max_size=4),
+    n_fields=st.integers(3, 12),
+)
+def test_tabix_text_full_scan_matches_plain(spark, tmp_path_factory, text, sizes, n_fields):
+    """A full GFF/GTF/BED scan of a .gz with a .tbi (the line source over
+    linear-index cuts, and the Python reader of the same cuts) gives the
+    rows of the plain file."""
+    from exon_spark.sources import read_format
+
+    plain, gz = _gff_files(tmp_path_factory.mktemp("gfff"), text, sizes)
+    for fmt, opts in (("gff", {}), ("gtf", {}), ("bed", {"n_fields": n_fields})):
+        df = read_format(spark, fmt, gz, **opts)
+        assert "BatchScan bgzf-lines" in df._jdf.queryExecution().executedPlan().toString()
+        want = _rows(read_format(spark, fmt, plain, **opts))
+        assert _rows(df) == want, fmt
+        assert _python_route(lambda: _rows(read_format(spark, fmt, gz, **opts))) == want, fmt
+
+
+@st.composite
+def _vcf_text(draw) -> bytes:
+    """Coordinate-sorted VCF with '.' fields, multi-valued id/alt/filter,
+    odd qual values, and no, one or two sample columns (one layout per
+    file, as the header declares it)."""
+    lines = ["##fileformat=VCFv4.2", "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO"]
+    samples = draw(st.sampled_from([[], [["GT", "0/1"]], [["GT:DP", "0/1:3", "1/1:."]]]))
+    for chrom in draw(st.lists(st.sampled_from(_GFF_CHROMS), unique=True, max_size=3)):
+        for pos in sorted(draw(st.lists(st.integers(1, 300_000), max_size=40))):
+            fields = [
+                chrom, str(pos),
+                draw(st.sampled_from([".", "rs1", "rs1;rs2"])),
+                draw(st.sampled_from(["A", "ACG"])),
+                draw(st.sampled_from([".", "T", "T,G"])),
+                draw(st.sampled_from([".", "50", "0.5", "1e3"])),
+                draw(st.sampled_from([".", "PASS", "q10;s50"])),
+                draw(st.sampled_from([".", "DP=5", "DP=5;AF=0.5"])),
+            ]
+            fields += draw(st.sampled_from(samples)) if samples else []
+            lines.append("\t".join(fields))
+    return ("\n".join(lines) + "\n").encode()
+
+
+@settings(max_examples=8, deadline=None)
+@given(text=_vcf_text(), sizes=st.lists(st.integers(37, 4096), min_size=1, max_size=4))
+def test_vcf_full_scan_dsv2_matches_python_datasource(spark, tmp_path_factory, text, sizes):
+    """A full scan of a .vcf.gz with a .tbi reads through VcfBgzfSource
+    (VcfSource.plan_partitions' range partitions) and gives the Python
+    DataSource's rows on all nine base columns."""
+    from exon_spark.sources import read_format
+    from exon_spark.sources.indexes import build_tabix_vcf
+
+    gz = str(tmp_path_factory.mktemp("vcff") / "t.vcf.gz")
+    _bgzip_blocks(text, gz, sizes)
+    build_tabix_vcf(gz)
+    df = read_format(spark, "vcf", gz)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan vcf-bgzf" in plan and "(Python)" not in plan, plan
+    cols = ["chrom", "pos", "id", "ref", "alt", "qual", "filter", "info", "formats"]
+    assert _rows(df.select(cols)) == _rows(spark.read.format("vcf").load(gz).select(cols))

@@ -514,3 +514,84 @@ def test_vcf_region_statements_write_no_view_files(spark, indexed_vcf_table):
         assert listing() - before == set()
     finally:
         sess.sql("DROP TABLE leak_vcf")
+
+
+# --------------------------------------------------- tabix text (GFF) reads
+# A GFF region read and a full scan of a .gff.gz with a .tbi read the
+# index ranges in place through the Java line source: one job, no Python
+# scan, no RDD leaf, and no file written beside the data.
+
+
+@pytest.fixture(scope="module")
+def indexed_gff(tmp_path_factory):
+    root = tmp_path_factory.mktemp("gff_pins")
+    rng = random.Random(11)
+    lines = ["##gff-version 3"]
+    starts: dict[str, list[int]] = {}
+    for chrom in ("chr1", "chr2"):
+        starts[chrom] = sorted(rng.sample(range(1, 2_000_000), 1500))
+        for s in starts[chrom]:
+            lines.append(f"{chrom}\tsrc\tgene\t{s}\t{s + 99}\t.\t+\t.\tID=g{s}")
+    plain = root / "pins.gff"
+    plain.write_text("\n".join(lines) + "\n")
+
+    from exon_spark.sources.bgzf import bgzip_file
+    from exon_spark.sources.indexes import build_tabix_gff
+
+    gz = root / "pins.gff.gz"
+    bgzip_file(str(plain), str(gz))
+    build_tabix_gff(str(gz))
+    return str(gz), starts
+
+
+def _collect_with_jobs(spark, df, gid):
+    sc = spark.sparkContext
+    sc.setJobGroup(gid, gid)
+    try:
+        rows = df.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(gid)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rows, jobs
+
+
+def test_gff_region_read_plan_and_jobs(spark, indexed_gff):
+    from exon_spark.sources import read_format
+
+    gz, starts = indexed_gff
+    df = read_format(spark, "gff", gz, regions="chr2:200000-700000").select("start")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan bgzf-lines" in plan, plan
+    assert "(Python)" not in plan and "ExistingRDD" not in plan, plan
+    rows, jobs = _collect_with_jobs(spark, df, "gff_region_pin")
+    assert sorted(r.start for r in rows) == [
+        s for s in starts["chr2"] if s + 99 >= 200_000 and s <= 700_000
+    ]
+    assert len(jobs) < 3, jobs
+
+
+def test_gff_reads_write_no_view_files(spark, indexed_gff):
+    """GFF region reads and full scans of a .gff.gz with a .tbi leave
+    nothing under $TMPDIR/exon_spark_views (no .manifest/.synth view, no
+    .bgz symlink)."""
+    import os
+    import tempfile
+
+    from exon_spark.sources import read_format
+
+    gz, starts = indexed_gff
+    views = os.path.join(tempfile.gettempdir(), "exon_spark_views")
+
+    def listing():
+        return set(os.listdir(views)) if os.path.isdir(views) else set()
+
+    before = listing()
+    for lo in range(10_000, 1_000_000, 200_000):
+        rows = read_format(spark, "gff", gz, regions=f"chr1:{lo}-{lo + 150_000}").collect()
+        assert len(rows) == sum(
+            1 for s in starts["chr1"] if s + 99 >= lo and s <= lo + 150_000
+        )
+    for _ in range(3):
+        assert read_format(spark, "gff", gz).count() == 3000
+    assert listing() - before == set()

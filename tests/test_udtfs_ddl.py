@@ -214,13 +214,14 @@ def test_read_gff_overlapping_regions_routes_agree(spark, tmp_path, monkeypatch)
             for r in df.select("seqname", "start", "end").collect()
         )
 
-    # route 1: codec merged view (when the session jar carries the codec)
+    # route 1: the Java line source over the merged chunk groups (when the
+    # session carries the jar)
     assert got(read_format(spark, "gff", str(gz), regions=regions)) == want
-    # route 2: Python chunk-group fallback (codec forced off; tabular
-    # resolves codec_active from the module at call time)
-    import exon_spark.sources.bgzf_view as bgzf_view
+    # route 2: Python chunk-group fallback (jar forced off; tabular
+    # resolves codec_active from exon_spark.jvm at call time)
+    import exon_spark.jvm
 
-    monkeypatch.setattr(bgzf_view, "codec_active", lambda _spark: False)
+    monkeypatch.setattr(exon_spark.jvm, "codec_active", lambda _spark: False)
     assert got(read_format(spark, "gff", str(gz), regions=regions)) == want
     # route 3: no-index scan+filter
     assert got(read_format(spark, "gff", str(plain), regions=regions)) == want
