@@ -290,54 +290,35 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 def _materialize(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Persist a DataFrame that the caller will feed into several downstream
-    branches of one action. Always ``persist(MEMORY_AND_DISK)`` — lineage
-    is kept, so losing an executor mid-query recomputes instead of failing
-    (``localCheckpoint`` truncates lineage with NO automatic retry —
-    unacceptable under dynamic allocation / spot executors).
+    """Persist (``MEMORY_AND_DISK``, columnar) a frame that several
+    downstream branches read. Lineage is kept: a cached block lost with
+    its executor is recomputed from the plan, so the query survives
+    executor loss (pinned by tests/test_executor_loss.py).
 
-    ``eager`` forces computation NOW and is the right call when the
-    consumers are *concurrently scheduled* stages of one job (e.g. the two
-    sides of jaccard_verify's candidate⋈shingle joins): left lazy, each
-    concurrent stage recomputes the uncached subtree from scratch
-    (measured 2-3x cold slowdown). Leave lazy when the consumers run
-    sequentially (the map stages of a self-join): the first populates the
-    cache, the second reads it, and no upfront job is paid.
-
-    The eager path uses ``localCheckpoint(eager=True)``: it stores raw
-    partition blocks, skipping the columnar encode/decode every
-    DataFrame ``persist`` read pays (~2s across the dedup bench).
-    CAVEAT: localCheckpoint truncates lineage — losing an executor
-    mid-query fails the job permanently (no automatic retry). Fine for
-    single-JVM local mode (executor loss == driver loss anyway); under
-    dynamic allocation / spot executors set
-    ``spark.exon.reliableMaterialize=true`` to use persist+count, which
-    keeps lineage and recovers from executor loss."""
+    ``eager`` fills the cache NOW with one count, for consumers that are
+    *concurrently scheduled* stages of one job (e.g. the two sides of a
+    self-join): left lazy, each of them recomputes the uncached subtree.
+    Left lazy when the consumers run one after another: the first fills
+    the cache and the rest read it. Each call site's form (eager, lazy,
+    or no call at all) is the cheapest in a per-site A/B (SCALE.md
+    "Shared-subtree materialization")."""
     from pyspark.storagelevel import StorageLevel
 
-    if not eager:
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    reliable = (
-        str(df.sparkSession.conf.get("spark.exon.reliableMaterialize", "false"))
-        .lower()
-        == "true"
-    )
-    if reliable:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if eager:
         df.count()
-        return df
-    return df.localCheckpoint(eager=True)
+    return df
 
 
-def _materialize_all(dfs: "list[DataFrame]") -> "list[DataFrame]":
-    """Eagerly materialize several INDEPENDENT frames with their jobs
-    overlapped from driver threads (guide §2.6): each eager materialize is
-    a separate action whose stage tail leaves most cores idle, so running
-    them back-to-back pays the sum of the tails. Spark's FIFO scheduler
-    backfills the next job's tasks onto cores the current job's tail has
-    freed, so the overlapped wall time approaches the max instead of the
-    sum (measured: lm_ladder's vocab/bigram/trigram fits, sf0.1
-    1.9 -> 1.3 s for the three jobs; same blocks either way).
+def _materialize_all(dfs: "list[DataFrame]") -> "tuple[list[DataFrame], list[int]]":
+    """Eagerly materialize several INDEPENDENT frames with their count
+    jobs overlapped from driver threads (guide §2.6); returns the frames
+    and their row counts. Each count is a separate action whose stage
+    tail leaves most cores idle, so running them back-to-back pays the
+    sum of the tails. Spark's FIFO scheduler backfills the next job's
+    tasks onto cores the current job's tail has freed, so the overlapped
+    wall time approaches the max instead of the sum (measured: lm_ladder's
+    vocab/bigram/trigram fits, sf0.1 1.9 -> 1.3 s for the three jobs).
 
     The frames MUST be mutually independent (none reads another's
     output) and must not share an UNMATERIALIZED expensive subtree —
@@ -345,22 +326,19 @@ def _materialize_all(dfs: "list[DataFrame]") -> "list[DataFrame]":
     nothing has populated a cache entry yet. Callers materialize the
     shared parent first (lm_ladder's ``ta``), exactly as they already
     did for correctness of the sequential spelling."""
-    if len(dfs) == 1:
-        return [_materialize(dfs[0], eager=True)]
     from pyspark import InheritableThread
 
-    out: list = [None] * len(dfs)
+    frames = [_materialize(d) for d in dfs]
+    counts: list = [None] * len(dfs)
     errs: list = [None] * len(dfs)
 
-    def run(i: int, d: DataFrame) -> None:
+    def run(i: int) -> None:
         try:
-            out[i] = _materialize(d, eager=True)
+            counts[i] = frames[i].count()
         except BaseException as e:  # re-raised on the caller thread below
             errs[i] = e
 
-    threads = [
-        InheritableThread(target=run, args=(i, d)) for i, d in enumerate(dfs)
-    ]
+    threads = [InheritableThread(target=run, args=(i,)) for i in range(len(dfs))]
     for t in threads:
         t.start()
     for t in threads:
@@ -368,7 +346,7 @@ def _materialize_all(dfs: "list[DataFrame]") -> "list[DataFrame]":
     for e in errs:
         if e is not None:
             raise e
-    return out
+    return frames, counts
 
 
 def shingled_docs(
@@ -558,7 +536,7 @@ def jaccard_verify(
     is unchanged — the filter only drops rows the pair join would drop.
 
     ``prefilter=False`` is the LATENCY-regime spelling (r13): the pairs
-    checkpoint + two distinct-builds + two semi joins cost ~5 extra jobs
+    materialization + two distinct-builds + two semi joins cost ~5 extra jobs
     whose scheduling overhead exceeds the shuffled bytes they save on a
     small corpus (q19 sf0.1 warm A/B, calm windows: 2.58 -> 2.23 s).
     Output-identical by construction either way — callers pass it from
@@ -640,18 +618,14 @@ def minhash_dedup(
 
     r12 plan shape: the materialized shared frame is the HASHED shingle
     rows (doc_id, md5-h32, xxhash64 — 16 bytes/shingle), not the shingle
-    string arrays (~5x the checkpoint bytes); set sizes fold into the
+    string arrays (~5x the bytes); set sizes fold into the
     signature aggregate (one groupBy computes n_sh + all 16 minima), and
     the verify keys come straight off the materialized rows."""
-    # size-adaptive materialization (r12): above the columnar floor the
-    # hashed shingle frame goes through a COLUMNAR persist+count — the
-    # signature aggregate reads (doc_id, h) and the verify path
-    # (doc_id, hk), disjoint hash columns, so InMemoryTableScan
-    # column-prunes each pass where the raw localCheckpoint row scan
-    # pays the full 24-byte width every time (measured sf10 warm
-    # 20.6 -> 14.1 s). Below the threshold the encode/decode overhead
-    # dominates the pruning win (sf1 warm 6.8 -> 8.8 s the wrong way),
-    # so the latency regime keeps the raw-block localCheckpoint.
+    # The hashed shingle frame feeds the signature aggregate (doc_id, h)
+    # and the verify path (doc_id, hk): disjoint hash columns, so the
+    # columnar cache's InMemoryTableScan column-prunes each pass (sf10
+    # warm 20.6 -> 14.1 s against a raw-row local checkpoint, r12). Lazy:
+    # the two consumers run one after the other, so the first fills it.
     hashed = (
         shingled_docs(df, id_col, text_col, n)
         .select("doc_id", F.explode("sh").alias("shingle"))
@@ -661,12 +635,9 @@ def minhash_dedup(
             F.xxhash64("shingle").alias("hk"),
         )
     )
+    rows = _materialize(hashed)
+    # the size regime picks the verify prefilter and id-set broadcast
     scale = regime.above(df, "columnar", "minhash_dedup", n_rows)
-    if scale:
-        rows = _materialize(hashed)
-        rows.count()
-    else:
-        rows = _materialize(hashed, eager=True)
     state = rows.groupBy("doc_id").agg(
         F.count("*").alias("n_sh"),
         *[
@@ -690,7 +661,7 @@ def minhash_dedup(
     )
     sh_rows = rows.select("doc_id", F.col("hk").alias("shingle"))
     # latency regime also skips the verify prefilter (r13): its pairs
-    # checkpoint + id-set semi joins are ~5 extra jobs of pure scheduling
+    # materialization + id-set semi joins are ~5 extra jobs of pure scheduling
     # overhead at small corpus sizes (A/B in jaccard_verify's docstring)
     return jaccard_verify(
         cands, sh_rows, threshold, broadcast_ids=scale, prefilter=scale
@@ -1102,16 +1073,20 @@ def dup_clusters(
       graphs are forests of tiny dense clusters (diameter 2-4 in
       practice), so this beats the O(log n)-round large-star/small-star
       alternation, which pays its constant factor twice per round. Each
-      round is one shuffle join plus one map-side-combined groupBy; the
-      label table (2 longs per doc in any pair) is persisted per round
-      and unpersisted after the next round materializes. Early-stops via
-      a per-round changed-label count. (Both regimes produce identical
-      output — pinned by a test that forces ``driver_edge_limit=0``.)
+      round is one shuffle join plus one map-side-combined groupBy; each
+      round's label table (2 longs per doc in any pair) is written with
+      Spark's reliable ``DataFrame.checkpoint``, which keeps the plan
+      O(1) per round and survives executor loss. It needs a checkpoint
+      directory (``spark.checkpoint.dir``, a deployment path; ``get_spark``
+      sets one for local masters). Early-stops via a per-round
+      changed-label count. (Both regimes produce identical output —
+      pinned by a test that forces ``driver_edge_limit=0``.)
 
     Iterative and therefore not expressible in one SQL statement; the
     DuckDB oracle (q31) uses a recursive CTE over the same pairs.
     """
-    pairs = _materialize(pairs.select("doc_a", "doc_b"), eager=True)
+    # the regime count fills the cache; both regimes then read it
+    pairs = _materialize(pairs.select("doc_a", "doc_b"))
     if pairs.count() <= driver_edge_limit:
         rows = pairs.collect()
         parent: dict = {}
@@ -1133,9 +1108,12 @@ def dup_clusters(
                 # union by min so every root IS the component minimum
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        out = [(doc, find(doc)) for doc in parent]
+        import pandas as pd
         from pyspark.sql.types import StructField, StructType
 
+        out = pd.DataFrame(
+            [(doc, find(doc)) for doc in parent], columns=["doc_id", "cluster_id"]
+        )
         id_type = pairs.schema["doc_a"].dataType
         schema = StructType(
             [
@@ -1143,6 +1121,8 @@ def dup_clusters(
                 StructField("cluster_id", id_type),
             ]
         )
+        # from pandas (Arrow), the result is a LocalRelation: the plan has
+        # no RDD leaf, whose rows a lost executor would take with it
         res = pairs.sparkSession.createDataFrame(out, schema)
         pairs.unpersist(False)
         return res
@@ -1153,11 +1133,11 @@ def dup_clusters(
         eager=True,
     )
     pairs.unpersist(False)
-    labels = _materialize(
-        edges.select(F.col("src").alias("doc")).distinct().select(
-            "doc", F.col("doc").alias("lab")
-        ),
-        eager=True,
+    labels = (
+        edges.select(F.col("src").alias("doc"))
+        .distinct()
+        .select("doc", F.col("doc").alias("lab"))
+        .checkpoint()
     )
     for _ in range(max_iter):
         nbr_min = (
@@ -1167,22 +1147,17 @@ def dup_clusters(
             .groupBy("doc")
             .agg(F.min("lab").alias("lab"))
         )
-        # EAGER materialize (lineage truncation) is load-bearing here, not
-        # a perf choice: nbr_min references `labels` twice (join + union),
-        # so with lazy persist the logical plan DOUBLES per round —
-        # exponential tree growth that OOMs the driver around round ~15
-        # on any graph whose diameter forces that many rounds (caught by
-        # test_dup_clusters_regimes_agree's random graph). Checkpointing
-        # each round keeps the plan O(1) per round, the standard shape
-        # for iterative algorithms.
-        new_labels = _materialize(nbr_min, eager=True)
+        # The checkpoint cuts the plan, which is load-bearing: nbr_min
+        # reads `labels` twice (join + union), so the plan DOUBLES per
+        # round and OOMs the driver around round ~15 (caught by
+        # test_dup_clusters_regimes_agree); a persist keeps the plan.
+        new_labels = nbr_min.checkpoint()
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "doc")
             .filter(F.col("n.lab") != F.col("o.lab"))
             .count()
         )
-        labels.unpersist(False)
         labels = new_labels
         if changed == 0:
             break
@@ -1245,7 +1220,7 @@ def dup_ngram_coverage(
       documents — 2x above the largest oracle-proven corpus (sf10,
       500k docs) — and switches to hashed keys beyond, where the string
       gram index is a measured single-box disk-death (sf100: ~1B gram
-      positions x ~70 B string rows through a localCheckpoint and two
+      positions x ~70 B string rows through a materialized frame and two
       shuffles filled 72 GB of scratch; hashed is ~3.5x leaner). The
       input is sized per regime.py (``n_rows`` is the hint).
     - ``max_gram_df`` drops grams whose document frequency exceeds the cap
@@ -1571,7 +1546,7 @@ def dedup_against(
         # filtered slices as index_state/new_state — one scan, one job;
         # the frame is a pure per-doc function, so filtering before or
         # after the build is the same frame.)
-        index_state, dn = _materialize_all(
+        (index_state, dn), _ = _materialize_all(
             [
                 minhash_index(index, id_col, text_col, n, bands, rows_per_band),
                 minhash_index(new, id_col, text_col, n, bands, rows_per_band),
@@ -1608,8 +1583,7 @@ def dedup_against(
         .select("doc_id", "dup_of")
         .distinct()
         .join(dn.select("doc_id", F.col("n_sh").alias("n_a")), "doc_id")
-        .join(idx.select("dup_of", F.col("n_sh").alias("n_b")), "dup_of"),
-        eager=True,
+        .join(idx.select("dup_of", F.col("n_sh").alias("n_b")), "dup_of")
     )
     kn = (
         dn.join(cand.select("doc_id").distinct(), "doc_id")
@@ -1727,12 +1701,11 @@ def ngram_containment_pairs(
         F.explode("_hs").alias("shingle"),
     )
     if prefilter:
-        # columnar persist (not localCheckpoint): the df aggregate reads
-        # ONLY ``shingle``, and InMemoryTableScan column-prunes +
-        # compresses, where a raw localCheckpoint row scan would pay the
-        # full width every pass (sf10: 2.3 GB -> 208 MB per read)
-        sh = _materialize(sh)
-        sh.count()
+        # columnar persist: the df aggregate reads ONLY ``shingle``, and
+        # InMemoryTableScan column-prunes + compresses, where a raw row
+        # scan would pay the full width every pass (sf10: 2.3 GB ->
+        # 208 MB per read)
+        sh = _materialize(sh, eager=True)
         dff = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
         keep = dff.filter(F.col("_df") >= 2)
         if max_shingle_df is not None:
@@ -1750,7 +1723,7 @@ def ngram_containment_pairs(
         keep = _materialize(keep.select("shingle"), eager=True)
         gen = sh.join(F.broadcast(keep), "shingle", "semi")
     else:
-        sh = _materialize(sh, eager=True)
+        sh = _materialize(sh)
         gen = sh
         if max_shingle_df is not None:
             hot = (

@@ -23,11 +23,12 @@ FLOORS: dict[str, int] = {
     # bottleneck (62 s, vs aborting outright at sf100) and no in-process
     # oracle row exists for this operator.
     "vectors": 131_072,
-    # minhash_dedup materialization regime switch: above this many input docs
-    # the hashed-shingle frame is persisted COLUMNAR (consumers column-prune
-    # disjoint hash columns); below it raw-block localCheckpoint wins (see
-    # minhash_dedup). Crossover measured between 5e4 (persist loses ~30%)
-    # and 5e5 docs (persist wins ~30%); 2^18 splits the gap.
+    # corpora above this many docs take the scale spellings of the
+    # shared-frame operators (minhash_dedup's and ngram_containment_pairs'
+    # prefilters, ngram_jaccard_pairs' eager fill, tfidf_keywords' doc_id
+    # exchange), whose extra jobs cost more than they save below it (q19
+    # sf0.1: 2.58 -> 2.23 s without the prefilter). 2^18 was measured as
+    # the crossover of columnar persist against a raw-block checkpoint.
     "columnar": 262_144,
     # corpora at or below this document count keep dup_ngram_coverage's
     # oracle-bit-true string gram keys under hashed="auto"; larger ones take

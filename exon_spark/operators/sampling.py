@@ -640,8 +640,7 @@ def dsir_weights(
     db = _materialize(
         _dsir_features(raw, id_col, text_col, buckets)
         .groupBy("doc_id", "b")
-        .agg(F.count(F.lit(1)).alias("m")),
-        eager=True,
+        .agg(F.count(F.lit(1)).alias("m"))
     )
     c_r = db.groupBy("b").agg(F.sum("m").alias("n_r"))
     stats = c_t.join(c_r, "b", "full").select(

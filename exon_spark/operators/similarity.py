@@ -679,8 +679,7 @@ def embedding_cosine_dups(
             F.col(vec_col).alias("vec"),
             _norm(F.col(vec_col)).alias("_n"),
             keys_udf(F.col(vec_col)).alias("bands"),
-        ),
-        eager=True,
+        )
     )
     # probe side: each band's exact key plus its single-bit flips (XOR on
     # the low band_bits leaves the packed band index untouched); exact
@@ -1059,7 +1058,7 @@ def semantic_dedup(
     # expr pairs: assign feeds both sides of the pair self-join;
     # unmaterialized, the dominant O(n·k·dim) assignment runs twice per
     # invocation
-    assign = _materialize(assign, eager=True)
+    assign = _materialize(assign)
     a = assign.select(
         F.col("cluster_id"),
         F.col("vec_id").alias("id_a"),

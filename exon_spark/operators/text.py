@@ -784,8 +784,7 @@ def tfidf_keywords(
         # share the computed tf (left lazy each branch re-runs the full
         # aggregate — exchange reuse alone does not help because the
         # aggregate above the exchange still re-runs per branch)
-        tf = _materialize(tf)
-        tf.count()
+        tf = _materialize(tf, eager=True)
     dfreq = tf.groupBy("term").agg(F.count("*").alias("_df"))
     n_docs = df.select(
         F.countDistinct(F.col(id_col)).alias("_n")
@@ -1455,8 +1454,8 @@ def lm_ladder(
     only in the Arrow-batched model-side ``_glibc_ln``), minus the
     duplicate fits. The materialized frames are the tokenized corpus
     (raw corpus size), vocab (Zipf-bounded), and the distinct bigram /
-    trigram tables (sub-corpus-sized, Zipf-shrunk); on a real cluster
-    set ``spark.exon.reliableMaterialize=true`` as usual.
+    trigram tables (sub-corpus-sized, Zipf-shrunk), persisted with their
+    lineage (``_materialize``), so a lost executor's blocks recompute.
     """
     from exon_spark.operators.dedup import _materialize, _materialize_all
 
@@ -1507,7 +1506,7 @@ def lm_ladder(
     # The three n-gram fits all read ONLY the materialized ta blocks, so
     # their aggregation jobs are independent — overlap them (guide §2.6)
     # instead of paying three stage tails back-to-back.
-    vocab, big, tri = _materialize_all(
+    (vocab, big, tri), (_, n_big, n_tri) = _materialize_all(
         [
             tok_rows.groupBy("tok").agg(F.count("*").alias("tok_n")),
             pair_rows.groupBy("prev", "cur").agg(F.count("*").alias("big_n")),
@@ -1522,10 +1521,10 @@ def lm_ladder(
     # one is RELIABLY broadcast-sized — the trigram table at the sf10
     # replica is 2.7M rows (~65 MB raw), over AQE's 64 MB adaptive
     # threshold, so its scoring join shuffled the 26M-row corpus
-    # occurrence side. Counting the (already checkpointed) model frames
-    # is one tiny job each; below the row cap the scoring join gets an
-    # explicit broadcast hint, removing the corpus-side exchange + sort
-    # entirely. At 100 TB trigram tables are 1e10+ rows — far over the
+    # occurrence side. The counts come from the materialization of the
+    # model frames above (no job of their own); below the row cap the
+    # scoring join gets an explicit broadcast hint, removing the
+    # corpus-side exchange + sort entirely. At 100 TB trigram tables are 1e10+ rows — far over the
     # cap — and the joins stay shuffled, which is the only plan that
     # works there. Respects broadcast_models=False (the caller's opt-out
     # for every model-side hint).
@@ -1534,8 +1533,8 @@ def lm_ladder(
     # token-occurrence side's groupBy(doc_id) reshuffles either way and
     # the hint only serializes an extra broadcast build)
     _lut_cap = 4_194_304  # 2^22 rows ≈ 100 MB raw at 24 B/row
-    _b2 = broadcast_models and big.count() <= _lut_cap
-    _b3 = broadcast_models and tri.count() <= _lut_cap
+    _b2 = broadcast_models and n_big <= _lut_cap
+    _b3 = broadcast_models and n_tri <= _lut_cap
     # ---- unigram rung (expressions identical to unigram_logppl)
     model1 = vocab.crossJoin(F.broadcast(total_row)).select(
         "tok",

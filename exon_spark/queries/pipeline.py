@@ -901,8 +901,12 @@ def _q36_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         pos.alias("label"),
     )
     model, meta = nb_classifier_fit(planted, label_col="label")
+    import pandas as pd
+
+    # from pandas: a LocalRelation, not an RDD leaf
     lr_model = spark.createDataFrame(
-        [(b, w) for b, w in _LR_FROZEN_BUCKETS], "bucket bigint, weight double"
+        pd.DataFrame(_LR_FROZEN_BUCKETS, columns=["bucket", "weight"]),
+        "bucket bigint, weight double",
     )
     # ONE corpus pass scores both classifiers (r12: the gram stream
     # contains the token stream, so the fused scorer replaces two

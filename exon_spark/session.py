@@ -205,6 +205,8 @@ def get_spark(
         .config("spark.buffer.pageSize", "1m")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
         .config("spark.sql.session.timeZone", "UTC")
+        # delete reliable checkpoints (dup_clusters) once their frame is dropped
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     # The exon_spark jar: the splittable BGZF codec (.bgz) that lets the JVM
     # text/csv readers byte-range split bgzipped files, and the DataSourceV2
@@ -223,6 +225,13 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
+    sc = spark.sparkContext
+    if sc.getCheckpointDir() is None and sc.master.startswith("local"):
+        # a cluster deploys spark.checkpoint.dir; a local session uses the
+        # driver's scratch directory, which Spark deletes at stop
+        from pyspark import SparkFiles
+
+        sc.setCheckpointDir(os.path.join(SparkFiles.getRootDirectory(), "checkpoints"))
     register_all(spark)
     return spark
 

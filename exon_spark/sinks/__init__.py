@@ -47,7 +47,9 @@ def fasta_lines(df: DataFrame) -> DataFrame:
 
 
 def fastq_lines(df: DataFrame) -> DataFrame:
-    """Serialize (name, description, sequence, quality_scores) to FASTQ."""
+    """Serialize (name, description, sequence, quality_scores) to FASTQ.
+    A NULL sequence or quality writes an empty line (``concat_ws`` would
+    drop it and leave a 3-line record no reader accepts)."""
     header = F.concat(
         F.lit("@"),
         F.col("name"),
@@ -57,7 +59,11 @@ def fastq_lines(df: DataFrame) -> DataFrame:
     )
     return df.select(
         F.concat_ws(
-            "\n", header, F.col("sequence"), F.lit("+"), F.col("quality_scores")
+            "\n",
+            header,
+            F.coalesce("sequence", F.lit("")),
+            F.lit("+"),
+            F.coalesce("quality_scores", F.lit("")),
         ).alias("value")
     )
 

@@ -13,6 +13,15 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 os.environ.setdefault("EXON_SPARK_MOCK_FS_ROOT", "/")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "executor_loss: runs gate queries on a local-cluster master in a "
+        "subprocess, killing and replacing executors mid-query "
+        "(tests/test_executor_loss.py; its own timeout, TIER_TIMEOUT_S)",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from exon_spark import get_spark

@@ -480,3 +480,44 @@ def test_records_larger_than_a_tungsten_page(registered):
         (1, "5", big, 3 * big),
         (0, "4", big, 3 * big),
     ]
+
+
+# the gate queries that share materialized frames between plan branches
+SHARED_FRAME_QUERIES = (
+    "q18", "q19", "q20", "q21", "q28", "q31", "q36",
+    "q37", "q40", "q42", "q47", "q48", "q52",
+)
+
+
+def _spec(prefix: str):
+    return next(s for n, s in _queries().items() if n.split("_")[0] == prefix)
+
+
+@pytest.mark.parametrize("prefix", SHARED_FRAME_QUERIES)
+def test_shared_frames_plan_no_rdd_leaf(registered, prefix):
+    """No ``ExistingRDD`` leaf in the executed plan (persisted frames
+    included: their cached plans print under InMemoryTableScan). Such a
+    leaf is a local checkpoint or an RDD round trip, whose rows live only
+    in the executor that computed them."""
+    plan = _final_plan(_spec(prefix).spark_fn(registered, "/root/testdata/sf0.001"))
+    assert "ExistingRDD" not in plan, plan
+
+
+@pytest.mark.parametrize("prefix,n_jobs", [("q31", 24), ("q42", 24), ("q52", 65)])
+def test_shared_frame_job_counts(registered, prefix, n_jobs):
+    """Spark jobs per run at sf0.001: a site that materializes a frame
+    and needs its row count takes the count from that materialization
+    (dup_clusters' regime count, lm_ladder's LUT caps), with no second
+    count job."""
+    registered.catalog.clearCache()  # an earlier test's frames would be reused
+    sc = registered.sparkContext
+    gid = f"shared_frame_jobs_{prefix}"
+    sc.setJobGroup(gid, gid)
+    try:
+        _spec(prefix).spark_fn(registered, "/root/testdata/sf0.001").collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(gid)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    registered.catalog.clearCache()
+    assert len(jobs) == n_jobs, (len(jobs), jobs)

@@ -454,26 +454,26 @@ def test_fastq_jvm_route_matches_python_datasource(spark, tmp_path_factory, text
         st.tuples(
             st.text(alphabet="ACGTr0123456789_", min_size=1, max_size=6),
             st.one_of(st.none(), st.text(alphabet="ab 12", min_size=1, max_size=6)),
-            st.sampled_from(["", "", "A", "ACGTN"]),
+            st.sampled_from(["", "", "A", "ACGTN", None]),
         ),
         min_size=1,
         max_size=6,
     )
 )
 def test_fastq_copy_round_trip_keeps_empty_sequences(spark, tmp_path_factory, reads):
-    """COPY ... STORED AS FASTQ writes an empty sequence as an empty line
-    and an empty quality line; both readers read such a record back as
-    (name, description, '', '')."""
+    """COPY ... STORED AS FASTQ writes an empty or NULL sequence as an
+    empty line and an empty quality line; both readers read such a record
+    back as (name, description, '', '')."""
     from exon_spark.sinks import maybe_handle_copy
 
-    src = [(n, d, s, "I" * len(s)) for n, d, s in reads]
+    src = [(n, d, s, None if s is None else "I" * len(s)) for n, d, s in reads]
     spark.createDataFrame(
         src, "name string, description string, sequence string, quality_scores string"
     ).createOrReplaceTempView("fq_empty_seq")
     out = str(tmp_path_factory.mktemp("fqcopy") / "out.fastq")
     maybe_handle_copy(spark, f"COPY (SELECT * FROM fq_empty_seq) TO '{out}' STORED AS FASTQ")
     jvm, py = _fastq_routes(spark, [out])
-    want = sorted(((*r, 0) for r in src), key=repr)
+    want = sorted(((n, d, s or "", q or "", 0) for n, d, s, q in src), key=repr)
     assert sorted(map(tuple, jvm.collect()), key=repr) == want
     assert sorted(map(tuple, py.collect()), key=repr) == want
 
@@ -626,10 +626,10 @@ def test_tabix_text_full_scan_matches_plain(spark, tmp_path_factory, text, sizes
 @st.composite
 def _vcf_text(draw) -> bytes:
     """Coordinate-sorted VCF with '.' fields, multi-valued id/alt/filter,
-    odd qual values, and no, one or two sample columns (one layout per
-    file, as the header declares it)."""
+    odd qual values, and no, one or two sample columns, the layout drawn
+    per record (so one file mixes 8-, 10- and 11-column records)."""
     lines = ["##fileformat=VCFv4.2", "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO"]
-    samples = draw(st.sampled_from([[], [["GT", "0/1"]], [["GT:DP", "0/1:3", "1/1:."]]]))
+    layouts = [[], ["GT", "0/1"], ["GT:DP", "0/1:3", "1/1:."]]
     for chrom in draw(st.lists(st.sampled_from(_GFF_CHROMS), unique=True, max_size=3)):
         for pos in sorted(draw(st.lists(st.integers(1, 300_000), max_size=40))):
             fields = [
@@ -641,7 +641,7 @@ def _vcf_text(draw) -> bytes:
                 draw(st.sampled_from([".", "PASS", "q10;s50"])),
                 draw(st.sampled_from([".", "DP=5", "DP=5;AF=0.5"])),
             ]
-            fields += draw(st.sampled_from(samples)) if samples else []
+            fields += draw(st.sampled_from(layouts))
             lines.append("\t".join(fields))
     return ("\n".join(lines) + "\n").encode()
 

@@ -239,12 +239,12 @@ def test_dup_ngram_coverage_caller_cardinality_skips_count(spark):
 
 
 def test_minhash_dedup_columnar_regime_parity(spark, tmp_path, monkeypatch):
-    """r12: minhash_dedup's scale regime (columnar persist of the hashed
-    shingle frame + explicit broadcast of jaccard_verify's candidate id
-    sets) must emit the identical pair set and 6-dp jaccard as the
-    latency regime (eager localCheckpoint, AQE-planned semi joins).
-    The regime only re-spells materialization and join strategy — the
-    hash arithmetic is shared — so parity is exact, not approximate."""
+    """r12: minhash_dedup's scale regime (candidate-id prefilter +
+    explicit broadcast of jaccard_verify's candidate id sets) must emit
+    the identical pair set and 6-dp jaccard as the latency regime
+    (AQE-planned joins, no prefilter). The regime only re-spells the
+    join strategy — the hash arithmetic and the materialized hashed
+    shingle frame are shared — so parity is exact, not approximate."""
     import exon_spark.operators.dedup as dd
     from exon_spark.operators import regime
 
