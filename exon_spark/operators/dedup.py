@@ -301,10 +301,16 @@ def _materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     Left lazy when the consumers run one after another: the first fills
     the cache and the rest read it. Each call site's form (eager, lazy,
     or no call at all) is the cheapest in a per-site A/B (SCALE.md
-    "Shared-subtree materialization")."""
+    "Shared-subtree materialization").
+
+    The frame lives until the enclosing ``state.broadcast_scope`` exits
+    (evaluate the result inside it); with no scope open it stays cached
+    for the session."""
     from pyspark.storagelevel import StorageLevel
 
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    from exon_spark.operators.state import track_frame
+
+    df = track_frame(df.persist(StorageLevel.MEMORY_AND_DISK))
     if eager:
         df.count()
     return df
@@ -381,17 +387,6 @@ def shingled_docs(
     )
     return toked.select("doc_id", F.explode(F.array(sh)).alias("sh")).filter(
         F.size("sh") > 0
-    )
-
-
-def _hashed_docs(docs: DataFrame) -> DataFrame:
-    """Adds hs = h32 of each shingle, behind an ``explode(array(...))``
-    Generate barrier so Catalyst cannot inline the md5 into every consumer
-    expression (16 min-aggregates would otherwise each recompute it)."""
-    return docs.select(
-        "doc_id",
-        F.col("sh"),
-        F.explode(F.array(F.transform("sh", h32))).alias("hs"),
     )
 
 
@@ -624,8 +619,7 @@ def minhash_dedup(
     # The hashed shingle frame feeds the signature aggregate (doc_id, h)
     # and the verify path (doc_id, hk): disjoint hash columns, so the
     # columnar cache's InMemoryTableScan column-prunes each pass (sf10
-    # warm 20.6 -> 14.1 s against a raw-row local checkpoint, r12). Lazy:
-    # the two consumers run one after the other, so the first fills it.
+    # warm 20.6 -> 14.1 s against a raw-row local checkpoint, r12).
     hashed = (
         shingled_docs(df, id_col, text_col, n)
         .select("doc_id", F.explode("sh").alias("shingle"))
@@ -635,9 +629,11 @@ def minhash_dedup(
             F.xxhash64("shingle").alias("hk"),
         )
     )
-    rows = _materialize(hashed)
-    # the size regime picks the verify prefilter and id-set broadcast
+    # the size regime picks the verify prefilter, the id-set broadcast
+    # and the eager fill (lazy, the consumers run one after the other,
+    # was measured only below the floor)
     scale = regime.above(df, "columnar", "minhash_dedup", n_rows)
+    rows = _materialize(hashed, eager=scale)
     state = rows.groupBy("doc_id").agg(
         F.count("*").alias("n_sh"),
         *[
@@ -1087,7 +1083,8 @@ def dup_clusters(
     """
     # the regime count fills the cache; both regimes then read it
     pairs = _materialize(pairs.select("doc_a", "doc_b"))
-    if pairs.count() <= driver_edge_limit:
+    n_edges = pairs.count()
+    if n_edges <= driver_edge_limit:
         rows = pairs.collect()
         parent: dict = {}
 
@@ -1109,23 +1106,21 @@ def dup_clusters(
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         import pandas as pd
-        from pyspark.sql.types import StructField, StructType
 
         out = pd.DataFrame(
             [(doc, find(doc)) for doc in parent], columns=["doc_id", "cluster_id"]
         )
-        id_type = pairs.schema["doc_a"].dataType
-        schema = StructType(
-            [
-                StructField("doc_id", id_type),
-                StructField("cluster_id", id_type),
-            ]
-        )
+        t = pairs.schema["doc_a"].dataType.simpleString()
         # from pandas (Arrow), the result is a LocalRelation: the plan has
         # no RDD leaf, whose rows a lost executor would take with it
-        res = pairs.sparkSession.createDataFrame(out, schema)
+        res = pairs.sparkSession.createDataFrame(out, f"doc_id {t}, cluster_id {t}")
         pairs.unpersist(False)
         return res
+    if pairs.sparkSession.sparkContext.getCheckpointDir() is None:
+        raise RuntimeError(
+            f"dup_clusters: {n_edges} edges > driver_edge_limit; the label "
+            "loop checkpoints every round: set spark.checkpoint.dir"
+        )
     edges = _materialize(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))

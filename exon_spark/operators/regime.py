@@ -27,8 +27,10 @@ FLOORS: dict[str, int] = {
     # shared-frame operators (minhash_dedup's and ngram_containment_pairs'
     # prefilters, ngram_jaccard_pairs' eager fill, tfidf_keywords' doc_id
     # exchange), whose extra jobs cost more than they save below it (q19
-    # sf0.1: 2.58 -> 2.23 s without the prefilter). 2^18 was measured as
-    # the crossover of columnar persist against a raw-block checkpoint.
+    # sf0.1: 2.58 -> 2.23 s without the prefilter). STALE BASIS: 2^18 was
+    # measured as the crossover of columnar persist against a raw-block
+    # checkpoint, which is gone; the crossover of the spellings it gates
+    # now was never measured (needs corpora around 2^18 docs, sf1-sf10).
     "columnar": 262_144,
     # corpora at or below this document count keep dup_ngram_coverage's
     # oracle-bit-true string gram keys under hashed="auto"; larger ones take

@@ -23,8 +23,10 @@ from pyspark.sql import SparkSession
 # bitmaps, classifier LUTs, PQ codebook LUTs) bind the handle into a lazy
 # plan and historically never released it — correct for one-shot jobs, but a
 # standing pipeline that re-derives operators per batch accumulates executor
-# broadcast blocks until GC gets around to them. ``broadcast_scope`` makes
-# the lifecycle explicit without changing any operator signature.
+# broadcast blocks until GC gets around to them; persisted shared frames
+# (``dedup._materialize``) stay in Spark's cache manager for the session.
+# ``broadcast_scope`` makes both lifecycles explicit without changing any
+# operator signature.
 # ---------------------------------------------------------------------------
 
 import threading
@@ -32,11 +34,12 @@ import threading
 _SCOPE_TLS = threading.local()
 
 
-def _scopes() -> list[list]:
+def _scopes() -> list[tuple[list, list]]:
     # thread-local, NOT module-global: concurrent driver threads (the
     # standing-pipeline audience runs batches in parallel) must not
     # cross-register broadcasts into each other's scopes — a destroy at
-    # one thread's scope exit would kill a broadcast mid-use elsewhere
+    # one thread's scope exit would kill a broadcast mid-use elsewhere.
+    # Each open scope is a (broadcasts, frames) pair.
     if not hasattr(_SCOPE_TLS, "stack"):
         _SCOPE_TLS.stack = []
     return _SCOPE_TLS.stack
@@ -50,13 +53,23 @@ def track_broadcast(bc):
     handle itself."""
     stack = _scopes()
     if stack:
-        stack[-1].append(bc)
+        stack[-1][0].append(bc)
     return bc
+
+
+def track_frame(df):
+    """``track_broadcast`` for a frame ``dedup._materialize`` persisted:
+    the scope unpersists it at exit (no scope: it stays cached)."""
+    stack = _scopes()
+    if stack:
+        stack[-1][1].append(df)
+    return df
 
 
 @contextmanager
 def broadcast_scope(destroy: bool = False):
-    """Scope the executor lifetime of operator-created broadcasts.
+    """Scope the executor lifetime of operator-created broadcasts and
+    of the shared frames operators persist.
 
     Usage (the per-batch pattern for standing pipelines)::
 
@@ -72,12 +85,17 @@ def broadcast_scope(destroy: bool = False):
     re-evaluated. The default is safe either way: an unpersisted
     broadcast re-ships lazily if a retained plan is re-run.
 
+    Frames persisted inside the scope are unpersisted on exit, so no
+    later plan reads them for their sources (``handles`` lists only the
+    broadcasts); a retained plan that is re-run recomputes them.
+
     The alternative (no scope) remains correct: hoist the operator call
     OUT of the per-batch loop so one broadcast serves every batch —
     preferable when the shipped state itself is loop-invariant."""
     handles: list = []
+    frames: list = []
     stack = _scopes()
-    stack.append(handles)
+    stack.append((handles, frames))
     try:
         yield handles
     finally:
@@ -90,6 +108,11 @@ def broadcast_scope(destroy: bool = False):
                     bc.unpersist(blocking=False)
             except Exception:
                 pass  # session already stopped; nothing left to reclaim
+        for df in frames:
+            try:
+                df.unpersist(blocking=False)
+            except Exception:
+                pass
 
 
 def _session(spark: SparkSession | None) -> SparkSession | None:

@@ -1712,51 +1712,34 @@ def _q52_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p95_tokens").alias("lang_p95_tokens"),
     )
     # Each rung's tertile is ranked over ITS OWN population (docs with
-    # >= 2 / >= 3 tokens), then LEFT-joined back onto the unigram frame
-    # — short docs keep null bigram/trigram columns instead of silently
-    # vanishing, and no rung's tertile population depends on another
-    # rung's join (r8 advice, pipeline.py:1386; the q42 coalesce
-    # precedent). At gate SFs no short docs exist, so rows are
-    # unchanged; at future SFs this stays well-defined.
+    # >= 2 / >= 3 tokens): docs without the rung (NULL n_bigrams /
+    # n_trigrams) form their own window partition and keep NULL bucket
+    # columns instead of silently vanishing, and no rung's tertile
+    # population depends on another rung's (r8 advice; the q42 coalesce
+    # precedent). At gate SFs no short docs exist, so rows are unchanged;
+    # at future SFs this stays well-defined. All three tertiles are
+    # windows over ONE `base`: a self-join per rung planned lm_ladder's
+    # whole scoring plan once per copy.
     base = docs.select("doc_id", "lang").join(lad, "doc_id")
-    pr1 = F.percent_rank().over(
-        Window.partitionBy("lang").orderBy("logppl", "doc_id")
-    )
-    bucket1 = (
-        F.when(pr1 < 1.0 / 3, "head")
-        .when(pr1 < 2.0 / 3, "middle")
-        .otherwise("tail")
-    )
-    pb = base.select(
-        "doc_id", "lang", "n_tokens", "logppl", bucket1.alias("ppl_bucket")
-    )
-    pr2 = F.percent_rank().over(
-        Window.partitionBy("lang").orderBy("logppl2", "doc_id")
-    )
-    bucket2 = (
-        F.when(pr2 < 1.0 / 3, "head")
-        .when(pr2 < 2.0 / 3, "middle")
-        .otherwise("tail")
-    )
-    j2 = base.filter(F.col("n_bigrams").isNotNull()).select(
-        "doc_id", "n_bigrams", "logppl2", bucket2.alias("ppl2_bucket")
-    )
-    pr3 = F.percent_rank().over(
-        Window.partitionBy("lang").orderBy("logppl3", "doc_id")
-    )
-    bucket3 = (
-        F.when(pr3 < 1.0 / 3, "head")
-        .when(pr3 < 2.0 / 3, "middle")
-        .otherwise("tail")
-    )
-    j3 = base.filter(F.col("n_trigrams").isNotNull()).select(
-        "doc_id", "n_trigrams", "logppl3", bucket3.alias("ppl3_bucket")
-    )
-    d = (
-        pb.join(j2, "doc_id", "left")
-        .join(j3, "doc_id", "left")
-        .join(F.broadcast(cs), "lang")
-    )
+
+    def tertile(score: str, present: str | None = None):
+        part = ["lang"] if present is None else ["lang", F.col(present).isNull()]
+        pr = F.percent_rank().over(
+            Window.partitionBy(*part).orderBy(score, "doc_id")
+        )
+        bucket = (
+            F.when(pr < 1.0 / 3, "head")
+            .when(pr < 2.0 / 3, "middle")
+            .otherwise("tail")
+        )
+        return bucket if present is None else F.when(F.col(present).isNotNull(), bucket)
+
+    d = base.select(
+        "*",
+        tertile("logppl").alias("ppl_bucket"),
+        tertile("logppl2", "n_bigrams").alias("ppl2_bucket"),
+        tertile("logppl3", "n_trigrams").alias("ppl3_bucket"),
+    ).join(F.broadcast(cs), "lang")
     return d.select(
         "doc_id", "lang", "n_tokens", "logppl", "ppl_bucket",
         "n_bigrams", "logppl2", "ppl2_bucket",

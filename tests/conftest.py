@@ -22,6 +22,17 @@ def pytest_configure(config):
     )
 
 
+@pytest.fixture(autouse=True)
+def _operator_scope():
+    """Each test is one ``broadcast_scope``: the broadcasts and persisted
+    shared frames its operators create are released when it ends, so no
+    later test plans against them."""
+    from exon_spark.operators.state import broadcast_scope
+
+    with broadcast_scope():
+        yield
+
+
 @pytest.fixture(scope="session")
 def spark():
     from exon_spark import get_spark

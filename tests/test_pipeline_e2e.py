@@ -255,6 +255,3 @@ def test_staged_arms_regime(spark, monkeypatch):
     monkeypatch.setitem(regime.FLOORS, "stage_arms", 1)
     assert sorted(map(tuple, pl._q42_spark(spark, sf).collect())) == base42
     assert sorted(map(tuple, pl._q36_spark(spark, sf).collect())) == base36
-    # the staged arms stay persisted in the session; drop them so later
-    # tests plan these frames from their sources
-    spark.catalog.clearCache()

@@ -503,13 +503,11 @@ def test_shared_frames_plan_no_rdd_leaf(registered, prefix):
     assert "ExistingRDD" not in plan, plan
 
 
-@pytest.mark.parametrize("prefix,n_jobs", [("q31", 24), ("q42", 24), ("q52", 65)])
+@pytest.mark.parametrize("prefix,n_jobs", [("q31", 24), ("q42", 24)])
 def test_shared_frame_job_counts(registered, prefix, n_jobs):
     """Spark jobs per run at sf0.001: a site that materializes a frame
     and needs its row count takes the count from that materialization
-    (dup_clusters' regime count, lm_ladder's LUT caps), with no second
-    count job."""
-    registered.catalog.clearCache()  # an earlier test's frames would be reused
+    (dup_clusters' regime count), with no second count job."""
     sc = registered.sparkContext
     gid = f"shared_frame_jobs_{prefix}"
     sc.setJobGroup(gid, gid)
@@ -519,5 +517,4 @@ def test_shared_frame_job_counts(registered, prefix, n_jobs):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    registered.catalog.clearCache()
     assert len(jobs) == n_jobs, (len(jobs), jobs)

@@ -342,6 +342,21 @@ def test_dup_clusters_regimes_agree(spark):
     assert all(lab <= doc for doc, lab in small.items())
 
 
+def test_dup_clusters_distributed_needs_checkpoint_dir(spark, monkeypatch):
+    """Without a checkpoint directory (a cluster that sets no
+    spark.checkpoint.dir) the distributed regime fails up front, naming
+    the setting; the driver regime does not need one."""
+    from pyspark import SparkContext
+
+    from exon_spark.operators.dedup import dup_clusters
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a bigint, doc_b bigint")
+    monkeypatch.setattr(SparkContext, "getCheckpointDir", lambda self: None)
+    assert len(dup_clusters(pairs).collect()) == 3
+    with pytest.raises(RuntimeError, match="spark.checkpoint.dir"):
+        dup_clusters(pairs, driver_edge_limit=0)
+
+
 def test_hash_sample_deterministic_and_nested(spark):
     from exon_spark.operators.sampling import hash_sample
 

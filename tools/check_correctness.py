@@ -393,6 +393,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from exon_spark import get_spark
+    from exon_spark.operators.state import broadcast_scope
     from exon_spark.queries import ALL_QUERIES, TABLES
 
     spark = get_spark(app_name="check-correctness")
@@ -421,7 +422,9 @@ def main() -> int:
     for name in names:
         spec = ALL_QUERIES[name]
         try:
-            sdf = spec.spark_fn(spark, args.sf).toPandas()
+            # the query's persisted shared frames are released after it
+            with broadcast_scope():
+                sdf = spec.spark_fn(spark, args.sf).toPandas()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1
