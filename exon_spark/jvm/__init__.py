@@ -14,7 +14,13 @@
   (VcfBgzfSource.parsePartitions, written by
   exon_spark.sources.jvm_fast.read_dsv2);
 - exonspark.spark.FastqSource — the DataSourceV2 reader of local FASTQ
-  files (plain, gzip/BGZF, zstd), one partition per file.
+  files (plain, gzip/BGZF, zstd), one partition per file;
+- exonspark.spark.CoordPredicates — the predicates VcfBgzfSource and
+  BamBgzfSource consume at scan time (SupportsPushDownV2Filters);
+- exonspark.spark.DriverCalls — the driver's one-round-trip entry points
+  (driver_call): loading a DataSourceV2 reader with its specs
+  (read_dsv2) and binding a region statement's tables to their
+  region-bound frames (ExonSession.sql).
 
 The jar is committed so all of these work without a JDK. It carries a
 SHA-256 digest of the Java sources as the entry SOURCES_ENTRY; when javac is
@@ -54,9 +60,25 @@ def codec_active(spark) -> bool:
     )
 
 
+# the static members of DriverCalls, per py4j gateway client
+_DRIVER_CALLS: dict = {}
+
+
+def driver_call(spark, name: str):
+    """The static method ``name`` of ``exonspark.spark.DriverCalls`` as a
+    py4j member. The member is resolved once per gateway, so each call
+    is one round trip."""
+    client = spark.sparkContext._gateway._gateway_client
+    members = _DRIVER_CALLS.setdefault(client, {})
+    if name not in members:
+        members[name] = getattr(spark._jvm.exonspark.spark.DriverCalls, name)
+    return members[name]
+
+
 def _compile_classpath() -> str | None:
-    """Hadoop (codec/FS interfaces) + Spark catalyst/sql-api/unsafe and the
-    Scala runtime (DataSourceV2 interfaces, InternalRow, UTF8String), and
+    """Hadoop (codec/FS interfaces) + Spark catalyst/sql/sql-api/unsafe/
+    common-utils and the Scala runtime (DataSourceV2 interfaces,
+    InternalRow, UTF8String, the classic session and its parser), and
     zstd-jni (the FASTQ reader's zstd input)."""
     import pyspark
 
@@ -67,6 +89,7 @@ def _compile_classpath() -> str | None:
         "spark-sql-api_",
         "spark-sql_",
         "spark-unsafe_",
+        "spark-common-utils_",  # Logging, which the classic SparkSession extends
         "scala-library-",
         "kryo-shaded-",  # UTF8String implements KryoSerializable
         "zstd-jni-",

@@ -25,6 +25,8 @@ import org.apache.spark.sql.connector.read.PartitionReaderFactory;
 import org.apache.spark.sql.connector.read.Scan;
 import org.apache.spark.sql.connector.read.ScanBuilder;
 import org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns;
+import org.apache.spark.sql.connector.read.SupportsPushDownV2Filters;
+import org.apache.spark.sql.connector.expressions.filter.Predicate;
 import org.apache.spark.sql.types.DataTypes;
 import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
@@ -59,6 +61,16 @@ import org.apache.spark.unsafe.types.UTF8String;
  *               regions each emit their own matches).
  *   regions     ','-separated "chrom:lo:hi" (1-based inclusive; parsed
  *               from the right so chrom names may contain ':')
+ *
+ * Predicate pushdown (SupportsPushDownV2Filters): the scan consumes every
+ * conjunct over reference, start and end that CoordPredicates can
+ * evaluate exactly (AND/OR/NOT, IS_NULL/IS_NOT_NULL, = <> < <= > >=
+ * against a string or bigint literal) and tests it per record on the
+ * values it would emit for those columns (reference null for an
+ * out-of-range refid, start and end null when unmapped, end null for a
+ * zero reference span), whether or not they are projected. Spark plans no
+ * Filter for a consumed conjunct; any other conjunct stays a post-scan
+ * filter. The scan's description lists the consumed predicates.
  */
 public class BamBgzfSource implements TableProvider {
 
@@ -119,9 +131,14 @@ public class BamBgzfSource implements TableProvider {
     }
   }
 
-  static final class BamScanBuilder implements ScanBuilder, SupportsPushDownRequiredColumns {
+  static final class BamScanBuilder
+      implements ScanBuilder, SupportsPushDownRequiredColumns, SupportsPushDownV2Filters {
     private final CaseInsensitiveStringMap options;
     private StructType required = FULL_SCHEMA;
+    // the Coords columns of BamPartitionReader
+    private final CoordPredicates predicates =
+        new CoordPredicates(
+            new String[] {"reference", "start", "end"}, new boolean[] {true, false, false});
 
     BamScanBuilder(CaseInsensitiveStringMap options) {
       this.options = options;
@@ -133,12 +150,23 @@ public class BamBgzfSource implements TableProvider {
     }
 
     @Override
+    public Predicate[] pushPredicates(Predicate[] offered) {
+      return predicates.push(offered);
+    }
+
+    @Override
+    public Predicate[] pushedPredicates() {
+      return predicates.pushed();
+    }
+
+    @Override
     public Scan build() {
       return new BamScan(
           options.get("path"),
           options.getOrDefault("partitions", ""),
           options.getOrDefault("regions", ""),
-          required);
+          required,
+          predicates);
     }
   }
 
@@ -147,12 +175,19 @@ public class BamBgzfSource implements TableProvider {
     private final String partitionSpec;
     private final String regionSpec;
     private final StructType required;
+    private final CoordPredicates predicates;
 
-    BamScan(String path, String partitionSpec, String regionSpec, StructType required) {
+    BamScan(
+        String path,
+        String partitionSpec,
+        String regionSpec,
+        StructType required,
+        CoordPredicates predicates) {
       this.path = path;
       this.partitionSpec = partitionSpec;
       this.regionSpec = regionSpec;
       this.required = required;
+      this.predicates = predicates;
     }
 
     @Override
@@ -162,7 +197,7 @@ public class BamBgzfSource implements TableProvider {
 
     @Override
     public String description() {
-      return "BamBgzfScan " + path;
+      return "BamBgzfScan " + path + predicates.describe();
     }
 
     @Override
@@ -181,7 +216,7 @@ public class BamBgzfSource implements TableProvider {
       for (int i = 0; i < cols.length; i++) {
         cols[i] = required.fields()[i].name();
       }
-      return new BamReaderFactory(path, cols, regionSpec);
+      return new BamReaderFactory(path, cols, regionSpec, predicates.conjuncts());
     }
   }
 
@@ -189,18 +224,21 @@ public class BamBgzfSource implements TableProvider {
     private final String path;
     private final String[] cols;
     private final String regionSpec;
+    private final CoordPredicates.Node[] conjuncts; // null: none pushed
 
-    BamReaderFactory(String path, String[] cols, String regionSpec) {
+    BamReaderFactory(
+        String path, String[] cols, String regionSpec, CoordPredicates.Node[] conjuncts) {
       this.path = path;
       this.cols = cols;
       this.regionSpec = regionSpec;
+      this.conjuncts = conjuncts;
     }
 
     @Override
     public PartitionReader<InternalRow> createReader(InputPartition partition) {
       try {
         return new BamPartitionReader(
-            path, cols, regionSpec, (VcfBgzfSource.RangePartition) partition);
+            path, cols, regionSpec, (VcfBgzfSource.RangePartition) partition, conjuncts);
       } catch (IOException e) {
         throw new RuntimeException("bam-bgzf: cannot open " + path, e);
       }
@@ -225,10 +263,14 @@ public class BamBgzfSource implements TableProvider {
     }
   }
 
-  static final class BamPartitionReader implements PartitionReader<InternalRow> {
+  static final class BamPartitionReader
+      implements PartitionReader<InternalRow>, CoordPredicates.Coords {
     private final int[] colOf; // index into COLUMNS per required column
     private final VcfBgzfSource.BgzfRanges in;
     private final UTF8String[] refNames;
+    private final byte[][] refBytes;
+    private final CoordPredicates.Node[] conjuncts; // null: none pushed
+    private final boolean testEnd; // a pushed conjunct reads end
     private final long headerEnd;
     private final VcfBgzfSource.RangePartition part;
 
@@ -245,7 +287,11 @@ public class BamBgzfSource implements TableProvider {
     private InternalRow current;
 
     BamPartitionReader(
-        String path, String[] cols, String regionSpec, VcfBgzfSource.RangePartition part)
+        String path,
+        String[] cols,
+        String regionSpec,
+        VcfBgzfSource.RangePartition part,
+        CoordPredicates.Node[] conjuncts)
         throws IOException {
       colOf = new int[cols.length];
       for (int i = 0; i < cols.length; i++) {
@@ -271,6 +317,12 @@ public class BamBgzfSource implements TableProvider {
         readInt(); // l_ref
       }
       headerEnd = in.tell();
+      refBytes = new byte[refNames.length][];
+      for (int r = 0; r < refNames.length; r++) {
+        refBytes[r] = refNames[r].getBytes();
+      }
+      this.conjuncts = conjuncts;
+      testEnd = CoordPredicates.uses(conjuncts, 2);
 
       VcfBgzfSource.Regions rs = new VcfBgzfSource.Regions(regionSpec, part.region);
       regionRef = new boolean[rs.chroms.length][refNames.length];
@@ -295,7 +347,8 @@ public class BamBgzfSource implements TableProvider {
           inRange = false;
           continue;
         }
-        if (part.region == VcfBgzfSource.RangePartition.ALL_RECORDS || overlapsRegion()) {
+        if ((part.region == VcfBgzfSource.RangePartition.ALL_RECORDS || overlapsRegion())
+            && (conjuncts == null || passes())) {
           current = buildRow();
           return true;
         }
@@ -399,6 +452,49 @@ public class BamBgzfSource implements TableProvider {
         }
       }
       return span;
+    }
+
+    // the current record's coordinates, as passes() hands them to Coords
+    private int curRef;
+    private boolean curUnmapped;
+    private long curStart;
+    private long curEnd; // Long.MIN_VALUE: null
+
+    private boolean passes() {
+      curRef = i32(0);
+      int pos = i32(4);
+      curUnmapped = curRef < 0 || pos < 0;
+      curStart = pos + 1L;
+      curEnd = Long.MIN_VALUE;
+      if (testEnd && !curUnmapped) {
+        long span = refSpan();
+        curEnd = span == 0 ? Long.MIN_VALUE : pos + span;
+      }
+      return CoordPredicates.test(conjuncts, this);
+    }
+
+    // Coords: column 0 is reference, 1 start, 2 end, as buildRow emits them
+    @Override
+    public boolean isNull(int col) {
+      switch (col) {
+        case 0:
+          return curRef < 0 || curRef >= refNames.length;
+        case 1:
+          return curUnmapped;
+        default:
+          return curEnd == Long.MIN_VALUE;
+      }
+    }
+
+    @Override
+    public long longAt(int col) {
+      return col == 1 ? curStart : curEnd;
+    }
+
+    @Override
+    public int compareBytes(int col, byte[] lit) {
+      byte[] name = refBytes[curRef];
+      return CoordPredicates.compareBytes(name, 0, name.length, lit);
     }
 
     private boolean overlapsRegion() {

@@ -26,6 +26,8 @@ import org.apache.spark.sql.connector.read.PartitionReaderFactory;
 import org.apache.spark.sql.connector.read.Scan;
 import org.apache.spark.sql.connector.read.ScanBuilder;
 import org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns;
+import org.apache.spark.sql.connector.read.SupportsPushDownV2Filters;
+import org.apache.spark.sql.connector.expressions.filter.Predicate;
 import org.apache.spark.sql.types.DataTypes;
 import org.apache.spark.sql.types.StructField;
 import org.apache.spark.sql.types.StructType;
@@ -63,6 +65,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap;
  *               reads this grammar for all three BGZF DSv2 readers.
  *   regions     ','-separated "chrom:lo:hi" (1-based inclusive; parsed
  *               from the right so chrom names may contain ':')
+ *
+ * Predicate pushdown (SupportsPushDownV2Filters): the scan consumes every
+ * conjunct over chrom and pos that CoordPredicates can evaluate exactly
+ * (AND/OR/NOT, IS_NULL/IS_NOT_NULL, = <> < <= > >= against a string or
+ * bigint literal) and tests it per record on the chrom bytes and parsed
+ * POS that the region scopes read anyway, whether or not either column is
+ * projected. Spark plans no Filter for a consumed conjunct; any other
+ * conjunct stays a post-scan filter. The scan's description lists the
+ * consumed predicates. So a region statement's executed plan, and its
+ * generated code, is the same for every region literal.
  */
 public class VcfBgzfSource implements TableProvider {
 
@@ -117,9 +129,12 @@ public class VcfBgzfSource implements TableProvider {
   }
 
   static final class VcfScanBuilder
-      implements ScanBuilder, SupportsPushDownRequiredColumns {
+      implements ScanBuilder, SupportsPushDownRequiredColumns, SupportsPushDownV2Filters {
     private final CaseInsensitiveStringMap options;
     private StructType required = FULL_SCHEMA;
+    // the Coords columns of VcfLineCursor
+    private final CoordPredicates predicates =
+        new CoordPredicates(new String[] {"chrom", "pos"}, new boolean[] {true, false});
 
     VcfScanBuilder(CaseInsensitiveStringMap options) {
       this.options = options;
@@ -131,12 +146,23 @@ public class VcfBgzfSource implements TableProvider {
     }
 
     @Override
+    public Predicate[] pushPredicates(Predicate[] offered) {
+      return predicates.push(offered);
+    }
+
+    @Override
+    public Predicate[] pushedPredicates() {
+      return predicates.pushed();
+    }
+
+    @Override
     public Scan build() {
       return new VcfScan(
           options.get("path"),
           options.getOrDefault("partitions", ""),
           options.getOrDefault("regions", ""),
-          required);
+          required,
+          predicates);
     }
   }
 
@@ -145,12 +171,19 @@ public class VcfBgzfSource implements TableProvider {
     private final String partitionSpec;
     private final String regionSpec;
     private final StructType required;
+    private final CoordPredicates predicates;
 
-    VcfScan(String path, String partitionSpec, String regionSpec, StructType required) {
+    VcfScan(
+        String path,
+        String partitionSpec,
+        String regionSpec,
+        StructType required,
+        CoordPredicates predicates) {
       this.path = path;
       this.partitionSpec = partitionSpec;
       this.regionSpec = regionSpec;
       this.required = required;
+      this.predicates = predicates;
     }
 
     @Override
@@ -160,7 +193,7 @@ public class VcfBgzfSource implements TableProvider {
 
     @Override
     public String description() {
-      return "VcfBgzfScan " + path;
+      return "VcfBgzfScan " + path + predicates.describe();
     }
 
     @Override
@@ -179,7 +212,7 @@ public class VcfBgzfSource implements TableProvider {
       for (int i = 0; i < cols.length; i++) {
         cols[i] = required.fields()[i].name();
       }
-      return new VcfReaderFactory(path, cols, regionSpec);
+      return new VcfReaderFactory(path, cols, regionSpec, predicates.conjuncts());
     }
   }
 
@@ -264,11 +297,14 @@ public class VcfBgzfSource implements TableProvider {
     private final String path;
     private final String[] cols;
     private final String regionSpec;
+    private final CoordPredicates.Node[] conjuncts; // null: none pushed
 
-    VcfReaderFactory(String path, String[] cols, String regionSpec) {
+    VcfReaderFactory(
+        String path, String[] cols, String regionSpec, CoordPredicates.Node[] conjuncts) {
       this.path = path;
       this.cols = cols;
       this.regionSpec = regionSpec;
+      this.conjuncts = conjuncts;
     }
 
     /** Never called: every partition reads columnar (Spark's
@@ -288,7 +324,8 @@ public class VcfBgzfSource implements TableProvider {
         createColumnarReader(InputPartition partition) {
       try {
         return new VcfColumnarReader(
-            new VcfLineCursor(path, cols, regionSpec, (RangePartition) partition), cols);
+            new VcfLineCursor(path, cols, regionSpec, (RangePartition) partition, conjuncts),
+            cols);
       } catch (IOException e) {
         throw new RuntimeException("vcf-bgzf: cannot open " + path, e);
       }
@@ -326,7 +363,12 @@ public class VcfBgzfSource implements TableProvider {
       llen = 0;
       while (true) {
         if (in.upos >= in.ulim && !in.advance()) {
-          return llen > 0; // trailing line without newline
+          // a trailing line without newline drops its '\r' too
+          boolean any = llen > 0;
+          if (any && lbuf[llen - 1] == '\r') {
+            llen--;
+          }
+          return any;
         }
         byte[] u = in.ubuf;
         int end = in.ulim;
@@ -356,8 +398,9 @@ public class VcfBgzfSource implements TableProvider {
   }
 
   /** The lines of one partition that pass the header/blank/region
-   * checks, with the field bounds of the projected columns. */
-  static final class VcfLineCursor extends BgzfLines {
+   * checks and the pushed predicates, with the field bounds of the
+   * projected columns. */
+  static final class VcfLineCursor extends BgzfLines implements CoordPredicates.Coords {
     // field indices in the VCF line for each projected column
     private final int[] fieldOf;
     // 0 str, 1 pos-long, 2 split';', 3 split',', 4 float, 5 dotnull-str,
@@ -370,11 +413,18 @@ public class VcfBgzfSource implements TableProvider {
     private final long[] regionLo;
     private final long[] regionHi;
     private final boolean needPos;
+    private final boolean parsePos; // POS is projected, region-bounded or tested
+    private final CoordPredicates.Node[] conjuncts; // null: none pushed
 
     private final int[] tabs; // positions of line tabs (end of field i)
     private int nTabs; // tabs found on the current line (capped at maxField + 1)
 
-    VcfLineCursor(String path, String[] cols, String regionSpec, RangePartition part)
+    VcfLineCursor(
+        String path,
+        String[] cols,
+        String regionSpec,
+        RangePartition part,
+        CoordPredicates.Node[] conjuncts)
         throws IOException {
       super(path, part);
       String[] names = {
@@ -408,6 +458,8 @@ public class VcfBgzfSource implements TableProvider {
         np |= regionLo[i] > 1 || regionHi[i] < Long.MAX_VALUE;
       }
       needPos = np;
+      this.conjuncts = conjuncts;
+      parsePos = np || contains(fieldOf, 1) || CoordPredicates.uses(conjuncts, 1);
     }
 
     /** Advance to the next line that passes the header/blank/region
@@ -443,7 +495,7 @@ public class VcfBgzfSource implements TableProvider {
       }
       int chromEnd = tabs[0];
       linePos = Long.MIN_VALUE;
-      if (needPos || contains(fieldOf, 1)) {
+      if (parsePos) {
         linePos = parseLong(chromEnd + 1, tabs[1]);
       }
       if (filter) {
@@ -459,7 +511,23 @@ public class VcfBgzfSource implements TableProvider {
           return false;
         }
       }
-      return true;
+      return conjuncts == null || CoordPredicates.test(conjuncts, this);
+    }
+
+    // Coords: column 0 is chrom (never null), column 1 is POS
+    @Override
+    public boolean isNull(int col) {
+      return col == 1 && linePos == Long.MIN_VALUE;
+    }
+
+    @Override
+    public long longAt(int col) {
+      return linePos;
+    }
+
+    @Override
+    public int compareBytes(int col, byte[] lit) {
+      return CoordPredicates.compareBytes(lbuf, 0, tabs[0], lit);
     }
 
     /** Start offset of projected column i's field in lbuf. */

@@ -285,7 +285,7 @@ class ExonSession:
         * queries over INDEXED_* tables with a literal ``x_region_filter``
           predicate get the region pushed into the reader options (the
           reference's flagship pushdown, SURVEY.md §4.1); the SQL predicate
-          still runs, so pushdown is purely an optimization.
+          still applies in full, so pushdown is purely an optimization.
 
         Everything else is stock ``spark.sql``."""
         import re
@@ -305,8 +305,11 @@ class ExonSession:
 
         # scan UDTFs run in session-less workers, so session config that
         # changes their schema (SET exon.sam_parse_tags) is forwarded as an
-        # extra 'key=value' argument at rewrite time
+        # extra 'key=value' argument at rewrite time; the conf is read only
+        # for a statement that calls the UDTF
         for fmt_key in ("sam", "bam"):
+            if f"{fmt_key}_scan(" not in query:
+                continue
             try:
                 conf = self.spark.conf.get(f"spark.exon.{fmt_key}_parse_tags", None)
             except Exception:
@@ -331,16 +334,25 @@ class ExonSession:
         """Bind literal ``x_region_filter('region', ...)`` regions into the
         reader options of referenced format tables for this one statement.
         Only safe for pure conjunctions (an OR could need rows outside the
-        region), so any OR/NOT in the query disables the rewrite. The resi-
-        dual SQL predicate always still applies — correctness never depends
-        on the pushdown (§4.1).
+        region), so any OR/NOT in the query disables the rewrite. The
+        statement's predicate still applies in full: the Java readers
+        consume the coordinate conjuncts at scan time and evaluate them
+        per record, Spark filters the rest — correctness never depends on
+        the pushdown (§4.1).
 
         Also recognizes raw coordinate predicates —
         ``chrom = 'chr1' AND pos BETWEEN lo AND hi`` (or >=/<= pairs) —
         the semantics of the reference's designed-but-never-compiled
         chrom_optimizer_rule (docs/vcf_expression_rewriting.md rules A-K;
         SURVEY.md §4.6): the same index pruning now fires without the
-        ``vcf_region_filter`` spelling."""
+        ``vcf_region_filter`` spelling.
+
+        The binding is one JVM call (``DriverCalls.sql``): it parses the
+        statement and replaces each direct single-part reference to a
+        rebound table with its region-bound frame. The session's temp
+        views are never changed, so concurrent statements do not see
+        each other's regions, and a view defined over the table still
+        reads the whole table."""
         import re
 
         from exon_spark.sources import read_format
@@ -363,8 +375,9 @@ class ExonSession:
         ):
             return self.spark.sql(query)
         region_opt = ",".join(regions)
-        rebound: list[tuple[str, DataFrame]] = []
-        for name, (fmt, path, options, frame) in registry.items():
+        names: list[str] = []
+        frames = []
+        for name, (fmt, path, options) in registry.items():
             if "regions" in options or "region" in options:
                 continue
             if only_table is not None and name != only_table:
@@ -372,17 +385,21 @@ class ExonSession:
             if not re.search(rf"\b{re.escape(name)}\b", query):
                 continue
             try:
-                read_format(
+                bound = read_format(
                     self.spark, fmt, path, regions=region_opt, **options
-                ).createOrReplaceTempView(name)
-                rebound.append((name, frame))
+                )
             except Exception:
-                continue  # leave the original view in place
-        try:
-            return self.spark.sql(query)  # analysis resolves views eagerly
-        finally:
-            for name, frame in rebound:
-                frame.createOrReplaceTempView(name)
+                continue  # the statement reads the table's own view
+            names.append(name)
+            frames.append(bound._jdf)
+        if not names:
+            return self.spark.sql(query)
+        from exon_spark.jvm import driver_call
+
+        jdf = driver_call(self.spark, "sql")(
+            self.spark._jsparkSession, query, "\n".join(names), frames
+        )
+        return DataFrame(jdf, self.spark)
 
     def register_exon_table(self, name: str, path: str, fmt: str, **options) -> None:
         """CREATE EXTERNAL TABLE analogue (exon_context_ext.rs:683-697)."""

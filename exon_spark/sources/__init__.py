@@ -104,9 +104,9 @@ def read_format(spark: SparkSession, fmt: str, path: str, **options) -> DataFram
     the source's own ``schema()`` with the reader's options (as strings,
     plus ``path``), and handed to the reader. So ``load()`` starts no
     planner worker, and a frame that is never scanned (a ``CREATE
-    EXTERNAL TABLE`` view that region statements rebind) costs no Python
-    worker at all. A scan still creates its data source in a worker when
-    Spark plans it."""
+    EXTERNAL TABLE`` view whose region statements bind a region-bound
+    frame in its place) costs no Python worker at all. A scan still
+    creates its data source in a worker when Spark plans it."""
     fmt = fmt.lower()
     if fmt in ("delta", "deltatable"):
         from exon_spark.sources.delta import read_delta

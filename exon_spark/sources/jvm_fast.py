@@ -152,7 +152,9 @@ def _projection(base_cols, columns) -> list[str]:
     return [c for c in base_cols if c in keep] or list(base_cols)
 
 
-def read_dsv2(spark: SparkSession, cls: str, path: str, parts) -> DataFrame:
+def read_dsv2(
+    spark: SparkSession, cls: str, path: str, parts, columns=()
+) -> DataFrame:
     """Load a Java DataSourceV2 reader (VcfBgzfSource, BamBgzfSource,
     BgzfLineSource) over planned partitions: those of
     ``VcfSource``/``BamSource.plan_partitions``, or the ``chunks``
@@ -163,8 +165,13 @@ def read_dsv2(spark: SparkSession, cls: str, path: str, parts) -> DataFrame:
     ``regions`` option, a number records overlapping that one region — a
     ``tabix``/``bai`` partition keeps its own region's matches, so
     overlapping regions each emit theirs. A ``chunks`` partition keeps
-    every record of its ranges; an ``empty`` partition reads nothing."""
+    every record of its ranges; an ``empty`` partition reads nothing.
+
+    The frame is projected to ``columns`` (every column when empty). The
+    specs are built here as strings, and one JVM call
+    (``DriverCalls.readDsv2``) loads the reader and projects it."""
     from exon_spark.functions.region import parse_region
+    from exon_spark.jvm import driver_call
 
     regions: list[str] = []
     specs = []
@@ -186,16 +193,15 @@ def read_dsv2(spark: SparkSession, cls: str, path: str, parts) -> DataFrame:
         elif kind == "filter":
             regions, scope = list(part.extra[1]), "*"
         specs.append(f"{scope}@" + ";".join(f"{b}:{e}" for b, e in ranges))
-    return (
-        spark.read.format(cls)
-        .option("path", path)
-        .option("partitions", "|".join(specs))
-        .option(
-            "regions",
-            ",".join(f"{n}:{lo}:{hi}" for n, lo, hi in map(parse_region, regions)),
-        )
-        .load()
+    jdf = driver_call(spark, "readDsv2")(
+        spark._jsparkSession,
+        cls,
+        path,
+        "|".join(specs),
+        ",".join(f"{n}:{lo}:{hi}" for n, lo, hi in map(parse_region, regions)),
+        ",".join(columns),
     )
+    return DataFrame(jdf, spark)
 
 
 def read_vcf_region_jvm(
@@ -231,8 +237,9 @@ def read_vcf_region_jvm(
     if regions:
         opts["regions"] = regions
     parts = VcfSource.plan_partitions(FoundFile(path, os.path.getsize(path)), opts)
-    df = read_dsv2(spark, VCF_DSV2_CLASS, path, parts)
-    return df.select(*_projection(_VCF_BASE_COLS, columns))
+    return read_dsv2(
+        spark, VCF_DSV2_CLASS, path, parts, _projection(_VCF_BASE_COLS, columns)
+    )
 
 
 def _vcf_region_jvm_route(path: str, options: dict, spark=None):
@@ -294,9 +301,10 @@ def read_bam_jvm(spark: SparkSession, path: str, options: dict) -> DataFrame:
     opts = dict(options)
     opts.setdefault("target_parallelism", spark.sparkContext.defaultParallelism)
     parts = BamSource.plan_partitions(FoundFile(path, os.path.getsize(path)), opts)
-    df = read_dsv2(spark, BAM_DSV2_CLASS, path, parts)
     base = [n for n, _t in _split_ddl_fields(BamSource.BASE_SCHEMA)]
-    return df.select(*_projection(base, opts.get("columns")))
+    return read_dsv2(
+        spark, BAM_DSV2_CLASS, path, parts, _projection(base, opts.get("columns"))
+    )
 
 
 def _bam_jvm_route(path: str, options: dict, spark):

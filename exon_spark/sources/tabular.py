@@ -8,13 +8,15 @@ no Python in the data path. Which route reads the lines of GFF/GTF/BED:
   ``BgzfLineSource`` reads the planned index ranges in place — tabix chunk
   groups for GFF region reads, linear-index cuts for full scans — and
   ``from_csv`` parses its lines;
-* any other local file: the csv reader (the BGZF codec byte-range splits
-  an unindexed ``.bgz``);
+* any other local file: ``spark.read.text`` lines (the BGZF codec
+  byte-range splits an unindexed ``.bgz``), parsed with ``from_csv``;
 * object stores (s3://, mock://), zstd, and indexed files in a session
   without the exon_spark jar: Python line RDDs under the csv reader.
 
-Every route parses a line on its own into n string columns with the same
-csv options, so all of them give the same rows. Schemas mirror the
+Every route splits lines at ``\n`` only and drops one trailing ``\r``
+(as noodles reads lines, so a bare ``\r`` is part of its line), then
+parses a line on its own into n string columns with the same csv
+options, so all of them give the same rows. Schemas mirror the
 reference:
 
 * GFF  — exon/exon-gff/src/config.rs:82-101 (attributes MAP<STRING,ARRAY<STRING>>)
@@ -62,16 +64,12 @@ def _zstd_lines_rdd(spark: SparkSession, path: str):
         _, content = kv
         with zstd_stream(_io.BytesIO(bytes(content))) as fh:
             # Stream line-by-line over the decompressed reader: binary
-            # iteration splits only on b"\n" (strip a trailing \r for \r\n),
-            # matching the JVM text reader's row boundaries — str.splitlines
-            # would also split on \x0b/\x0c/ /  inside fields —
-            # and avoids materializing the whole file in executor memory.
+            # iteration splits only on b"\n", the line end of every route
+            # (str.splitlines would also split on \r, \x0b, \x0c, ...
+            # inside fields), and avoids materializing the whole file in
+            # executor memory.
             for raw in fh:
-                if raw.endswith(b"\r\n"):
-                    raw = raw[:-2]
-                elif raw.endswith(b"\n"):
-                    raw = raw[:-1]
-                yield raw.decode("utf-8", "replace")
+                yield _line_text(raw)
 
     return spark.sparkContext.binaryFiles(path).flatMap(_lines)
 
@@ -89,11 +87,7 @@ def _remote_lines_rdd(spark: SparkSession, path: str, options: dict):
 
         with open_maybe_compressed(fpath, options.get("compression")) as fh:
             for raw in fh:
-                if raw.endswith(b"\r\n"):
-                    raw = raw[:-2]
-                elif raw.endswith(b"\n"):
-                    raw = raw[:-1]
-                yield raw.decode("utf-8", "replace")
+                yield _line_text(raw)
 
     from exon_spark.sources.util import list_files
 
@@ -101,8 +95,19 @@ def _remote_lines_rdd(spark: SparkSession, path: str, options: dict):
     return spark.sparkContext.parallelize(files, len(files)).flatMap(_lines)
 
 
-# the csv reader's options for every tabular text route, and from_csv's
-# for the Java line source: tab-separated, '#' lines are comments
+def _line_text(raw: bytes) -> str:
+    """One line of a binary line iterator without its ``\n`` and one
+    trailing ``\r``."""
+    if raw.endswith(b"\n"):
+        raw = raw[:-1]
+    if raw.endswith(b"\r"):
+        raw = raw[:-1]
+    return raw.decode("utf-8", "replace")
+
+
+# the csv reader's options for the Python line RDDs, and from_csv's for
+# the Java line source and local files: tab-separated, '#' lines are
+# comments
 _TSV_OPTIONS = {"sep": "\t", "comment": "#"}
 
 
@@ -121,14 +126,43 @@ def _csv_line(line: str) -> bool:
     return not line.startswith("#") and bool(line.strip(_BLANK))
 
 
-def _read_csv(spark: SparkSession, src, n_cols: int) -> DataFrame:
-    """``src`` (a path or an RDD of lines) through the csv reader, as
-    ``n_cols`` string columns ``_c0``.. plus discovered hive partition
-    columns. Each line parses on its own: missing trailing fields are
-    null, extra fields are dropped."""
-    if not isinstance(src, str):
-        src = src.filter(_csv_line)
-    return spark.read.options(**_TSV_OPTIONS).schema(_tsv_schema(n_cols)).csv(src)
+def _read_csv(spark: SparkSession, lines, n_cols: int) -> DataFrame:
+    """An RDD of lines through the csv reader, as ``n_cols`` string
+    columns ``_c0``... Each line parses on its own: missing trailing
+    fields are null, extra fields are dropped."""
+    return (
+        spark.read.options(**_TSV_OPTIONS)
+        .schema(_tsv_schema(n_cols))
+        .csv(lines.filter(_csv_line))
+    )
+
+
+def _parse_lines(lines: DataFrame, n_cols: int) -> DataFrame:
+    """The ``value`` lines of ``lines`` (no comment or blank line among
+    them) as the ``_c0``..``_c{n_cols-1}`` columns that the csv reader
+    gives, then ``lines``' other columns: ``from_csv`` is the csv reader's
+    parser with its options."""
+    row = F.from_csv("value", _tsv_schema(n_cols), _TSV_OPTIONS)
+    # inline(array(...)) is a Generate barrier: a filter on the columns
+    # stays above it instead of inlining from_csv once per reference
+    others = [c for c in lines.columns if c != "value"]
+    return lines.select(F.inline(F.array(row)), *others)
+
+
+def _read_local_lines(spark: SparkSession, path: str, n_cols: int) -> DataFrame:
+    """A local file (plain, gzip, or an unindexed ``.bgz`` the BGZF codec
+    byte-range splits) as ``_parse_lines`` columns plus discovered hive
+    partition columns. Lines end at ``\n`` only and drop one trailing
+    ``\r``, as on the other routes; the csv file reader would also end a
+    line at a bare ``\r``. The lines the csv reader skips are skipped:
+    a '#' line, and one with no char above 0x20."""
+    txt = spark.read.text(path, lineSep="\n")
+    value = F.regexp_replace("value", "\r$", "")
+    others = [c for c in txt.columns if c != "value"]
+    lines = txt.select(value.alias("value"), *others).filter(
+        ~F.col("value").startswith("#") & F.col("value").rlike("[^\\x00-\\x20]")
+    )
+    return _parse_lines(lines, n_cols)
 
 
 def _tabix_full_ranges(spark: SparkSession, path: str):
@@ -218,8 +252,7 @@ def _tabix_lines_raw(spark: SparkSession, path: str, groups, n_cols: int) -> Dat
 
     A local file in a session with the exon_spark jar is read in place by
     the Java ``BgzfLineSource``, and its ``value`` lines parse with
-    ``from_csv`` — the csv reader's parser and options, so the rows are
-    the csv reader's; an empty plan is a zero-partition scan. Object-store
+    ``_parse_lines``; an empty plan is a zero-partition scan. Object-store
     paths (s3://, mock://) and sessions without the jar read the groups
     with the Python BGZF reader in executor tasks."""
     import os
@@ -232,11 +265,7 @@ def _tabix_lines_raw(spark: SparkSession, path: str, groups, n_cols: int) -> Dat
         from exon_spark.sources.jvm_fast import read_dsv2
 
         parts = [FilePartition(path, "gzip", (), extra=("chunks", g)) for g in groups]
-        lines = read_dsv2(spark, LINES_DSV2_CLASS, path, parts)
-        # inline(array(...)) is a Generate barrier: a filter on the columns
-        # stays above it instead of inlining from_csv once per reference
-        row = F.from_csv("value", _tsv_schema(n_cols), _TSV_OPTIONS)
-        return lines.select(F.inline(F.array(row)))
+        return _parse_lines(read_dsv2(spark, LINES_DSV2_CLASS, path, parts), n_cols)
 
     def _read_group(group):
         from exon_spark.sources.bgzf import BGZFReader
@@ -263,18 +292,16 @@ def _read_tsv_raw(
     from exon_spark.sources.fs import scheme_of
 
     if scheme_of(path) is not None:
-        src = _remote_lines_rdd(spark, path, options)
+        df = _read_csv(spark, _remote_lines_rdd(spark, path, options), n_cols)
     elif _is_zstd(path, options):
-        src = _zstd_lines_rdd(spark, path)
+        df = _read_csv(spark, _zstd_lines_rdd(spark, path), n_cols)
     else:
         # a local .gz/.bgz with a .tbi reads its linear-index ranges in
-        # place; any other local file goes to the csv reader, which
-        # byte-range splits an unindexed .bgz with the BGZF codec
+        # place; any other local file is read as text lines
         groups = _tabix_full_ranges(spark, path)
         if groups is not None:
             return _tabix_lines_raw(spark, path, groups, n_cols), []
-        src = path
-    df = _read_csv(spark, src, n_cols)
+        df = _read_local_lines(spark, path, n_cols)
     parts = df.columns[n_cols:]
     return df.select(
         *df.columns[:n_cols], *[F.col(c).cast("string").alias(c) for c in parts]

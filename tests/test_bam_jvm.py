@@ -13,6 +13,8 @@ import shutil
 import struct
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from exon_spark.sources.bgzf import BGZF_EOF, bgzf_block
 
@@ -382,3 +384,76 @@ def test_region_file_reads_like_comma_list(spark, bam, tmp_path):
             map(repr, read_format(spark, "vcf", str(vcf), regions=regions).collect())
         )
     )
+
+
+_REFS = st.sampled_from(["chr1", "chr2", "chr3"])
+
+
+@pytest.fixture(scope="module")
+def coords(spark, bam):
+    """Start and end values of the BAM's mapped records: those of the edge
+    records, and a sample of the rest."""
+    rows = _python(spark, bam["bai"]).select("start", "end").collect()
+    values = sorted({v for r in rows for v in r if v is not None})
+    return sorted(set(values[:20]) | set(random.Random(0).sample(values, 300)))
+
+
+def _bam_predicate(values):
+    near = st.builds(lambda v, d: v + d, st.sampled_from(values), st.sampled_from([-1, 0, 1]))
+    atom = st.one_of(
+        st.builds(
+            lambda op, r: f"reference {op} '{r}'",
+            st.sampled_from(["=", "<>", "<", ">="]),
+            _REFS,
+        ),
+        st.builds(
+            lambda col, op, n: f"{col} {op} {n}",
+            st.sampled_from(["start", "end"]),
+            st.sampled_from(["=", "<>", "<", "<=", ">", ">="]),
+            near,
+        ),
+        st.builds(lambda n: f"{n} <= end", near),
+        st.builds(
+            lambda c, col: f"{col} IS {c}NULL",
+            st.sampled_from(["", "NOT "]),
+            st.sampled_from(["reference", "start", "end"]),
+        ),
+        # the perfbench spelling, inlined into conjuncts over the three columns
+        st.builds(
+            lambda r, lo, span: f"bam_region_filter('{r}:{lo}-{lo + span}', reference, start, end)",
+            _REFS,
+            near,
+            st.sampled_from([0, 1_000, 100_000]),
+        ),
+        # not consumable: flag and mapping_quality are not coordinate columns
+        st.sampled_from(["flag = 4", "mapping_quality IS NULL"]),
+    )
+    return st.recursive(
+        atom,
+        lambda kids: st.one_of(
+            st.builds(lambda a, b: f"({a}) AND ({b})", kids, kids),
+            st.builds(lambda a, b: f"({a}) OR ({b})", kids, kids),
+            st.builds(lambda a: f"NOT ({a})", kids),
+        ),
+        max_leaves=5,
+    )
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    regions=st.sampled_from([None, "chr1:1-300000", "chr2:100-200,chr1:500000-900000"]),
+    data=st.data(),
+)
+def test_bam_pushdown_matches_python(spark, bam, coords, regions, data):
+    """BamBgzfSource consumes coordinate predicates at scan time; its rows
+    equal the Python DataSource's, where Spark filters, also for the
+    unmapped records whose reference, start or end is null."""
+    opts = {"regions": regions} if regions else {}
+    cols = ["name", "flag", "reference", "start", "end"]
+    jvm, python = _jvm(spark, bam["bai"], **opts), _python(spark, bam["bai"], **opts)
+
+    def rows(df, predicate):
+        return sorted((tuple(r) for r in df.where(predicate).select(cols).collect()), key=repr)
+
+    for predicate in data.draw(st.lists(_bam_predicate(coords), min_size=6, max_size=6)):
+        assert rows(jvm, predicate) == rows(python, predicate), predicate

@@ -623,6 +623,52 @@ def test_tabix_text_full_scan_matches_plain(spark, tmp_path_factory, text, sizes
         assert _python_route(lambda: _rows(read_format(spark, fmt, gz, **opts))) == want, fmt
 
 
+@pytest.mark.parametrize("end", ["\n", "\r\n", "\r"])
+def test_tabular_line_ends_agree_across_routes(spark, tmp_path, end):
+    """GFF lines end at '\n' only and drop one trailing '\r' on every
+    route, as noodles reads them: a plain file, an unindexed .bgz (the
+    BGZF codec) and a .gz with a .tbi (the Java line source). With lone
+    '\r' ends every other record runs on into the next one's text."""
+    from exon_spark.sources import read_format
+    from exon_spark.sources.indexes import build_tabix_gff
+
+    records = [
+        f"chr1\tsrc\tgene\t{s}\t{s + 50}\t.\t+\t.\tID=g{s}" for s in range(100, 2100, 100)
+    ]
+    text = "##gff-version 3\n"
+    for i, rec in enumerate(records):
+        text += rec + (end if i % 2 == 0 else "\n")
+    data = (text[:-1] + end).encode()  # the last line ends with `end` too
+    plain, bgz, gz = tmp_path / "t.gff", tmp_path / "t.gff.bgz", tmp_path / "t.gff.gz"
+    plain.write_bytes(data)
+    _bgzip_blocks(data, str(bgz), [97, 700])
+    _bgzip_blocks(data, str(gz), [97, 700])
+    build_tabix_gff(str(gz))
+
+    want = []
+    for line in data.split(b"\n"):
+        line = line[:-1] if line.endswith(b"\r") else line
+        if line and not line.startswith(b"#"):
+            fields = line.decode().split("\t")
+            want.append((fields[0], int(fields[3]), int(fields[4]), fields[8]))
+    if end == "\r":
+        assert len(want) == len(records) // 2 and "\r" in want[0][3]
+
+    def rows(path):
+        def attrs(r):
+            return ";".join(f"{k}={','.join(v)}" for k, v in r.attributes.items())
+
+        df = read_format(spark, "gff", str(path))
+        return sorted((r.seqname, r.start, r.end, attrs(r)) for r in df.collect())
+
+    assert "BatchScan bgzf-lines" in (
+        read_format(spark, "gff", str(gz))._jdf.queryExecution().executedPlan().toString()
+    )
+    assert rows(plain) == sorted(want)
+    assert rows(bgz) == sorted(want)
+    assert rows(gz) == sorted(want)
+
+
 @st.composite
 def _vcf_text(draw) -> bytes:
     """Coordinate-sorted VCF with '.' fields, multi-valued id/alt/filter,
