@@ -54,10 +54,16 @@ SOURCES_ENTRY = "META-INF/exonspark-sources.sha256"
 def codec_active(spark) -> bool:
     """True when the session carries the jar: get_spark puts it on the
     classpath together with the BGZF codec conf, so the codec conf marks a
-    session that has the codec and the DataSourceV2 readers."""
-    return BGZF_CODEC_CLASS in (
-        spark.conf.get("spark.hadoop.io.compression.codecs", "") or ""
-    )
+    session that has the codec and the DataSourceV2 readers. A jar cannot
+    join a running JVM's classpath, so the conf is read once per
+    SparkSession object (``spark._exon_codec_active``)."""
+    active = getattr(spark, "_exon_codec_active", None)
+    if active is None:
+        active = BGZF_CODEC_CLASS in (
+            spark.conf.get("spark.hadoop.io.compression.codecs", "") or ""
+        )
+        spark._exon_codec_active = active  # type: ignore[attr-defined]
+    return active
 
 
 # the static members of DriverCalls, per py4j gateway client

@@ -135,7 +135,6 @@ def nb_classifier_score(
     meta: dict,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "join",
 ) -> DataFrame:
     """Score every document with the fitted model.
 
@@ -145,7 +144,7 @@ def nb_classifier_score(
     ``nb_pass`` is the unrounded ``score > 0`` decision. Documents with
     no tokens (null/whitespace text) keep the prior alone.
 
-    Plan shape (``mode="join"``, default): ONE broadcast(model) hash
+    Plan shape (batch input): ONE broadcast(model) hash
     join on the token rows (the corpus side never shuffles for the
     model) and ONE map-side-combinable per-doc sum. Zero-token docs
     survive via ``explode_outer`` (a single null-token row per empty
@@ -153,17 +152,14 @@ def nb_classifier_score(
     the scores back onto the ids" spelling costs a second full doc_id
     shuffle + SortMergeJoin at 100 TB.
 
-    ``mode="udf"`` ships the model as a closure dict inside one
-    Arrow-batched pandas UDF — fully map-only (not even the per-doc agg
-    shuffle), so it runs on ``readStream`` inputs in append mode and is
-    the preferred apply once the corpus dwarfs everything else. The
-    model collect is bounded by ``buckets``. Pinned equal to the join
-    regime by test.
+    A streaming input (``df.isStreaming``) cannot run the per-doc
+    aggregation in append mode, so it takes the map-only spelling: the
+    model ships as a closure dict inside one Arrow-batched pandas UDF,
+    with no shuffle at all. The model collect is bounded by ``buckets``.
+    Pinned equal to the join spelling by test.
     """
-    if mode not in ("join", "udf"):
-        raise ValueError(f"mode must be 'join' or 'udf', got {mode!r}")
     ids = df.select(F.col(id_col).alias("doc_id"), text_col)
-    if mode == "udf":
+    if df.isStreaming:
         lut = {
             int(r["bucket"]): float(r["log_odds"]) for r in model.collect()
         }
@@ -486,7 +482,6 @@ def logreg_classifier_score(
     meta: dict,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "join",
 ) -> DataFrame:
     """Score every document with a fitted logistic model.
 
@@ -496,20 +491,18 @@ def logreg_classifier_score(
     (= prob > 0.5). Zero-feature docs (null/whitespace text) score the
     intercept alone.
 
-    Same two plan regimes as ``nb_classifier_score``, pinned equal by
-    test: ``mode="join"`` — ONE broadcast(model) hash join on the gram
+    Same two plan shapes as ``nb_classifier_score``, pinned equal by
+    test: a batch input takes ONE broadcast(model) hash join on the gram
     rows + ONE map-side-combinable per-doc sum, ``explode_outer``
-    keeping empty docs without a corpus rejoin; ``mode="udf"`` — the
-    model dict rides ``sc.broadcast`` into one Arrow-batched map-only
-    pandas UDF (streaming-safe, append mode), grams hashed once per
+    keeping empty docs without a corpus rejoin; a streaming input takes
+    the map-only spelling — the model dict rides ``sc.broadcast`` into
+    one Arrow-batched pandas UDF (append mode), grams hashed once per
     DISTINCT gram per batch (Zipf).
     """
-    if mode not in ("join", "udf"):
-        raise ValueError(f"mode must be 'join' or 'udf', got {mode!r}")
     intercept = float(meta["intercept"])
     buckets = int(meta["buckets"])
     ids = df.select(F.col(id_col).alias("doc_id"), text_col)
-    if mode == "udf":
+    if df.isStreaming:
         lut = {int(r["bucket"]): float(r["weight"]) for r in model.collect()}
         from exon_spark.operators.state import track_broadcast
 

@@ -180,6 +180,16 @@ def wide_keys(*cols: Column | str) -> "list[Column]":
     same hash with a constant domain-separator column prepended, so the
     pair behaves as independent 64-bit hashes of the tuple.
 
+    Seed-independence assumption: Spark's multi-column ``xxhash64``
+    chains the columns, each hashed with the previous result as its seed,
+    so the prepended ``64`` only changes the seed the tuple is hashed
+    under (42 for ``_k1``, ``xxhash64(64)`` for ``_k2``). The 128-bit
+    bound below holds only if xxhash64 under two fixed seeds acts as two
+    independent random functions on the corpus's keys. That is an
+    empirical property of the hash, not a proven one: xxhash64 is not
+    cryptographic, so keys chosen adversarially to collide under both
+    seeds are not ruled out.
+
     Why (r13, VERDICT r12 #3): a 64-bit key gives even odds of ONE
     collision at ~4.3e9 distinct keys (birthday bound). A 100 TB corpus's
     n-gram vocabulary is 1e10-1e11 keys, so collisions are *expected*
@@ -498,8 +508,7 @@ def jaccard_verify(
     pairs: DataFrame,
     shingles: DataFrame,
     threshold: float = 0.5,
-    broadcast_ids: bool = False,
-    prefilter: bool = True,
+    scale: bool = False,
 ) -> DataFrame:
     """Exact Jaccard over shingle sets for candidate pairs; keeps pairs with
     similarity >= threshold. Join-based (distributed), no collect.
@@ -521,7 +530,8 @@ def jaccard_verify(
     ngram_containment_pairs), and the minhash_index stored-state format
     (``sh_hashes array<bigint>``) is a persistence contract.
 
-    With ``prefilter=True`` both shingle streams are SEMI-FILTERED by the
+    ``scale`` is the caller's size regime (see minhash_dedup). With
+    ``scale=True`` both shingle streams are SEMI-FILTERED by the
     candidate id sets before the verify shuffle (r12): candidates are
     band/prefix-collision-bounded — orders of magnitude fewer docs than
     the corpus — so the unfiltered spelling shuffled the corpus's entire
@@ -530,36 +540,32 @@ def jaccard_verify(
     id-set joins get runtime stats and broadcast via AQE; the output set
     is unchanged — the filter only drops rows the pair join would drop.
 
-    ``prefilter=False`` is the LATENCY-regime spelling (r13): the pairs
+    ``scale=False`` is the LATENCY-regime spelling (r13): the pairs
     materialization + two distinct-builds + two semi joins cost ~5 extra jobs
     whose scheduling overhead exceeds the shuffled bytes they save on a
     small corpus (q19 sf0.1 warm A/B, calm windows: 2.58 -> 2.23 s).
-    Output-identical by construction either way — callers pass it from
-    the same size regime that picks their materialization."""
+    Output-identical by construction either way."""
     if dict(shingles.dtypes).get("shingle") == "string":
         keyed = shingles.select("doc_id", F.xxhash64("shingle").alias("shingle"))
     else:
         keyed = shingles
-    if prefilter:
+    if scale:
         pairs = _materialize(pairs, eager=True)
-        # broadcast_ids=True puts an EXPLICIT broadcast hint on the
-        # candidate id sets (r12): left to AQE, the semi joins' initial plan
-        # eagerly materializes the full shingle-stream exchange (measured
-        # 315 MB at sf10 on q19) before AQE can see the id set is tiny —
-        # the same lesson as q48's prefilter. Candidate ids are band/prefix-
-        # collision-bounded, so the broadcast is near-dup-bounded, not
+        # an EXPLICIT broadcast hint on the candidate id sets (r12): left
+        # to AQE, the semi joins' initial plan eagerly materializes the
+        # full shingle-stream exchange (measured 315 MB at sf10 on q19)
+        # before AQE can see the id set is tiny — the same lesson as
+        # q48's prefilter. Candidate ids are band/prefix-collision-
+        # bounded, so the broadcast is near-dup-bounded, not
         # corpus-bounded. It is a SCALE-regime hint: at latency scale the
         # two serialized broadcast-build jobs cost more wall than the
-        # exchange they remove (q19 sf0.1 warm ~3.7 -> ~5 s), so callers
-        # pass it from the same size regime that picks their
-        # materialization (see minhash_dedup).
-        _hint = F.broadcast if broadcast_ids else (lambda d: d)
+        # exchange they remove (q19 sf0.1 warm ~3.7 -> ~5 s).
         sa = keyed.join(
-            _hint(pairs.select(F.col("doc_a").alias("doc_id")).distinct()),
+            F.broadcast(pairs.select(F.col("doc_a").alias("doc_id")).distinct()),
             "doc_id",
         ).select(F.col("doc_id").alias("doc_a"), "shingle")
         sb = keyed.join(
-            _hint(pairs.select(F.col("doc_b").alias("doc_id")).distinct()),
+            F.broadcast(pairs.select(F.col("doc_b").alias("doc_id")).distinct()),
             "doc_id",
         ).select(F.col("doc_id").alias("doc_b"), "shingle")
     else:
@@ -659,9 +665,7 @@ def minhash_dedup(
     # latency regime also skips the verify prefilter (r13): its pairs
     # materialization + id-set semi joins are ~5 extra jobs of pure scheduling
     # overhead at small corpus sizes (A/B in jaccard_verify's docstring)
-    return jaccard_verify(
-        cands, sh_rows, threshold, broadcast_ids=scale, prefilter=scale
-    )
+    return jaccard_verify(cands, sh_rows, threshold, scale=scale)
 
 
 def ngram_jaccard_pairs(
@@ -671,19 +675,11 @@ def ngram_jaccard_pairs(
     n: int = 5,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    broadcast_dfreq: bool = True,
     n_rows: int | None = None,
 ) -> DataFrame:
     """All-pairs n-gram Jaccard similarity join with **prefix filtering**
     (PPJoin-style) — exact results for pairs with jaccard >= threshold
     up to 64-bit key collisions (declared tolerance below).
-
-    ``broadcast_dfreq`` (r13, ADVICE r12): the df>=2 shingle-frequency
-    table is dup-rate-bounded on normal corpora and broadcasts — but on
-    boilerplate/dup-heavy shards it is corpus-bounded, and an explicit
-    broadcast hint bypasses AQE's size guard (hard 8 GB BroadcastExchange
-    fail where a shuffled join degrades gracefully). Pass ``False`` on
-    such shards to leave the join strategy to AQE — output identical.
 
     ``n_rows``: input cardinality hint for the regime switch (see
     regime.py); above the columnar floor the materialized hash frame is
@@ -767,10 +763,9 @@ def ngram_jaccard_pairs(
         .agg(F.count("*").cast("int").alias("d"))
         .filter(F.col("d") >= 2)
     )
-    _dfreq_hint = F.broadcast if broadcast_dfreq else (lambda d: d)
     # per-doc df>=2 shingles sorted by (df, hash) — the dup tail of the
     # doc's global rarity ranking. Dup-bounded shuffle.
-    dup = rows.join(_dfreq_hint(dfreq2), "h").groupBy("doc_id").agg(
+    dup = rows.join(F.broadcast(dfreq2), "h").groupBy("doc_id").agg(
         F.sort_array(
             F.collect_list(F.struct(F.col("d"), F.col("h")))
         ).alias("dups")
@@ -1184,7 +1179,6 @@ def dup_ngram_coverage(
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool | str = "auto",
     max_gram_df: int | None = None,
     remove: bool = False,
     n_rows: int | None = None,
@@ -1204,20 +1198,18 @@ def dup_ngram_coverage(
     Scale: the inverted index shuffles (doc, pos, gram) by gram — one
     codegen'd agg for the distinct-doc count, one shuffle join back, and a
     distinct on (doc, pos) that only materializes DUPLICATED windows (8×
-    the dup-window rows, not the corpus). Two 100 TB knobs, both default
-    off so the oracle-gated result stays exact:
+    the dup-window rows, not the corpus).
 
-    - ``hashed=True`` shuffles/joins on ``xxhash64(gram)`` instead of the
-      gram text — an 8-byte fixed-width key instead of ~50 bytes of
-      string; a collision can only mark one extra window duplicated
-      (P ≈ 2^-64 per gram pair), it cannot drop coverage. The default
-      ``"auto"`` keeps string keys (oracle-bit-true) at or below 2^20
-      documents — 2x above the largest oracle-proven corpus (sf10,
-      500k docs) — and switches to hashed keys beyond, where the string
-      gram index is a measured single-box disk-death (sf100: ~1B gram
-      positions x ~70 B string rows through a materialized frame and two
-      shuffles filled 72 GB of scratch; hashed is ~3.5x leaner). The
-      input is sized per regime.py (``n_rows`` is the hint).
+    - Gram keys follow the ``hashed_grams`` size regime (regime.py,
+      ``n_rows`` is the hint): string keys (oracle-bit-true) at or below
+      2^20 documents — 2x above the largest oracle-proven corpus (sf10,
+      500k docs) — and ``xxhash64(gram)`` beyond, an 8-byte fixed-width
+      key instead of ~50 bytes of string, where the string gram index is
+      a measured single-box disk-death (sf100: ~1B gram positions x
+      ~70 B string rows through a materialized frame and two shuffles
+      filled 72 GB of scratch; hashed is ~3.5x leaner). A collision can
+      only mark one extra window duplicated (P ≈ 2^-64 per gram pair),
+      it cannot drop coverage.
     - ``max_gram_df`` drops grams whose document frequency exceeds the cap
       (corpus-level stop-grams) before the join back, mirroring
       ngram_jaccard_pairs' ``max_shingle_df``: one viral boilerplate gram
@@ -1243,10 +1235,7 @@ def dup_ngram_coverage(
         raise ValueError(f"n must be >= 1, got {n}")
     if max_gram_df is not None and max_gram_df < 2:
         raise ValueError(f"max_gram_df must be >= 2, got {max_gram_df}")
-    if hashed not in (True, False, "auto"):
-        raise ValueError(f"hashed must be a bool or 'auto', got {hashed!r}")
-    if hashed == "auto":
-        hashed = regime.above(df, "hashed_grams", "dup_ngram_coverage", n_rows)
+    hashed = regime.above(df, "hashed_grams", "dup_ngram_coverage", n_rows)
     # token array pinned behind the explode(array()) Generate barrier:
     # word_ngrams does n element_at calls per window, and with the split()
     # inlined each one re-tokenizes the document (measured 131s vs 1.5s at
@@ -1400,7 +1389,6 @@ def remove_dup_spans(
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool = False,
     max_gram_df: int | None = None,
 ) -> DataFrame:
     """Standalone spelling of ``dup_ngram_coverage(remove=True)``'s action
@@ -1412,7 +1400,6 @@ def remove_dup_spans(
         n=n,
         id_col=id_col,
         text_col=text_col,
-        hashed=hashed,
         max_gram_df=max_gram_df,
         remove=True,
     )
@@ -1616,7 +1603,6 @@ def ngram_containment_pairs(
     text_col: str = "text",
     hashed: bool = False,
     max_shingle_df: int | None = None,
-    prefilter: bool | str = "auto",
     n_rows: int | None = None,
 ) -> DataFrame:
     """Shingle *containment* pairs: C(A→B) = |sh(A) ∩ sh(B)| / |sh(A)|.
@@ -1648,7 +1634,7 @@ def ngram_containment_pairs(
     pair aggregation carries the counts through its existing shuffle and
     the two post-agg count-lookup joins disappear.
 
-    ``prefilter`` (df >= 2 pre-filter, guide §3.2, EXACT here): a
+    df >= 2 pre-filter (guide §3.2, EXACT here): a
     shingle in a single document can never produce a pair, and most
     shingles are df=1 (measured 95% at sf1 — near-dup rate bounds the
     rest), so the unfiltered pair join's exchange+sort was 6x its
@@ -1656,15 +1642,12 @@ def ngram_containment_pairs(
     computes the dup-rate-bounded df >= 2 key set, which
     broadcast-semi-filters both pair-join sides MAP-SIDE (before their
     exchange): sf10 zero spill, warm wall -27%. The extra aggregate
-    pass costs more than it saves on small corpora, so ``"auto"``
-    (default) switches it — and the columnar persist that lets the df
-    aggregate column-prune its cached input — on above the columnar floor
-    (sized per regime.py; True/False forces). On corpora where
-    the df >= 2 key set itself would exceed broadcast limits
-    (boilerplate-heavy shards), force ``prefilter=False``.
+    pass costs more than it saves on small corpora, so it runs — with
+    the columnar persist that lets the df aggregate column-prune its
+    cached input — above the columnar floor only (sized per regime.py,
+    ``n_rows`` is the hint).
     """
-    if prefilter == "auto":
-        prefilter = regime.above(df, "columnar", "ngram_containment_pairs", n_rows)
+    prefilter = regime.above(df, "columnar", "ngram_containment_pairs", n_rows)
     # sh feeds the two join sides (+ the df/hot-shingle agg); left lazy
     # each replans the full tokenize -> shingle pipeline from the scan.
     #
@@ -1711,10 +1694,9 @@ def ngram_containment_pairs(
         # and sorts, and AQE cannot demote it (the exchange materializes
         # before re-planning). Broadcasting pushes the filter below the
         # exchange into the map side. The key set is dup-rate-bounded
-        # (not corpus-bounded); on corpora where it would exceed
-        # broadcast limits pass ``prefilter=False``. Materialized
-        # eagerly: both pair-join sides carry a broadcast of it, and
-        # left lazy each BroadcastExchange re-runs the df aggregate.
+        # (not corpus-bounded). Materialized eagerly: both pair-join
+        # sides carry a broadcast of it, and left lazy each
+        # BroadcastExchange re-runs the df aggregate.
         keep = _materialize(keep.select("shingle"), eager=True)
         gen = sh.join(F.broadcast(keep), "shingle", "semi")
     else:

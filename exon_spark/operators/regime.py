@@ -16,10 +16,9 @@ log = logging.getLogger("exon_spark.regime")
 
 FLOORS: dict[str, int] = {
     # corpora at or below this row count keep semantic_dedup's oracle-exact
-    # expr regimes under the "auto" defaults; larger ones take the scale
-    # regimes (udf assignment + grouped pairs). 2^17 sits 60x above the
-    # largest DuckDB-gated corpus (sf0.1: 2.2k vectors) and below the sf10
-    # board (220k), where the expr pair stream is already the measured
+    # expr regime; larger ones take the scale regime (udf assignment +
+    # grouped pairs). 2^17 sits 60x above the largest DuckDB-gated corpus
+    # (sf0.1: 2.2k vectors) and below the sf10 board (220k), where the expr pair stream is already the measured
     # bottleneck (62 s, vs aborting outright at sf100) and no in-process
     # oracle row exists for this operator.
     "vectors": 131_072,
@@ -33,9 +32,9 @@ FLOORS: dict[str, int] = {
     # now was never measured (needs corpora around 2^18 docs, sf1-sf10).
     "columnar": 262_144,
     # corpora at or below this document count keep dup_ngram_coverage's
-    # oracle-bit-true string gram keys under hashed="auto"; larger ones take
-    # the 8-byte xxhash64 keys (collision P ~ 2^-64 per gram pair — can only
-    # ADD one window, never drop coverage). 2^20 sits 2x above the largest
+    # oracle-bit-true string gram keys; larger ones take the 8-byte
+    # xxhash64 keys (collision P ~ 2^-64 per gram pair — can only ADD one
+    # window, never drop coverage). 2^20 sits 2x above the largest
     # oracle-proven corpus (sf10: 500k docs) and below the sf100 replica
     # (5M), where string keys are a measured single-box disk-death.
     "hashed_grams": 1_048_576,

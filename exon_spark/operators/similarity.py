@@ -110,12 +110,11 @@ def cosine_topk(
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("vec_id"))
     if regime.above(corpus, "vectors", "cosine_topk", n_rows):
-        qrows = q.collect()  # query-fanout-bounded by contract
         scored = _blas_topk_scan(
             corpus.select(
                 F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
             ),
-            qrows,
+            q,
             k,
         )
         return (
@@ -144,16 +143,18 @@ def cosine_topk(
     )
 
 
-def _blas_topk_scan(c: DataFrame, qrows: list, k: int) -> DataFrame:
+def _blas_topk_scan(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
     """cosine_topk's scale-regime scan: per Arrow batch, one
     (batch x dim) @ (dim x |Q|) matmul + per-query partial top-k under
     (score desc, vec_id asc). Emits <= k rows per query per batch;
     the caller's window finishes the global rank. Query vectors ride in
-    the closure (broadcast-equivalent; |Q| is query-fanout-bounded)."""
+    the closure (broadcast-equivalent; |Q| is query-fanout-bounded).
+    Both id columns keep their input types."""
     import numpy as np
 
-    q_ids = np.array([r["q_id"] for r in qrows], np.int64)
-    Q = np.stack([np.asarray(r["q_vec"], np.float64) for r in qrows])
+    qrows = q.collect()  # query-fanout-bounded by contract
+    q_ids = np.array([r["q_id"] for r in qrows], object)
+    Q = np.array([r["q_vec"] for r in qrows], np.float64)
     qn = np.array([r["_qn"] for r in qrows], np.float64)
     kk = int(k)
 
@@ -162,9 +163,9 @@ def _blas_topk_scan(c: DataFrame, qrows: list, k: int) -> DataFrame:
 
         for pdf in batches:
             n = len(pdf)
-            if n == 0:
+            if n == 0 or not len(q_ids):
                 continue
-            ids = pdf["vec_id"].to_numpy(np.int64)
+            ids = pdf["vec_id"].to_numpy()
             M = np.stack([np.asarray(v, np.float64) for v in pdf["vec"]])
             cn = np.linalg.norm(M, axis=1)
             # S[i, j] = round(dot(vec_i, q_j) / (cn_i * qn_j), 6)
@@ -188,7 +189,7 @@ def _blas_topk_scan(c: DataFrame, qrows: list, k: int) -> DataFrame:
                 outs.append(
                     pd.DataFrame(
                         {
-                            "q_id": np.full(len(pick), q_ids[j], np.int64),
+                            "q_id": [q_ids[j]] * len(pick),
                             "vec_id": ids[pick],
                             "score": col[pick],
                         }
@@ -197,7 +198,11 @@ def _blas_topk_scan(c: DataFrame, qrows: list, k: int) -> DataFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    return c.mapInPandas(gen, "q_id bigint, vec_id bigint, score double")
+    q_type = q.schema["q_id"].dataType.simpleString()
+    v_type = c.schema["vec_id"].dataType.simpleString()
+    return c.mapInPandas(
+        gen, f"q_id {q_type}, vec_id {v_type}, score double"
+    )
 
 
 def hyperplanes(dim: int, n_planes: int = 8) -> list[list[float]]:
@@ -485,76 +490,6 @@ def _band_keys_udf(planes: list[list[float]], band_bits: int):
     return keys_udf
 
 
-def _pq_prefilter_pairs(
-    base: DataFrame, cands: DataFrame, floor: float, cb
-) -> DataFrame:
-    """Symmetric-distance PQ prefilter for a candidate pair set — the
-    documented next rung in front of ``embedding_cosine_dups``' exact
-    verify (SCALE.md r11): candidate ids join 8-byte PQ CODES instead of
-    full vectors, the approximate cosine computes as ``n_sub`` gathers
-    into broadcast centroid-dot tables (``T_s = C_s @ C_s.T``, ~2 MB at
-    8x256), and only pairs with ``approx >= floor`` go on to the exact
-    vector join. The approximation is the cosine of the RECONSTRUCTIONS
-    (self-dots gather from the same tables' diagonals), so quantization
-    norm-shrinkage cancels and ``floor``'s slack only has to absorb
-    angular error; survivors are exactly re-verified, so the prefilter
-    can only lose boundary pairs, never admit false positives."""
-    import numpy as np
-
-    from exon_spark.operators.pq import pq_encode
-    from exon_spark.operators.state import track_broadcast
-    from pyspark.sql.functions import pandas_udf
-
-    C = cb.centroids.astype(np.float64)  # (n_sub, k, d_sub)
-    tables = np.einsum("ska,sla->skl", C, C).astype(np.float32)
-    sc = base.sparkSession.sparkContext
-    bc = track_broadcast(sc.broadcast(tables))
-
-    @pandas_udf("double")
-    def approx(code_a, code_b):
-        import numpy as np
-        import pandas as pd
-
-        if len(code_a) == 0:
-            return pd.Series([], dtype="float64")
-        T = bc.value
-        A = np.stack([np.asarray(c, np.int64) for c in code_a])
-        B = np.stack([np.asarray(c, np.int64) for c in code_b])
-        # approximate COSINE of the reconstructions, not their raw dot:
-        # ||recon|| < 1 systematically (quantization shrinks norms), so
-        # the raw dot under-scores every pair by ~||ra||*||rb|| and a
-        # fixed slack would have to absorb that bias too (measured: 3/50
-        # fixture pairs lost at threshold 0.95 raw vs 0 normalized).
-        # The reconstructed self-dots gather from the same tables'
-        # diagonals — two extra gathers, no extra state.
-        sab = np.zeros(len(A), np.float64)
-        saa = np.zeros(len(A), np.float64)
-        sbb = np.zeros(len(A), np.float64)
-        for j in range(T.shape[0]):
-            Tj = T[j]
-            aj, bj = A[:, j], B[:, j]
-            sab += Tj[aj, bj]
-            saa += Tj[aj, aj]
-            sbb += Tj[bj, bj]
-        return pd.Series(sab / np.sqrt(np.maximum(saa * sbb, 1e-30)))
-
-    # the encode feeds BOTH join arms — materialize once or the
-    # O(n_sub*k) per-vector argmin encode runs twice over the corpus
-    from exon_spark.operators.dedup import _materialize
-
-    codes = _materialize(
-        pq_encode(base, cb, id_col="vec_id", vec_col="vec"), eager=True
-    )
-    ca = codes.select(F.col("vec_id").alias("id_a"), F.col("pq_code").alias("_pa"))
-    cb_ = codes.select(F.col("vec_id").alias("id_b"), F.col("pq_code").alias("_pb"))
-    return (
-        cands.join(ca, "id_a")
-        .join(cb_, "id_b")
-        .filter(approx(F.col("_pa"), F.col("_pb")) >= F.lit(float(floor)))
-        .select("id_a", "id_b")
-    )
-
-
 def embedding_cosine_dups(
     df: DataFrame,
     threshold: float = 0.95,
@@ -565,9 +500,6 @@ def embedding_cosine_dups(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     density_target: float = 1.0,
-    verify: str = "exact",
-    pq_slack: float = 0.15,
-    pq_codebook=None,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cosine >=
@@ -615,28 +547,11 @@ def embedding_cosine_dups(
     mirrored by any oracle that regenerates the blocking); exact/planted
     duplicates agree on every band at any width — recall 1 always.
 
-    ``verify`` picks the candidate-verification stage: ``"exact"``
-    (default, oracle-bit-true) joins full vectors onto every deduped
-    candidate pair; ``"pq"`` inserts a symmetric-distance product-
-    quantization prefilter first — candidates join 8-byte codes, score
-    approximately via broadcast centroid-dot tables, and only pairs with
-    ``approx >= threshold - pq_slack`` reach the exact vector join. At C
-    candidate pairs this cuts the verify shuffle from C x vec-width to
-    C x code-width + survivors x vec-width (~5 GB -> ~0.5 GB at the
-    sf100 probe's 164M candidates). Survivors are re-verified exactly
-    (identical fold arithmetic), so output scores stay bit-true and the
-    only approximation is possible loss of pairs whose true cosine sits
-    within the PQ angular error of the threshold (the approx score is a
-    reconstruction COSINE, so norm-shrinkage bias cancels);
-    planted/exact duplicates share codes and score exactly 1 — always
-    kept. ``pq_codebook``
-    accepts a pre-fit :class:`~exon_spark.operators.pq.PQCodebook`
-    (standing pipelines); otherwise one fits on a bounded hash sample.
+    Verification joins full vectors onto every deduped candidate pair
+    (oracle-bit-true).
     """
     import math
 
-    if verify not in ("exact", "pq"):
-        raise ValueError(f"verify must be 'exact' or 'pq', got {verify!r}")
     n_bands = 4  # simhash-mirroring recall geometry, fixed
     if band_bits == "auto":
         if n_planes is not None:
@@ -707,14 +622,6 @@ def embedding_cosine_dups(
         .select("id_a", "id_b")
         .distinct()
     )
-    if verify == "pq":
-        if pq_codebook is None:
-            from exon_spark.operators.pq import pq_fit
-
-            pq_codebook = pq_fit(base, id_col="vec_id", vec_col="vec")
-        cands = _pq_prefilter_pairs(
-            base, cands, threshold - pq_slack, pq_codebook
-        )
     va = base.select(
         F.col("vec_id").alias("id_a"),
         F.col("vec").alias("vec_a"),
@@ -753,7 +660,12 @@ def _assign_cluster_udf(centroids: list[tuple[int, list[float]]]):
     ids = np.array([cid for cid, _ in centroids], np.int64)
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
-    C = np.array([c for _, c in centroids], np.float64)[order]
+    # no centroids only on an empty corpus: an empty (0, 0) matrix
+    C = (
+        np.array([c for _, c in centroids], np.float64)[order]
+        if centroids
+        else np.empty((0, 0))
+    )
     cn = np.linalg.norm(C, axis=1, keepdims=True)
     if not (np.isfinite(cn).all() and cn.all()):
         # same contract as the member path below (and the expr path's
@@ -798,7 +710,7 @@ _PAIR_BLOCK_DOUBLES = 16_777_216
 
 def _grouped_cluster_pairs(assign: DataFrame, threshold: float) -> DataFrame:
     """Within-cluster cosine pairs as one BLAS matmul per cluster via
-    ``applyInPandas`` — ``semantic_dedup(pairs="grouped")``'s pair stage.
+    ``applyInPandas`` — ``semantic_dedup``'s scale-regime pair stage.
 
     Each group is one cluster: rows sort by vec_id (partitioning-
     invariant output), normalize once, and the pair block computes as
@@ -877,8 +789,6 @@ def semantic_dedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    assignment: str = "auto",
-    pairs: str = "auto",
     n_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style cluster-blocked embedding dedup (Abbas et al. 2023,
@@ -906,9 +816,18 @@ def semantic_dedup(
     corpus exactly as the paper does (~√n clusters keeps the quadratic
     bounded).
 
-    ``assignment`` picks the argmax implementation: ``"expr"``
-    is the Catalyst-expression broadcast cross join + struct-min agg —
-    bit-exact parity with the DuckDB oracle; ``"udf"`` is the vectorized
+    Two size regimes (the q28 ``band_bits="auto"`` precedent): corpora
+    at or below the vectors floor (2^17 — 60x above the largest
+    DuckDB-gated corpus) take the oracle-bit-true expr assignment and
+    expr pairs; larger corpora, where the expr pair stream is the
+    measured bottleneck (62 s at 220k vectors, disk-abort at 2.2M), take
+    the udf assignment and grouped pairs. The input is sized per
+    regime.py (``n_rows`` is the hint); ``n_clusters="auto"`` needs the
+    exact count, which then also sizes the regime.
+
+    Assignment: the latency regime's argmax is the Catalyst-expression
+    broadcast cross join + struct-min agg — bit-exact parity with the
+    DuckDB oracle; the scale regime's is the vectorized
     numpy closure argmax (one matmul per Arrow batch, zero shuffle over
     the corpus) — the scale path once n_clusters·rows makes n_clusters
     interpreted cosine folds per row the bottleneck (measured at 200k
@@ -922,9 +841,9 @@ def semantic_dedup(
     test. Zero-norm embeddings raise in both regimes (ANSI
     DIVIDE_BY_ZERO / ArithmeticError). Requires a bigint id column.
 
-    ``pairs`` picks the within-cluster pair implementation: ``"expr"``
-    is the cluster-keyed self-join + per-pair Catalyst cosine
-    fold — bit-exact oracle parity; ``"grouped"`` computes each
+    Within-cluster pairs: the latency regime's are the cluster-keyed
+    self-join + per-pair Catalyst cosine fold — bit-exact oracle
+    parity; the scale regime's ``grouped`` spelling computes each
     cluster's pair block as ONE numpy/BLAS matmul inside
     ``applyInPandas`` (SemDeDup's own formulation). The expr pair join
     streams every candidate pair with BOTH 64-float vectors attached —
@@ -944,33 +863,10 @@ def semantic_dedup(
     vectors (O(c*dim) — the score matrix is row-blocked to ~128 MB, but
     the cluster itself must fit); with auto-k that floor is
     ~sqrt(n)*dim doubles, trivial at any n.
-
-    Both regime knobs default to ``"auto"`` (the q28 ``band_bits="auto"``
-    precedent): corpora at or below the vectors floor (2^17 — 60x
-    above the largest DuckDB-gated corpus) stay on the oracle-bit-true
-    expr regimes, and larger corpora, where the expr pair stream is the
-    measured bottleneck (62 s at 220k vectors, disk-abort at 2.2M),
-    switch to udf+grouped. The input is sized per regime.py (``n_rows``
-    is the hint); ``n_clusters="auto"`` needs the exact count, which
-    then also sizes the regimes.
     """
-    if assignment not in ("expr", "udf", "auto"):
-        raise ValueError(
-            f"assignment must be 'expr', 'udf' or 'auto', got {assignment!r}"
-        )
-    if pairs not in ("expr", "grouped", "auto"):
-        raise ValueError(
-            f"pairs must be 'expr', 'grouped' or 'auto', got {pairs!r}"
-        )
     if n_rows is None and n_clusters == "auto":
         n_rows = df.count()
-    scale = "auto" in (assignment, pairs) and regime.above(
-        df, "vectors", "semantic_dedup", n_rows
-    )
-    if assignment == "auto":
-        assignment = "udf" if scale else "expr"
-    if pairs == "auto":
-        pairs = "grouped" if scale else "expr"
+    scale = regime.above(df, "vectors", "semantic_dedup", n_rows)
     if n_clusters == "auto":
         # k = ceil(sqrt(n)): balances the two scale terms — assignment
         # is O(n*k), within-cluster pairs are O(n^2/k) — at O(n^1.5)
@@ -1009,7 +905,7 @@ def semantic_dedup(
     )
     from exon_spark.operators.dedup import _materialize
 
-    if assignment == "udf":
+    if scale:
         # centroid collect is bounded by the n_clusters knob (same class
         # as ivf_fit_centroids' documented driver sample)
         cent_rows = cents.select("cidx", "cemb").collect()
@@ -1050,7 +946,7 @@ def semantic_dedup(
                 "vec_id", F.col("_m.cidx").alias("cluster_id"), "embedding", "_nrm"
             )
         )
-    if pairs == "grouped":
+    if scale:
         # single consumer (the per-cluster matmul) — no materialization;
         # the cluster_id shuffle of applyInPandas is the one pass over
         # the corpus this regime pays
@@ -1222,42 +1118,6 @@ def kmeans_refine(
     return [(cid, cur[cid]) for cid in ids]
 
 
-def _max_eval_cos_udf(eval_vecs: list[list[float]]):
-    """Arrow-vectorized max-cosine-vs-eval-set: one numpy matmul per
-    batch against the closure-shipped eval matrix (eval sets are small —
-    benchmark suites, not corpora — so the driver collect is bounded the
-    same way as the centroid collects above). Same 6-dp rounding and
-    zero-norm contract as ``_assign_cluster_udf``."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    E = np.array(eval_vecs, np.float64)
-    en = np.linalg.norm(E, axis=1, keepdims=True)
-    if not (np.isfinite(en).all() and en.all()):
-        raise ArithmeticError(
-            "zero-norm or non-finite eval embedding in semantic_decontaminate"
-        )
-    En = E / en
-
-    @pandas_udf("double")
-    def f(emb):
-        import pandas as pd
-
-        if len(emb) == 0:
-            return pd.Series([], dtype="float64")
-        M = np.stack([np.asarray(v, np.float64) for v in emb])
-        nrm = np.linalg.norm(M, axis=1, keepdims=True)
-        if not nrm.all():
-            raise ArithmeticError(
-                "zero-norm embedding in semantic_decontaminate"
-            )
-        Mn = M / nrm
-        return pd.Series(np.round(Mn @ En.T, 6).max(axis=1))
-
-    return f
-
-
 def semantic_decontaminate(
     corpus: DataFrame,
     eval_df: DataFrame,
@@ -1265,7 +1125,6 @@ def semantic_decontaminate(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     eval_emb_col: str | None = None,
-    mode: str = "expr",
 ) -> DataFrame:
     """Embedding-level benchmark decontamination: flag every corpus
     vector whose max cosine against ANY eval-set vector reaches
@@ -1278,58 +1137,40 @@ def semantic_decontaminate(
     vector, ``max_eval_cos`` rounded to 6 dp (per-pair rounding BEFORE
     the max, matching the oracle arithmetic).
 
-    ``mode="expr"`` is the Catalyst spelling — broadcast cross join
-    against the eval frame + one max agg (DuckDB-mirrorable, pinned by
-    an in-test oracle); ``mode="udf"`` is the scale spelling — the eval
-    matrix rides in a pandas-UDF closure and each Arrow batch does one
-    matmul, so the corpus NEVER shuffles (no groupBy) and eval-set size
-    only affects the matmul width. Both regimes round 6 dp, so they
-    agree except exactly at a .5-at-the-7th-decimal boundary (the
-    semantic_dedup contract). Zero-norm vectors raise in both regimes
-    (ANSI DIVIDE_BY_ZERO / ArithmeticError).
+    One Catalyst spelling — broadcast cross join against the eval frame
+    + one max agg (DuckDB-mirrorable, pinned by an in-test oracle).
+    Zero-norm vectors raise (ANSI DIVIDE_BY_ZERO).
 
     100 TB shape: eval sets are benchmark-sized (10²-10⁵ rows) — always
-    the broadcast/closure side; the corpus side is map-only in udf mode
-    and one small-key agg in expr mode. O(corpus x eval) similarity work
-    is inherent to exhaustive screening; the matmul does it at BLAS
-    speed.
+    the broadcast side; the corpus side is one small-key agg.
+    O(corpus x eval) similarity work is inherent to exhaustive
+    screening.
     """
-    if mode not in ("expr", "udf"):
-        raise ValueError(f"mode must be 'expr' or 'udf', got {mode!r}")
     evc = eval_emb_col or emb_col
     d = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(emb_col).alias("embedding"),
         _norm(F.col(emb_col)).alias("_nrm"),
     )
-    if mode == "udf":
-        eval_rows = [list(r[0]) for r in eval_df.select(evc).collect()]
-        if not eval_rows:
-            raise ValueError("semantic_decontaminate: empty eval set")
-        mx = _max_eval_cos_udf(eval_rows)
-        scored = d.select(
-            "vec_id", mx(F.col("embedding")).alias("max_eval_cos")
+    ev = eval_df.select(
+        F.col(evc).alias("_eemb"), _norm(F.col(evc)).alias("_enrm")
+    )
+    if ev.isEmpty():
+        raise ValueError("semantic_decontaminate: empty eval set")
+    scored = (
+        d.crossJoin(F.broadcast(ev))
+        .select(
+            "vec_id",
+            cosine_pre(
+                F.col("embedding"),
+                F.col("_eemb"),
+                F.col("_nrm"),
+                F.col("_enrm"),
+            ).alias("cos"),
         )
-    else:
-        ev = eval_df.select(
-            F.col(evc).alias("_eemb"), _norm(F.col(evc)).alias("_enrm")
-        )
-        if ev.isEmpty():
-            raise ValueError("semantic_decontaminate: empty eval set")
-        scored = (
-            d.crossJoin(F.broadcast(ev))
-            .select(
-                "vec_id",
-                cosine_pre(
-                    F.col("embedding"),
-                    F.col("_eemb"),
-                    F.col("_nrm"),
-                    F.col("_enrm"),
-                ).alias("cos"),
-            )
-            .groupBy("vec_id")
-            .agg(F.max("cos").alias("max_eval_cos"))
-        )
+        .groupBy("vec_id")
+        .agg(F.max("cos").alias("max_eval_cos"))
+    )
     return scored.select(
         "vec_id",
         "max_eval_cos",

@@ -731,7 +731,6 @@ def tfidf_keywords(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_rows: int | None = None,
-    broadcast_vocab: bool | None = None,
 ) -> DataFrame:
     """Per-document TF-IDF keyword extraction: the k terms that best
     characterize each document against the corpus (score = tf · ln(N/df)),
@@ -753,15 +752,9 @@ def tfidf_keywords(
     jobs, AQE-tiny exchanges; the persist + repartition overhead costs
     more than it saves — measured sf0.1 1.5 vs 2.9 s warm).
     N is a 1-row broadcast; the per-TERM ln is ``_glibc_ln`` for oracle
-    bit-parity (r11), so tf * _lnr is pure IEEE in both engines.
-
-    ``broadcast_vocab`` (r13, ADVICE r12): the scale regime's explicit
-    broadcast hint on the per-term idf table assumes the vocabulary is
-    broadcast-sized — web-scale shards full of URLs/typos/IDs are not.
-    ``None`` keeps the regime default (hint in the scale regime);
-    ``False`` leaves the vocab join to AQE without abandoning the
-    single-doc_id-exchange plan; ``True`` forces the hint in both
-    regimes. Output identical either way.
+    bit-parity (r11), so tf * _lnr is pure IEEE in both engines. The
+    scale regime puts an explicit broadcast hint on the per-term idf
+    table; the latency regime leaves that join to AQE.
     """
     from pyspark.sql import Window
 
@@ -793,8 +786,7 @@ def tfidf_keywords(
         dfreq.crossJoin(F.broadcast(n_docs))
         .select("term", _glibc_ln(F.col("_n") / F.col("_df")).alias("_lnr"))
     )
-    _hint = scale if broadcast_vocab is None else broadcast_vocab
-    model = F.broadcast(dfreq_ln) if _hint else dfreq_ln
+    model = F.broadcast(dfreq_ln) if scale else dfreq_ln
     scored = (
         tf.join(model, "term")
         .select(
@@ -956,8 +948,6 @@ def line_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     sep: str = "\n",
-    hashed: bool = False,
-    broadcast_hot: bool = True,
 ) -> DataFrame:
     """Corpus-level boilerplate line removal (the line-wise dedup pass of
     RefinedWeb / Falcon, Penedo et al. 2023 §4.2, and MassiveText's
@@ -977,16 +967,8 @@ def line_dedup(
     row per distinct line per partition, Zipf-shrunk. The hot set
     (line_df >= min_df) is the boilerplate vocabulary — tiny relative to
     the corpus — and rides a broadcast hash ANTI join back onto the
-    exploded lines (``broadcast_hot=False`` degrades to a shuffle anti
-    join for a pathological hot set wider than the broadcast limit).
-    ``hashed=True`` swaps line text for a 128-bit hashed key (two
-    xxhash64 halves, r13 — one is the agg/anti-join equi key, the second
-    rides as a residual anti-join condition) — compact shuffle rows at
-    100 TB. A single 64-bit key was exact only up to collisions, and at
-    1e10+ distinct corpus lines a collision is expected and deletes a
-    content line that merely hashes like boilerplate; the pair bound is
-    ~2^-128 per line pair. The default stays text-keyed (provably exact,
-    and the spelling the oracle gate runs).
+    exploded lines, keyed by the line text (provably exact, and the
+    spelling the oracle gate runs).
     Reassembly is one groupBy(doc) of the surviving lines — the only
     corpus-wide shuffle — with an in-group array_sort on position, not
     a window sort. ``n_lines`` rides every exploded row (the split
@@ -1008,46 +990,18 @@ def line_dedup(
         F.size(arr).alias("n_lines"),
         F.posexplode(arr).alias("pos", "line"),
     )
-    keys = (
-        [
-            F.xxhash64(F.col("line")).alias("_k"),
-            F.xxhash64(F.lit(64), F.col("line")).alias("_k2"),
-        ]
-        if hashed
-        else [F.col("line").alias("_k")]
+    lines = lines.select(
+        "doc_id", "n_lines", "pos", "line", F.col("line").alias("_k")
     )
-    kcols = ["_k", "_k2"] if hashed else ["_k"]
-    lines = lines.select("doc_id", "n_lines", "pos", "line", *keys)
     hot = (
-        lines.select("doc_id", *kcols)
+        lines.select("doc_id", "_k")
         .distinct()
-        .groupBy(*kcols)
+        .groupBy("_k")
         .agg(F.count(F.lit(1)).alias("line_df"))
         .filter(F.col("line_df") >= min_df)
-        .select(*kcols)
+        .select("_k")
     )
-    if hashed:
-        # equi on one half + residual xor on the second (wide_keys
-        # rationale in operators.dedup: a two-key equi-join loses the
-        # single-long fast path); a line is dropped only when BOTH
-        # halves match a hot line — 128-bit-exact. hot derives from
-        # lines, so its columns are renamed to break the self-join
-        # attribute ambiguity.
-        hot = hot.select(
-            F.col("_k").alias("_hk"), F.col("_k2").alias("_hk2")
-        )
-        if broadcast_hot:
-            hot = F.broadcast(hot)
-        kept = lines.join(
-            hot,
-            (F.col("_k") == F.col("_hk"))
-            & (F.col("_k2").bitwiseXOR(F.col("_hk2")) == 0),
-            "left_anti",
-        )
-    else:
-        if broadcast_hot:
-            hot = F.broadcast(hot)
-        kept = lines.join(hot, "_k", "left_anti")
+    kept = lines.join(F.broadcast(hot), "_k", "left_anti")
     return kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
@@ -1190,7 +1144,6 @@ def bigram_logppl(
     id_col: str = "doc_id",
     text_col: str = "text",
     lam: float = 0.9,
-    broadcast_models: bool = True,
 ) -> DataFrame:
     """Corpus-trained interpolated bigram log-perplexity — the order-1
     upgrade of ``unigram_logppl`` and one step closer to the n-gram LM
@@ -1221,12 +1174,11 @@ def bigram_logppl(
     absorbs Zipf-hot pairs before the shuffle. The context table folds
     out of the bigram table (tiny second agg, vocab-sized), the unigram
     vocab is Zipf-bounded, N is a 1-row broadcast. The vocab-sized model
-    tables (ctx, vocab) are broadcast-PINNED by default: left to AQE,
-    the ctx join re-shuffles the whole bigram-position fact side on
-    ``prev`` (it was just shuffled on ``(prev, cur)``) before the
-    runtime conversion can fire. ``broadcast_models=False`` reverts to
-    AQE for a corpus whose vocab outgrows the driver (the big table is
-    NEVER pinned — unique-bigram count grows with the corpus). Same
+    tables (ctx, vocab) are broadcast-PINNED: left to AQE, the ctx join
+    re-shuffles the whole bigram-position fact side on ``prev`` (it was
+    just shuffled on ``(prev, cur)``) before the runtime conversion can
+    fire. The big table is NEVER pinned — unique-bigram count grows with
+    the corpus. Same
     plan family as unigram_logppl — no window; the only Python is the
     Arrow-batched ``_glibc_ln`` on the distinct-bigram MODEL table
     (cross-engine bit-parity, r11), never on the fact side.
@@ -1259,8 +1211,7 @@ def bigram_logppl(
     tok_rows = df.select(F.explode(toks).alias("tok"))
     vocab = tok_rows.groupBy("tok").agg(F.count("*").alias("tok_n"))
     total = vocab.agg(F.sum("tok_n").alias("corpus_tokens"))
-    if broadcast_models:
-        ctx, vocab = F.broadcast(ctx), F.broadcast(vocab)
+    ctx, vocab = F.broadcast(ctx), F.broadcast(vocab)
     # nll precomputed once per DISTINCT bigram on the model side (it is
     # a pure function of (big_n, ctx_n, tok_n)); _glibc_ln for oracle
     # bit-parity. Fact-side join fan drops from 3 model joins + cross
@@ -1294,7 +1245,6 @@ def trigram_logppl(
     text_col: str = "text",
     lam2: float = 0.7,
     lam1: float = 0.9,
-    broadcast_models: bool = True,
 ) -> DataFrame:
     """Corpus-trained interpolated trigram log-perplexity — the order-2
     rung of the CCNet LM ladder (recursive Jelinek-Mercer shrinkage):
@@ -1317,9 +1267,8 @@ def trigram_logppl(
     groupBy(p2,p1,cur) fit and the score join; the context tables fold
     out of the n-gram tables (each one groupBy smaller), vocab is
     Zipf-bounded, N broadcasts. The vocab-sized tables (ctx, vocab) are
-    broadcast-PINNED by default (``broadcast_models=False`` reverts to
-    AQE — see bigram_logppl); tri/ctx3/big are never pinned, their row
-    counts grow with the corpus. Same plan family as bigram_logppl — no
+    broadcast-PINNED (see bigram_logppl); tri/ctx3/big are never pinned,
+    their row counts grow with the corpus. Same plan family as bigram_logppl — no
     window; the only Python is the Arrow-batched ``_glibc_ln`` on the
     distinct-trigram MODEL table (cross-engine bit-parity, r11).
     """
@@ -1378,8 +1327,7 @@ def trigram_logppl(
     p1_term = F.lit(lam1) * (F.col("big_n") / F.col("ctx_n")) + F.lit(mu1) * (
         F.col("tok_n") / F.col("corpus_tokens")
     )
-    if broadcast_models:
-        ctx, vocab = F.broadcast(ctx), F.broadcast(vocab)
+    ctx, vocab = F.broadcast(ctx), F.broadcast(vocab)
     # nll per DISTINCT trigram on the model side (pure function of the
     # five counts); _glibc_ln for oracle bit-parity; fact side joins the
     # finished model once — see bigram_logppl
@@ -1421,7 +1369,6 @@ def lm_ladder(
     lam: float = 0.9,
     lam2: float = 0.7,
     lam1: float = 0.9,
-    broadcast_models: bool = True,
 ) -> DataFrame:
     """All three CCNet LM rungs — ``unigram_logppl`` + ``bigram_logppl``
     + ``trigram_logppl`` — in one shared-frame pass. Output:
@@ -1524,17 +1471,15 @@ def lm_ladder(
     # occurrence side. The counts come from the materialization of the
     # model frames above (no job of their own); below the row cap the
     # scoring join gets an explicit broadcast hint, removing the
-    # corpus-side exchange + sort entirely. At 100 TB trigram tables are 1e10+ rows — far over the
-    # cap — and the joins stay shuffled, which is the only plan that
-    # works there. Respects broadcast_models=False (the caller's opt-out
-    # for every model-side hint).
+    # corpus-side exchange + sort entirely. At 100 TB trigram tables are
+    # 1e10+ rows — far over the cap — and the joins stay shuffled, which
+    # is the only plan that
+    # works there.
     # (the unigram LUT is NOT hinted: measured neutral-to-worse at the
     # sf10 replica — 447-471 vs 363-422 core-s without — because the
     # token-occurrence side's groupBy(doc_id) reshuffles either way and
     # the hint only serializes an extra broadcast build)
     _lut_cap = 4_194_304  # 2^22 rows ≈ 100 MB raw at 24 B/row
-    _b2 = broadcast_models and n_big <= _lut_cap
-    _b3 = broadcast_models and n_tri <= _lut_cap
     # ---- unigram rung (expressions identical to unigram_logppl)
     model1 = vocab.crossJoin(F.broadcast(total_row)).select(
         "tok",
@@ -1566,11 +1511,7 @@ def lm_ladder(
     )
     # ---- shared bigram frames (bigram_logppl's fit == trigram's backoff)
     ctx = big.groupBy("prev").agg(F.sum("big_n").alias("ctx_n"))
-    b_ctx, b_vocab = (
-        (F.broadcast(ctx), F.broadcast(vocab))
-        if broadcast_models
-        else (ctx, vocab)
-    )
+    b_ctx, b_vocab = F.broadcast(ctx), F.broadcast(vocab)
     model2 = (
         big.join(b_ctx, "prev")
         .join(b_vocab, F.col("cur") == F.col("tok"))
@@ -1588,7 +1529,7 @@ def lm_ladder(
     )
     _cb = pair_rows.select("doc_id", *wide_keys("prev", "cur"))
     _mb = model2.select(*wide_keys("prev", "cur"), "nllm")
-    if _b2:
+    if n_big <= _lut_cap:
         _mb = F.broadcast(_mb)
     b2 = (
         _cb.join(_mb, wide_key_cond(_cb, _mb))
@@ -1603,7 +1544,7 @@ def lm_ladder(
     ctx3 = tri.groupBy("p2", "p1").agg(F.sum("tri_n").alias("ctx3_n"))
     big_r = big.withColumnRenamed("cur", "bcur")
     ctx_r = ctx.withColumnRenamed("prev", "cprev")
-    b_ctx_r = F.broadcast(ctx_r) if broadcast_models else ctx_r
+    b_ctx_r = F.broadcast(ctx_r)
     p1_term = F.lit(lam1) * (F.col("big_n") / F.col("ctx_n")) + F.lit(mu1) * (
         F.col("tok_n") / F.col("corpus_tokens")
     )
@@ -1631,7 +1572,7 @@ def lm_ladder(
     )
     _ct = tri_rows.select("doc_id", *wide_keys("p2", "p1", "cur"))
     _mt = model3.select(*wide_keys("p2", "p1", "cur"), "nllm")
-    if _b3:
+    if n_tri <= _lut_cap:
         _mt = F.broadcast(_mt)
     t3 = (
         _ct.join(_mt, wide_key_cond(_ct, _mt))
@@ -1650,7 +1591,6 @@ def corpus_stats(
     by: tuple[str, ...] = ("lang",),
     id_col: str = "doc_id",
     text_col: str = "text",
-    exact_quantiles: bool = True,
 ) -> DataFrame:
     """Per-group corpus report card — the summary table every curation
     run publishes per language/source slice: document count, token and
@@ -1659,16 +1599,13 @@ def corpus_stats(
     Output per ``by`` group: ``(by..., n_docs, n_tokens, n_chars,
     avg_tokens, p50_tokens, p95_tokens)`` — averages rounded to 6 dp,
     quantiles exact (``percentile``, linear interpolation — matches
-    DuckDB ``quantile_cont``, pinned by an in-test oracle) or
-    ``percentile_approx`` when ``exact_quantiles=False``.
+    DuckDB ``quantile_cont``, pinned by an in-test oracle).
 
     Scale: per-doc token counts are one map-only projection (``size`` of
     the filtered split — no explode, no token rows); the groupBy key is
     the report dimension (a handful of groups). Sums/counts combine
     map-side; EXACT percentiles buffer each group's values on one
-    reducer — fine for report cards over bounded groups, but at 10⁹+
-    docs per group switch ``exact_quantiles=False`` (t-digest sketch,
-    map-side combinable, no value buffering).
+    reducer — fine for report cards over bounded groups.
 
     Null/whitespace text counts as a 0-token doc (it is still a doc).
     """
@@ -1682,11 +1619,6 @@ def corpus_stats(
         F.coalesce(ntok, F.lit(0)).alias("_nt"),
         F.coalesce(F.length(text_col), F.lit(0)).alias("_nc"),
     )
-    pct = (
-        (lambda c, p: F.percentile(c, F.lit(p)))
-        if exact_quantiles
-        else (lambda c, p: F.percentile_approx(c, F.lit(p), F.lit(10000)))
-    )
     return per_doc.groupBy(*by).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("_nt").alias("n_tokens"),
@@ -1697,8 +1629,8 @@ def corpus_stats(
         quant_avg(
             F.sum("_nt"), F.count(F.lit(1)), in_scale=1.0, out_scale=1000000.0
         ).alias("avg_tokens"),
-        pct(F.col("_nt"), 0.5).alias("p50_tokens"),
-        pct(F.col("_nt"), 0.95).alias("p95_tokens"),
+        F.percentile(F.col("_nt"), F.lit(0.5)).alias("p50_tokens"),
+        F.percentile(F.col("_nt"), F.lit(0.95)).alias("p95_tokens"),
     )
 
 
@@ -1794,7 +1726,7 @@ def keyword_tag(
     return out
 
 
-#: phrase_tag regime="auto" switches expr -> Aho-Corasick above this
+#: phrase_tag switches expr -> Aho-Corasick above this
 #: many total phrase entries. Measured crossover ~32-64 on the sf0.1
 #: documents corpus (SCALE.md "r10/r11 operator probes": expr grows linearly,
 #: 0.24s@16 -> 4.9s@1024; ac flat ~0.4s) — the expr regime scans the
@@ -1848,7 +1780,6 @@ def phrase_tag(
     phrases: dict[str, list[str]],
     id_col: str = "doc_id",
     text_col: str = "text",
-    regime: str = "auto",
 ) -> DataFrame:
     """Tag documents against named PHRASE lists — the multi-word /
     substring counterpart of ``keyword_tag`` (safety blocklists and
@@ -1857,7 +1788,9 @@ def phrase_tag(
     counts per tag (overlap-free, left-to-right — the replace-and-diff
     convention), plus ``<tag>_hit`` booleans.
 
-    Two regimes, identical results (parity-pinned):
+    Two regimes, identical results (parity-pinned), chosen by the total
+    phrase count: expr at or below ``AC_PHRASE_THRESHOLD`` entries, ac
+    above (crossover: SCALE.md "r10/r11 operator probes").
 
     * ``"expr"`` — pure JVM: each phrase costs one lowercase
       ``replace`` length-diff per row, whole-stage codegen'd, zero
@@ -1869,8 +1802,6 @@ def phrase_tag(
       blocklist regime the r9 verdict ordered shipped. Map-only,
       zero shuffle; per-phrase greedy non-overlap counting mirrors
       the replace convention exactly.
-    * ``"auto"`` (default) — expr below ``AC_PHRASE_THRESHOLD`` total
-      entries, ac above (crossover: SCALE.md "r10/r11 operator probes").
 
     Null text counts 0 everywhere. Phrases are matched as raw
     substrings (no word-boundary anchoring): 'ass' matches 'class' —
@@ -1878,18 +1809,13 @@ def phrase_tag(
     """
     if not phrases:
         raise ValueError("phrase_tag: empty phrases dict")
-    if regime not in ("auto", "expr", "ac"):
-        raise ValueError(f"phrase_tag: unknown regime {regime!r}")
     for tag, plist in phrases.items():
         if not plist:
             raise ValueError(f"phrase_tag: empty list for tag {tag!r}")
         for p in plist:
             if not p or not p.lower():
                 raise ValueError(f"phrase_tag: empty phrase in tag {tag!r}")
-    n_total = sum(len(v) for v in phrases.values())
-    if regime == "auto":
-        regime = "ac" if n_total > AC_PHRASE_THRESHOLD else "expr"
-    if regime == "ac":
+    if sum(len(v) for v in phrases.values()) > AC_PHRASE_THRESHOLD:
         return _phrase_tag_ac(df, phrases, id_col, text_col)
     low = F.lower(F.coalesce(F.col(text_col), F.lit("")))
     cols = [F.col(id_col).alias("doc_id")]

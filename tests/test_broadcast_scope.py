@@ -19,13 +19,13 @@ def docs(spark):
     )
 
 
-def test_scope_collects_operator_broadcasts(spark, docs):
-    from exon_spark.operators.text import phrase_tag
+def test_scope_collects_operator_broadcasts(spark, docs, monkeypatch):
+    import exon_spark.operators.text as text
 
+    # two phrases take the Aho-Corasick regime above a threshold of 0
+    monkeypatch.setattr(text, "AC_PHRASE_THRESHOLD", 0)
     with broadcast_scope() as handles:
-        out = phrase_tag(
-            docs, {"greek": ["alpha beta", "gamma"]}, regime="ac"
-        )
+        out = text.phrase_tag(docs, {"greek": ["alpha beta", "gamma"]})
         n = out.count()
     assert n == 20
     # the AC automaton broadcast was created inside the scope and tracked

@@ -7,12 +7,33 @@ from __future__ import annotations
 
 import hashlib
 import math
+import uuid
 
 import pytest
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string, label boolean")
+
+
+def _streamed(spark, df, score, tmp_path):
+    """Rows of ``score`` over ``df`` read back as a stream (append mode,
+    memory sink), and the stream's physical plan: a streaming input takes
+    the scorers' map-only udf spelling, a batch one the join spelling."""
+    name = f"classify_stream_{uuid.uuid4().hex[:12]}"
+    path = tmp_path / name
+    df.coalesce(1).write.parquet(str(path))
+    stream = spark.readStream.schema(df.schema).parquet(str(path))
+    q = (
+        score(stream)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    return spark.sql(f"select * from {name}").collect(), q._jsq.explainInternal(False)
 
 
 def _h32(tok: str) -> int:
@@ -168,7 +189,7 @@ def test_nb_classifier_score_plan_broadcasts_model(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_nb_classifier_score_regimes_agree(spark):
+def test_nb_classifier_score_regimes_agree(spark, tmp_path):
     from exon_spark.operators import nb_classifier_fit, nb_classifier_score
 
     rows = SEED_ROWS + [(7, None, None), (8, "   ", None), (9, "zz unseen", None)]
@@ -176,14 +197,17 @@ def test_nb_classifier_score_regimes_agree(spark):
     model, meta = nb_classifier_fit(_docs(spark, SEED_ROWS), buckets=4096)
     a = sorted(map(tuple, nb_classifier_score(df, model, meta).collect()))
     b = sorted(
-        map(tuple, nb_classifier_score(df, model, meta, mode="udf").collect())
+        map(
+            tuple,
+            _streamed(
+                spark, df, lambda s: nb_classifier_score(s, model, meta), tmp_path
+            )[0],
+        )
     )
     assert a == b
-    with pytest.raises(ValueError, match="mode must be"):
-        nb_classifier_score(df, model, meta, mode="bogus")
 
 
-def test_nb_classifier_regimes_agree_on_unicode_whitespace(spark):
+def test_nb_classifier_regimes_agree_on_unicode_whitespace(spark, tmp_path):
     """Java \\s is ASCII-only: NBSP/ideographic-space/NEL must be part of
     the token in BOTH regimes (r8 advice: the udf's str.split() used to
     split on them, diverging from fit-time features)."""
@@ -199,44 +223,33 @@ def test_nb_classifier_regimes_agree_on_unicode_whitespace(spark):
     model, meta = nb_classifier_fit(_docs(spark, SEED_ROWS), buckets=4096)
     a = sorted(map(tuple, nb_classifier_score(df, model, meta).collect()))
     b = sorted(
-        map(tuple, nb_classifier_score(df, model, meta, mode="udf").collect())
+        map(
+            tuple,
+            _streamed(
+                spark, df, lambda s: nb_classifier_score(s, model, meta), tmp_path
+            )[0],
+        )
     )
     assert a == b
     # and the NBSP doc really is ONE token under the shared tokenizer
-    n = {
-        r["doc_id"]: r["n_toks"]
-        for r in nb_classifier_score(df, model, meta, mode="udf").collect()
-    }
+    n = {r[0]: r[1] for r in b}
     assert n[20] == 1 and n[21] == 4 and n[22] == 1
 
 
 def test_nb_classifier_udf_mode_runs_on_streams(spark, tmp_path):
-    """The closure-LUT apply is map-only, so it must run on readStream in
-    append mode with batch-identical rows (the join regime's per-doc agg
-    cannot)."""
+    """A streaming input takes the map-only closure-LUT apply, so it runs
+    on readStream in append mode (the join spelling's per-doc agg cannot)
+    with batch-identical rows, and its plan has no Exchange."""
     from exon_spark.operators import nb_classifier_fit, nb_classifier_score
 
     batch = _docs(spark, SEED_ROWS)
     model, meta = nb_classifier_fit(batch, buckets=4096)
-    d = tmp_path / "nb_stream"
-    batch.coalesce(1).write.parquet(str(d / "b0"))
-    stream = spark.readStream.schema(
-        "doc_id bigint, text string, label boolean"
-    ).parquet(str(d / "*"))
-    q = (
-        nb_classifier_score(stream, model, meta, mode="udf")
-        .writeStream.format("memory")
-        .queryName("nb_udf_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    got, plan = _streamed(
+        spark, batch, lambda s: nb_classifier_score(s, model, meta), tmp_path
     )
-    assert q.awaitTermination(120)
-    got = sorted(map(tuple, spark.sql("select * from nb_udf_stream").collect()))
-    exp = sorted(
-        map(tuple, nb_classifier_score(batch, model, meta, mode="udf").collect())
-    )
-    assert got == exp
+    assert "ArrowEvalPython" in plan and "Exchange" not in plan
+    exp = sorted(map(tuple, nb_classifier_score(batch, model, meta).collect()))
+    assert sorted(map(tuple, got)) == exp
 
 
 # --------------------------------------------------------------------------
@@ -263,7 +276,7 @@ def _py_grams(text):
     return [g for g in raw + bi if g != ""]
 
 
-def test_logreg_score_matches_numpy_reference(spark):
+def test_logreg_score_matches_numpy_reference(spark, tmp_path):
     """With a hand-frozen model (no fit), both score regimes must equal
     a pure-Python sigmoid over mean-pooled hashed gram weights."""
     from exon_spark.operators import logreg_classifier_score
@@ -296,16 +309,19 @@ def test_logreg_score_matches_numpy_reference(spark):
             margin > 0,
         )
 
-    for mode in ("join", "udf"):
+    streamed, _ = _streamed(
+        spark, df, lambda s: logreg_classifier_score(s, model, meta), tmp_path
+    )
+    batch = logreg_classifier_score(df, model, meta).collect()
+    for mode, rows in (("join", batch), ("udf", streamed)):
         got = {
-            r["doc_id"]: (r["n_feats"], r["lr_prob"], r["lr_pass"])
-            for r in logreg_classifier_score(df, model, meta, mode=mode).collect()
+            r["doc_id"]: (r["n_feats"], r["lr_prob"], r["lr_pass"]) for r in rows
         }
         for doc_id, text, _ in texts:
             assert got[doc_id] == ref(text), (mode, doc_id)
 
 
-def test_logreg_score_regimes_agree_on_extreme_margins(spark):
+def test_logreg_score_regimes_agree_on_extreme_margins(spark, tmp_path):
     """A hand-frozen model can push |margin| past 709, where bare
     math.exp overflows: the udf regime must saturate to 0.0/1.0 like
     the join regime's F.exp (inf -> prob 0), not crash the job."""
@@ -321,18 +337,24 @@ def test_logreg_score_regimes_agree_on_extreme_margins(spark):
         "bucket bigint, weight double",
     )
     meta = {"intercept": 0.0, "buckets": buckets}
-    got = {}
-    for mode in ("join", "udf"):
-        got[mode] = {
-            r["doc_id"]: (r["n_feats"], r["lr_prob"], r["lr_pass"])
-            for r in logreg_classifier_score(df, model, meta, mode=mode).collect()
+    streamed, _ = _streamed(
+        spark, df, lambda s: logreg_classifier_score(s, model, meta), tmp_path
+    )
+    got = {
+        mode: {
+            r["doc_id"]: (r["n_feats"], r["lr_prob"], r["lr_pass"]) for r in rows
         }
+        for mode, rows in (
+            ("join", logreg_classifier_score(df, model, meta).collect()),
+            ("udf", streamed),
+        )
+    }
     assert got["join"] == got["udf"]
     assert got["join"][1] == (1, 0.0, False)
     assert got["join"][2] == (1, 1.0, True)
 
 
-def test_logreg_fit_separates_and_regimes_agree(spark):
+def test_logreg_fit_separates_and_regimes_agree(spark, tmp_path):
     from exon_spark.operators import (
         logreg_classifier_fit,
         logreg_classifier_score,
@@ -356,9 +378,11 @@ def test_logreg_fit_separates_and_regimes_agree(spark):
             (13, "\tweird  spacing nbsp", None),
         ],
     )
-    a = sorted(map(tuple, logreg_classifier_score(held, model, meta, mode="join").collect()))
-    b = sorted(map(tuple, logreg_classifier_score(held, model, meta, mode="udf").collect()))
-    assert a == b
+    a = sorted(map(tuple, logreg_classifier_score(held, model, meta).collect()))
+    b, _ = _streamed(
+        spark, held, lambda s: logreg_classifier_score(s, model, meta), tmp_path
+    )
+    assert a == sorted(map(tuple, b))
 
 
 def test_logreg_fit_single_class_raises(spark):
@@ -367,18 +391,11 @@ def test_logreg_fit_single_class_raises(spark):
     df = _docs(spark, [(1, "only positives", True), (2, "more pos", True)])
     with pytest.raises(ValueError, match="both"):
         logreg_classifier_fit(df, buckets=1024)
-    with pytest.raises(ValueError, match="mode"):
-        from exon_spark.operators import logreg_classifier_score
-
-        model, meta = None, {"intercept": 0.0, "buckets": 4}
-        import pyspark.sql.functions as F  # noqa: F401
-
-        logreg_classifier_score(df, df, meta, mode="nope")
 
 
-def test_logreg_score_plan_broadcasts_model(spark):
-    """Join regime: ONE BroadcastHashJoin on the model, no corpus-side
-    rejoin; udf regime: map-only (no Exchange at all)."""
+def test_logreg_score_plan_broadcasts_model(spark, tmp_path):
+    """Batch input: ONE BroadcastHashJoin on the model, no corpus-side
+    rejoin; streaming input: map-only (no Exchange at all)."""
     from exon_spark.operators import (
         logreg_classifier_fit,
         logreg_classifier_score,
@@ -387,18 +404,15 @@ def test_logreg_score_plan_broadcasts_model(spark):
     df = _docs(spark, LR_SEED_ROWS)
     model, meta = logreg_classifier_fit(df, buckets=4096, max_iter=20)
     plan = (
-        logreg_classifier_score(df, model, meta, mode="join")
+        logreg_classifier_score(df, model, meta)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "BroadcastHashJoin" in plan
     assert plan.count("BroadcastHashJoin") == 1
-    uplan = (
-        logreg_classifier_score(df, model, meta, mode="udf")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    _, uplan = _streamed(
+        spark, df, lambda s: logreg_classifier_score(s, model, meta), tmp_path
     )
     assert "ArrowEvalPython" in uplan and "Exchange" not in uplan
 

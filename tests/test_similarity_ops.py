@@ -35,6 +35,24 @@ def test_cosine_topk_blas_regime_parity(spark):
         .toString()
     )
     assert "MapInPandas" in plan
+    # no queries: both regimes return the same empty frame
+    none = q.filter(F.lit(False))
+    for n_rows in (None, 1 << 20):
+        out = cosine_topk(em, none, k=5, n_rows=n_rows)
+        assert out.collect() == []
+        assert out.schema == cosine_topk(em, none, k=5).schema
+    # string ids keep their type in both regimes
+    sem = em.select(
+        F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("vec_id"),
+        "embedding",
+    )
+    sq = sem.filter(F.col("vec_id").isin([f"v{i}" for i in range(8)]))
+    s_expr = cosine_topk(sem, sq, k=5)
+    s_blas = cosine_topk(sem, sq, k=5, n_rows=1 << 20)
+    assert s_expr.schema == s_blas.schema
+    assert sorted(map(tuple, s_expr.collect())) == sorted(
+        map(tuple, s_blas.collect())
+    )
 
 
 def test_ivf_ann_topk(spark):
@@ -217,16 +235,8 @@ def test_ngram_jaccard_stop_shingle_cap(spark):
         for r in ngram_jaccard_pairs(df, threshold=0.3, max_shingle_df=1).collect()
     }
     assert tight <= exact
-    # r13 (ADVICE r12): broadcast_dfreq=False (AQE-planned dfreq join for
-    # boilerplate-heavy shards) and the forced-regime n_rows (count-gated
-    # materialization) are output-identical
-    nohint = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in ngram_jaccard_pairs(
-            df, threshold=0.3, broadcast_dfreq=False
-        ).collect()
-    }
-    assert nohint == exact
+    # the forced-regime n_rows (count-gated materialization) is
+    # output-identical
     forced = {
         (r.doc_a, r.doc_b, r.jaccard)
         for r in ngram_jaccard_pairs(
@@ -460,7 +470,7 @@ def test_ngram_containment_prefilter_regimes_agree(spark):
     """The df>=2 broadcast pre-filter (r12 scale regime) is exact: it
     only drops join rows that cannot produce a pair, so both regimes —
     and their composition with hashed keys and the hot-shingle cap —
-    emit identical rows. n_rows forces the auto switch deterministically
+    emit identical rows. n_rows forces the regime deterministically
     regardless of the fixture's physical layout."""
     from exon_spark.operators import ngram_containment_pairs
 
@@ -479,20 +489,21 @@ def test_ngram_containment_prefilter_regimes_agree(spark):
             for r in ngram_containment_pairs(df, threshold=0.3, **kw).collect()
         }
 
-    base = run(prefilter=False)
+    base = run(n_rows=4)  # latency regime: no prefilter
     assert base  # fixture yields pairs
-    assert run(prefilter=True) == base
-    assert run(n_rows=1 << 20) == base  # auto -> scale regime
-    assert run(n_rows=4) == base  # auto -> latency regime
-    capped = run(prefilter=False, max_shingle_df=2, hashed=True)
-    assert run(prefilter=True, max_shingle_df=2, hashed=True) == capped
+    assert run(n_rows=1 << 20) == base  # scale regime: prefilter
+    assert run() == base
+    capped = run(n_rows=4, max_shingle_df=2, hashed=True)
+    assert run(n_rows=1 << 20, max_shingle_df=2, hashed=True) == capped
+
+
+_VECTORS_SCALE = 1 << 20  # n_rows hint above the vectors floor
 
 
 def test_semantic_dedup_assignment_regimes_agree(spark):
-    """The numpy closure argmax ('udf', the beyond-broadcast scale path)
-    must produce the same cluster assignment — and therefore the same
-    pair set — as the oracle-exact expression argmax on the real
-    embeddings fixture."""
+    """The scale regime's numpy closure argmax must produce the same
+    cluster assignment — and therefore the same pair set — as the
+    oracle-exact expression argmax on the real embeddings fixture."""
     from exon_spark.operators.similarity import semantic_dedup
     from exon_spark.queries.base import table
 
@@ -505,7 +516,7 @@ def test_semantic_dedup_assignment_regimes_agree(spark):
     )
     both = emb.unionAll(planted)
     expr = semantic_dedup(both, n_clusters=16, threshold=0.8)
-    udf = semantic_dedup(both, n_clusters=16, threshold=0.8, assignment="udf")
+    udf = semantic_dedup(both, n_clusters=16, threshold=0.8, n_rows=_VECTORS_SCALE)
     e = {(r.cluster_id, r.id_a, r.id_b) for r in expr.collect()}
     u = {(r.cluster_id, r.id_a, r.id_b) for r in udf.collect()}
     assert e == u and len(e) > 0
@@ -535,7 +546,7 @@ def test_semantic_dedup_assignment_regimes_agree_on_ties(spark):
     )
     for k in (2, 4, 7):
         expr = semantic_dedup(df, n_clusters=k, threshold=-1.0)
-        udf = semantic_dedup(df, n_clusters=k, threshold=-1.0, assignment="udf")
+        udf = semantic_dedup(df, n_clusters=k, threshold=-1.0, n_rows=_VECTORS_SCALE)
         e = sorted((r.cluster_id, r.id_a, r.id_b) for r in expr.collect())
         u = sorted((r.cluster_id, r.id_a, r.id_b) for r in udf.collect())
         assert e == u, (k, e, u)
@@ -545,19 +556,19 @@ def test_semantic_dedup_assignment_regimes_agree_on_ties(spark):
             [(101, [0.0, 0.0, 0.0])], "vec_id bigint, embedding array<double>"
         )
     )
-    for mode in ("expr", "udf"):
+    for n_rows in (None, _VECTORS_SCALE):
         with pytest.raises(Exception, match="DIVIDE_BY_ZERO|zero-norm"):
             semantic_dedup(
-                withzero, n_clusters=2, threshold=-1.0, assignment=mode
+                withzero, n_clusters=2, threshold=-1.0, n_rows=n_rows
             ).collect()
 
 
 def test_semantic_dedup_grouped_pairs_parity(spark):
-    """r11: ``pairs="grouped"`` (per-cluster BLAS matmul via
-    applyInPandas — the beyond-sf10 scale regime that replaced the
+    """r11: the scale regime's grouped pairs (per-cluster BLAS matmul
+    via applyInPandas — the beyond-sf10 spelling that replaced the
     TB-class expr pair stream at the sf100 probe) must reproduce the
-    oracle-exact expr pair set INCLUDING 6-dp scores, under both
-    assignment regimes and any input partitioning."""
+    oracle-exact expr pair set INCLUDING 6-dp scores, under any input
+    partitioning."""
     from exon_spark.operators.similarity import semantic_dedup
     from exon_spark.queries.base import table
 
@@ -571,20 +582,18 @@ def test_semantic_dedup_grouped_pairs_parity(spark):
     expr = sorted(
         map(tuple, semantic_dedup(both, n_clusters=16, threshold=0.8).collect())
     )
-    for assignment in ("expr", "udf"):
-        got = sorted(
-            map(
-                tuple,
-                semantic_dedup(
-                    both.repartition(7),
-                    n_clusters=16,
-                    threshold=0.8,
-                    pairs="grouped",
-                    assignment=assignment,
-                ).collect(),
-            )
+    got = sorted(
+        map(
+            tuple,
+            semantic_dedup(
+                both.repartition(7),
+                n_clusters=16,
+                threshold=0.8,
+                n_rows=_VECTORS_SCALE,
+            ).collect(),
         )
-        assert got == expr and len(got) > 0, assignment
+    )
+    assert got == expr and len(got) > 0
 
 
 def test_semantic_dedup_grouped_pairs_row_blocking(spark, monkeypatch):
@@ -598,22 +607,26 @@ def test_semantic_dedup_grouped_pairs_row_blocking(spark, monkeypatch):
     one = sorted(
         map(
             tuple,
-            sim.semantic_dedup(df, n_clusters=3, threshold=0.9, pairs="grouped").collect(),
+            sim.semantic_dedup(
+                df, n_clusters=3, threshold=0.9, n_rows=_VECTORS_SCALE
+            ).collect(),
         )
     )
     monkeypatch.setattr(sim, "_PAIR_BLOCK_DOUBLES", 1)
     blocked = sorted(
         map(
             tuple,
-            sim.semantic_dedup(df, n_clusters=3, threshold=0.9, pairs="grouped").collect(),
+            sim.semantic_dedup(
+                df, n_clusters=3, threshold=0.9, n_rows=_VECTORS_SCALE
+            ).collect(),
         )
     )
     assert blocked == one and len(one) > 0
 
 
 def test_semantic_dedup_grouped_guards_and_plan(spark):
-    """Zero-norm embeddings raise loudly in the grouped regime too, bad
-    ``pairs`` values raise, and the udf+grouped plan is the minimal
+    """Zero-norm embeddings raise loudly in the grouped regime too, and
+    the scale regime's udf+grouped plan is the minimal
     SemDeDup shape: ONE corpus shuffle (the cluster_id exchange feeding
     FlatMapGroupsInPandas), no joins, no second exchange."""
     import pytest
@@ -625,16 +638,14 @@ def test_semantic_dedup_grouped_guards_and_plan(spark):
         [(0, [1.0, 0.0]), (1, [0.0, 0.0])], "vec_id bigint, embedding array<double>"
     )
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO|zero-norm"):
-        semantic_dedup(df, n_clusters=1, threshold=-1.0, pairs="grouped").collect()
-    with pytest.raises(ValueError, match="pairs"):
-        semantic_dedup(df, n_clusters=1, pairs="bogus")
+        semantic_dedup(
+            df, n_clusters=1, threshold=-1.0, n_rows=_VECTORS_SCALE
+        ).collect()
 
     emb = table(spark, "/root/testdata/sf0.01", "embeddings").select(
         "vec_id", "embedding"
     )
-    out = semantic_dedup(
-        emb, n_clusters=16, threshold=0.8, pairs="grouped", assignment="udf"
-    )
+    out = semantic_dedup(emb, n_clusters=16, threshold=0.8, n_rows=_VECTORS_SCALE)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "FlatMapGroupsInPandas" in plan
@@ -642,8 +653,8 @@ def test_semantic_dedup_grouped_guards_and_plan(spark):
 
 
 def test_semantic_dedup_auto_regime_switch(spark, monkeypatch):
-    """The "auto" regime defaults keep sub-threshold corpora on the
-    oracle-exact expr paths and switch big ones to udf+grouped — and the
+    """The size regime keeps sub-threshold corpora on the oracle-exact
+    expr paths and switches big ones to udf+grouped — and the
     switch is result-invariant on the fixture (the parity the scale
     regimes are pinned to)."""
     import exon_spark.operators.similarity as sim
@@ -789,41 +800,15 @@ def test_semantic_decontaminate_hand_computed(spark):
     eval_df = _vec_rows(
         spark, [(100, [1.0, 0.0, 0.0]), (101, [0.0, 0.0, -1.0])]
     )
-    for mode in ("expr", "udf"):
-        out = {
-            r["vec_id"]: r
-            for r in semantic_decontaminate(
-                corpus, eval_df, threshold=0.9, mode=mode
-            ).collect()
-        }
-        assert out[1]["max_eval_cos"] == 1.0 and out[1]["contaminated"]
-        assert out[2]["max_eval_cos"] == 0.0 and not out[2]["contaminated"]
-        assert out[3]["max_eval_cos"] == 1.0 and out[3]["contaminated"]
-        assert out[4]["max_eval_cos"] == pytest.approx(0.707107)
-        assert not out[4]["contaminated"]
-
-
-def test_semantic_decontaminate_regimes_agree(spark):
-    import random
-
-    from exon_spark.operators import semantic_decontaminate
-
-    rng = random.Random(17)
-    corpus = _vec_rows(
-        spark,
-        [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(60)],
-    )
-    eval_df = _vec_rows(
-        spark,
-        [(900 + i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(7)],
-    )
-    a = sorted(
-        semantic_decontaminate(corpus, eval_df, mode="expr").collect()
-    )
-    b = sorted(
-        semantic_decontaminate(corpus, eval_df, mode="udf").collect()
-    )
-    assert a == b
+    out = {
+        r["vec_id"]: r
+        for r in semantic_decontaminate(corpus, eval_df, threshold=0.9).collect()
+    }
+    assert out[1]["max_eval_cos"] == 1.0 and out[1]["contaminated"]
+    assert out[2]["max_eval_cos"] == 0.0 and not out[2]["contaminated"]
+    assert out[3]["max_eval_cos"] == 1.0 and out[3]["contaminated"]
+    assert out[4]["max_eval_cos"] == pytest.approx(0.707107)
+    assert not out[4]["contaminated"]
 
 
 def test_semantic_decontaminate_duckdb_oracle_parity(spark):
@@ -893,29 +878,12 @@ def test_semantic_decontaminate_guards(spark):
 
     corpus = _vec_rows(spark, [(1, [1.0, 0.0])])
     empty = _vec_rows(spark, [])
-    for mode in ("expr", "udf"):
-        with pytest.raises(ValueError, match="empty eval set"):
-            semantic_decontaminate(corpus, empty, mode=mode)
-    with pytest.raises(ValueError, match="mode must be"):
-        semantic_decontaminate(corpus, corpus, mode="bogus")
-    # zero-norm eval vector raises at plan/factory time (udf) or job time (expr)
+    with pytest.raises(ValueError, match="empty eval set"):
+        semantic_decontaminate(corpus, empty)
+    # a zero-norm eval vector raises when the job runs
     zero_eval = _vec_rows(spark, [(9, [0.0, 0.0])])
-    with pytest.raises(ArithmeticError):
-        semantic_decontaminate(corpus, zero_eval, mode="udf")
-
-
-def test_semantic_decontaminate_udf_plan_no_corpus_shuffle(spark):
-    from exon_spark.operators import semantic_decontaminate
-
-    corpus = _vec_rows(spark, [(i, [1.0, float(i)]) for i in range(10)])
-    eval_df = _vec_rows(spark, [(99, [1.0, 1.0])])
-    plan = (
-        semantic_decontaminate(corpus, eval_df, mode="udf")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan  # map-only: no shuffle of the corpus
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        semantic_decontaminate(corpus, zero_eval).collect()
 
 
 def test_quantize_embeddings_roundtrip_and_schema(spark):
@@ -1066,51 +1034,6 @@ def test_keep_best_partitioning_invariant(spark):
         )
     )
     assert a == b
-
-
-def test_embedding_cosine_dups_pq_verify(spark):
-    """r11: ``verify="pq"`` (the SDC code prefilter in front of the
-    exact vector verify — the documented 100 TB rung) must reproduce the
-    exact pair set AND bit-true scores on the real fixture at both a
-    tight and a loose threshold: survivors re-verify with the identical
-    cosine fold, so only boundary recall could differ — and the
-    normalized reconstruction-cosine approximation keeps it at 1.0 here.
-    Exact duplicates share codes (approx == 1.0) and are structurally
-    always kept. A pre-fit codebook short-circuits the auto fit."""
-    from exon_spark.operators.pq import pq_fit
-    from exon_spark.operators.similarity import embedding_cosine_dups
-    from exon_spark.queries.base import table
-
-    emb = table(spark, "/root/testdata/sf0.01", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    planted = emb.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 1_000_000_000).alias("vec_id"), "embedding"
-    )
-    both = emb.unionAll(planted)
-    for t in (0.95, 0.8):
-        exact = sorted(map(tuple, embedding_cosine_dups(both, threshold=t).collect()))
-        pq = sorted(
-            map(tuple, embedding_cosine_dups(both, threshold=t, verify="pq").collect())
-        )
-        assert pq == exact and len(pq) > 0, t
-    # pre-fit codebook path + bad verify value
-    cb = pq_fit(both, id_col="vec_id", vec_col="embedding")
-    pre = sorted(
-        map(
-            tuple,
-            embedding_cosine_dups(
-                both, threshold=0.95, verify="pq", pq_codebook=cb
-            ).collect(),
-        )
-    )
-    assert pre == sorted(
-        map(tuple, embedding_cosine_dups(both, threshold=0.95).collect())
-    )
-    import pytest
-
-    with pytest.raises(ValueError, match="verify"):
-        embedding_cosine_dups(both, verify="bogus")
 
 
 def test_embedding_cosine_dups_auto_band_width(spark):

@@ -141,9 +141,10 @@ def test_dup_ngram_coverage_union_of_overlapping_windows(spark):
 
 
 def test_dup_ngram_coverage_scale_knobs(spark):
-    """hashed=True must be value-identical (8-byte xxhash64 shuffle key in
-    the plan); max_gram_df drops corpus-level stop-grams from coverage."""
-    from exon_spark.operators import dup_ngram_coverage
+    """The hashed-key regime (forced with n_rows) must be value-identical
+    (8-byte xxhash64 shuffle key in the plan); max_gram_df drops
+    corpus-level stop-grams from coverage."""
+    from exon_spark.operators import dup_ngram_coverage, regime
 
     rows = [
         (1, "p q r s t"),
@@ -152,7 +153,9 @@ def test_dup_ngram_coverage_scale_knobs(spark):
         (4, "p q r x y"),   # (p q r) now in 3 docs
     ]
     base = dup_ngram_coverage(_docs(spark, rows), n=3)
-    hashed = dup_ngram_coverage(_docs(spark, rows), n=3, hashed=True)
+    hashed = dup_ngram_coverage(
+        _docs(spark, rows), n=3, n_rows=regime.FLOORS["hashed_grams"] + 1
+    )
     assert sorted(map(tuple, base.collect())) == sorted(
         map(tuple, hashed.collect())
     )
@@ -163,7 +166,7 @@ def test_dup_ngram_coverage_scale_knobs(spark):
 
     plan = hashed._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"gram_k#\d+L", plan), (
-        "hashed mode must shuffle 8-byte bigint gram keys"
+        "the hashed regime must shuffle 8-byte bigint gram keys"
     )
     # cap at df<=2: the df=3 gram (p q r) stops counting toward coverage
     capped = {
@@ -181,9 +184,9 @@ def test_dup_ngram_coverage_scale_knobs(spark):
 
 
 def test_dup_ngram_coverage_auto_hash_switch(spark, monkeypatch):
-    """r11: ``hashed="auto"`` (the default) keeps string gram keys below
-    the document threshold — bit-identical plans to hashed=False — and
-    switches to 8-byte xxhash64 keys above it, value-identically."""
+    """r11: the ``hashed_grams`` regime keeps string gram keys below the
+    document threshold and switches to 8-byte xxhash64 keys above it,
+    value-identically."""
     import re
 
     import exon_spark.operators.dedup as dd
@@ -198,15 +201,11 @@ def test_dup_ngram_coverage_auto_hash_switch(spark, monkeypatch):
     monkeypatch.setitem(regime.FLOORS, "hashed_grams", 1)
     big = dd.dup_ngram_coverage(_docs(spark, rows), n=3)
     assert sorted(map(tuple, big.collect())) == base
-    import pytest
-
-    with pytest.raises(ValueError, match="hashed"):
-        dd.dup_ngram_coverage(_docs(spark, rows), n=3, hashed="bogus")
 
 
 def test_dup_ngram_coverage_caller_cardinality_skips_count(spark):
     """r12 (VERDICT r11 next #6): n_rows= supplies the corpus size so
-    hashed="auto" skips its count() job — pinned by poisoning df.count;
+    the gram-key regime skips its count() job — pinned by poisoning df.count;
     the regime pick still honors the supplied cardinality."""
     import re
 
@@ -669,12 +668,6 @@ def test_tfidf_keywords_hand_computed(spark):
     scale = tfidf_keywords(_docs(spark, rows), k=2, n_rows=1 << 20).collect()
     key = lambda r: (r.doc_id, r.term, r.tf, r.score, r.rank)  # noqa: E731
     assert sorted(map(key, scale)) == sorted(map(key, out))
-    # r13 (ADVICE r12): broadcast_vocab=False keeps the scale-regime plan
-    # but leaves the vocab join to AQE — identical rows
-    nohint = tfidf_keywords(
-        _docs(spark, rows), k=2, n_rows=1 << 20, broadcast_vocab=False
-    ).collect()
-    assert sorted(map(key, nohint)) == sorted(map(key, out))
 
 
 def test_token_budget_cap_approximate_mode(spark):
@@ -797,26 +790,6 @@ def test_line_dedup_boilerplate_golden(spark):
     assert set(keep_all) == {1, 2, 3, 4}
     assert keep_all[3].text == f"{nav}\n{foot}"
     assert keep_all[3].n_kept == 2
-
-
-def test_line_dedup_hashed_and_shuffle_anti_parity(spark):
-    """hashed=True (8-byte xxhash64 keys) and broadcast_hot=False (shuffle
-    anti join) must both be value-identical to the default text-keyed
-    broadcast plan."""
-    from exon_spark.operators import line_dedup
-
-    rows = [
-        (i, "SHARED NAV\n" + f"body {i} line a\nbody {i} line b" + "\nSHARED FOOT")
-        for i in range(1, 9)
-    ] + [(9, "SHARED NAV\nSHARED FOOT"), (10, "only unique content")]
-    df = _docs(spark, rows)
-    base = sorted(map(tuple, line_dedup(df, min_df=2).collect()))
-    hashed = sorted(map(tuple, line_dedup(df, min_df=2, hashed=True).collect()))
-    shuffled = sorted(
-        map(tuple, line_dedup(df, min_df=2, broadcast_hot=False).collect())
-    )
-    assert base == hashed == shuffled
-    assert all(t[0] != 9 for t in base)  # all-boilerplate doc dropped
 
 
 def test_line_dedup_regex_special_separator(spark):
@@ -1089,9 +1062,9 @@ def test_remove_dup_spans_keeper_semantics(spark):
 
 def test_remove_dup_spans_fused_and_knob_parity(spark):
     """The standalone wrapper equals the fused dup_ngram_coverage
-    (remove=True) selection; hashed=True is value-identical; max_gram_df
-    exempts viral grams from removal too."""
-    from exon_spark.operators import dup_ngram_coverage, remove_dup_spans
+    (remove=True) selection; the hashed-key regime is value-identical;
+    max_gram_df exempts viral grams from removal too."""
+    from exon_spark.operators import dup_ngram_coverage, regime, remove_dup_spans
 
     shared = "p q r s"
     rows = [(i, f"doc{i} body {shared} end{i}") for i in range(1, 6)] + [
@@ -1107,7 +1080,16 @@ def test_remove_dup_spans_fused_and_knob_parity(spark):
             .collect(),
         )
     )
-    hashed = sorted(map(tuple, remove_dup_spans(df, n=4, hashed=True).collect()))
+    hashed = sorted(
+        map(
+            tuple,
+            dup_ngram_coverage(
+                df, n=4, remove=True, n_rows=regime.FLOORS["hashed_grams"] + 1
+            )
+            .select("doc_id", "text", "n_toks", "n_removed")
+            .collect(),
+        )
+    )
     assert stand == fused == hashed
     # the shared gram sits in 5 docs; capping df at 4 exempts it entirely
     capped = {
@@ -1408,8 +1390,8 @@ def test_bigram_logppl_model_side_python_only(spark):
 
 
 def test_lm_ladder_model_joins_broadcast_pinned(spark):
-    """The vocab-sized model tables (ctx, vocab) are broadcast-pinned by
-    default — left to AQE, the ctx join re-shuffles the whole
+    """The vocab-sized model tables (ctx, vocab) are broadcast-pinned —
+    left to AQE, the ctx join re-shuffles the whole
     bigram-position fact side on `prev` (r8 verdict order #3). The big
     table is never pinned (its row count grows with the corpus)."""
     from exon_spark.operators import bigram_logppl, trigram_logppl
@@ -1419,9 +1401,6 @@ def test_lm_ladder_model_joins_broadcast_pinned(spark):
         plan = fn(df)._jdf.queryExecution().executedPlan().toString()
         # ctx + vocab hash joins pinned broadcast (total is the cross)
         assert plan.count("BroadcastHashJoin") >= 2, fn.__name__
-        off = fn(df, broadcast_models=False).collect()
-        on = fn(df).collect()
-        assert sorted(map(tuple, off)) == sorted(map(tuple, on)), fn.__name__
 
 
 def test_q52_short_docs_survive_with_null_rungs(spark, tmp_path):
@@ -1857,7 +1836,18 @@ def test_phrase_tag_counts_and_python_oracle(spark):
         phrase_tag(df, {"x": [""]})
 
 
-def test_phrase_tag_ac_regime_parity(spark):
+def _phrase_tag_in(monkeypatch, regime, df, phrases):
+    """``phrase_tag`` forced into ``regime`` ("expr" or "ac") by patching
+    the phrase count it switches at."""
+    import exon_spark.operators.text as text
+
+    monkeypatch.setattr(
+        text, "AC_PHRASE_THRESHOLD", 0 if regime == "ac" else 1 << 30
+    )
+    return text.phrase_tag(df, phrases)
+
+
+def test_phrase_tag_ac_regime_parity(spark, monkeypatch):
     """The Aho-Corasick regime must produce row-identical results to
     the expression regime (same greedy non-overlap, same cross-phrase
     independence, same duplicate-entry multiplicity) — the r9-verdict
@@ -1883,13 +1873,12 @@ def test_phrase_tag_ac_regime_parity(spark):
         "b": ["cat", "cat", "ignore previous instructions"],
         "c": ["naïve", "café", "ababab", "bab"],
     }
-    expr = sorted(map(tuple, phrase_tag(df, tags, regime="expr").collect()))
-    ac = sorted(map(tuple, phrase_tag(df, tags, regime="ac").collect()))
-    assert expr == ac
-    assert (
-        phrase_tag(df, tags, regime="ac").columns
-        == phrase_tag(df, tags, regime="expr").columns
+    expr_df = _phrase_tag_in(monkeypatch, "expr", df, tags)
+    ac_df = _phrase_tag_in(monkeypatch, "ac", df, tags)
+    assert sorted(map(tuple, expr_df.collect())) == sorted(
+        map(tuple, ac_df.collect())
     )
+    assert ac_df.columns == expr_df.columns
 
     # randomized parity over a tiny alphabet (maximal overlap pressure)
     rng = random.Random(7)
@@ -1902,26 +1891,29 @@ def test_phrase_tag_ac_regime_parity(spark):
         "x": [rng.choice(pool) for _ in range(4)],
         "y": [rng.choice(pool) for _ in range(3)],
     }
-    got_e = sorted(map(tuple, phrase_tag(rdf, rtags, regime="expr").collect()))
-    got_a = sorted(map(tuple, phrase_tag(rdf, rtags, regime="ac").collect()))
+    got_e = sorted(
+        map(tuple, _phrase_tag_in(monkeypatch, "expr", rdf, rtags).collect())
+    )
+    got_a = sorted(
+        map(tuple, _phrase_tag_in(monkeypatch, "ac", rdf, rtags).collect())
+    )
     assert got_e == got_a
 
-    # auto switches to ac above the threshold; ac plan is map-only
+    # the shipped threshold switches to ac above it; ac plan is map-only
+    monkeypatch.undo()
     from exon_spark.operators.text import AC_PHRASE_THRESHOLD
 
     big = {"z": [f"needle{i} x" for i in range(AC_PHRASE_THRESHOLD + 1)]}
     plan = (
-        phrase_tag(df, big)  # auto -> ac
+        phrase_tag(df, big)  # -> ac
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "ArrowEvalPython" in plan and "Exchange" not in plan
-    with pytest.raises(ValueError, match="regime"):
-        phrase_tag(df, tags, regime="nope")
 
 
-def test_phrase_tag_c_path_wrapper_contract(spark, tmp_path):
+def test_phrase_tag_c_path_wrapper_contract(spark, tmp_path, monkeypatch):
     """Execute the pyahocorasick branch of _phrase_tag_ac WITHOUT the C
     library (r12, VERDICT r11 next #7 / ADVICE: the branch shipped with
     its sole parity test never having run in this container). A minimal
@@ -1960,7 +1952,6 @@ def test_phrase_tag_c_path_wrapper_contract(spark, tmp_path):
         "                    yield (i, v)\n"
     )
     spark.sparkContext.addPyFile(str(stub))
-    from exon_spark.operators.text import phrase_tag
 
     docs = spark.createDataFrame(
         [
@@ -1976,8 +1967,12 @@ def test_phrase_tag_c_path_wrapper_contract(spark, tmp_path):
         "greek": ["alpha beta", "gamma", "beta"],
         "nest": ["aba", "ababa"],
     }
-    got = sorted(map(tuple, phrase_tag(docs, phrases, regime="ac").collect()))
-    exp = sorted(map(tuple, phrase_tag(docs, phrases, regime="expr").collect()))
+    got = sorted(
+        map(tuple, _phrase_tag_in(monkeypatch, "ac", docs, phrases).collect())
+    )
+    exp = sorted(
+        map(tuple, _phrase_tag_in(monkeypatch, "expr", docs, phrases).collect())
+    )
     assert got == exp
     # prove the C-path branch actually ran (not the pure-Python fallback):
     # a worker-side import of the shipped stand-in must succeed
@@ -1987,7 +1982,7 @@ def test_phrase_tag_c_path_wrapper_contract(spark, tmp_path):
     assert probe == ["ahocorasick"]
 
 
-def test_phrase_tag_c_automaton_parity(spark):
+def test_phrase_tag_c_automaton_parity(spark, monkeypatch):
     """Parity pin for the optional pyahocorasick C fast path inside
     _phrase_tag_ac (r11). Skipped when the library is absent (this
     container): the pure-Python automaton then serves the scan and is
@@ -2000,7 +1995,6 @@ def test_phrase_tag_c_automaton_parity(spark):
             "only the wrapper-contract stand-in is importable (leaked into "
             "the driver path by addPyFile) — the REAL C extension is absent"
         )
-    from exon_spark.operators.text import phrase_tag
 
     docs = spark.createDataFrame(
         [
@@ -2016,8 +2010,12 @@ def test_phrase_tag_c_automaton_parity(spark):
         "greek": ["alpha beta", "gamma", "beta"],
         "nest": ["aba", "ababa"],
     }
-    got = sorted(map(tuple, phrase_tag(docs, phrases, regime="ac").collect()))
-    exp = sorted(map(tuple, phrase_tag(docs, phrases, regime="expr").collect()))
+    got = sorted(
+        map(tuple, _phrase_tag_in(monkeypatch, "ac", docs, phrases).collect())
+    )
+    exp = sorted(
+        map(tuple, _phrase_tag_in(monkeypatch, "expr", docs, phrases).collect())
+    )
     assert got == exp
 
 
