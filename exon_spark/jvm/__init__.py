@@ -15,11 +15,13 @@
   exon_spark.sources.jvm_fast.read_dsv2);
 - exonspark.spark.FastqSource — the DataSourceV2 reader of local FASTQ
   files (plain, gzip/BGZF, zstd), one partition per file;
+- exonspark.spark.FastaSource — the DataSourceV2 reader of local FASTA
+  files over planned byte ranges, opening files with FastqSource.open;
 - exonspark.spark.CoordPredicates — the predicates VcfBgzfSource and
   BamBgzfSource consume at scan time (SupportsPushDownV2Filters);
 - exonspark.spark.DriverCalls — the driver's one-round-trip entry points
   (driver_call): loading a DataSourceV2 reader with its specs
-  (read_dsv2) and binding a region statement's tables to their
+  (read_dsv2, read_fasta_dsv2) and binding a region statement's tables to their
   region-bound frames (ExonSession.sql).
 
 The jar is committed so all of these work without a JDK. It carries a

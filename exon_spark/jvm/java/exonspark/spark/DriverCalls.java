@@ -56,6 +56,27 @@ public final class DriverCalls {
             .option("partitions", partitions)
             .option("regions", regions)
             .load();
+    return project(df, columns);
+  }
+
+  /**
+   * The FastaSource reader over its "partitions" and "partition_columns"
+   * options (exon_spark.sources.jvm_fast.read_fasta_dsv2 writes both),
+   * projected to the ','-separated {@code columns}; every column when empty.
+   */
+  public static Dataset<Row> readFasta(
+      SparkSession session, String partitions, String partitionColumns, String columns) {
+    Dataset<Row> df =
+        session
+            .read()
+            .format(FastaSource.class.getName())
+            .option("partitions", partitions)
+            .option("partition_columns", partitionColumns)
+            .load();
+    return project(df, columns);
+  }
+
+  private static Dataset<Row> project(Dataset<Row> df, String columns) {
     if (columns.isEmpty()) {
       return df;
     }

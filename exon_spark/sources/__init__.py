@@ -7,10 +7,12 @@ Three tiers, each Spark-first:
   ``spark.dataSource.register`` so ``spark.read.format("fasta")`` and
   ``CREATE TABLE ... USING fasta`` work;
 * JVM readers (``jvm_fast``) that ``read_format`` picks when the options
-  allow: Column expressions over ``spark.read.text``/``csv`` for plain
-  FASTA/VCF scans and mzML metadata, and Java DataSourceV2 readers for
-  indexed VCF regions, local BAM and local FASTQ (files or directories
-  without hive partitions) — same schemas and rows, no Python worker;
+  allow: Java DataSourceV2 readers for local FASTA (files, directories
+  and globs, hive partitions too), local FASTQ (without hive
+  partitions), indexed VCF regions and local BAM, and Column expressions
+  over ``spark.read.text``/``csv`` for FASTA on Hadoop-native object
+  stores, plain VCF scans and mzML metadata — same schemas, rows and
+  ``columns`` projection, no Python worker;
 * tabular formats (GFF, GTF, BED, HMMDOMTAB) — pure ``spark.read.csv``/text
   + Column expressions (JVM-side parsing, no Python in the data path).
 
@@ -24,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import CaseInsensitiveDict
 
 from exon_spark.sources.tabular import TABULAR_READERS
+from exon_spark.sources.util import default_parallelism
 
 _DATASOURCES = None
 
@@ -125,9 +128,7 @@ def read_format(spark: SparkSession, fmt: str, path: str, **options) -> DataFram
     register_sources(spark)
     # let planners size index-chunk / byte-range splits to the cluster
     # (plan_partitions runs in a sessionless worker and can't ask Spark)
-    options.setdefault(
-        "target_parallelism", spark.sparkContext.defaultParallelism
-    )
+    options.setdefault("target_parallelism", default_parallelism(spark))
     options = {k: str(v) for k, v in options.items()}
     reader = spark.read.format(fmt).options(**options)
     cls = source_class(fmt)

@@ -10,6 +10,15 @@ Scale behavior matches the reference: uncompressed FASTA splits by byte
 range (boundary-aligned on the next '>' header), so a single large file
 parallelizes across executors; gzip input is one partition per file
 (non-splittable — same cap as the reference's parallel-scan benchmark).
+
+``read_format`` serves local files, directories and globs through the
+Java DataSourceV2 ``exonspark.spark.FastaSource`` instead (jvm_fast),
+over the partitions ``plan_partitions`` plans, with the rows of
+``read_arrow_partition``. This class still serves
+``spark.read.format("fasta")``, streaming, object stores other than the
+Hadoop-native ones, ``.fai`` region reads, ``sequence_data_type``,
+``file_extension`` and a ``compression`` that disagrees with the
+extension.
 """
 
 from __future__ import annotations
@@ -117,7 +126,7 @@ class FastaSource(FileFormatSource):
         target = adaptive_target_bytes(
             f.size, par or 16, floor=1 << 20, ceil=SPLIT_BYTES
         )
-        n = max(1, f.size // target)
+        n = -(-f.size // target)
         step = (f.size + n - 1) // n
         return [
             FilePartition(f.path, comp, pv, start=off, end=min(off + step, f.size))
@@ -128,10 +137,10 @@ class FastaSource(FileFormatSource):
     def read_arrow_partition(cls, partition: FilePartition, options: dict, schema):
         """Vectorized plain-text scan: frame the whole byte range with
         C-speed ``bytes.split``/``replace`` and build Arrow arrays directly
-        — no per-record Python parse, no per-line readline. ~10x the
-        throughput of the row path and faster per byte than the JVM
-        lineSep text reader (~27 MB/s/thread measured — the reference's
-        Rust memchr framing is the bar, exon-fasta/src/batch_reader.rs).
+        — no per-record Python parse, no per-line readline; ~10x the
+        throughput of the row path. ``read_format`` serves local files
+        with the Java ``FastaSource`` instead, which gives these rows
+        (jvm_fast.read_fasta_dsv2).
         Returns None (generic row path) for indexed/encoded scans;
         gzip/bgzf/zstd whole-file partitions decompress then frame the
         same way (zlib / pyarrow-zstd are C-speed; the stream is

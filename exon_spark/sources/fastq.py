@@ -8,12 +8,12 @@ parallelism. Within a file the scan is vectorized: lines split at C speed
 and build Arrow arrays directly (``read_arrow_partition``), with the
 per-record path kept as the fallback for option-rich scans.
 
-``read_format`` serves local files and directories through the Java
-DataSourceV2 ``exonspark.spark.FastqSource`` instead (jvm_fast), which
-gives the rows and errors of ``read_arrow_partition``. This class still
-serves ``spark.read.format("fastq")``, streaming, the ``fastq_scan``
-table function, and the reads the JVM reader does not take: globs,
-object stores, hive partition values, ``file_extension`` and a
+``read_format`` serves local files, directories and globs through the
+Java DataSourceV2 ``exonspark.spark.FastqSource`` instead (jvm_fast),
+which gives the rows and errors of ``read_arrow_partition``. This class
+still serves ``spark.read.format("fastq")``, streaming, the
+``fastq_scan`` table function, and the reads the JVM reader does not
+take: object stores, hive partition values, ``file_extension`` and a
 ``compression`` that disagrees with the extension.
 """
 

@@ -9,8 +9,18 @@ automatically when no Python-only option is requested. Schemas and rows
 are identical to the DataSource's, so callers can't tell which path
 served them.
 
-* Plain FASTA/VCF scans and mzML metadata projections are Column
-  expressions over ``spark.read.text`` / ``spark.read.csv`` —
+* Local FASTA files, directories and globs go to the Java DataSourceV2
+  ``FastaSource`` (``read_fasta_dsv2``): the driver lists the files with
+  the Python ``FastaSource._files()`` and plans them with its
+  ``plan_partitions`` (byte ranges of plain files above 1 MB, one
+  partition per gzip/BGZF/zstd file), and one JVM call loads the reader.
+  Executors frame records at line-start '>' and decode only the columns
+  Catalyst requires. ``file_extension``, ``regions``,
+  ``sequence_data_type`` and a ``compression`` that disagrees with a
+  file's extension stay on the Python DataSource.
+* FASTA on Hadoop-native object stores (``s3a``, ``gs``, ``hdfs``,
+  ``abfss``, ``wasbs``), plain VCF scans and mzML metadata projections
+  are Column expressions over ``spark.read.text`` / ``spark.read.csv`` —
   whole-stage-codegen'd and Arrow-free. gzip input is decompressed by the
   JVM codec; uncompressed and unindexed BGZF (``.bgz``) input splits by
   byte range, so a single large file fans out across executors
@@ -25,13 +35,15 @@ served them.
   partition spec the Java readers parse (tabular's ``BgzfLineSource``
   too). Executors inflate only the planned BGZF blocks and decode only
   the columns Catalyst requires.
-* Local FASTQ files and directories go to the Java DataSourceV2
+* Local FASTQ files, directories and globs go to the Java DataSourceV2
   ``FastqSource``, one partition per file listed by the Python
   ``FastqSource._files()``: plain, gzip/BGZF and zstd, with the rows and
-  errors of the Python reader. Globs, object stores, hive partition
-  values, ``file_extension`` and a ``compression`` that disagrees with a
-  file's extension stay on the Python DataSource, as do streaming and
-  the ``fastq_scan`` table function.
+  errors of the Python reader. Object stores, hive partition values,
+  ``file_extension`` and a ``compression`` that disagrees with a file's
+  extension stay on the Python DataSource, as do streaming and the
+  ``fastq_scan`` table function.
+* Every route honours the ``columns`` option as the Python DataSources
+  do (``_projection``).
 """
 
 from __future__ import annotations
@@ -39,14 +51,24 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from exon_spark.sources.util import default_parallelism
+
 
 def _partition_cols(df: DataFrame, data_col: str = "value") -> list[str]:
     return [c for c in df.columns if c != data_col]
 
 
-def read_fasta_jvm(spark: SparkSession, path: str) -> DataFrame:
-    """FASTA via lineSep='>': one text row per record, then pure Column
-    expressions (schema: id, description, sequence — config.rs:166-168).
+_FASTA_BASE_COLS = ("id", "description", "sequence")
+
+
+def read_fasta_jvm(spark: SparkSession, path: str, columns=None) -> DataFrame:
+    """FASTA on a Hadoop-native object store via lineSep='\\n>': one text
+    row per record, then pure Column expressions (schema: id, description,
+    sequence — config.rs:166-168), projected to ``columns``. Records split
+    at line-start '>' only, so a '>' inside a header is text; the first
+    record of a file keeps its '>', which is stripped. Unlike the Java
+    reader, text before a file's first header reads as a record, and a
+    record whose header starts with '>' loses that '>'.
 
     The record is parsed with instr/substring/replace on the raw buffer —
     no split-to-array — and the (header, sequence) pair is pinned behind an
@@ -54,8 +76,14 @@ def read_fasta_jvm(spark: SparkSession, path: str) -> DataFrame:
     projections reference the computed header instead of Catalyst inlining
     the substring chain into each (measured 30% faster than the
     split + array_join formulation)."""
-    txt = spark.read.option("lineSep", ">").text(path)
+    txt = spark.read.option("lineSep", "\n>").text(path)
     parts = _partition_cols(txt)
+    txt = txt.select(
+        F.when(F.startswith("value", F.lit(">")), F.expr("substring(value, 2)"))
+        .otherwise(F.col("value"))
+        .alias("value"),
+        *parts,
+    )
     hpos = F.instr("value", "\n")
     header = F.replace(
         F.when(hpos > 0, F.substring("value", F.lit(1), hpos - 1)).otherwise(
@@ -95,13 +123,13 @@ def read_fasta_jvm(spark: SparkSession, path: str) -> DataFrame:
         ).alias("description"),
         F.col("r.s").alias("sequence"),
         *[F.col(c).cast("string").alias(c) for c in parts],
-    )
+    ).select(*_projection(_FASTA_BASE_COLS + tuple(parts), columns))
 
 
-def read_vcf_jvm(spark: SparkSession, path: str) -> DataFrame:
+def read_vcf_jvm(spark: SparkSession, path: str, columns=None) -> DataFrame:
     """Flat VCF via the csv reader (tab sep, '#' comment lines skipped) +
-    Column expressions. Schema matches VcfSource.BASE_SCHEMA
-    (schema_builder.rs:88-122)."""
+    Column expressions, projected to ``columns``. Schema matches
+    VcfSource.BASE_SCHEMA (schema_builder.rs:88-122)."""
     df = (
         spark.read.option("sep", "\t")
         .option("comment", "#")
@@ -134,7 +162,7 @@ def read_vcf_jvm(spark: SparkSession, path: str) -> DataFrame:
     else:
         cols.append(F.lit(None).cast("string").alias("formats"))
     cols += [F.col(c).cast("string").alias(c) for c in parts]
-    return df.select(*cols)
+    return df.select(*cols).select(*_projection(_VCF_BASE_COLS + tuple(parts), columns))
 
 
 _VCF_BASE_COLS = (
@@ -233,7 +261,7 @@ def read_vcf_region_jvm(
     from exon_spark.sources.util import FoundFile
     from exon_spark.sources.vcf import VcfSource
 
-    opts = {"target_parallelism": spark.sparkContext.defaultParallelism}
+    opts = {"target_parallelism": default_parallelism(spark)}
     if regions:
         opts["regions"] = regions
     parts = VcfSource.plan_partitions(FoundFile(path, os.path.getsize(path)), opts)
@@ -299,7 +327,7 @@ def read_bam_jvm(spark: SparkSession, path: str, options: dict) -> DataFrame:
     from exon_spark.sources.util import FoundFile
 
     opts = dict(options)
-    opts.setdefault("target_parallelism", spark.sparkContext.defaultParallelism)
+    opts.setdefault("target_parallelism", default_parallelism(spark))
     parts = BamSource.plan_partitions(FoundFile(path, os.path.getsize(path)), opts)
     base = [n for n, _t in _split_ddl_fields(BamSource.BASE_SCHEMA)]
     return read_dsv2(
@@ -351,30 +379,28 @@ def read_fastq_jvm(spark: SparkSession, files, columns=None) -> DataFrame:
     return df.select(*_projection(_FASTQ_BASE_COLS, columns))
 
 
-def _fastq_jvm_route(path: str, options: dict, spark):
-    """Route a FASTQ read to the DataSourceV2 when ``path`` is a local file
-    or directory whose files ``FastqSource._files()`` lists without hive
-    partition values, with no ``file_extension`` and no ``compression``
-    that disagrees with a file's extension. Everything else (globs,
-    object stores, custom extensions) stays on the Python DataSource."""
-    import os
-
+def _local_files(source_cls, path: str, options: dict, spark):
+    """The files ``source_cls._files()`` lists for a read that a Java
+    DataSourceV2 reader can take: a local file, directory or glob, read
+    by a session that has the jar, with no ``file_extension`` and no
+    ``compression`` that disagrees with a file's extension. None for
+    every other read (object stores, a path that lists no file)."""
     if str(options.get("file_extension", "")).strip():
         return None
     from exon_spark.sources.fs import scheme_of
 
-    if scheme_of(path) is not None or not os.path.exists(path):
+    if scheme_of(path) is not None:
         return None
     from exon_spark.jvm import codec_active
 
     if spark is None or not codec_active(spark):
         return None
-    from exon_spark.sources.fastq import FastqSource
     from exon_spark.sources.util import detect_compression
 
-    files = FastqSource(options={"path": path})._files()
-    if any(f.partition_values or "\n" in f.path for f in files):
-        return None
+    try:
+        files = source_cls(options={"path": path})._files()
+    except FileNotFoundError:
+        return None  # the Python reader reports it
     comp = str(options.get("compression", "")).strip()
     if comp:
         try:
@@ -383,8 +409,70 @@ def _fastq_jvm_route(path: str, options: dict, spark):
                 return None
         except ValueError:
             return None  # the Python reader reports an unknown codec
+    return files
+
+
+def _fastq_jvm_route(path: str, options: dict, spark):
+    """Route a FASTQ read to the DataSourceV2 when ``_local_files`` takes
+    it and its files carry no hive partition values."""
+    from exon_spark.sources.fastq import FastqSource
+
+    files = _local_files(FastqSource, path, options, spark)
+    if files is None or any(f.partition_values or "\n" in f.path for f in files):
+        return None
     cols = options.get("columns")
     return lambda spark, p: read_fastq_jvm(spark, files, cols)
+
+
+def read_fasta_dsv2(spark: SparkSession, parts, partition_cols=(), columns=None) -> DataFrame:
+    """FASTA through the Java DataSourceV2 (exonspark.spark.FastaSource)
+    over planned partitions (``FastaSource.plan_partitions``: a byte
+    range of a plain file, or a whole compressed file). Each partition
+    becomes one line ``beg\\tend\\tpath\\tvalue...`` of the
+    ``partitions`` option (end -1 = end of file), with the path and the
+    values of ``partition_cols`` percent-encoded ("%" = null). One JVM call
+    (``DriverCalls.readFasta``) loads the reader and projects it to
+    ``columns``. Rows equal ``FastaSource.read_arrow_partition``'s, with
+    the partition values as string columns after the base three."""
+    from urllib.parse import quote
+
+    from exon_spark.jvm import driver_call
+
+    specs = []
+    for p in parts:
+        pv = dict(p.partition_values)
+        fields = [str(p.start), str(-1 if p.end is None else p.end), quote(p.path, safe="")]
+        fields += ["%" if pv.get(c) is None else quote(pv[c], safe="") for c in partition_cols]
+        specs.append("\t".join(fields))
+    jdf = driver_call(spark, "readFasta")(
+        spark._jsparkSession,
+        "\n".join(specs),
+        "\t".join(quote(c, safe="") for c in partition_cols),
+        ",".join(_projection(_FASTA_BASE_COLS + tuple(partition_cols), columns)),
+    )
+    return DataFrame(jdf, spark)
+
+
+def _fasta_jvm_route(path: str, options: dict, spark):
+    """Route a FASTA read to the DataSourceV2 when ``_local_files`` takes
+    it; the caller has already sent ``regions`` and
+    ``sequence_data_type`` reads to the Python DataSource. Partitions are
+    planned when the frame is built, sized by the session's parallelism."""
+    from exon_spark.sources.fasta import FastaSource
+    from exon_spark.sources.util import partition_columns
+
+    files = _local_files(FastaSource, path, options, spark)
+    if files is None:
+        return None
+
+    def read(spark, _path):
+        opts = {"target_parallelism": default_parallelism(spark)}
+        parts = [p for f in files for p in FastaSource.plan_partitions(f, opts)]
+        return read_fasta_dsv2(
+            spark, parts, partition_columns(files), options.get("columns")
+        )
+
+    return read
 
 
 # mzML columns expressible without the base64/zlib binary decode
@@ -449,6 +537,8 @@ def jvm_fast_reader(fmt: str, path: str, options: dict, spark=None):
     from exon_spark.sources.fs import scheme_of
 
     scheme = scheme_of(path)
+    if fmt == "fasta" and scheme is None:
+        return _fasta_jvm_route(path, options, spark)
     if scheme is not None and scheme not in ("s3a", "gs", "hdfs", "abfss", "wasbs"):
         # exon_spark fs-handler schemes (s3://, mock://) are Python-side
         # only; Hadoop-native schemes pass straight through to the JVM
@@ -460,17 +550,11 @@ def jvm_fast_reader(fmt: str, path: str, options: dict, spark=None):
         return None  # no JVM codec for these here
     if comp == "gzip" and not path.lower().endswith((".gz", ".bgz")):
         return None  # JVM codecs dispatch on extension only
+    cols = options.get("columns")
     if fmt == "fasta":
-        # The lineSep='>' text scan IS byte-range splittable (verified:
-        # 183 MB file, 32 splits, record counts agree with the Python
-        # byte-range reader) and measures ~400 MB/s aggregate on 32 cores
-        # — faster at every size tried (19-183 MB plain, 2.4-23 MB gzip
-        # shards) than the Python DataSource route, whose Arrow pipe caps
-        # ~150 MB/s aggregate here. So the JVM path keeps ALL plain/gzip
-        # scans; the vectorized Python framing (fasta.py
-        # read_arrow_partition) still serves scans the JVM can't take:
-        # object-store schemes (s3://, mock://), regions, encodings.
-        return read_fasta_jvm
+        # Hadoop-native object stores until the Java readers open files
+        # through the Hadoop FileSystem
+        return lambda spark, p: read_fasta_jvm(spark, p, columns=cols)
     if fmt == "vcf":
         from exon_spark.sources.fs import fs_exists
 
@@ -483,7 +567,6 @@ def jvm_fast_reader(fmt: str, path: str, options: dict, spark=None):
             if local and spark is not None and codec_active(spark):
                 # VcfBgzfSource reads the linear-index cuts that
                 # VcfSource.plan_partitions plans
-                cols = options.get("columns")
                 return lambda spark, p: read_vcf_region_jvm(spark, p, columns=cols)
             # without the jar (or remote) the Python DataSource splits the
             # stream at the same cuts; the stock JVM gzip codec is one
@@ -491,9 +574,8 @@ def jvm_fast_reader(fmt: str, path: str, options: dict, spark=None):
             # VCF (measured)
             return None
         # the BGZF codec byte-range splits an unindexed .bgz
-        return read_vcf_jvm
+        return lambda spark, p: read_vcf_jvm(spark, p, columns=cols)
     if fmt == "mzml":
-        cols = options.get("columns")
         if isinstance(cols, str):
             cols = [c.strip() for c in cols.split(",") if c.strip()]
         if cols and set(cols) <= set(_MZML_META_COLS):

@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from exon_spark.sources.util import default_parallelism
+
 _GFF_COLS = [
     "seqname",
     "source",
@@ -189,7 +191,7 @@ def _tabix_full_ranges(spark: SparkSession, path: str):
 
     size = os.path.getsize(path)
     target = adaptive_target_bytes(
-        size, spark.sparkContext.defaultParallelism, floor=1 << 20, ceil=16 << 20
+        size, default_parallelism(spark), floor=1 << 20, ceil=16 << 20
     )
     cuts = [s for s, _e in full_scan_ranges(read_tabix(path + ".tbi").linear, target)]
     bounds = [0, *cuts[1:], size << 16]
@@ -242,7 +244,7 @@ def _tabix_region_groups(spark: SparkSession, path: str, regions: str):
     total = sum(
         (ce >> 16) - (cb >> 16) for _, chunks, _lin in per_key for cb, ce in chunks
     )
-    target = adaptive_target_bytes(total, spark.sparkContext.defaultParallelism)
+    target = adaptive_target_bytes(total, default_parallelism(spark))
     return [g for _name, g in chunk_groups(per_key, target)]
 
 

@@ -16,6 +16,7 @@ import glob as _glob
 import gzip
 import io
 import os
+import re
 from dataclasses import dataclass, field
 
 
@@ -191,6 +192,24 @@ def list_files(
     if not found:
         raise FileNotFoundError(f"no input files at {path}")
     return found
+
+
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+
+
+def default_parallelism(spark) -> int:
+    """``sparkContext.defaultParallelism``, which costs two py4j round
+    trips. A ``local``/``local[...]`` master has a fixed core count, so
+    its value is read once per SparkContext (``sc._exon_parallelism``);
+    other masters read it every time, because a cluster's count grows as
+    executors register."""
+    sc = spark.sparkContext
+    n = getattr(sc, "_exon_parallelism", None)
+    if n is None:
+        n = sc.defaultParallelism
+        if _LOCAL_MASTER.fullmatch(sc.master or ""):
+            sc._exon_parallelism = n
+    return n
 
 
 def partition_columns(files: list[FoundFile]) -> list[str]:

@@ -1,5 +1,6 @@
 """JVM fast-path readers must be indistinguishable from the Python
-DataSources for plain scans (same schema, same rows)."""
+DataSources for plain scans (same schema, same rows, same ``columns``
+projection)."""
 
 from __future__ import annotations
 
@@ -29,6 +30,9 @@ def fixtures(tmp_path_factory):
     return root
 
 
+VCF_COLS = ("chrom", "pos", "id", "ref", "alt", "qual", "filter", "info", "formats")
+
+
 def _rows(df, order_col):
     return [r.asDict(recursive=True) for r in df.orderBy(order_col).collect()]
 
@@ -36,15 +40,63 @@ def _rows(df, order_col):
 @pytest.mark.parametrize("name", ["test.fasta", "test.fasta.gz"])
 def test_fasta_jvm_matches_datasource(spark, fixtures, name):
     from exon_spark import register_all
+    from exon_spark.sources import read_format
 
     register_all(spark)
     path = str(fixtures / name)
-    fast = jvm_fast_reader("fasta", path, {})
-    assert fast is not None
-    jvm = fast(spark, path)
+    jvm = read_format(spark, "fasta", path)
+    assert "FastaScan" in jvm._jdf.queryExecution().executedPlan().toString()
     py = spark.read.format("fasta").load(path)
     assert jvm.schema == py.schema
     assert _rows(jvm, "id") == _rows(py, "id")
+
+
+def test_fasta_header_gt_is_text_on_both_readers(spark, tmp_path):
+    """A '>' inside a header does not start a record: the Java reader and
+    the text route kept for object stores give the Python reader's rows."""
+    from exon_spark.sources import read_format
+    from exon_spark.sources.jvm_fast import read_fasta_jvm
+
+    path = tmp_path / "gt.fasta"
+    path.write_text(">s1 desc with a>b inside\nMKV\nLLA\n>s2\nMQQ\n")
+    want = [("s1", "desc with a>b inside", "MKVLLA"), ("s2", None, "MQQ")]
+    py = spark.read.format("fasta").load(str(path))
+    for df in (read_format(spark, "fasta", str(path)), read_fasta_jvm(spark, str(path)), py):
+        assert sorted(map(tuple, df.collect())) == want
+
+
+@pytest.mark.parametrize(
+    "fmt, name, columns, want",
+    [
+        ("fasta", "test.fasta", "id", ["id"]),
+        ("fasta", "test.fasta", "sequence,id", ["id", "sequence"]),
+        ("fasta", "test.fasta.gz", "description", ["description"]),
+        ("vcf", "test.vcf", "chrom,pos", ["chrom", "pos"]),
+        ("vcf", "test.vcf", "nope", list(VCF_COLS)),
+    ],
+)
+def test_jvm_routes_honour_columns(spark, fixtures, fmt, name, columns, want):
+    """The ``columns`` option projects as the Python DataSources do: the
+    named columns in schema order, every column when it names none."""
+    from exon_spark.sources import read_format
+
+    path = str(fixtures / name)
+    df = read_format(spark, fmt, path, columns=columns)
+    assert "(Python)" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.columns == want
+    py = spark.read.format(fmt).option("columns", columns).load(path)
+    assert df.columns == py.columns
+    assert sorted(map(tuple, df.collect()), key=repr) == sorted(
+        map(tuple, py.collect()), key=repr
+    )
+
+
+def test_fasta_text_route_honours_columns(spark, fixtures):
+    from exon_spark.sources.jvm_fast import read_fasta_jvm
+
+    df = read_fasta_jvm(spark, str(fixtures / "test.fasta"), columns="sequence")
+    assert df.columns == ["sequence"]
+    assert sorted(r.sequence for r in df.collect()) == ["ATCGATCGGGCC", "ATGATGATG", "TTTTAAAA"]
 
 
 def test_vcf_jvm_matches_datasource(spark, fixtures):

@@ -97,6 +97,67 @@ def test_fasta_plain_scan_has_no_python_workers(registered, tmp_path):
     assert "EvalPython" not in plan and "(Python)" not in plan, plan
 
 
+# py4j round trips of a warm local FASTA read_format: the one
+# DriverCalls.readFasta call (1 measured). The lineSep text route it
+# replaced made about 414.
+_MAX_FASTA_READ_PY4J = 2
+
+
+def test_fasta_read_is_one_java_scan(registered, tmp_path):
+    """A local FASTA read builds its frame in one JVM call and executes as
+    one BatchScan of the Java FastaSource, with no Generate and no Python
+    scan."""
+    import gc
+    import threading
+
+    from exon_spark.sources import read_format
+
+    p = tmp_path / "x.fasta"
+    p.write_text(">a d\nACGT\n>b\nGGTT\n")
+    read_format(registered, "fasta", str(p))  # resolves the session's caches
+    gc.collect()  # frees earlier proxies now, not inside the window
+    client = registered.sparkContext._gateway._gateway_client
+    sent: list[str] = []
+    real = client.send_command
+    caller = threading.get_ident()
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == caller:
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        df = read_format(registered, "fasta", str(p))
+    finally:
+        del client.send_command
+    assert len(sent) <= _MAX_FASTA_READ_PY4J, sent
+    plan = _plan(df)
+    assert plan.count("BatchScan") == 1 and "BatchScan fasta-jvm" in plan, plan
+    assert "Generate" not in plan and "(Python)" not in plan, plan
+
+
+def test_plain_fasta_above_1mb_fans_out(registered, tmp_path):
+    """A single plain FASTA file above 1 MB plans more than one byte-range
+    partition at local[4], so one large file still spreads across cores."""
+    import os
+
+    from exon_spark.sources import read_format
+    from exon_spark.sources.fasta import FastaSource
+    from exon_spark.sources.util import FoundFile
+
+    p = tmp_path / "big.fasta"
+    rec = b">r%d some description\n" + b"ACGT" * 60 + b"\n"
+    p.write_bytes(b"".join(rec % i for i in range(5000)))
+    size = os.path.getsize(p)
+    assert (1 << 20) < size < (2 << 20)
+    parts = FastaSource.plan_partitions(FoundFile(str(p), size), {"target_parallelism": 4})
+    assert len(parts) > 1
+    df = read_format(registered, "fasta", str(p))
+    assert df.rdd.getNumPartitions() > 1
+    assert df.count() == 5000
+
+
 def test_dedup_shingles_single_shuffle(registered):
     """shingle_rows must be shuffle-free up to its final distinct — one
     Exchange total (the window-lead formulation had two)."""

@@ -5,8 +5,9 @@ it on the components where a subtle off-by-one corrupts everything
 downstream: BGZF block framing / virtual offsets, Phred quality
 encode/decode, and region-string parsing.
 
-All but the FASTQ route parity tests are session-free (no Spark); those
-two compare the JVM FASTQ reader with the Python DataSource on one session.
+All but the FASTQ and FASTA route parity tests are session-free (no
+Spark); those compare the Java readers with the Python DataSources on one
+session.
 """
 
 from __future__ import annotations
@@ -490,6 +491,109 @@ def test_fastq_bad_records_fail_both_routes(spark, tmp_path, text, error):
     jvm, py = _fastq_routes(spark, _fastq_files(tmp_path, text))
     for df in (jvm, py):
         with pytest.raises(Exception, match=error):
+            df.collect()
+
+
+# ------------------------------------------------------ FASTA route parity
+
+_FA_WORD = st.text(alphabet="ACGTacgt0123456789_:|.>é-", min_size=0, max_size=8)
+
+
+@st.composite
+def _fasta_text(draw) -> tuple[bytes, list[int]]:
+    """FASTA text on the edges of the framing, and cut points into it:
+    headers holding '>', spaces or tabs, with an empty description or
+    none, or empty; LF and CRLF ends; blank and whitespace-only lines;
+    text before the first header; empty and multi-line sequences."""
+    lines = draw(st.lists(st.sampled_from(["junk >x", "", "ACGT", " "]), max_size=3))
+    for _ in range(draw(st.integers(0, 6))):
+        lines.append(
+            draw(
+                st.sampled_from(
+                    [">{n}", ">{n} ", ">{n} {d}", ">{n}\t{d}", ">{n} {d}>{d} {d}", "> {d}", ">"]
+                )
+            ).format(n=draw(_FA_WORD), d=draw(_FA_WORD))
+        )
+        for _ in range(draw(st.integers(0, 3))):
+            lines.append(
+                draw(st.sampled_from(["", " ", "  \t"]))
+                if draw(st.integers(0, 5)) == 0
+                else draw(st.text(alphabet="ACGTNM*>", min_size=1, max_size=12))
+            )
+    ends = [draw(st.sampled_from(["\n", "\r\n"])) for _ in lines]
+    text = "".join(line + end for line, end in zip(lines, ends))
+    if text and draw(st.booleans()):
+        text = text.rstrip("\r\n")  # no newline after the last record
+    data = text.encode()
+    # cut anywhere, or at a record start, one byte before or after it
+    starts = [i + 1 for i in range(len(data) - 1) if data[i : i + 2] == b"\n>"]
+    cut = st.integers(1, max(1, len(data) - 1))
+    if starts:
+        cut = cut | st.builds(int.__add__, st.sampled_from(starts), st.integers(-1, 1))
+    cuts = draw(st.lists(cut, max_size=4))
+    return data, sorted({c for c in cuts if 0 < c < len(data)})
+
+
+def _fasta_dir(d, data: bytes, cuts: list[int]) -> str:
+    """``data`` as plain, gzip, BGZF (one member per cut piece) and zstd
+    FASTA files, one per hive partition ``codec=...`` of ``d``; returns
+    the plain file's path."""
+    import pyarrow as pa
+
+    from exon_spark.sources.bgzf import BGZF_EOF, bgzf_block
+
+    paths = {c: d / f"codec={c}" for c in ("plain", "gzip", "bgzf", "zstd")}
+    for p in paths.values():
+        p.mkdir()
+    (paths["plain"] / "a.fasta").write_bytes(data)
+    with gzip.open(paths["gzip"] / "b.fa.gz", "wb") as fh:
+        fh.write(data)
+    bounds = [0, *cuts, len(data)]
+    (paths["bgzf"] / "c.fa.bgz").write_bytes(
+        b"".join(bgzf_block(data[b:e]) for b, e in zip(bounds, bounds[1:])) + BGZF_EOF
+    )
+    with pa.CompressedOutputStream(str(paths["zstd"] / "d.fasta.zst"), "zstd") as fh:
+        fh.write(data)
+    return str(paths["plain"] / "a.fasta")
+
+
+@settings(max_examples=25, deadline=None)
+@given(drawn=_fasta_text())
+def test_fasta_jvm_route_matches_python_datasource(spark, tmp_path_factory, drawn):
+    """read_format's Java FASTA reader gives the Python DataSource's rows
+    over a hive-partitioned directory of plain, gzip, BGZF and zstd files,
+    or fails where it fails, and a plain file cut into byte ranges at the
+    drawn points reads as the whole file's rows."""
+    from exon_spark.sources import read_format
+    from exon_spark.sources.base import FilePartition
+    from exon_spark.sources.jvm_fast import read_fasta_dsv2
+
+    data, cuts = drawn
+    d = tmp_path_factory.mktemp("fa")
+    plain = _fasta_dir(d, data, cuts)
+    jvm = read_format(spark, "fasta", str(d))
+    plan = jvm._jdf.queryExecution().executedPlan().toString()
+    assert "FastaScan 4 partition(s)" in plan and "(Python)" not in plan, plan
+    got, jvm_err = _collect_or_error(jvm)
+    want, py_err = _collect_or_error(spark.read.format("fasta").load(str(d)))
+    assert (jvm_err is None) == (py_err is None), (jvm_err, py_err)
+    assert got == want
+    bounds = [0, *cuts, None]
+    parts = [FilePartition(plain, "none", (), b, e) for b, e in zip(bounds, bounds[1:])]
+    ranged = sorted(map(tuple, read_fasta_dsv2(spark, parts).collect()), key=repr)
+    assert ranged == sorted((r[:3] for r in want if r[3] == "plain"), key=repr)
+
+
+def test_fasta_truncated_gzip_fails_both_routes(spark, tmp_path):
+    blob = gzip.compress(b">r1 d\nACGT\n>r2\nGG\n" * 50)
+    (tmp_path / "t.fasta.gz").write_bytes(blob[: len(blob) // 2])
+    from exon_spark.sources import read_format
+
+    for df in (
+        read_format(spark, "fasta", str(tmp_path)),
+        spark.read.format("fasta").load(str(tmp_path)),
+    ):
+        with pytest.raises(Exception, match="(?i)end"):
             df.collect()
 
 
