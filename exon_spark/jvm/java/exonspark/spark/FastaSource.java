@@ -298,9 +298,19 @@ public class FastaSource implements TableProvider {
       this.end = p.end;
       this.in = FastqSource.open(p.path);
       this.eof = in == null;
-      if (p.beg > 0 && !eof) {
+      try {
+        start(p.beg);
+      } catch (IOException | RuntimeException e) {
+        close();
+        throw e;
+      }
+    }
+
+    /** Positions the cursor at the first header at or past beg and reads it. */
+    private void start(long beg) throws IOException {
+      if (beg > 0 && !eof) {
         // the first line start at or past beg: skip through the '\n' at or after beg - 1
-        long skip = p.beg - 1;
+        long skip = beg - 1;
         while (skip > 0) {
           long n = in.skip(skip);
           if (n <= 0) {
@@ -309,7 +319,7 @@ public class FastaSource implements TableProvider {
           }
           skip -= n;
         }
-        off = p.beg - 1 - skip;
+        off = beg - 1 - skip;
         skipLine();
       }
       // text before the first header belongs to no record of this range
