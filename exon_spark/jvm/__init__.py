@@ -17,6 +17,8 @@
   files (plain, gzip/BGZF, zstd), one partition per file;
 - exonspark.spark.FastaSource — the DataSourceV2 reader of local FASTA
   files over planned byte ranges, opening files with FastqSource.open;
+- exonspark.spark.LineInput — the buffered line framing and the UTF-8
+  check that FastqSource and FastaSource share;
 - exonspark.spark.CoordPredicates — the predicates VcfBgzfSource and
   BamBgzfSource consume at scan time (SupportsPushDownV2Filters);
 - exonspark.spark.DriverCalls — the driver's one-round-trip entry points

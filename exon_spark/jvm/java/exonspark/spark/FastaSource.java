@@ -1,11 +1,9 @@
 package exonspark.spark;
 
 import java.io.IOException;
-import java.io.InputStream;
 import java.io.Serializable;
 import java.net.URLDecoder;
 import java.nio.charset.StandardCharsets;
-import java.util.Arrays;
 import java.util.Map;
 import java.util.Set;
 
@@ -46,11 +44,12 @@ import org.apache.spark.sql.vectorized.ColumnarBatch;
  * text before the first header is skipped, a header splits at its first
  * space into id and description (an empty description is null), the
  * sequence is the record's other lines joined, and a record with an
- * empty header and an empty sequence is dropped. Each line drops one
- * trailing '\r' (the Python reader strips every '\r' once it sees one in
- * the first or last 64 KB of its input; the two agree on CRLF files).
- * Bytes are not UTF-8-validated (the Python reader rejects invalid UTF-8
- * at its Arrow cast).
+ * empty header and an empty sequence is dropped. Lines are framed by
+ * LineInput, which drops one trailing '\r' (the Python reader strips
+ * every '\r' once it sees one in the first or last 64 KB of its input;
+ * the two agree on CRLF files). A field the reader decodes that is not
+ * well-formed UTF-8 fails the read, as the Python reader's Arrow cast
+ * does.
  *
  * Options (all lowercase):
  *   partitions          '\n'-separated partitions "beg\tend\tpath\tvalue...":
@@ -268,26 +267,17 @@ public class FastaSource implements TableProvider {
 
   /**
    * The records of one partition: next() frames the next owned record
-   * into cur (its header without the '>') and, when the sequence is
+   * into cur (its header line, '>' included) and, when the sequence is
    * required, seq.
    */
   static final class FastaCursor implements AutoCloseable {
-    private final InputStream in;
+    private final LineInput in;
     private final long end;
     private final boolean wantSeq;
-    private final byte[] buf = new byte[1 << 16];
-    private int pos;
-    private int lim;
-    private long off; // file offset of buf[pos]
-    private boolean eof;
     private boolean done;
-    private byte[] hdr = new byte[256]; // the header read ahead of the record
-    private int hdrLen;
-    byte[] cur = new byte[256];
-    int curLen;
-    byte[] seq = new byte[1 << 12];
-    int seqLen;
-    private boolean seqEmpty;
+    private LineInput.Bytes hdr = new LineInput.Bytes(); // the header read ahead of the record
+    LineInput.Bytes cur = new LineInput.Bytes();
+    final LineInput.Bytes seq = new LineInput.Bytes();
 
     FastaCursor(RangePartition p, int[] colOf) throws IOException {
       boolean seqCol = false;
@@ -296,8 +286,7 @@ public class FastaSource implements TableProvider {
       }
       this.wantSeq = seqCol;
       this.end = p.end;
-      this.in = FastqSource.open(p.path);
-      this.eof = in == null;
+      this.in = new LineInput(FastqSource.open(p.path));
       try {
         start(p.beg);
       } catch (IOException | RuntimeException e) {
@@ -308,54 +297,46 @@ public class FastaSource implements TableProvider {
 
     /** Positions the cursor at the first header at or past beg and reads it. */
     private void start(long beg) throws IOException {
-      if (beg > 0 && !eof) {
+      if (beg > 0) {
         // the first line start at or past beg: skip through the '\n' at or after beg - 1
-        long skip = beg - 1;
-        while (skip > 0) {
-          long n = in.skip(skip);
-          if (n <= 0) {
-            eof = true;
-            break;
-          }
-          skip -= n;
-        }
-        off = beg - 1 - skip;
-        skipLine();
+        in.skip(beg - 1);
+        in.readLine(null);
       }
       // text before the first header belongs to no record of this range
       int b;
-      while ((b = peek()) >= 0 && b != '>') {
-        skipLine();
+      while ((b = in.peek()) >= 0 && b != '>') {
+        in.readLine(null);
       }
-      done = b < 0 || later();
-      if (!done) {
-        readHeader();
-      }
+      advance(b);
     }
 
-    /** True when the '>' at off starts a record of a later range. */
-    private boolean later() {
-      return end >= 0 && off >= end;
+    /**
+     * At a line starting with b (-1: end of input): reads the header there
+     * into hdr, or ends the range when there is none or it starts a record
+     * of a later range.
+     */
+    private void advance(int b) throws IOException {
+      done = b < 0 || (end >= 0 && in.offset() >= end);
+      if (!done) {
+        hdr.len = 0;
+        in.readLine(hdr);
+      }
     }
 
     /** The next record into cur/seq; false when the range has no more. */
     boolean next() throws IOException {
       while (!done) {
-        byte[] t = cur;
+        LineInput.Bytes t = cur;
         cur = hdr;
-        curLen = hdrLen;
         hdr = t;
-        seqLen = 0;
-        seqEmpty = true;
+        seq.len = 0;
+        boolean empty = true;
         int b;
-        while ((b = peek()) >= 0 && b != '>') {
-          sequenceLine();
+        while ((b = in.peek()) >= 0 && b != '>') {
+          empty &= in.readLine(wantSeq ? seq : null) == 0;
         }
-        done = b < 0 || later();
-        if (!done) {
-          readHeader();
-        }
-        if (curLen > 0 || !seqEmpty) {
+        advance(b);
+        if (cur.len > 1 || !empty) {
           return true;
         }
       }
@@ -364,118 +345,7 @@ public class FastaSource implements TableProvider {
 
     @Override
     public void close() throws IOException {
-      if (in != null) {
-        in.close();
-      }
-    }
-
-    private int peek() throws IOException {
-      if (pos >= lim && !fill()) {
-        return -1;
-      }
-      return buf[pos];
-    }
-
-    /** The line at pos (a '>' line) without '>', '\n' and one trailing '\r' into hdr. */
-    private void readHeader() throws IOException {
-      pos++;
-      off++;
-      int n = 0;
-      while (true) {
-        if (pos >= lim && !fill()) {
-          break;
-        }
-        int e = scan();
-        int add = e - pos;
-        if (n + add > hdr.length) {
-          hdr = Arrays.copyOf(hdr, Math.max(n + add, hdr.length * 2));
-        }
-        System.arraycopy(buf, pos, hdr, n, add);
-        n += add;
-        if (consume(e)) {
-          break;
-        }
-      }
-      hdrLen = n > 0 && hdr[n - 1] == '\r' ? n - 1 : n;
-    }
-
-    /** Appends the line at pos, without '\n' and one trailing '\r', to seq. */
-    private void sequenceLine() throws IOException {
-      long len = 0;
-      byte last = 0;
-      while (true) {
-        if (pos >= lim && !fill()) {
-          break;
-        }
-        int e = scan();
-        int add = e - pos;
-        if (add > 0) {
-          last = buf[e - 1];
-          len += add;
-          if (wantSeq) {
-            if (seqLen + add > seq.length) {
-              seq = Arrays.copyOf(seq, Math.max(seqLen + add, seq.length * 2));
-            }
-            System.arraycopy(buf, pos, seq, seqLen, add);
-            seqLen += add;
-          }
-        }
-        if (consume(e)) {
-          break;
-        }
-      }
-      if (len > 0 && last == '\r') {
-        len--;
-        if (wantSeq) {
-          seqLen--;
-        }
-      }
-      if (len > 0) {
-        seqEmpty = false;
-      }
-    }
-
-    private void skipLine() throws IOException {
-      while (pos < lim || fill()) {
-        if (consume(scan())) {
-          return;
-        }
-      }
-    }
-
-    /** The index of the first '\n' in buf[pos, lim), or lim. */
-    private int scan() {
-      int e = pos;
-      while (e < lim && buf[e] != '\n') {
-        e++;
-      }
-      return e;
-    }
-
-    /** Moves past buf[pos, e) and the '\n' at e if there is one; true at a line end. */
-    private boolean consume(int e) {
-      boolean nl = e < lim;
-      int next = nl ? e + 1 : e;
-      off += next - pos;
-      pos = next;
-      return nl;
-    }
-
-    private boolean fill() throws IOException {
-      if (eof) {
-        return false;
-      }
-      int got = in.read(buf, 0, buf.length);
-      while (got == 0) {
-        got = in.read(buf, 0, buf.length);
-      }
-      if (got < 0) {
-        eof = true;
-        return false;
-      }
-      pos = 0;
-      lim = got;
-      return true;
+      in.close();
     }
   }
 
@@ -485,6 +355,7 @@ public class FastaSource implements TableProvider {
    * into the vectors, so the cursor reuses its buffers.
    */
   static final class FastaBatchReader implements PartitionReader<ColumnarBatch> {
+    private final String path;
     private final FastaCursor cursor;
     private final int[] colOf;
     private final byte[][] values;
@@ -492,6 +363,7 @@ public class FastaSource implements TableProvider {
     private final ColumnarBatch batch;
 
     FastaBatchReader(RangePartition p, FastaCursor cursor, StructType required, int[] colOf) {
+      this.path = p.path;
       this.cursor = cursor;
       this.colOf = colOf;
       this.values = new byte[p.values.length][];
@@ -511,16 +383,16 @@ public class FastaSource implements TableProvider {
       long bytes = 0;
       while (n < CAPACITY && bytes < BATCH_BYTES && cursor.next()) {
         emit(n++);
-        bytes += cursor.seqLen;
+        bytes += cursor.seq.len;
       }
       batch.setNumRows(n);
       return n > 0;
     }
 
-    private void emit(int row) {
-      byte[] h = cursor.cur;
-      int hl = cursor.curLen;
-      int sp = 0;
+    private void emit(int row) throws IOException {
+      byte[] h = cursor.cur.b;
+      int hl = cursor.cur.len;
+      int sp = 1;
       while (sp < hl && h[sp] != ' ') {
         sp++;
       }
@@ -528,17 +400,17 @@ public class FastaSource implements TableProvider {
         OnHeapColumnVector v = vecs[i];
         switch (colOf[i]) {
           case 0:
-            v.putByteArray(row, h, 0, sp);
+            put(v, row, h, 1, sp);
             break;
           case 1:
             if (sp + 1 < hl) {
-              v.putByteArray(row, h, sp + 1, hl - sp - 1);
+              put(v, row, h, sp + 1, hl);
             } else {
               v.putNull(row);
             }
             break;
           case 2:
-            v.putByteArray(row, cursor.seq, 0, cursor.seqLen);
+            put(v, row, cursor.seq.b, 0, cursor.seq.len);
             break;
           default:
             byte[] val = values[colOf[i] - 3];
@@ -549,6 +421,14 @@ public class FastaSource implements TableProvider {
             }
         }
       }
+    }
+
+    private void put(OnHeapColumnVector v, int row, byte[] b, int from, int to)
+        throws IOException {
+      if (!LineInput.isUtf8(b, from, to)) {
+        throw new IOException(path + ": invalid UTF-8 in a FASTA record");
+      }
+      v.putByteArray(row, b, from, to - from);
     }
 
     @Override

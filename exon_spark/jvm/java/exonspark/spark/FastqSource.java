@@ -52,8 +52,9 @@ import org.apache.spark.unsafe.types.UTF8String;
  * are, so an empty sequence and quality read as ''; the header is split
  * at its first space into name and description (an empty description is
  * null); a header without '@', a separator without '+' and a trailing
- * partial record each fail the read. Bytes are not UTF-8-validated (the
- * Python reader rejects invalid UTF-8 at its Arrow cast).
+ * partial record each fail the read, and so does a field it decodes that is
+ * not well-formed UTF-8 (the Python reader's Arrow cast rejects it).
+ * Lines are framed by LineInput.
  *
  * Options (all lowercase):
  *   files   '\n'-separated local filesystem paths, one partition each
@@ -223,22 +224,18 @@ public class FastqSource implements TableProvider {
 
   static final class FastqPartitionReader implements PartitionReader<InternalRow> {
     private final String path;
-    private final InputStream in;
+    private final LineInput in;
     private final int[] colOf;
-    private final byte[] buf = new byte[1 << 16];
-    private int pos;
-    private int lim;
-    private boolean eof;
     // the record's header, sequence, separator and quality lines
-    private final byte[][] line = {new byte[256], new byte[256], new byte[256], new byte[256]};
-    private final int[] len = new int[4];
+    private final LineInput.Bytes[] line = {
+      new LineInput.Bytes(), new LineInput.Bytes(), new LineInput.Bytes(), new LineInput.Bytes()
+    };
     private InternalRow current;
 
     FastqPartitionReader(String path, InputStream in, int[] colOf) {
       this.path = path;
-      this.in = in;
+      this.in = new LineInput(in);
       this.colOf = colOf;
-      this.eof = in == null;
     }
 
     @Override
@@ -247,16 +244,16 @@ public class FastqSource implements TableProvider {
         return false;
       }
       for (int k = 1; k < 4; k++) {
-        if (!readLine(k)) {
+        line[k].len = 0;
+        if (in.readLine(line[k]) < 0) {
           throw new IOException(path + ": truncated FASTQ record");
         }
-        dropCr(k);
       }
-      if (line[0][0] != '@') {
+      if (line[0].b[0] != '@') {
         throw new IOException(
-            path + ": malformed FASTQ header: '" + text(0, 0, len[0]) + "'");
+            path + ": malformed FASTQ header: '" + text(0, 0, line[0].len) + "'");
       }
-      if (len[2] == 0 || line[2][0] != '+') {
+      if (line[2].len == 0 || line[2].b[0] != '+') {
         throw new IOException(path + ": malformed FASTQ separator");
       }
       current = buildRow();
@@ -270,14 +267,13 @@ public class FastqSource implements TableProvider {
 
     @Override
     public void close() throws IOException {
-      if (in != null) {
-        in.close();
-      }
+      in.close();
     }
 
-    private InternalRow buildRow() {
+    private InternalRow buildRow() throws IOException {
+      int len = line[0].len;
       int sp = 1;
-      while (sp < len[0] && line[0][sp] != ' ') {
+      while (sp < len && line[0].b[sp] != ' ') {
         sp++;
       }
       Object[] vals = new Object[colOf.length];
@@ -287,90 +283,45 @@ public class FastqSource implements TableProvider {
             vals[i] = utf8(0, 1, sp);
             break;
           case 1:
-            vals[i] = sp + 1 < len[0] ? utf8(0, sp + 1, len[0]) : null;
+            vals[i] = sp + 1 < len ? utf8(0, sp + 1, len) : null;
             break;
           case 2:
-            vals[i] = utf8(1, 0, len[1]);
+            vals[i] = utf8(1, 0, line[1].len);
             break;
           default:
-            vals[i] = utf8(3, 0, len[3]);
+            vals[i] = utf8(3, 0, line[3].len);
         }
       }
       return new GenericInternalRow(vals);
     }
 
-    private UTF8String utf8(int k, int from, int to) {
-      return UTF8String.fromBytes(Arrays.copyOfRange(line[k], from, to));
+    private UTF8String utf8(int k, int from, int to) throws IOException {
+      if (!LineInput.isUtf8(line[k].b, from, to)) {
+        throw new IOException(path + ": invalid UTF-8 in a FASTQ record");
+      }
+      return UTF8String.fromBytes(Arrays.copyOfRange(line[k].b, from, to));
     }
 
     private String text(int k, int from, int to) {
-      return new String(line[k], from, to - from, StandardCharsets.UTF_8);
+      return new String(line[k].b, from, to - from, StandardCharsets.UTF_8);
     }
 
-    /** The next line that is not blank or whitespace-only into line[0],
-     * without its '\n' and one trailing '\r'; false at end of input. */
+    /** The next line that is not blank or whitespace-only into line[0];
+     * false at end of input. */
     private boolean nextHeader() throws IOException {
-      while (readLine(0)) {
-        int n = len[0];
-        byte[] l = line[0];
-        boolean blank = true;
-        for (int i = 0; i < n && blank; i++) {
-          byte b = l[i];
-          blank = b == ' ' || (b >= '\t' && b <= '\r'); // Python's bytes.strip set
-        }
-        if (!blank) {
-          dropCr(0);
-          return true;
-        }
-      }
-      return false;
-    }
-
-    private void dropCr(int k) {
-      if (len[k] > 0 && line[k][len[k] - 1] == '\r') {
-        len[k]--;
-      }
-    }
-
-    /** The next '\n'-terminated line (or unterminated last line) into
-     * line[k]; false at end of input with nothing read. */
-    private boolean readLine(int k) throws IOException {
-      int n = 0;
+      LineInput.Bytes l = line[0];
       while (true) {
-        if (pos >= lim) {
-          if (eof || !fill()) {
-            len[k] = n;
-            return n > 0;
+        l.len = 0;
+        if (in.readLine(l) < 0) {
+          return false;
+        }
+        for (int i = 0; i < l.len; i++) {
+          byte b = l.b[i];
+          if (!(b == ' ' || (b >= '\t' && b <= '\r'))) { // Python's bytes.strip set
+            return true;
           }
         }
-        int end = pos;
-        while (end < lim && buf[end] != '\n') {
-          end++;
-        }
-        int add = end - pos;
-        if (n + add > line[k].length) {
-          line[k] = Arrays.copyOf(line[k], Math.max(n + add, line[k].length * 2));
-        }
-        System.arraycopy(buf, pos, line[k], n, add);
-        n += add;
-        if (end < lim) {
-          pos = end + 1;
-          len[k] = n;
-          return true;
-        }
-        pos = lim;
       }
-    }
-
-    private boolean fill() throws IOException {
-      int got = in.read(buf, 0, buf.length);
-      if (got < 0) {
-        eof = true;
-        return false;
-      }
-      pos = 0;
-      lim = got;
-      return true;
     }
   }
 }

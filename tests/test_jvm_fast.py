@@ -37,15 +37,23 @@ def _rows(df, order_col):
     return [r.asDict(recursive=True) for r in df.orderBy(order_col).collect()]
 
 
+@pytest.mark.parametrize("reader", ["read_format", "text_route"])
 @pytest.mark.parametrize("name", ["test.fasta", "test.fasta.gz"])
-def test_fasta_jvm_matches_datasource(spark, fixtures, name):
+def test_fasta_jvm_matches_datasource(spark, fixtures, name, reader):
+    """The Java reader that ``read_format`` takes for local files, and the
+    ``lineSep`` text route kept for object stores (``read_fasta_jvm``),
+    each give the Python DataSource's schema and rows."""
     from exon_spark import register_all
     from exon_spark.sources import read_format
+    from exon_spark.sources.jvm_fast import read_fasta_jvm
 
     register_all(spark)
     path = str(fixtures / name)
-    jvm = read_format(spark, "fasta", path)
-    assert "FastaScan" in jvm._jdf.queryExecution().executedPlan().toString()
+    if reader == "read_format":
+        jvm = read_format(spark, "fasta", path)
+        assert "FastaScan" in jvm._jdf.queryExecution().executedPlan().toString()
+    else:
+        jvm = read_fasta_jvm(spark, path)
     py = spark.read.format("fasta").load(path)
     assert jvm.schema == py.schema
     assert _rows(jvm, "id") == _rows(py, "id")

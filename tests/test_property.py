@@ -431,7 +431,8 @@ def _collect_or_error(df):
 def test_fastq_jvm_route_matches_python_datasource(spark, tmp_path_factory, text):
     """read_format's JVM FASTQ reader gives the Python DataSource's rows
     for plain, gzip and zstd input, or fails where it fails; a directory of
-    the three files reads as their row multiset, one partition per file."""
+    the three files reads as their row multiset, one partition per file,
+    whether named as the directory, a glob or a ``file://`` URI."""
     from exon_spark.sources import read_format
 
     d = tmp_path_factory.mktemp("fq")
@@ -442,11 +443,14 @@ def test_fastq_jvm_route_matches_python_datasource(spark, tmp_path_factory, text
     assert (jvm_err is None) == (py_err is None), (jvm_err, py_err)
     assert got == want
     if py_err is None:
-        whole = read_format(spark, "fastq", str(d))
-        assert whole.rdd.getNumPartitions() == 3
-        assert sorted(map(tuple, whole.collect()), key=repr) == sorted(
-            (r[:4] for r in want), key=repr
-        )
+        rows = sorted((r[:4] for r in want), key=repr)
+        for spelling in (str(d), str(d / "*.f*q*"), f"file://{d}"):
+            whole = read_format(spark, "fastq", spelling)
+            assert "FastqScan" in whole._jdf.queryExecution().executedPlan().toString()
+            assert whole.rdd.getNumPartitions() == 3
+            assert sorted(map(tuple, whole.collect()), key=repr) == rows
+            py_whole = spark.read.format("fastq").load(spelling)
+            assert sorted(map(tuple, py_whole.collect()), key=repr) == rows
 
 
 @settings(max_examples=6, deadline=None)
@@ -485,6 +489,7 @@ def test_fastq_copy_round_trip_keeps_empty_sequences(spark, tmp_path_factory, re
         (b"@r1\nAC\n+\nII\nr2\nAC\n+\nII\n", "malformed FASTQ header"),
         (b"@r1\nAC\n+\nII\n@r2\nAC\n-\nII\n", "malformed FASTQ separator"),
         (b"@r1\nAC\n+\nII\n@r2\nAC\n", "truncated FASTQ record"),
+        (b"@r1\nA\xffC\n+\nIII\n", "(?i)utf-?8"),
     ],
 )
 def test_fastq_bad_records_fail_both_routes(spark, tmp_path, text, error):
@@ -504,8 +509,13 @@ def _fasta_text(draw) -> tuple[bytes, list[int]]:
     """FASTA text on the edges of the framing, and cut points into it:
     headers holding '>', spaces or tabs, with an empty description or
     none, or empty; LF and CRLF ends; blank and whitespace-only lines;
-    text before the first header; empty and multi-line sequences."""
-    lines = draw(st.lists(st.sampled_from(["junk >x", "", "ACGT", " "]), max_size=3))
+    text before the first header; empty and multi-line sequences; lines
+    led by a non-ASCII byte (a byte-order mark before the first header,
+    'é' leading a sequence or preamble line); rarely, a byte that is not
+    UTF-8 anywhere in the text."""
+    lines = draw(
+        st.lists(st.sampled_from(["junk >x", "", "ACGT", " ", "é >x", "\ufeff>x"]), max_size=3)
+    )
     for _ in range(draw(st.integers(0, 6))):
         lines.append(
             draw(
@@ -518,13 +528,18 @@ def _fasta_text(draw) -> tuple[bytes, list[int]]:
             lines.append(
                 draw(st.sampled_from(["", " ", "  \t"]))
                 if draw(st.integers(0, 5)) == 0
-                else draw(st.text(alphabet="ACGTNM*>", min_size=1, max_size=12))
+                else draw(st.text(alphabet="ACGTNM*>é", min_size=1, max_size=12))
             )
     ends = [draw(st.sampled_from(["\n", "\r\n"])) for _ in lines]
     text = "".join(line + end for line, end in zip(lines, ends))
     if text and draw(st.booleans()):
         text = text.rstrip("\r\n")  # no newline after the last record
+    if draw(st.integers(0, 4)) == 0:
+        text = "\ufeff" + text
     data = text.encode()
+    if draw(st.integers(0, 9)) == 0:
+        at = draw(st.integers(0, len(data)))
+        data = data[:at] + b"\xff" + data[at:]
     # cut anywhere, or at a record start, one byte before or after it
     starts = [i + 1 for i in range(len(data) - 1) if data[i : i + 2] == b"\n>"]
     cut = st.integers(1, max(1, len(data) - 1))
@@ -563,7 +578,7 @@ def test_fasta_jvm_route_matches_python_datasource(spark, tmp_path_factory, draw
     """read_format's Java FASTA reader gives the Python DataSource's rows
     over a hive-partitioned directory of plain, gzip, BGZF and zstd files,
     or fails where it fails, and a plain file cut into byte ranges at the
-    drawn points reads as the whole file's rows."""
+    drawn points reads as the whole file's rows, or fails likewise."""
     from exon_spark.sources import read_format
     from exon_spark.sources.base import FilePartition
     from exon_spark.sources.jvm_fast import read_fasta_dsv2
@@ -580,8 +595,10 @@ def test_fasta_jvm_route_matches_python_datasource(spark, tmp_path_factory, draw
     assert got == want
     bounds = [0, *cuts, None]
     parts = [FilePartition(plain, "none", (), b, e) for b, e in zip(bounds, bounds[1:])]
-    ranged = sorted(map(tuple, read_fasta_dsv2(spark, parts).collect()), key=repr)
-    assert ranged == sorted((r[:3] for r in want if r[3] == "plain"), key=repr)
+    ranged, ranged_err = _collect_or_error(read_fasta_dsv2(spark, parts))
+    assert (ranged_err is None) == (py_err is None), (ranged_err, py_err)
+    if py_err is None:
+        assert ranged == sorted((r[:3] for r in want if r[3] == "plain"), key=repr)
 
 
 def test_fasta_truncated_gzip_fails_both_routes(spark, tmp_path):
@@ -596,6 +613,36 @@ def test_fasta_truncated_gzip_fails_both_routes(spark, tmp_path):
         with pytest.raises(Exception, match="(?i)end"):
             df.collect()
 
+
+
+@pytest.mark.parametrize(
+    "text, fails",
+    [
+        (b">r\xff1 d\nACGT\n", True),
+        (b">r1 d\xc3\nACGT\n", True),
+        (b">r1 d\nAC\n\xe0\x80GT\n", True),
+        (b">r1 d\nAC\xed\xa0\x80GT\n", True),
+        (b"\xff junk\n>r1 d\xc3\xa9\nAC\n\xc3\xa9GT\n", False),
+    ],
+)
+def test_fasta_invalid_utf8_fails_both_routes(spark, tmp_path, text, fails):
+    """A header or sequence that is not UTF-8 (a stray byte, a truncated
+    or overlong form, a surrogate) fails both readers; text before the
+    first header is never decoded."""
+    from exon_spark.sources import read_format
+
+    (tmp_path / "u.fasta").write_bytes(text)
+    (tmp_path / "u.fa.gz").write_bytes(gzip.compress(text))
+    for path in (tmp_path / "u.fasta", tmp_path / "u.fa.gz"):
+        for df in (
+            read_format(spark, "fasta", str(path)),
+            spark.read.format("fasta").load(str(path)),
+        ):
+            if fails:
+                with pytest.raises(Exception, match="(?i)utf-?8"):
+                    df.collect()
+            else:
+                assert [tuple(r) for r in df.collect()] == [("r1", "dé", "ACéGT")]
 
 # ------------------------------------------------ tabix text route parity
 
