@@ -37,26 +37,31 @@ def _rows(df, order_col):
     return [r.asDict(recursive=True) for r in df.orderBy(order_col).collect()]
 
 
-@pytest.mark.parametrize("reader", ["read_format", "text_route"])
 @pytest.mark.parametrize("name", ["test.fasta", "test.fasta.gz"])
-def test_fasta_jvm_matches_datasource(spark, fixtures, name, reader):
-    """The Java reader that ``read_format`` takes for local files, and the
-    ``lineSep`` text route kept for object stores (``read_fasta_jvm``),
-    each give the Python DataSource's schema and rows."""
+def test_fasta_jvm_matches_datasource(spark, fixtures, name):
     from exon_spark import register_all
     from exon_spark.sources import read_format
-    from exon_spark.sources.jvm_fast import read_fasta_jvm
 
     register_all(spark)
     path = str(fixtures / name)
-    if reader == "read_format":
-        jvm = read_format(spark, "fasta", path)
-        assert "FastaScan" in jvm._jdf.queryExecution().executedPlan().toString()
-    else:
-        jvm = read_fasta_jvm(spark, path)
+    jvm = read_format(spark, "fasta", path)
+    assert "FastaScan" in jvm._jdf.queryExecution().executedPlan().toString()
     py = spark.read.format("fasta").load(path)
     assert jvm.schema == py.schema
     assert _rows(jvm, "id") == _rows(py, "id")
+
+
+@pytest.mark.parametrize("name", ["test.fasta", "test.fasta.gz"])
+def test_fasta_text_route_matches_datasource(spark, fixtures, name):
+    """The ``lineSep`` text route kept for object stores
+    (``read_fasta_jvm``) gives the Python DataSource's schema and rows."""
+    from exon_spark.sources.jvm_fast import read_fasta_jvm
+
+    path = str(fixtures / name)
+    text = read_fasta_jvm(spark, path)
+    py = spark.read.format("fasta").load(path)
+    assert text.schema == py.schema
+    assert _rows(text, "id") == _rows(py, "id")
 
 
 def test_fasta_header_gt_is_text_on_both_readers(spark, tmp_path):
